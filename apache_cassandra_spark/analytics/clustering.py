@@ -33,7 +33,7 @@ def _dim_of(df: DataFrame, vec_col: str) -> int:
 def _sq_dist_sql(vec: str, cent: list[float]) -> str:
     """SQL text of the squared-euclidean fold the Lloyd loop has always
     used — identical zip_with/aggregate nodes, one parse instead of a
-    literal RPC per coordinate (the similarity SQL-text twins note;
+    literal RPC per coordinate (the similarity SQL-text rendering note;
     every round re-embeds k x dim centroid literals, so the constructor
     path cost seconds of driver time per query)."""
     c_arr = ", ".join(_dsql(c) for c in cent)

@@ -638,7 +638,7 @@ def minhash_signatures(
     base = (_hash64(F.col("shingle"), "mh") % F.lit(_MERSENNE_31)).alias("_h")
     hashed = grams.select("id", base)
     # the num_perm min-aggregates as SQL text (identical nodes — the
-    # similarity SQL-text twins note: ~7 constructor RPCs per perm saved)
+    # similarity SQL-text rendering note: ~7 constructor RPCs per perm saved)
     mins = [
         F.expr(f"min((_h * {2 * p + 1} + {p * p + 7}) % {_MERSENNE_31})").alias(f"minhash_{p}")
         for p in range(num_perm)
@@ -900,6 +900,9 @@ def embedding_dup_pairs(
     ``method="brute"``: O(n²) crossJoin — kept ONLY as the small-sf
     oracle cross-check / recall reference; do not ship at scale.
 
+    ``dim``: the vector length the LSH hyperplanes are built for; None
+    infers it from the first row (one extra Spark job).
+
     Margin note: at exactly the 0.95 threshold (θ≈18.2°, per-table hit
     rate (1-θ/π)^8 ≈ 0.43) the 24-table default bounds the per-pair miss
     probability at (1-0.43)^24 ≈ 1.4e-6 — two orders tighter than the old
@@ -907,27 +910,13 @@ def embedding_dup_pairs(
     corpus can't realistically break the exact-equality gate. Pairs in the
     actual near-dup regime (θ ≤ 15°) miss with p < 1e-8.
     """
-    from apache_cassandra_spark.analytics.similarity import (
-        _dot_sql,
-        _norm_sql,
-        dot,
-        lsh_bucket_tables,
-        norm,
-    )
+    from apache_cassandra_spark.analytics.similarity import dot, lsh_bucket_tables, norm
 
     # norms hoisted into the per-side projections throughout (round 7):
     # cosine() per pair re-runs two interpreted norm folds per pair —
     # measured 3x the per-pair cost on the range_search probe. Same bits:
-    # dot/(na*nb) with the original operand order. With a known fixed
-    # ``dim`` the dot/norm run as codegen'd unrolled chains instead of the
-    # interpreted fold — bit-identical (similarity's SQL-text twins note).
+    # dot/(na*nb) with the original operand order.
     def _side(alias_id: str, alias_v: str, alias_n: str) -> DataFrame:
-        if dim is not None:
-            return df.selectExpr(
-                f"{id_col} AS {alias_id}",
-                f"{vec_col} AS {alias_v}",
-                f"{_norm_sql(vec_col, dim)} AS {alias_n}",
-            )
         return df.select(
             F.col(id_col).alias(alias_id),
             F.col(vec_col).alias(alias_v),
@@ -935,10 +924,6 @@ def embedding_dup_pairs(
         )
 
     def _scored(pairs: DataFrame) -> DataFrame:
-        if dim is not None:
-            return pairs.selectExpr(
-                "id_a", "id_b", f"ROUND({_dot_sql('va', 'vb', dim)} / (_na * _nb), 6) AS cos"
-            )
         return pairs.select(
             "id_a",
             "id_b",

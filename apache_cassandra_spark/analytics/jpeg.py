@@ -332,7 +332,9 @@ def _pad_plane(plane: np.ndarray, bw: int, bh: int) -> np.ndarray:
     (right columns copy the last column, bottom rows copy the already-
     padded last row, corner = last element), but np.pad's generic
     machinery cost ~60µs per call — real money at one call per plane on
-    the gate's thousands of tiny rasters (r15)."""
+    the gate's thousands of tiny rasters (r15). When no padding is needed
+    the input comes back ALIASED, not copied (np.pad always copied):
+    callers must not mutate the result in place."""
     h, w = plane.shape
     if h == bh and w == bw:
         return plane

@@ -10,8 +10,6 @@ walk — VBR-safe sample/rate/channel counts — in
 ``codecs.decode_mp3_meta``); entropy decodes with no stdlib
 implementation (MP3→PCM, H.264) raise ``NotImplementedError`` because
 their libraries aren't in this container.
-``decode_stub``/``deterministic_fake`` remain for pipelines that want a
-reproducible stand-in feature vector regardless of format.
 
 Fixture payloads are generated JVM-side from the documents table with
 pure built-in expressions (hex arithmetic → ``unhex``) — byte-identical
@@ -37,92 +35,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from apache_cassandra_spark.analytics import codecs
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("media_type", T.StringType(), False),  # image|audio|video
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("width", T.IntegerType(), True),
-                    T.StructField("height", T.IntegerType(), True),
-                    T.StructField("duration_ms", T.IntegerType(), True),
-                    T.StructField("codec", T.StringType(), True),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
-
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("media_type", T.StringType(), False),
-        T.StructField("n_bytes", T.IntegerType(), False),
-        T.StructField("feature", T.ArrayType(T.FloatType()), True),
-    ]
-)
-
-
-def _fake_decode(payload: bytes, dim: int = 8) -> list[float]:
-    """Deterministic stand-in for a real decoder: hash-derived features."""
-    import hashlib
-
-    h = hashlib.md5(payload or b"").digest()
-    return [b / 255.0 for b in h[:dim]]
-
-
-def decode_stub(payload: bytes, media_type: str, deterministic_fake: bool = False) -> list[float]:
-    """Feature extraction with an honest codec boundary: REAL decode for
-    containers parseable with numpy/stdlib (netpbm/BMP → normalized
-    channel means + dims; WAV → normalized RMS + frame/rate; MP3 →
-    framing metadata, no RMS — the PCM decode stays a boundary), the
-    deterministic fake on request for anything else, and
-    ``NotImplementedError`` for formats without a parse path."""
-    try:
-        d = codecs.decode_bytes(payload or b"")
-    except NotImplementedError:
-        if deterministic_fake:
-            return _fake_decode(payload)
-        raise
-    if d["format"] == "wav":
-        return [d["rms"] / 32768.0, float(d["n_frames"]), float(d["sample_rate"])]
-    if d["format"] == "mp3":
-        return [float(d["channels"]), float(d["n_frames"]), float(d["sample_rate"])]
-    return [
-        d["mean_r"] / 255.0,
-        d["mean_g"] / 255.0,
-        d["mean_b"] / 255.0,
-        float(d["width"]),
-        float(d["height"]),
-    ]
-
-
-def extract_features(media: DataFrame, deterministic_fake: bool = True, batch_limit: int = 1024) -> DataFrame:
-    """Decode/feature-extract via ``mapInPandas`` — Arrow batches of whole
-    rows stream through Python once; output schema fixed (FEATURE_SCHEMA)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_limit):
-                chunk = pdf.iloc[start : start + batch_limit]
-                yield pd.DataFrame(
-                    {
-                        "media_id": chunk["media_id"],
-                        "media_type": chunk["media_type"],
-                        "n_bytes": chunk["payload"].map(lambda p: len(p or b"")).astype("int32"),
-                        "feature": chunk["payload"].map(
-                            lambda p: decode_stub(p, "any", deterministic_fake=deterministic_fake)
-                        ),
-                    }
-                )
-
-    return media.select("media_id", "media_type", "payload").mapInPandas(run, FEATURE_SCHEMA)
-
 
 RESIZED_SCHEMA = T.StructType(
     [
@@ -168,29 +80,6 @@ def resize_media(media: DataFrame, width: int, height: int) -> DataFrame:
             )
 
     return media.select("media_id", "media_type", "payload").mapInPandas(run, RESIZED_SCHEMA)
-
-
-def resize_stub(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Meta-only resize marker (kept for pipelines that plan dimensions
-    without transcoding; the real transcode is ``resize_media``)."""
-    return media.withColumn(
-        "meta",
-        F.struct(
-            F.lit(width).alias("width"),
-            F.lit(height).alias("height"),
-            F.col("meta.duration_ms").alias("duration_ms"),
-            F.col("meta.codec").alias("codec"),
-        ),
-    )
-
-
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Frame-sampling *plan*: one row per (media_id, frame_ts) — the
-    distributable unit of video decode work. The decode itself is the stub."""
-    frames = F.explode(
-        F.sequence(F.lit(0), F.greatest(F.coalesce(F.col("meta.duration_ms"), F.lit(0)) - 1, F.lit(0)), F.lit(every_ms))
-    )
-    return media.where(F.col("media_type") == "video").select("media_id", frames.alias("frame_ts"))
 
 
 DECODED_SCHEMA = T.StructType(
@@ -454,24 +343,6 @@ def media_from_documents(docs: DataFrame) -> DataFrame:
         F.when(doc_id % 2 == 0, synthetic_ppm_payload(doc_id))
         .otherwise(synthetic_wav_payload(doc_id))
         .alias("payload"),
-    )
-
-
-def synthetic_media_from_documents(docs: DataFrame) -> DataFrame:
-    """Build a media table from the documents fixture (payload = text bytes)
-    so the multimodal plumbing is exercised by real distributed data."""
-    return docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.element_at(F.array(F.lit("image"), F.lit("audio"), F.lit("video")), (F.col("doc_id") % 3 + 1).cast("int")).alias(
-            "media_type"
-        ),
-        F.encode("text", "UTF-8").alias("payload"),
-        F.struct(
-            F.lit(64).alias("width"),
-            F.lit(64).alias("height"),
-            (F.col("n_chars") * 10).cast("int").alias("duration_ms"),
-            F.lit("fake").alias("codec"),
-        ).alias("meta"),
     )
 
 

@@ -33,26 +33,19 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-# -- SQL-text twins -----------------------------------------------------------
-# Two independent costs motivate building the scoring expressions as SQL
-# strings parsed in ONE F.expr/selectExpr round-trip instead of thousands of
-# per-node python-side constructor calls:
+# -- SQL-text rendering -----------------------------------------------------
+# Literal-heavy builders (LSH hyperplanes, PQ codebooks) render their
+# scoring expressions as SQL text parsed in ONE F.expr/selectExpr
+# round-trip: every F.lit/F.array/lambda call is a py4j RPC (1-5 ms
+# each, measured in local mode), and building thousands of nodes
+# one by one spent SECONDS of single-threaded driver time per query
+# (guide §7.3 — very large plans are a driver bottleneck at any scale).
 #
-# 1. Driver plan-construction time: every F.lit/F.array/lambda call is a
-#    py4j RPC (measured 1-5 ms each in this sandbox); literal-heavy
-#    builders (codebooks, hyperplanes, sign matrices) were spending
-#    SECONDS of single-threaded driver time per query building the tree
-#    (guide §7.3 — very large plans are a driver bottleneck at any scale).
-# 2. Execution: a fixed-dim dot product written as an explicit left-to-
-#    right arithmetic chain runs inside whole-stage codegen, while the
-#    higher-order zip_with/aggregate fold is interpreted per element with
-#    an intermediate array allocation per pair.
-#
-# Bit-parity contract: the chain starts from an explicit 0.0 literal and
-# adds terms left-to-right — exactly the fold's ((0.0 + p0) + p1) + ...
-# association — and each term casts the float element to double before the
-# multiply, so every IEEE double matches the higher-order form bit-for-bit
-# (locked by tests/test_analytics.py::test_sql_text_twins_bit_identical).
+# Bit-parity contract: the text is the same zip_with/aggregate fold as
+# ``dot`` — an explicit 0.0 start, terms added left-to-right, each float
+# element cast to double before the multiply — so every IEEE double
+# matches a straight left-to-right Python fold bit-for-bit (locked by
+# tests/test_analytics.py::test_single_forms_match_python_fold).
 
 
 def _dsql(v: float) -> str:
@@ -61,31 +54,12 @@ def _dsql(v: float) -> str:
     return repr(float(v)) + "D"
 
 
-def _dot_sql(a: str, b: str, dim: int | None = None) -> str:
-    """SQL text of :func:`dot` — the SAME zip_with/aggregate fold nodes
-    (an unrolled per-element chain was MEASURED SLOWER on the brute-force
-    pair shape: 7.4s vs 3.9s warm on the 250k-pair knn — the ~320-node
-    chain evaluates interpreted above the nested-loop join while the fold
-    runs a specialized loop). ``dim`` is accepted for signature stability
-    but does not change the expression."""
-    del dim
-    return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        f"0.0D, (acc, v) -> acc + v)"
-    )
-
-
-def _norm_sql(a: str, dim: int | None = None) -> str:
-    return f"SQRT({_dot_sql(a, a, dim)})"
-
-
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    dim: int | None = None,
     spread: int | None = None,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
@@ -93,10 +67,6 @@ def cosine_topk(
     ``queries``: (id_col, vec_col) — broadcast (must be driver-small; for
     query sets beyond broadcast size, bucket both sides instead).
     Excludes self-matches. Ties broken by neighbor id for determinism.
-
-    ``dim``: accepted for call-site documentation of the fixed vector
-    dimension; the scoring expression is the same fold either way (an
-    unrolled chain was measured slower — see ``_dot_sql``).
 
     ``spread``: repartition the corpus side to this many partitions
     before scoring. The brute-force score is |corpus| x |queries| work
@@ -115,33 +85,20 @@ def cosine_topk(
     # pair re-runs two interpreted norm folds per (row, query) — 3x the
     # per-pair cost, measured on the range_search probe. Same bits:
     # dot/(qnorm*cnorm) with the original operand order.
-    if dim is not None:
-        q = queries.selectExpr(
-            f"{id_col} AS query_id", f"{vec_col} AS qv", f"{_norm_sql(vec_col, dim)} AS _qn"
-        )
-        c = corpus.selectExpr(
-            f"{id_col} AS neighbor_id", f"{vec_col} AS cv", f"{_norm_sql(vec_col, dim)} AS _cn"
-        )
-        scored = c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")).selectExpr(
+    q = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"), norm(F.col(vec_col)).alias("_qn")
+    )
+    c = corpus.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"), norm(F.col(vec_col)).alias("_cn")
+    )
+    scored = (
+        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
+        .select(
             "query_id",
             "neighbor_id",
-            f"ROUND({_dot_sql('qv', 'cv', dim)} / (_qn * _cn), 6) AS cos",
+            F.round(dot(F.col("qv"), F.col("cv")) / (F.col("_qn") * F.col("_cn")), 6).alias("cos"),
         )
-    else:
-        q = queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"), norm(F.col(vec_col)).alias("_qn")
-        )
-        c = corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"), norm(F.col(vec_col)).alias("_cn")
-        )
-        scored = (
-            c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(dot(F.col("qv"), F.col("cv")) / (F.col("_qn") * F.col("_cn")), 6).alias("cos"),
-            )
-        )
+    )
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
@@ -182,7 +139,7 @@ def _det_hyperplane(table: int, plane: int, dim: int) -> list[float]:
     return out
 
 
-def lsh_bucket_tables(vec: Column | str, dim: int, planes: int = 8, tables: int = 16) -> Column:
+def lsh_bucket_tables(vec: str, dim: int, planes: int = 8, tables: int = 16) -> Column:
     """``array<struct<table:int, bucket:string>>`` — one hyperplane-sign
     bucket per LSH table (multi-table = the OR-amplified construction: a
     pair is a candidate if it shares a bucket in ANY table, which drives
@@ -194,38 +151,21 @@ def lsh_bucket_tables(vec: Column | str, dim: int, planes: int = 8, tables: int 
     fused JVM multiply-adds — unlike ``lsh_bucket`` there is no
     per-element hashing at runtime.
 
-    Pass ``vec`` as a column NAME to render the whole tables x planes x
-    dim literal tree as one parsed SQL expression (identical nodes; a
-    Column argument keeps the constructor path — the SQL-text twins
+    ``vec`` is a column NAME: the whole tables x planes x dim literal
+    tree renders as one parsed SQL expression (the SQL-text rendering
     note: ~9k py4j constructor RPCs saved per call)."""
-    if isinstance(vec, str):
-        entries = []
-        for t in range(tables):
-            signs = []
-            for p in range(planes):
-                hp = ", ".join(_dsql(x) for x in _det_hyperplane(t, p, dim))
-                dotp = (
-                    f"aggregate(zip_with({vec}, array({hp}), "
-                    f"(a, b) -> CAST(a AS DOUBLE) * b), 0.0D, (acc, x) -> acc + x)"
-                )
-                signs.append(f"CASE WHEN {dotp} >= 0 THEN '1' ELSE '0' END")
-            entries.append(
-                f"named_struct('table', {t}, 'bucket', concat({', '.join(signs)}))"
-            )
-        return F.expr(f"array({', '.join(entries)})")
     entries = []
     for t in range(tables):
         signs = []
         for p in range(planes):
-            hp = F.array(*[F.lit(x) for x in _det_hyperplane(t, p, dim)])
-            dotp = F.aggregate(
-                F.zip_with(vec, hp, lambda a, b: a.cast("double") * b),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
+            hp = ", ".join(_dsql(x) for x in _det_hyperplane(t, p, dim))
+            dotp = (
+                f"aggregate(zip_with({vec}, array({hp}), "
+                f"(a, b) -> CAST(a AS DOUBLE) * b), 0.0D, (acc, x) -> acc + x)"
             )
-            signs.append(F.when(dotp >= 0, F.lit("1")).otherwise(F.lit("0")))
-        entries.append(F.struct(F.lit(t).alias("table"), F.concat(*signs).alias("bucket")))
-    return F.array(*entries)
+            signs.append(f"CASE WHEN {dotp} >= 0 THEN '1' ELSE '0' END")
+        entries.append(f"named_struct('table', {t}, 'bucket', concat({', '.join(signs)}))")
+    return F.expr(f"array({', '.join(entries)})")
 
 
 def ann_lsh_topk(
@@ -465,7 +405,7 @@ def random_project(
     scale = 1.0 / math.sqrt(out_dim)
     # SQL-text rendering of the same zip_with/aggregate tree (identical
     # nodes, one parse instead of out_dim x in_dim literal RPCs — the
-    # SQL-text twins note)
+    # SQL-text rendering note)
     cols = []
     for k in range(out_dim):
         s_arr = ", ".join(str(v) for v in signs[k])
@@ -483,9 +423,9 @@ def random_project(
 # ---------------------------------------------------------------------------
 
 
-def _sub_euclid_raw(sub: Column, cent: list[float]) -> Column:
-    """euclidean distance between a subvector column and a literal
-    codeword — left-to-right association, identical to DuckDB's
+def _sub_euclid_raw_sql(sub: str, cent: list[float]) -> str:
+    """SQL text of the euclidean distance between a subvector expression
+    and a literal codeword — left-to-right association, identical to DuckDB's
     list_distance (the cross-engine parity the kmeans gate established).
     UNROUNDED: call sites quantize exactly once (round-6 for encode
     argmin, round-0 micro for the ADC LUT) — rounding twice with
@@ -496,23 +436,6 @@ def _sub_euclid_raw(sub: Column, cent: list[float]) -> Column:
     MEASURED SLOWER (1.5s -> 4.1s encode at sf0.1) — the ~500-node tree
     per row blows past whole-stage-codegen limits and falls back to
     interpreted expression eval, which loses to the lambda fold."""
-    c_arr = F.array(*[F.lit(float(v)) for v in cent])
-    sq = F.aggregate(
-        F.zip_with(sub, c_arr, lambda x, c: (x.cast("double") - c) * (x.cast("double") - c)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    return F.sqrt(sq)
-
-
-def _sub_euclid(sub: Column, cent: list[float]) -> Column:
-    return F.round(_sub_euclid_raw(sub, cent), 6)
-
-
-def _sub_euclid_raw_sql(sub: str, cent: list[float]) -> str:
-    """SQL-text twin of :func:`_sub_euclid_raw` — parses to the identical
-    zip_with/aggregate/sqrt tree (NOT an unrolled chain; see the measured
-    regression note above), just without the per-node py4j cost."""
     c_arr = ", ".join(_dsql(v) for v in cent)
     return (
         f"sqrt(aggregate(zip_with({sub}, array({c_arr}), "
@@ -574,9 +497,9 @@ def pq_encode(
     sub = len(codebooks[0][0])
     # rendered as ONE selectExpr string: the tree is identical to the
     # F.array/F.struct/fold construction (same HOF nodes — the unrolled
-    # arithmetic alternative was measured SLOWER, see _sub_euclid_raw),
+    # arithmetic alternative was measured SLOWER, see _sub_euclid_raw_sql),
     # but built in a single parse instead of ~2k py4j constructor calls
-    # (~1-5 ms each of driver time — the SQL-text twins note).
+    # (~1-5 ms each of driver time — the SQL-text rendering note).
     code_cols = []
     for j in range(m):
         subvec = f"slice({vec_col}, {j * sub + 1}, {sub})"
@@ -690,7 +613,6 @@ def range_search(
     threshold: float = 0.2,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact radius search: every (query, corpus) pair with cosine ≥
     ``threshold`` → ``(query_id, corpus_id, cos)``. The "find everything
@@ -703,7 +625,7 @@ def range_search(
     the semantic; for query sets beyond broadcast size, bucket both
     sides with ``lsh_bucket_tables`` and verify exactly, like
     ``embedding_dup_pairs``); the corpus streams MAP-ONLY through one
-    codegen'd dot/norm fold per (row, query) — no shuffle at all until
+    dot/norm fold per (row, query) — no shuffle at all until
     the caller aggregates. Output volume is the true result size; the
     threshold is the only knob. Self-matches excluded. ``cos`` rounded
     to 6 so the threshold comparison is engine-exact.
@@ -713,24 +635,6 @@ def range_search(
     # (row, query) — measured 3x the per-pair cost (probe α crept to
     # 1.11 before this; the per-pair work is now a single dot fold).
     # Bit-identical result: the same double norm values multiply either way.
-    # ``dim`` routes the per-pair dot through the codegen'd unrolled chain
-    # (bit-identical — see the SQL-text twins note at the top).
-    if dim is not None:
-        q = queries.selectExpr(
-            f"{id_col} AS query_id", f"{vec_col} AS qv", f"{_norm_sql(vec_col, dim)} AS _qn"
-        )
-        c = corpus.selectExpr(
-            f"{id_col} AS corpus_id", f"{vec_col} AS cv", f"{_norm_sql(vec_col, dim)} AS _cn"
-        )
-        return (
-            c.join(F.broadcast(q), F.col("query_id") != F.col("corpus_id"))
-            .selectExpr(
-                "query_id",
-                "corpus_id",
-                f"ROUND({_dot_sql('qv', 'cv', dim)} / (_qn * _cn), 6) AS cos",
-            )
-            .where(F.col("cos") >= F.lit(threshold))
-        )
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"), norm(F.col(vec_col)).alias("_qn")
     )

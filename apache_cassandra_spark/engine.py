@@ -236,6 +236,8 @@ class Engine:
 
     # -- reads (§2.1) -------------------------------------------------------
     def get(self, ks: str, key: str, path: ColumnPath) -> DataFrame:
+        V.validate_key(key)
+        V.validate_column_path(self.catalog, ks, path)
         return R.get(self.cf(ks, path.column_family), key, path)
 
     def get_slice(self, ks: str, key: str, cf_name: str, predicate: SlicePredicate, super_column=None) -> DataFrame:
@@ -244,13 +246,19 @@ class Engine:
         return R.get_slice(self.cf(ks, cf_name), key, predicate, super_column)
 
     def multiget(self, ks: str, keys: list[str], path: ColumnPath) -> DataFrame:
+        for key in keys:
+            V.validate_key(key)
+        V.validate_column_path(self.catalog, ks, path)
         return R.multiget(self.cf(ks, path.column_family), keys, path)
 
     def multiget_slice(self, ks: str, keys, cf_name: str, predicate, super_column=None) -> DataFrame:
+        for key in keys:
+            V.validate_key(key)
         V.validate_slice_range(V.validate_cf(self.catalog, ks, cf_name), predicate, super_column)
         return R.multiget_slice(self.cf(ks, cf_name), keys, predicate, super_column)
 
     def get_count(self, ks: str, key: str, cf_name: str, super_column=None) -> int:
+        V.validate_cf(self.catalog, ks, cf_name)
         return R.get_count(self.cf(ks, cf_name), key, super_column).collect()[0]["count"]
 
     def get_range_slices(

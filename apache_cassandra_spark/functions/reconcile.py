@@ -52,34 +52,6 @@ def priority() -> Column:
     )
 
 
-_TS_BIAS = -(2**63)  # XOR flips the sign bit: signed long order -> unsigned byte order
-
-
-def priority_binary() -> Column:
-    """``comparePriority`` as ONE order-preserving binary: the unsigned
-    lexicographic order of the encoding equals the (ts, tombstone, value)
-    priority order, so the LWW winner is a plain ``max`` over one column.
-    (Still a SortAggregate — see the plan note on ``reconcile`` — Spark
-    cannot hash-aggregate variable-length buffers.)
-
-    Layout: ``[8B big-endian ts XOR sign-bit] [1B tombstone] [payload]``
-    where payload = value bytes for live cells (the value tiebreak compares
-    exactly here; shorter-is-prefix ranks lower in both Spark and
-    ``FBUtilities.compareByteArrays``) or the 4-byte ldt for tombstones
-    (ties between two equal-ts tombstones keep the latest deletion time —
-    the reference picks arbitrarily; a tombstone's ldt is always stamped by
-    the write path, nulls encode as 0). All expressions are JVM codegen —
-    hex/unhex/concat — no Python anywhere.
-    """
-    ts_bytes = F.unhex(F.lpad(F.hex(F.col("ts").bitwiseXOR(F.lit(_TS_BIAS))), 16, "0"))
-    flag = F.when(F.col("tombstone"), F.lit(b"\x01")).otherwise(F.lit(b"\x00"))
-    payload = (
-        F.when(F.col("tombstone"), F.unhex(F.lpad(F.hex(F.coalesce(F.col("ldt"), F.lit(0))), 8, "0")))
-        .otherwise(F.coalesce(F.col("value"), F.lit(b"")))
-    )
-    return F.concat(ts_bytes, flag, payload)
-
-
 def reconcile(cells: DataFrame) -> DataFrame:
     """Collapse multi-version cells to one winner per (key, sc, column).
 
@@ -91,40 +63,12 @@ def reconcile(cells: DataFrame) -> DataFrame:
     buffer attribute to be UnsafeRow-mutable (fixed-size), which excludes
     both the ``max_by`` struct buffer AND a ``max`` over any variable-length
     binary/string; ObjectHashAggregate only serves imperative aggregates.
-    The order-preserving single-binary formulation (``reconcile_binary``)
-    was built and benched to test this: identical SortAggregate plan,
-    0.59s vs 0.57s on the sf0.1 lww_events merge — no win, so the
-    struct form (clearer, no decode step) ships.
+    An order-preserving single-binary encoding under one ``max`` was built
+    and benched to test this: identical SortAggregate plan, 0.59s vs 0.57s
+    on the sf0.1 lww_events merge — no win, so only the struct form ships.
     """
     winner = F.max_by(F.struct(*[F.col(c) for c in CELL_COLS]), priority()).alias("cell")
     return cells.groupBy("key", "sc", "column").agg(winner).select("cell.*")
-
-
-def reconcile_binary(cells: DataFrame) -> DataFrame:
-    """One-``max`` formulation over ``priority_binary()`` — semantically
-    identical to ``reconcile`` (fuzz-locked in
-    tests/test_property_reconcile.py); kept as the documented experiment
-    and as the shape a future fixed-width-buffer engine could hash-aggregate.
-    """
-    win = cells.groupBy("key", "sc", "column").agg(F.max(priority_binary()).alias("_w"))
-    tomb = F.expr("substring(_w, 9, 1)") == F.lit(b"\x01")
-    tail = F.expr("substring(_w, 10, 2147483647)")
-    # XOR with the sign bit == add-bias in unsigned space: pattern = ts + 2^63
-    ts = (
-        F.conv(F.hex(F.expr("substring(_w, 1, 8)")), 16, 10).cast("decimal(20,0)")
-        - F.expr("cast('9223372036854775808' as decimal(20,0))")  # 2^63, > max long literal
-    ).cast("bigint")
-    return win.select(
-        "key",
-        "sc",
-        "column",
-        F.when(tomb, F.lit(None).cast("binary")).otherwise(tail).alias("value"),
-        ts.alias("ts"),
-        tomb.alias("tombstone"),
-        F.when(tomb, F.conv(F.hex(tail), 16, 10).cast("int")).alias("ldt"),
-    )
-
-
 
 
 def shadow_containers(

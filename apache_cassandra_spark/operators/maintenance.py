@@ -79,18 +79,7 @@ def compact(
     out = gc_view(cells, tombs, gc_before)
 
     if row_processor is None and cfdef.row_processors:
-        procs = [get_row_processor(n) for n in cfdef.row_processors]
-
-        def chained(pdf: pd.DataFrame) -> pd.DataFrame:
-            # RowProcessorChain semantics (db/proc/RowProcessorChain.java):
-            # each processor sees the previous one's output; null drops the row
-            for p in procs:
-                if pdf is None or len(pdf) == 0:
-                    break
-                pdf = p(pdf)
-            return pdf
-
-        row_processor = chained
+        row_processor = _chain([get_row_processor(n) for n in cfdef.row_processors])
 
     if row_processor is not None:
         proc = row_processor
@@ -328,6 +317,20 @@ def processes_incomplete(name: str) -> bool:
     return _ROW_PROCESSORS[name][1]
 
 
+def _chain(procs: list[RowProcessor]) -> RowProcessor:
+    """RowProcessorChain semantics (``db/proc/RowProcessorChain.java``):
+    each processor sees the previous one's output; null drops the row."""
+
+    def chained(pdf: pd.DataFrame) -> pd.DataFrame:
+        for p in procs:
+            if pdf is None or len(pdf) == 0:
+                break
+            pdf = p(pdf)
+        return pdf
+
+    return chained
+
+
 def flush_chain(cfdef) -> RowProcessor | None:
     """The CF's processor chain as applied at MEMTABLE FLUSH
     (``db/Memtable.java:165-187`` + ``RowProcessorChain.java:132-136``):
@@ -338,17 +341,7 @@ def flush_chain(cfdef) -> RowProcessor | None:
     procs = [
         get_row_processor(n) for n in cfdef.row_processors if processes_incomplete(n)
     ]
-    if not procs:
-        return None
-
-    def chained(pdf: pd.DataFrame) -> pd.DataFrame:
-        for p in procs:
-            if pdf is None or len(pdf) == 0:
-                break
-            pdf = p(pdf)
-        return pdf
-
-    return chained
+    return _chain(procs) if procs else None
 
 
 def _remove_deleted(pdf: pd.DataFrame) -> pd.DataFrame:

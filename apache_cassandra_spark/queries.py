@@ -175,9 +175,8 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     timestamp_ntz); every downstream query does ``ts div 1000`` to get
     epoch-us, so the contract here is: ``ts`` is always nanos. The session
     timezone is UTC (session.py), so the ntz→timestamp cast below matches
-    DuckDB's naive-as-UTC ``epoch_us(ts)`` in the oracles. Falls back to an
-    Arrow-side read if the session forbids the legacy conf. Memoized per
-    session (the readability probe costs a job)."""
+    DuckDB's naive-as-UTC ``epoch_us(ts)`` in the oracles. Memoized per
+    session; read errors surface from Spark, with no pandas-side fallback."""
     return _events_norm(load_events_raw(spark, sf_dir))
 
 
@@ -196,27 +195,10 @@ def load_events_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     cache_key = (id(spark), sf_dir)
     if cache_key in _EVENTS_CACHE:
         return _EVENTS_CACHE[cache_key]
-    path = f"{sf_dir}/events.parquet"
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        df.head(1)
-        _EVENTS_CACHE[cache_key] = df
-        return df
-    except Exception:
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(path)
-        unit = getattr(tbl.schema.field("ts").type, "unit", "ns")
-        pdf = tbl.to_pandas()
-        pdf["ts"] = pdf["ts"].astype("int64") * {
-            "s": 1_000_000_000, "ms": 1_000_000, "us": 1_000, "ns": 1
-        }[unit]
-        df = spark.createDataFrame(
-            pdf, "event_id long, ts long, user_id long, event_type string, value double, props string"
-        )
-        _EVENTS_CACHE[cache_key] = df
-        return df
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    _EVENTS_CACHE[cache_key] = df
+    return df
 
 
 def _cf(spark: SparkSession, sf_dir: str, table: str, order_preserving: bool = True) -> CF:
@@ -280,11 +262,6 @@ def q_multiget_slice(spark, sf_dir):
     cf = _cf(spark, sf_dir, "orders")
     pred = SlicePredicate(slice_range=SliceRange(count=2))
     return _strings(R.multiget_slice(cf, ["1", "2", "3", "4", "5", "6", "7"], pred))
-
-
-def q_get_count(spark, sf_dir):
-    cf = _cf(spark, sf_dir, "orders")
-    return R.get_count(cf, "32")
 
 
 def q_range_slices_keys(spark, sf_dir):
@@ -390,15 +367,6 @@ def q_super_get_count(spark, sf_dir):
     """R5 on a Super CF parent: counts supercolumns (linenumbers)."""
     cf = _cf(spark, sf_dir, "lineitem")
     return R.get_count(cf, "1")
-
-
-def q_multiget(spark, sf_dir):
-    """R3 multiget: an entry per requested key, NULL for misses."""
-    from apache_cassandra_spark.model import ColumnPath
-
-    cf = _cf(spark, sf_dir, "orders")
-    out = R.multiget(cf, ["32", "33", "999999999"], ColumnPath("orders", column=b"o_orderstatus"))
-    return out.select("key", F.col("value").cast("string").alias("value"))
 
 
 def q_events_props_json(spark, sf_dir):
@@ -559,31 +527,6 @@ def q_tpch_q1ish(spark, sf_dir):
     )
 
 
-def q_top_nations(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    n = load_table(spark, sf_dir, "nation")
-    return (
-        # customer scales with SF — no forced broadcast (AQE decides; the
-        # nation dim is provably 25 rows, that hint stays)
-        o.join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("n_name")
-        .agg(F.sum(F.col("o_totalprice").cast("decimal(18,4)")).cast("double").alias("revenue"))
-        .orderBy(F.col("revenue").desc(), F.col("n_name"))
-        .limit(10)
-    )
-
-
-def q_events_hourly(spark, sf_dir):
-    ev = load_events(spark, sf_dir)
-    hour = F.date_format(F.timestamp_micros(F.expr("ts div 1000")), "yyyy-MM-dd HH:00:00")
-    return (
-        ev.groupBy(hour.alias("hour"), "event_type")
-        .agg(F.count("*").alias("n"), F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("total"))
-    )
-
-
 def q_events_daily_active(spark, sf_dir):
     """Daily active users — exact distinct-count per day (Spark plans
     the two-phase Expand dedup itself). The scale path for wider windows
@@ -735,18 +678,6 @@ def q_orders_rollup(spark, sf_dir):
             F.sum(F.col("o_totalprice").cast("decimal(18,4)")).cast("double").alias("total"),
             F.grouping_id().cast("long").alias("gid"),
         )
-    )
-
-
-def q_lineitem_quantiles(spark, sf_dir):
-    """Exact interpolated percentiles per return flag — Spark
-    ``percentile`` and standard SQL ``quantile_cont``/``percentile_cont``
-    share the interpolation formula, so values hash-match at 4 digits."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.round(F.expr("percentile(l_extendedprice, 0.5)"), 4).alias("p50"),
-        F.round(F.expr("percentile(l_extendedprice, 0.9)"), 4).alias("p90"),
-        F.round(F.expr("percentile(l_extendedprice, 0.99)"), 4).alias("p99"),
     )
 
 
@@ -977,15 +908,6 @@ def q_corpus_stats(spark, sf_dir):
     )
 
 
-def q_events_windowed(spark, sf_dir):
-    """The Structured-Streaming windowed operator (streaming/ingest.py),
-    exercised on the batch frame — identical code path to the stream."""
-    from apache_cassandra_spark.streaming.ingest import windowed_event_stats
-
-    ev = load_events(spark, sf_dir).withColumn("ts_micros", F.expr("ts div 1000"))
-    return windowed_event_stats(ev)
-
-
 def q_events_sliding(spark, sf_dir):
     """SLIDING event-time windows (2h length, 1h slide): every event lands
     in exactly two overlapping windows — the hopping-aggregate shape the
@@ -1018,32 +940,6 @@ def q_events_pivot(spark, sf_dir):
             "day",
             *[F.coalesce(F.col(t), F.lit(0)).cast("bigint").alias(f"n_{t}") for t in types],
         )
-    )
-
-
-def q_tpch_q3ish(spark, sf_dir):
-    """Join + filter + group + top-k (shipping-priority shape)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    rev = F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).cast("decimal(18,4)")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .where((F.col("o_orderdate") < "1996-01-01") & (F.col("l_shipdate") > "1996-01-01"))
-        .groupBy("l_orderkey")
-        .agg(F.sum(rev).cast("double").alias("revenue"))
-        .orderBy(F.col("revenue").desc(), F.col("l_orderkey"))
-        .limit(10)
-    )
-
-
-def q_customers_without_orders(spark, sf_dir):
-    """Anti-join (NOT EXISTS) — a composition the reference could not run
-    server-side at all."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left_anti")
-        .select("c_custkey", "c_name")
     )
 
 
@@ -1122,15 +1018,6 @@ def q_dedup_prefix_containment(spark, sf_dir):
     )
 
 
-def q_dedup_containment(spark, sf_dir):
-    """Directed n-gram containment |A∩B| / |A| ≥ 0.8 — the asymmetric
-    near-dup signal (quotes / syndicated excerpts embedded in larger
-    documents) that symmetric Jaccard misses."""
-    return dedup.ngram_containment_pairs(
-        load_table(spark, sf_dir, "documents"), n=3, threshold=0.8
-    )
-
-
 def q_dedup_minhash(spark, sf_dir):
     return dedup.minhash_lsh_candidates(load_table(spark, sf_dir, "documents"), n=3, num_perm=16, bands=4)
 
@@ -1173,7 +1060,7 @@ def q_dedup_embedding_exact(spark, sf_dir):
     """O(n²) baseline at a low threshold — small-sf oracle cross-check for
     the cosine expression itself (not the shipped dedup path)."""
     return dedup.embedding_dup_pairs(
-        load_table(spark, sf_dir, "embeddings"), threshold=0.35, method="brute", dim=_EMB_DIM
+        load_table(spark, sf_dir, "embeddings"), threshold=0.35, method="brute"
     )
 
 
@@ -1282,16 +1169,6 @@ def q_text_collocations(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     return collocations(docs, k=50, min_count=5)
-
-
-def q_prepare_corpus(spark, sf_dir):
-    """The full training-corpus prep composition under one oracle:
-    Gopher gate (min_stop_hits=1 — the fixture vocabulary has only one of
-    the eight Gopher stopwords) → exact dedup → minhash near-dup groups →
-    representative selection."""
-    from apache_cassandra_spark.analytics.pipeline import prepare_corpus
-
-    return prepare_corpus(load_table(spark, sf_dir, "documents"), min_stop_hits=1)
 
 
 def q_prepare_corpus_full(spark, sf_dir):
@@ -1478,20 +1355,6 @@ def q_corpus_overlap(spark, sf_dir):
     return contamination_overlap(tr, ev, n=3)
 
 
-def q_corpus_decontaminate(spark, sf_dir):
-    """Train/eval overlap flags (GPT-3-style n-gram decontamination):
-    eval set = every 50th doc, train = the rest; a train doc is
-    contaminated iff it shares any word trigram with the eval set. The
-    eval n-gram set is broadcast — the check is a map-side semi-join with
-    no corpus shuffle (the design point at 100 TB)."""
-    from apache_cassandra_spark.analytics.pipeline import contamination_flags
-
-    docs = load_table(spark, sf_dir, "documents")
-    ev = docs.where(F.col("doc_id") % 50 == 0)
-    tr = docs.where(F.col("doc_id") % 50 != 0)
-    return contamination_flags(tr, ev, n=3)
-
-
 def q_corpus_shard_roundtrip(spark, sf_dir):
     """Sharded-sink round-trip: documents written as ``shard=NN`` JSONL
     directories (closed-form md5 shard membership, bounded files,
@@ -1511,21 +1374,6 @@ def q_corpus_shard_roundtrip(spark, sf_dir):
     )
     return back.select(
         "doc_id", "text", "lang", "n_chars", F.col("shard").cast("long").alias("shard")
-    )
-
-
-def q_corpus_ngram_topk(spark, sf_dir):
-    """Corpus-level n-gram frequency (top-50 word bigrams) — the LM-stats
-    generalization of wordcount: explode → hash-aggregate → top-k. The
-    orderBy feeds a limit, so the plan is TakeOrderedAndProject (partial
-    per-partition top-50, no global sort)."""
-    docs = load_table(spark, sf_dir, "documents")
-    grams = dedup._shingle_stream(docs, "text", "doc_id", n=2)
-    return (
-        grams.groupBy(F.col("shingle").alias("bigram"))
-        .agg(F.count("*").alias("cnt"))
-        .orderBy(F.col("cnt").desc(), F.col("bigram"))
-        .limit(50)
     )
 
 
@@ -1633,13 +1481,6 @@ def q_events_communities(spark, sf_dir):
     from apache_cassandra_spark.analytics.graph import label_propagation
 
     return label_propagation(_clickstream_edges(spark, sf_dir), iters=2)
-
-
-def q_text_bpe_pairs(spark, sf_dir):
-    """BPE vocabulary-induction counting step: top-60 adjacent character
-    pairs weighted by word frequency. The corpus collapses to its word
-    table before the pair explosion."""
-    return text.bpe_pair_counts(load_table(spark, sf_dir, "documents"), k=60)
 
 
 def q_text_bpe_train(spark, sf_dir):
@@ -1858,7 +1699,7 @@ def q_corpus_sample_importance(spark, sf_dir):
 
 def q_sim_topk(spark, sf_dir):
     em = load_table(spark, sf_dir, "embeddings")
-    return similarity.cosine_topk(em, em.where(F.col("vec_id") < 5), k=5, dim=_EMB_DIM)
+    return similarity.cosine_topk(em, em.where(F.col("vec_id") < 5), k=5)
 
 
 def q_embedding_quantize(spark, sf_dir):
@@ -2031,35 +1872,11 @@ def q_sim_ann_lsh(spark, sf_dir):
     return similarity.ann_lsh_topk(em, em.where(F.col("vec_id") < 5), k=5)
 
 
-def q_sim_ann_lsh_exact(spark, sf_dir):
-    """LSH degenerate-exact anchor: with planes=0 every vector hashes to
-    the single empty bucket, candidates = the whole corpus, and the LSH
-    path must EQUAL brute-force top-k — same oracle as sim_topk (the
-    IVF family has the identical anchor via nprobe == n_cells)."""
-    em = load_table(spark, sf_dir, "embeddings")
-    return similarity.ann_lsh_topk(em, em.where(F.col("vec_id") < 5), k=5, planes=0)
-
-
 def q_sim_ann_ivf(spark, sf_dir):
     """IVF-flat ANN (deterministic sampled centroids, nprobe cells) —
     rows-only gate entry, same rationale as the LSH variant."""
     em = load_table(spark, sf_dir, "embeddings")
     return similarity.ivf_topk(em, em.where(F.col("vec_id") < 5), k=5)
-
-
-def q_sim_ann_ivf_exact(spark, sf_dir):
-    """IVF with ``nprobe == n_cells`` probes every cell, so the output
-    must EQUAL exact brute-force top-k — a full value-hash oracle for the
-    IVF machinery itself (deterministic centroid sample, single-cell
-    assignment, per-cell scoring, rank tie-break). The approximate
-    ``nprobe < n_cells`` entry above stays rows-only by design; this one
-    pins that the *plumbing* loses nothing."""
-    em = load_table(spark, sf_dir, "embeddings")
-    return similarity.ivf_topk(em, em.where(F.col("vec_id") < 5), k=5, n_cells=8, nprobe=8)
-
-
-def q_text_quality(spark, sf_dir):
-    return text.quality_features(load_table(spark, sf_dir, "documents"))
 
 
 def q_text_lang_id(spark, sf_dir):
@@ -2588,29 +2405,6 @@ def q_events_anomaly(spark, sf_dir):
     return zscore_outliers(ev, k=2, min_count=5)
 
 
-def q_docs_novelty_topk(spark, sf_dir):
-    """Curation top-k: the 5 most novel documents per source (novelty =
-    corpus-unique n-gram ppm), ties → lower doc_id. The per-source
-    row_number ≤ 5 compiles to WindowGroupLimit — each partition
-    pre-truncates before the source shuffle, so the exchange moves
-    O(sources × k), not the corpus."""
-    from pyspark.sql import Window
-
-    from apache_cassandra_spark.analytics.dedup import ngram_novelty
-
-    docs = load_table(spark, sf_dir, "documents")
-    nov = ngram_novelty(docs, n=3)
-    joined = nov.join(docs.select("doc_id", "source"), "doc_id")
-    w = Window.partitionBy("source").orderBy(
-        F.col("novelty_ppm").desc(), F.col("doc_id").asc()
-    )
-    return (
-        joined.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= 5)
-        .select("source", "doc_id", "novelty_ppm", "rk")
-    )
-
-
 def q_streaming_interval_join_replay(spark, sf_dir):
     """Fourth streaming gate: a REAL stream-stream event-time join —
     views and clicks staged to two parquet dirs, each streamed with its
@@ -2835,7 +2629,7 @@ def q_sim_range_search(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") < 5)
-    return range_search(emb, q, threshold=0.2, dim=_EMB_DIM)
+    return range_search(emb, q, threshold=0.2)
 
 
 def q_tpch_q18ish(spark, sf_dir):
@@ -5193,7 +4987,7 @@ def _mutual_knn_edges(spark, sf_dir):
     # run the entire 500x500 brute-force scoring in a single task —
     # spread restores scan-width parallelism (r14; see cosine_topk)
     knn = cosine_topk(
-        emb, emb, k=8, dim=_EMB_DIM, spread=spark.sparkContext.defaultParallelism
+        emb, emb, k=8, spread=spark.sparkContext.defaultParallelism
     ).select("query_id", "neighbor_id")
     rev = knn.select(
         F.col("neighbor_id").alias("query_id"), F.col("query_id").alias("neighbor_id")

@@ -688,6 +688,8 @@ def read_warc(
     across files (see module comment); ``num_partitions`` defaults to
     the session's shuffle partitioning. gzip shards (``.gz``) are
     decompressed member-by-member executor-side."""
+    if num_partitions is not None and num_partitions < 1:
+        raise ValueError(f"num_partitions must be >= 1 (got {num_partitions})")
     files = spark.read.format("binaryFile").load(path).select("path")
     if num_partitions is None:
         # scale-adaptive walker width (guide §6 input sizing): never spin

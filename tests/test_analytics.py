@@ -1099,34 +1099,53 @@ def test_clickstream_props_regex_lock(spark):
     assert got == want, (got, want)
 
 
-def test_sql_text_twins_bit_identical(spark):
-    """r14 optimization lock: the SQL-text renderings (_dot_sql/_norm_sql/
-    _sub_euclid_sql/lsh_bucket_tables-by-name) must stay BIT-identical to
-    their Column-constructor twins — they exist purely to cut py4j
-    plan-construction RPCs, never to change a double."""
+def test_single_forms_match_python_fold(spark):
+    """dot/norm, _sub_euclid_sql and lsh_bucket_tables-by-name must equal a
+    pure-Python left-to-right fold BIT-exactly (sign of zero included):
+    the sim_*/dedup_embedding/embedding_pq_encode gates hash these doubles."""
     import math
+    from decimal import ROUND_HALF_UP, Decimal
 
     vals = [
         [0.1, -2.5, 3.75, 1e-7, -0.0, 123456.789, -9.25, 0.333333],
         [1.0, 2.0, -3.0, 4.5, 5.25, -6.125, 7.0, 8.875],
     ]
+    cent = [0.5, -1.5, 2.25, 0.0]
+
+    def fold(terms):
+        acc = 0.0
+        for t in terms:
+            acc = acc + t
+        return acc
+
+    def round6(x):
+        return float(Decimal(repr(x)).quantize(Decimal("1e-6"), rounding=ROUND_HALF_UP))
+
     df = spark.createDataFrame([(i, v) for i, v in enumerate(vals)], "vec_id long, embedding array<double>")
-    hof = df.select(
+    got = df.orderBy("vec_id").select(
         similarity.dot(F.col("embedding"), F.col("embedding")).alias("d"),
+        similarity.dot(F.col("embedding"), F.reverse("embedding")).alias("x"),
         similarity.norm(F.col("embedding")).alias("n"),
-        similarity._sub_euclid(F.slice("embedding", 1, 4), [0.5, -1.5, 2.25, 0.0]).alias("e"),
+        F.expr(similarity._sub_euclid_sql("slice(embedding, 1, 4)", cent)).alias("e"),
+        similarity.lsh_bucket_tables("embedding", 8, planes=4, tables=3).alias("t"),
     ).collect()
-    sql = df.selectExpr(
-        f"{similarity._dot_sql('embedding', 'embedding')} AS d",
-        f"{similarity._norm_sql('embedding')} AS n",
-        f"{similarity._sub_euclid_sql('slice(embedding, 1, 4)', [0.5, -1.5, 2.25, 0.0])} AS e",
-    ).collect()
-    for a, b in zip(hof, sql):
-        for f in ("d", "n", "e"):
-            assert math.copysign(1.0, a[f]) == math.copysign(1.0, b[f]) and a[f] == b[f], (f, a[f], b[f])
-    by_col = df.select(similarity.lsh_bucket_tables(F.col("embedding"), 8, planes=4, tables=3).alias("t")).collect()
-    by_name = df.select(similarity.lsh_bucket_tables("embedding", 8, planes=4, tables=3).alias("t")).collect()
-    assert [r["t"] for r in by_col] == [r["t"] for r in by_name]
+    for v, r in zip(vals, got):
+        want = {
+            "d": fold(a * a for a in v),
+            "x": fold(a * b for a, b in zip(v, reversed(v))),
+            "n": math.sqrt(fold(a * a for a in v)),
+            "e": round6(math.sqrt(fold((a - c) * (a - c) for a, c in zip(v, cent)))),
+        }
+        for f, w in want.items():
+            assert r[f] == w and math.copysign(1.0, r[f]) == math.copysign(1.0, w), (f, r[f], w)
+        buckets = [
+            "".join(
+                "1" if fold(a * h for a, h in zip(v, similarity._det_hyperplane(t, p, 8))) >= 0 else "0"
+                for p in range(4)
+            )
+            for t in range(3)
+        ]
+        assert [(e["table"], e["bucket"]) for e in r["t"]] == list(enumerate(buckets))
 
 
 def test_cosine_topk_spread_matches_unspread(spark):
@@ -1140,7 +1159,7 @@ def test_cosine_topk_spread_matches_unspread(spark):
     wide = {
         tuple(r)
         for r in similarity.cosine_topk(
-            df, df.where(F.col("vec_id") < 4), k=3, dim=8, spread=8
+            df, df.where(F.col("vec_id") < 4), k=3, spread=8
         ).collect()
     }
     assert base == wide

@@ -31,12 +31,10 @@ PACKAGE = Path(__file__).resolve().parent.parent / "apache_cassandra_spark"
 # (module relpath, broadcast argument source) -> (count, documented bound)
 ALLOWLIST: dict[tuple[str, str], tuple[int, str]] = {
     ("analytics/similarity.py", "q"): (
-        6,
+        4,
         "query/seed set: bounded by the caller's request, documented "
-        "seed-set-broadcast semantic with a bucketed alternative; 6 "
-        "sites because the r14 SQL-text dim branches duplicate the "
-        "cosine_topk/range_search join (dim-tagged selectExpr vs "
-        "Column form — same seed set either way)",
+        "seed-set-broadcast semantic with a bucketed alternative "
+        "(cosine_topk, ann_lsh_topk, quantized_cosine_topk, range_search)",
     ),
     ("analytics/similarity.py", "cn"): (2, "k centroid rows (k ~ 10^2..10^4)"),
     ("analytics/similarity.py", "cents"): (1, "k centroid rows"),
@@ -90,7 +88,7 @@ ALLOWLIST: dict[tuple[str, str], tuple[int, str]] = {
         "flag-gated (broadcast_model): bigram model table, caller owns bound",
     ),
     ("operators/read.py", "keys"): (1, "multiget request key list"),
-    ("queries.py", "n"): (3, "TPC-H nation dim: 25 rows"),
+    ("queries.py", "n"): (2, "TPC-H nation dim: 25 rows"),
     ("queries.py", "r"): (1, "TPC-H region dim: 5 rows"),
 }
 

@@ -64,3 +64,21 @@ def test_declared_gate_queries_have_scalar_schemas(spark, tmp_path):
         if cols:
             bad[name] = cols
     assert not bad, f"gate queries with non-scalar output columns: {bad}"
+
+
+def test_every_query_builder_and_oracle_is_registered():
+    """Spark-free registry guard: a ``q_*`` builder that no QUERIES entry
+    names, or an ORACLES entry for an undeclared query, is a retired gate
+    left behind — delete it instead of keeping a second, unchecked copy."""
+    import inspect
+
+    from apache_cassandra_spark import queries as Q
+
+    builders = {
+        name
+        for name, fn in vars(Q).items()
+        if name.startswith("q_") and inspect.isfunction(fn) and fn.__module__ == Q.__name__
+    }
+    registered = {fn.__name__ for fn in Q.QUERIES.values()}
+    assert builders <= registered, f"unregistered builders: {sorted(builders - registered)}"
+    assert set(Q.ORACLES) <= set(Q.QUERIES), f"stray oracles: {sorted(set(Q.ORACLES) - set(Q.QUERIES))}"

@@ -1,62 +1,12 @@
-"""Multimodal column plumbing: Arrow-batched decode stub, resize, frame
-sampling. The codec is stubbed (no PIL/ffmpeg in this container) — the
-Spark-side schema/batching/partitioning is what's under test."""
+"""Multimodal column plumbing: real codecs (analytics.codecs), the
+Arrow-batched decode/resize/frame-sampling/audio-feature operators, and
+the typed boundaries for formats without a stdlib decoder."""
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from apache_cassandra_spark.analytics import codecs
 from apache_cassandra_spark.analytics import multimodal as mm
-
-
-@pytest.fixture()
-def media(spark):
-    docs = spark.createDataFrame(
-        [(i, f"payload text {i}", 20 + i) for i in range(9)],
-        "doc_id long, text string, n_chars long",
-    )
-    return mm.synthetic_media_from_documents(docs)
-
-
-def test_media_schema(media):
-    assert media.schema.simpleString() == mm.MEDIA_SCHEMA.simpleString().replace("media_id:bigint", "media_id:bigint")
-    assert {r["media_type"] for r in media.select("media_type").distinct().collect()} == {
-        "image",
-        "audio",
-        "video",
-    }
-
-
-def test_extract_features_deterministic_fake(media):
-    out = mm.extract_features(media, deterministic_fake=True)
-    rows = out.collect()
-    assert len(rows) == 9
-    r = {x["media_id"]: x for x in rows}
-    assert r[0]["n_bytes"] == len(b"payload text 0")
-    assert len(r[0]["feature"]) == 8
-    # deterministic: same payload -> same feature
-    out2 = {x["media_id"]: x["feature"] for x in mm.extract_features(media).collect()}
-    assert out2[3] == r[3]["feature"]
-
-
-def test_decode_stub_raises_without_fake():
-    with pytest.raises(NotImplementedError):
-        mm.decode_stub(b"bytes", "image")
-
-
-def test_resize_rewrites_meta(media):
-    out = mm.resize_stub(media, 128, 256).select("meta.width", "meta.height").distinct().collect()
-    assert [(r["width"], r["height"]) for r in out] == [(128, 256)]
-
-
-def test_frame_sample_plan(media):
-    plan = mm.frame_sample_plan(media, every_ms=100)
-    rows = plan.collect()
-    assert all(r["frame_ts"] % 100 == 0 for r in rows)
-    # only video rows produce frames
-    vids = {r["media_id"] for r in media.where(F.col("media_type") == "video").collect()}
-    assert {r["media_id"] for r in rows} == vids
 
 
 # --- real codecs (analytics.codecs) ------------------------------------------
@@ -314,13 +264,6 @@ def test_ppm_variable_pixels_mean():
     assert d["mean_r"] == (0 + 3 + 6 + 9) / 4
     assert d["mean_g"] == (1 + 4 + 7 + 10) / 4
     assert d["mean_b"] == (2 + 5 + 8 + 11) / 4
-
-
-def test_decode_stub_uses_real_codecs_when_parseable():
-    feats = mm.decode_stub(codecs.encode_ppm(4, 2, (255, 0, 128)), "image")
-    assert feats == [1.0, 0.0, 128 / 255.0, 4.0, 2.0]
-    wav_feats = mm.decode_stub(codecs.encode_wav_constant(20, 16384), "audio")
-    assert wav_feats == [0.5, 20.0, 8000.0]
 
 
 def test_decode_pixels_roundtrip_formats():
@@ -627,9 +570,6 @@ def test_mp3_id3v2_unsync_and_extended_header():
 def test_mp3_pcm_decode_stays_typed_boundary():
     with pytest.raises(NotImplementedError, match="PCM"):
         codecs.mp3_samples(codecs.encode_mp3_frames(1))
-    # decode_stub surfaces framing metadata (no RMS claim)
-    feats = mm.decode_stub(codecs.encode_mp3_frames(7), "audio")
-    assert feats == [2.0, float(7 * 1152), 44100.0]
 
 
 # --- GIF (real LZW) ---------------------------------------------------------

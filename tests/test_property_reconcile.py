@@ -79,28 +79,3 @@ def test_reconcile_matches_python_model(spark, cells, tombs):
     }
     expected = python_model(cells, tombs)
     assert got == expected
-
-
-@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
-@given(cells=st.lists(cell_st, min_size=1, max_size=12))
-def test_binary_priority_encoding_equals_struct_reconcile(spark, cells):
-    """reconcile_binary (one max over the order-preserving priority binary)
-    must pick exactly the winners of the shipped max_by-struct reconcile —
-    including value tiebreaks, prefix values, tombstone ties, negative ts."""
-    from apache_cassandra_spark.functions.reconcile import reconcile, reconcile_binary
-
-    cell_rows = [
-        (key, sc, col, (None if tomb else value), ts, tomb, 0 if tomb else None)
-        for key, sc, col, value, ts, tomb in cells
-    ]
-    df = spark.createDataFrame(cell_rows, CELL_SCHEMA)
-
-    def norm(d):
-        rows = [
-            (r["key"], bytes(r["sc"]) if r["sc"] is not None else None, bytes(r["column"]),
-             bytes(r["value"]) if r["value"] is not None else None, r["ts"], r["tombstone"], r["ldt"])
-            for r in d.collect()
-        ]
-        return sorted(rows, key=lambda t: (t[0], t[1] is not None, t[1] or b"", t[2], t[4]))
-
-    assert norm(reconcile_binary(df)) == norm(reconcile(df))

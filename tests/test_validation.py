@@ -123,3 +123,30 @@ def test_slice_bounds_validated(engine):
     rev_bad = SlicePredicate(slice_range=SliceRange(start=i64(0), finish=i64(10), reversed=True, count=1))
     with pytest.raises(InvalidRequest):
         engine.get_slice("KS", "key1", "StdLong", rev_bad)
+
+
+def test_get_validates_key_and_path(engine):
+    for key, path, msg in [
+        ("k", ColumnPath("Nope", column=b"c"), "unknown column family"),
+        ("", ColumnPath("Std", column=b"c"), "empty"),
+        ("k", ColumnPath("Std", super_column=b"sc", column=b"c"), "supercolumn"),
+    ]:
+        with pytest.raises(InvalidRequest, match=msg):
+            engine.get("KS", key, path)
+
+
+def test_multiget_validates_each_key_and_path(engine):
+    with pytest.raises(InvalidRequest, match="empty"):
+        engine.multiget("KS", ["k", ""], ColumnPath("Std", column=b"c"))
+    with pytest.raises(InvalidRequest, match="unknown column family"):
+        engine.multiget("KS", ["k"], ColumnPath("Nope", column=b"c"))
+
+
+def test_multiget_slice_validates_each_key(engine):
+    with pytest.raises(InvalidRequest, match="empty"):
+        engine.multiget_slice("KS", ["k", ""], "Std", SlicePredicate(slice_range=SliceRange(count=10)))
+
+
+def test_get_count_validates_cf(engine):
+    with pytest.raises(InvalidRequest, match="unknown column family"):
+        engine.get_count("KS", "k", "Nope")

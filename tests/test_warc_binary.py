@@ -175,6 +175,12 @@ def test_read_warc_scheme_boundary():
         list(warc._file_chunks("s3a://bucket/shard.warc"))
 
 
+def test_read_warc_rejects_non_positive_num_partitions(spark, tmp_path):
+    for n in (0, -1):
+        with pytest.raises(ValueError, match="num_partitions"):
+            warc.read_warc(spark, str(tmp_path), num_partitions=n)
+
+
 def test_read_warc_stream_matches_batch(spark, tmp_path):
     """The streaming binary reader shares the walk and the header parse
     with the batch reader; maxFilesPerTrigger=1 proves per-shard
