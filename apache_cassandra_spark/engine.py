@@ -208,6 +208,7 @@ class Engine:
 
     def describe_splits(self, keyspace: str, cf_name: str, keys_per_split: int) -> list[str]:
         # meta op: not login-gated in the reference either
+        V.validate_cf(self.catalog, keyspace, cf_name)
         return R.describe_splits(self.store.cf(keyspace, cf_name), keys_per_split)
 
     def get_string_property(self, name: str) -> str:
@@ -242,7 +243,8 @@ class Engine:
 
     def get_slice(self, ks: str, key: str, cf_name: str, predicate: SlicePredicate, super_column=None) -> DataFrame:
         V.validate_key(key)
-        V.validate_slice_range(V.validate_cf(self.catalog, ks, cf_name), predicate, super_column)
+        cfdef = V.validate_column_parent(self.catalog, ks, cf_name, super_column)
+        V.validate_slice_range(cfdef, predicate, super_column)
         return R.get_slice(self.cf(ks, cf_name), key, predicate, super_column)
 
     def multiget(self, ks: str, keys: list[str], path: ColumnPath) -> DataFrame:
@@ -254,11 +256,13 @@ class Engine:
     def multiget_slice(self, ks: str, keys, cf_name: str, predicate, super_column=None) -> DataFrame:
         for key in keys:
             V.validate_key(key)
-        V.validate_slice_range(V.validate_cf(self.catalog, ks, cf_name), predicate, super_column)
+        cfdef = V.validate_column_parent(self.catalog, ks, cf_name, super_column)
+        V.validate_slice_range(cfdef, predicate, super_column)
         return R.multiget_slice(self.cf(ks, cf_name), keys, predicate, super_column)
 
     def get_count(self, ks: str, key: str, cf_name: str, super_column=None) -> int:
-        V.validate_cf(self.catalog, ks, cf_name)
+        V.validate_key(key)
+        V.validate_column_parent(self.catalog, ks, cf_name, super_column)
         return R.get_count(self.cf(ks, cf_name), key, super_column).collect()[0]["count"]
 
     def get_range_slices(
@@ -274,7 +278,9 @@ class Engine:
         rows (tombstoned or matching no requested column) come back as a
         ``column IS NULL`` row per key, like an empty-columns KeySlice
         (test_server.py:774-789)."""
-        V.validate_slice_range(V.validate_cf(self.catalog, ks, cf_name), predicate, super_column)
+        cfdef = V.validate_column_parent(self.catalog, ks, cf_name, super_column)
+        V.validate_slice_range(cfdef, predicate, super_column)
+        V.validate_key_range(key_range)
         return R.get_range_slices(
             self.cf(ks, cf_name),
             predicate,
@@ -284,9 +290,14 @@ class Engine:
         )
 
     def rows_may_exist(self, ks: str, cf_name: str, keys: list[str]) -> DataFrame:
+        for key in keys:
+            V.validate_key(key)
+        V.validate_cf(self.catalog, ks, cf_name)
         return X.rows_may_exist(self.cf(ks, cf_name), keys)
 
     def columns_may_exist(self, ks: str, cf_name: str, key: str, names: list[bytes]) -> DataFrame:
+        V.validate_key(key)
+        V.validate_cf(self.catalog, ks, cf_name)
         return X.columns_may_exist(self.cf(ks, cf_name), key, names)
 
     def join_cf(self, ks: str, left_cf: str, right_cf: str, how: str = "inner") -> DataFrame:

@@ -125,32 +125,6 @@ class CF:
     def is_super(self) -> bool:
         return self.cfdef.is_super
 
-    # thin delegation so `cf.get_slice(...)` reads like the Thrift API
-    def get(self, key: str, path: ColumnPath):
-        from apache_cassandra_spark.operators import read
-
-        return read.get(self, key, path)
-
-    def get_slice(self, key: str, predicate: SlicePredicate, super_column: bytes | None = None):
-        from apache_cassandra_spark.operators import read
-
-        return read.get_slice(self, key, predicate, super_column)
-
-    def multiget_slice(self, keys: list[str], predicate: SlicePredicate, super_column: bytes | None = None):
-        from apache_cassandra_spark.operators import read
-
-        return read.multiget_slice(self, keys, predicate, super_column)
-
-    def get_count(self, key: str, super_column: bytes | None = None):
-        from apache_cassandra_spark.operators import read
-
-        return read.get_count(self, key, super_column)
-
-    def get_range_slices(self, predicate: SlicePredicate, key_range: KeyRange, super_column: bytes | None = None):
-        from apache_cassandra_spark.operators import read
-
-        return read.get_range_slices(self, predicate, key_range, super_column)
-
     def live(self) -> DataFrame:
         from apache_cassandra_spark.functions.reconcile import live_view
 

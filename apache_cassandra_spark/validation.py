@@ -8,7 +8,7 @@ comparator-invalid column names).
 from __future__ import annotations
 
 from apache_cassandra_spark.catalog import Catalog, CFDef
-from apache_cassandra_spark.model import ColumnPath, Deletion, Mutation
+from apache_cassandra_spark.model import ColumnPath, Deletion, KeyRange, Mutation
 
 
 class InvalidRequest(Exception):
@@ -74,6 +74,23 @@ def validate_column_path(catalog: Catalog, keyspace: str, path: ColumnPath) -> C
                 raise InvalidRequest("column specified without supercolumn for super CF")
             validate_column_name(cfdef, path.column, sub=True)
     return cfdef
+
+
+def validate_column_parent(catalog: Catalog, keyspace: str, cf_name: str, super_column: bytes | None) -> CFDef:
+    """``validateColumnParent``: the slice/count/range reads address a
+    (cf, super_column?) parent — the same rules as a column-less path."""
+    return validate_column_path(catalog, keyspace, ColumnPath(cf_name, super_column=super_column))
+
+
+def validate_key_range(key_range: KeyRange) -> None:
+    """``validateKeyRange``: rows are addressed by keys or by tokens, not
+    both, and at least one row must be asked for."""
+    has_keys = key_range.start_key is not None or key_range.end_key is not None
+    has_tokens = key_range.start_token is not None or key_range.end_token is not None
+    if has_keys and has_tokens:
+        raise InvalidRequest("key range may set key bounds or token bounds, not both")
+    if key_range.count < 1:
+        raise InvalidRequest(f"key range count must be positive (got {key_range.count})")
 
 
 def validate_mutation(catalog: Catalog, keyspace: str, cf_name: str, m: Mutation) -> None:

@@ -178,26 +178,6 @@ def main() -> None:
 
     results: dict[str, float] = {}
 
-    # -- ambient-load calibration sentinel ----------------------------------
-    # Fixed pure-JVM work (codegen'd arithmetic over spark.range, no I/O,
-    # no shuffle beyond the single-row agg): its wall time depends ONLY on
-    # ambient CPU load, so cross-round bench comparisons can separate a
-    # real plan regression from a loaded machine mechanically (judge r7:
-    # the driver's round-7 run was ~9% hot across the board and only a
-    # manual quiet-machine re-run disentangled it). Reported as its own
-    # top-level key, NOT in `queries` and NOT part of bench_total; the
-    # comparison protocol lives in SCALE.md ("bench comparison protocol").
-    from pyspark.sql import functions as F
-
-    def _calibrate() -> int:
-        return (
-            spark.range(0, 400_000_000, 1, 32)
-            .select(F.sum(F.col("id") % F.lit(7)).alias("s"))
-            .collect()[0]["s"]
-        )
-
-    calibration_sec = timed_median(_calibrate, reps=3, warmup=True)
-
     # -- py_stress-shaped storage ops ---------------------------------------
     # Write ops (insert/compact) are disk-state-bound: a single shot swings
     # ±50% with page-cache luck. Run the load→compact cycle 3× on fresh
@@ -296,7 +276,6 @@ def main() -> None:
         "metric": "bench_total_sec",
         "value": total,
         "unit": "sec",
-        "calibration_sec": calibration_sec,
         "queries": results,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "config": {
@@ -306,8 +285,8 @@ def main() -> None:
         },
     }
     # The driver keeps only a 2,000-char tail of stdout in BENCH_r{N}.json,
-    # which truncated calibration_sec and the py_stress storage-op timings
-    # (the workload BASELINE.md actually mirrors) for three rounds running.
+    # which truncated the py_stress storage-op timings (the workload
+    # BASELINE.md actually mirrors) for three rounds running.
     # Persist the complete dict next to the driver artifact so every number
     # is auditable: BENCH_full_r{N}.json, N = current round (env override,
     # else one past the newest driver BENCH artifact).
@@ -324,56 +303,6 @@ def main() -> None:
             ]
             rnd = str(max(seen, default=0) + 1)
         out_path = os.path.join(repo, f"BENCH_full_r{int(rnd):02d}.json")
-        # preserve builder-published same-HEAD variance evidence: the
-        # driver's post-commit rerun must not shadow it (the r12 verdict's
-        # "What's wrong #2" — the overwrite dropped the variance key)
-        try:
-            with open(out_path) as fh:
-                prev = json.load(fh)
-            if isinstance(prev, dict) and "variance" in prev and "variance" not in payload:
-                payload["variance"] = prev["variance"]
-        except (OSError, ValueError):
-            pass
-        # cross-round normalizer (r13 verdict item 4): the sub-second
-        # calibration sentinel demonstrably does NOT track the ambient
-        # state governing multi-second queries (r13: the driver's
-        # sentinel read 18% FASTER while its zero-churn queries ran
-        # 1.15-3x slower than same-HEAD builder runs). Publish the
-        # median per-query ratio against the previous round's builder
-        # artifact — runA under `variance` when present (the builder's
-        # committed final-HEAD run), else that artifact's own queries —
-        # and compare rounds on that distribution position, never raw
-        # totals. The zero-churn subset (excluding queries whose
-        # implementation changed in the round — a git-level fact bench
-        # can't know) is annotated in the variance note per round.
-        try:
-            prev_path = os.path.join(repo, f"BENCH_full_r{int(rnd) - 1:02d}.json")
-            with open(prev_path) as fh:
-                prior = json.load(fh)
-            ref = (prior.get("variance") or {}).get("runA_queries") or prior.get(
-                "queries", {}
-            )
-            common = [
-                q
-                for q, v in results.items()
-                if isinstance(v, (int, float))
-                and v > 0
-                and isinstance(ref.get(q), (int, float))
-                and ref[q] > 0
-            ]
-            if common:
-                payload["median_ratio_vs_prev"] = round(
-                    statistics.median(results[q] / ref[q] for q in common), 3
-                )
-                payload["ratio_base"] = {
-                    "artifact": os.path.basename(prev_path),
-                    "key": "variance.runA_queries"
-                    if (prior.get("variance") or {}).get("runA_queries")
-                    else "queries",
-                    "n_common": len(common),
-                }
-        except (OSError, ValueError, KeyError):
-            pass
         with open(out_path, "w") as fh:
             json.dump(payload, fh, indent=1, sort_keys=True)
     except (OSError, ValueError):

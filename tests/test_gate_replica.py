@@ -82,3 +82,18 @@ def test_every_query_builder_and_oracle_is_registered():
     registered = {fn.__name__ for fn in Q.QUERIES.values()}
     assert builders <= registered, f"unregistered builders: {sorted(builders - registered)}"
     assert set(Q.ORACLES) <= set(Q.QUERIES), f"stray oracles: {sorted(set(Q.ORACLES) - set(Q.QUERIES))}"
+
+
+def test_bench_queries_are_unique_and_declared():
+    """Spark-free bench-list guard: a renamed or retired query left in
+    ``bench.BENCH_QUERIES`` would otherwise surface only as a KeyError
+    midway through a bench run, and a duplicate would be timed twice."""
+    import collections
+
+    from apache_cassandra_spark.queries import QUERIES
+    from bench import BENCH_QUERIES
+
+    dups = sorted(q for q, n in collections.Counter(BENCH_QUERIES).items() if n > 1)
+    assert not dups, f"duplicate bench queries: {dups}"
+    unknown = sorted(set(BENCH_QUERIES) - set(QUERIES))
+    assert not unknown, f"bench queries not in QUERIES: {unknown}"

@@ -5,7 +5,7 @@ import pytest
 
 from apache_cassandra_spark.catalog import Catalog
 from apache_cassandra_spark.engine import Engine
-from apache_cassandra_spark.model import ColumnPath, Deletion, Mutation, SlicePredicate, SliceRange
+from apache_cassandra_spark.model import ColumnPath, Deletion, KeyRange, Mutation, SlicePredicate, SliceRange
 from apache_cassandra_spark.validation import InvalidRequest
 
 
@@ -150,3 +150,48 @@ def test_multiget_slice_validates_each_key(engine):
 def test_get_count_validates_cf(engine):
     with pytest.raises(InvalidRequest, match="unknown column family"):
         engine.get_count("KS", "k", "Nope")
+
+
+def test_supercolumn_parent_on_standard_cf_rejected(engine):
+    # validateColumnParent: a Standard CF is addressed by the CF alone
+    pred = SlicePredicate(slice_range=SliceRange(count=10))
+    kr = KeyRange(start_token="", end_token="", count=10)
+    for call in (
+        lambda: engine.get_slice("KS", "k", "Std", pred, super_column=b"sc"),
+        lambda: engine.multiget_slice("KS", ["k"], "Std", pred, super_column=b"sc"),
+        lambda: engine.get_count("KS", "k", "Std", super_column=b"sc"),
+        lambda: engine.get_range_slices("KS", "Std", pred, kr, super_column=b"sc"),
+    ):
+        with pytest.raises(InvalidRequest, match="supercolumn"):
+            call()
+
+
+def test_get_count_validates_key(engine):
+    with pytest.raises(InvalidRequest, match="empty"):
+        engine.get_count("KS", "", "Std")
+
+
+def test_get_range_slices_validates_key_range(engine):
+    pred = SlicePredicate(slice_range=SliceRange(count=10))
+    with pytest.raises(InvalidRequest, match="count"):
+        engine.get_range_slices("KS", "Std", pred, KeyRange(start_token="", end_token="", count=0))
+    both = KeyRange(start_key="a", end_key="b", start_token="", end_token="", count=10)
+    with pytest.raises(InvalidRequest, match="not both"):
+        engine.get_range_slices("KS", "Std", pred, both)
+
+
+def test_probes_and_splits_validate_cf(engine):
+    for call in (
+        lambda: engine.rows_may_exist("KS", "Nope", ["k"]),
+        lambda: engine.columns_may_exist("KS", "Nope", "k", [b"c"]),
+        lambda: engine.describe_splits("KS", "Nope", 10),
+    ):
+        with pytest.raises(InvalidRequest, match="unknown column family"):
+            call()
+
+
+def test_probes_validate_keys(engine):
+    with pytest.raises(InvalidRequest, match="empty"):
+        engine.rows_may_exist("KS", "Std", ["k", ""])
+    with pytest.raises(InvalidRequest, match="empty"):
+        engine.columns_may_exist("KS", "Std", "", [b"c"])
