@@ -32,18 +32,6 @@ from apache_cassandra_spark.sources.cellstore import CELL_SCHEMA, CONTAINER_TOMB
 RowProcessor = Callable[[pd.DataFrame], pd.DataFrame]
 
 
-def _swap_dir(tmp: str, final: str) -> None:
-    """Local-FS atomic-ish swap. On an object store this would be a
-    manifest/metadata commit (Delta/Iceberg-style); the operator contract
-    is the same: readers see the old or the new fileset, never a mix."""
-    old = final + ".old"
-    if os.path.isdir(final):
-        os.rename(final, old)
-    os.rename(tmp, final)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-
-
 def compact(
     store: CellStore,
     ks: str,
@@ -64,6 +52,7 @@ def compact(
       (``doAntiCompaction:413-452``): only matching rows are kept.
     * output is hash-bucketed by key and sorted by (key, sc, column) inside
       each bucket — scans get clustered rows, point reads prune buckets.
+      ``CellStore.publish_compaction`` writes and commits it.
     """
     store.flush(ks, cf_name)
     cf = store.cf(ks, cf_name)
@@ -91,86 +80,10 @@ def compact(
         out = out.groupBy("key").applyInPandas(run, CELL_SCHEMA)
 
     n_buckets = buckets or max(1, out.sparkSession.sparkContext.defaultParallelism)
-
-    cells_dir = store._cells_dir(ks, cf_name)
-    if cfdef.domain_split:
-        # preserve the fork's per-domain physical layout through compaction
-        # (domain pruning is the read optimization for these CFs; they keep
-        # the directory layout instead of the bucketed catalog table)
-        from apache_cassandra_spark.functions.tokens import OdklDomainPartitioner
-
-        out = out.repartition(n_buckets, "key").sortWithinPartitions("key", "sc", "column")
-        out = out.withColumn("_dom", OdklDomainPartitioner().domain(F.col("key")))
-        writer = out.write.mode("overwrite").partitionBy("_dom")
-        if cfdef.bloom_columns:
-            writer = (
-                writer.option("parquet.bloom.filter.enabled#key", "true")
-                .option("parquet.bloom.filter.enabled#column", "true")
-            )
-        tmp = cells_dir + ".compact_tmp"
-        writer.parquet(tmp)
-        _swap_dir(tmp, cells_dir)
-    else:
-        # bucketed catalog table: scan reports HashPartitioning(key), so
-        # every post-compaction read runs without a shuffle exchange (the
-        # reconcile aggregate is skipped outright — CF.pre_reconciled) and
-        # point reads prune to one bucket. repartition on the bucket key
-        # aligns tasks with buckets -> exactly one file per bucket.
-        meta_old = store.compacted_meta(ks, cf_name)
-        input_files = (
-            [
-                os.path.join(cells_dir, f)
-                for f in os.listdir(cells_dir)
-                if f.endswith(".parquet")
-            ]
-            if os.path.isdir(cells_dir)
-            else []
-        )
-        gen = (meta_old["gen"] + 1) if meta_old else 1
-        table = store.compacted_table_name(ks, cf_name, gen)
-        path = os.path.join(store.root, ks, cf_name, f"compacted_g{gen}")
-        shutil.rmtree(path, ignore_errors=True)  # orphan from a crashed run
-        writer = (
-            out.repartition(n_buckets, "key")
-            .write.mode("overwrite")
-            .bucketBy(n_buckets, "key")
-            .sortBy("key", "sc", "column")
-            .option("path", path)
-        )
-        if cfdef.bloom_columns:
-            # fork column-bloom analog: Parquet bloom filters on the name/key
-            # columns (probe served by io skipping instead of explicit BFs)
-            writer = (
-                writer.option("parquet.bloom.filter.enabled#key", "true")
-                .option("parquet.bloom.filter.enabled#column", "true")
-            )
-        writer.saveAsTable(table)
-        # pointer flip is the commit; until then readers see old gen + deltas.
-        # Crash after the flip but before cleanup leaves duplicate versions
-        # on disk — harmless, LWW reconcile is idempotent over them and the
-        # next compaction sweeps the leftovers.
-        store.write_compacted_meta(
-            ks, cf_name, {"gen": gen, "table": table, "path": path, "buckets": n_buckets}
-        )
-        for p in input_files:
-            os.remove(p)
-        if meta_old is not None:
-            store.spark.sql(f"DROP TABLE IF EXISTS {meta_old['table']}")
-            shutil.rmtree(meta_old["path"], ignore_errors=True)
-
-    # container tombstones: purge those past grace (all shadowed cells are
-    # gone from the rewrite above), keep younger watermarks. When nothing
-    # survives, remove the directory outright so reads bind tombs=None and
-    # skip the watermark joins.
-    if tombs is not None:
-        kept = tombs.where(F.col("ldt") >= F.lit(gc_before))
-        ctombs_dir = store._ctombs_dir(ks, cf_name)
-        if kept.isEmpty():
-            shutil.rmtree(ctombs_dir, ignore_errors=True)
-        else:
-            tmp_t = ctombs_dir + ".compact_tmp"
-            kept.write.mode("overwrite").parquet(tmp_t)
-            _swap_dir(tmp_t, ctombs_dir)
+    # container tombstones past grace are purged (every cell they shadowed
+    # is gone from the rewrite); younger watermarks are kept
+    kept = None if tombs is None else tombs.where(F.col("ldt") >= F.lit(gc_before))
+    store.publish_compaction(ks, cf_name, out, kept, n_buckets)
 
     # saved-caches maintenance (ColumnFamilyStore.java:213-311): persist
     # the current hot-key list, then drop the primed cache — its lineage
@@ -447,25 +360,22 @@ def import_json(spark, path: str) -> DataFrame:
 
 
 def snapshot(store: CellStore, ks: str, cf_name: str, tag: str) -> str:
-    """Hardlink snapshot (``db/ColumnFamilyStore.java:1283``). Walks
-    partition subdirectories so domain-split CFs (files under ``_dom=XX/``)
-    snapshot correctly, preserving the partition layout; the compacted
-    bucketed generation (if any) is linked under ``compacted/``."""
-    dst = os.path.join(store.root, ks, cf_name, "snapshots", tag)
+    """Hardlink snapshot (``db/ColumnFamilyStore.java:1283``) of every file
+    a ``cf()`` bind reads: the delta cells at the snapshot root (``_dom=XX/``
+    partitions kept), and ``ctombs/``, the compacted generation and
+    ``COMPACTED.json`` at their paths under the CF directory."""
+    base = store._cf_dir(ks, cf_name)
+    dst = os.path.join(base, "snapshots", tag)
     os.makedirs(dst, exist_ok=True)
     # persist the hot-key list with the snapshot (saved-caches analog) —
     # data is unchanged, so the primed cache stays valid
     store.save_row_cache(ks, cf_name)
-    srcs = [(store._cells_dir(ks, cf_name), dst)]
+    files = store._delta_files(ks, cf_name)
     meta = store.compacted_meta(ks, cf_name)
     if meta is not None:
-        srcs.append((meta["path"], os.path.join(dst, "compacted")))
-    for src, out_root in srcs:
-        for dirpath, _dirnames, filenames in os.walk(src):
-            rel = os.path.relpath(dirpath, src)
-            for f in filenames:
-                if f.endswith(".parquet"):
-                    out_dir = out_root if rel == "." else os.path.join(out_root, rel)
-                    os.makedirs(out_dir, exist_ok=True)
-                    os.link(os.path.join(dirpath, f), os.path.join(out_dir, f))
+        files += store._files(ks, cf_name, meta["path"]) + ["COMPACTED.json"]
+    for rel in files:
+        out = os.path.join(dst, os.path.relpath(rel, "cells") if rel.startswith("cells" + os.sep) else rel)
+        os.makedirs(os.path.dirname(out), exist_ok=True)
+        os.link(os.path.join(base, rel), out)
     return dst

@@ -13,10 +13,16 @@ row-major SSTables (``io/SSTableWriter.java``) — with:
   reconciled view sorted by (key, sc, column) so the file count stays
   bounded and scans read one version per cell.
 
-Layout on disk:
+Layout on disk, under ``{root}/{keyspace}/{cf}/``:
 
-    {root}/{keyspace}/{cf}/cells/        multi-version cell parquet files
-    {root}/{keyspace}/{cf}/ctombs/       container (row/sc) tombstones
+    cells/            multi-version delta cell files (the changelog),
+                      under ``_dom=XX/`` for domain-split CFs
+    ctombs/           container (row/sc) tombstones
+    compacted_g{N}/   compaction generation N: a bucketed catalog table,
+                      or ``_dom=XX/`` Parquet for domain-split CFs
+    COMPACTED.json    pointer to the live generation; from a compaction's
+                      flip until its cleanup it also lists the files and
+                      generation it retires (``publish_compaction``)
 
 Scale note: at 100 TB the cells directory would be written partitioned by
 a token-derived bucket (see ``compact(zorder_keys=...)``); local tests keep
@@ -29,13 +35,14 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from apache_cassandra_spark.catalog import Catalog, CFDef
-from apache_cassandra_spark.functions.tokens import Partitioner, RandomPartitioner
+from apache_cassandra_spark.functions.tokens import OdklDomainPartitioner, Partitioner, RandomPartitioner
 from apache_cassandra_spark.model import CF
 from apache_cassandra_spark.operators.write import MutationBatch
 
@@ -82,11 +89,28 @@ class CellStore:
         self._row_caches: dict[tuple[str, str], tuple[frozenset, DataFrame]] = {}
 
     # -- paths --------------------------------------------------------------
+    def _cf_dir(self, ks: str, cf: str) -> str:
+        return os.path.join(self.root, ks, cf)
+
     def _cells_dir(self, ks: str, cf: str) -> str:
         return os.path.join(self.root, ks, cf, "cells")
 
     def _ctombs_dir(self, ks: str, cf: str) -> str:
         return os.path.join(self.root, ks, cf, "ctombs")
+
+    def _files(self, ks: str, cf: str, sub: str) -> list[str]:
+        """CF-relative paths of the Parquet files under ``sub``, ``_dom=``
+        partition directories included (Spark's ``_temporary`` is not)."""
+        base = self._cf_dir(ks, cf)
+        out = []
+        for dirpath, dirnames, filenames in os.walk(os.path.join(base, sub)):
+            dirnames[:] = [d for d in dirnames if d.startswith("_dom=")]
+            out += [os.path.relpath(os.path.join(dirpath, f), base) for f in filenames if f.endswith(".parquet")]
+        return out
+
+    def _delta_files(self, ks: str, cf: str) -> list[str]:
+        """Every delta file a compaction consumes: ``cells/`` and ``ctombs/``."""
+        return self._files(ks, cf, "cells") + self._files(ks, cf, "ctombs")
 
     def _saved_cache_path(self, ks: str, cf: str) -> str:
         return os.path.join(self.root, ks, cf, "SAVED_CACHES.json")
@@ -169,16 +193,19 @@ class CellStore:
         self._row_caches[(ks, cf_name)] = ent
         return ent
 
-    # -- compacted bucketed table (the intended 100 TB read layout) ----------
+    # -- compacted generations (the intended 100 TB read layout) ------------
     #
-    # Major compaction persists its output as a *bucketed catalog table*
+    # Major compaction writes the reconciled view as generation
+    # ``compacted_g{N}``. Standard CFs get a *bucketed catalog table*
     # (bucketBy(key) + sortBy(key, sc, column)) instead of plain files, so
     # the scan reports HashPartitioning(key) and post-compaction reads run
     # with no shuffle exchange: the reconcile aggregate is skipped outright
     # (one version per coordinate — see CF.pre_reconciled) and the slice
     # windows' ClusteredDistribution(key) is satisfied by the scan itself.
-    # A JSON pointer file records (gen, table, path, buckets); a fresh
-    # session re-registers the table from it via DDL.
+    # Domain-split CFs get ``_dom``-partitioned Parquet and no table, so
+    # point reads keep pruning to one domain. A JSON pointer file records
+    # (gen, table, path, buckets); a fresh session re-registers the table
+    # from it via DDL.
 
     def _compacted_meta_path(self, ks: str, cf: str) -> str:
         return os.path.join(self.root, ks, cf, "COMPACTED.json")
@@ -197,14 +224,85 @@ class CellStore:
             json.dump(meta, fh)
         os.replace(tmp, p)  # atomic pointer flip
 
-    def compacted_table_name(self, ks: str, cf: str, gen: int) -> str:
-        h = hashlib.md5(f"{os.path.abspath(self.root)}/{ks}/{cf}".encode()).hexdigest()[:10]
-        return f"cass_compacted_{h}_g{gen}"
+    def publish_compaction(
+        self, ks: str, cf: str, out: DataFrame, kept_tombs: DataFrame | None, buckets: int
+    ) -> None:
+        """The one commit of a major compaction, for every CF: (1) write
+        ``out`` as generation ``compacted_g{N}``; (2) append ``kept_tombs``
+        (container tombstones inside grace) to ``ctombs/`` — a duplicate
+        watermark is harmless, only the max per container counts; (3) flip
+        ``COMPACTED.json`` to the generation, listing what it retires: the
+        delta files listed before (1) and the previous generation; (4)
+        ``_retire`` them. A crash before (3) leaves the old pointer over
+        every input; the next ``cf()`` bind finishes a crash after it. So
+        no reader sees a consumed delta beside a generation that purged
+        the tombstones shadowing it."""
+        cfdef = self.catalog.keyspace(ks).cf(cf)
+        base = self._cf_dir(ks, cf)
+        retire = self._delta_files(ks, cf)
+        old = self.compacted_meta(ks, cf)
+        gen = old["gen"] + 1 if old else 1
+        path = os.path.join(base, f"compacted_g{gen}")
+        shutil.rmtree(path, ignore_errors=True)  # orphan of a run cut short before its flip
+        # repartition on the bucket key aligns tasks with buckets -> exactly
+        # one file per bucket (per domain, for domain-split CFs)
+        out = out.repartition(buckets, "key")
+        if cfdef.domain_split:
+            table, out = None, out.sortWithinPartitions("key", "sc", "column")
+            writer = out.withColumn("_dom", OdklDomainPartitioner().domain(F.col("key"))).write.partitionBy("_dom")
+        else:
+            h = hashlib.md5(f"{os.path.abspath(self.root)}/{ks}/{cf}".encode()).hexdigest()[:10]
+            table = f"cass_compacted_{h}_g{gen}"
+            writer = out.write.bucketBy(buckets, "key").sortBy("key", "sc", "column").option("path", path)
+        writer = writer.mode("overwrite")
+        if cfdef.bloom_columns:
+            # fork column-bloom analog: Parquet bloom filters on the name/key
+            # columns (probe served by io skipping instead of explicit BFs)
+            writer = writer.options(
+                **{"parquet.bloom.filter.enabled#key": "true", "parquet.bloom.filter.enabled#column": "true"}
+            )
+        if table is None:
+            writer.parquet(path)
+        else:
+            writer.saveAsTable(table)
+        if kept_tombs is not None and not kept_tombs.isEmpty():
+            kept_tombs.coalesce(1).write.mode("append").parquet(self._ctombs_dir(ks, cf))
+        if old is not None:
+            retire.append(os.path.relpath(os.path.join(base, old["path"]), base))
+        meta = {"gen": gen, "table": table, "path": os.path.basename(path), "buckets": buckets}
+        meta.update(retire=retire, retire_table=old["table"] if old else None)
+        self.write_compacted_meta(ks, cf, meta)
+        self._retire(ks, cf, meta)
 
-    def _compacted_df(self, meta: dict) -> DataFrame:
-        """spark.table over the compacted generation, re-registering the
-        bucketed table from the pointer if this session hasn't seen it."""
+    def _retire(self, ks: str, cf: str, meta: dict) -> None:
+        """Step 4 of ``publish_compaction``: delete what the pointer
+        ``meta`` retires, and any ``_dom=`` directory left without data,
+        drop the old table, then rewrite the pointer without the list.
+        Missing entries are skipped, so a run cut short is finished by
+        running it again."""
+        base = self._cf_dir(ks, cf)
+        retire = meta.pop("retire")
+        for p in (os.path.join(base, rel) for rel in retire):
+            if os.path.isdir(p):
+                shutil.rmtree(p)
+            elif os.path.exists(p):
+                os.remove(p)
+        for d in {os.path.join(base, os.path.dirname(rel)) for rel in retire if "_dom=" in rel}:
+            if os.path.isdir(d) and not any(f.endswith(".parquet") for f in os.listdir(d)):
+                shutil.rmtree(d)  # with the .crc sidecars Spark left beside the data
+        table = meta.pop("retire_table")
+        if table:
+            self.spark.sql(f"DROP TABLE IF EXISTS {table}")
+        self.write_compacted_meta(ks, cf, meta)
+
+    def _compacted_df(self, ks: str, cf: str, meta: dict, schema: T.StructType) -> DataFrame:
+        """The compacted generation: plain Parquet when the pointer names no
+        table, else spark.table, re-registering the bucketed table from the
+        pointer if this session hasn't seen it."""
+        path = os.path.join(self._cf_dir(ks, cf), meta["path"])
         name = meta["table"]
+        if name is None:
+            return self.spark.read.schema(schema).parquet(path)
         if not self.spark.catalog.tableExists(name):
             cols = (
                 "key STRING, sc BINARY, `column` BINARY, value BINARY, "
@@ -213,7 +311,7 @@ class CellStore:
             self.spark.sql(
                 f"CREATE TABLE {name} ({cols}) USING PARQUET "
                 f"CLUSTERED BY (key) SORTED BY (key, sc, `column`) "
-                f"INTO {meta['buckets']} BUCKETS LOCATION '{meta['path']}'"
+                f"INTO {meta['buckets']} BUCKETS LOCATION '{path}'"
             )
         return self.spark.table(name)
 
@@ -238,15 +336,10 @@ class CellStore:
         for k in keys:
             self._commit(k[0], k[1], self._pending.pop(k))
 
-    def _domain_split(self, ks: str, cf: str) -> bool:
-        return self.catalog.keyspace(ks).cf(cf).domain_split
-
     def _write_cells(self, ks: str, cf: str, df: DataFrame, single_file: bool = False) -> None:
-        if self._domain_split(ks, cf):
+        if self.catalog.keyspace(ks).cf(cf).domain_split:
             # fork domain-split CFs (CFMetaData.java:49-53): physically
             # partition by the key's domain so point reads prune to 1/256
-            from apache_cassandra_spark.functions.tokens import OdklDomainPartitioner
-
             dom = OdklDomainPartitioner().domain(F.col("key"))
             df.withColumn("_dom", dom).write.mode("append").partitionBy("_dom").parquet(
                 self._cells_dir(ks, cf)
@@ -333,55 +426,37 @@ class CellStore:
         self._write_cells(ks, cf, shaped)
 
     # -- read path -----------------------------------------------------------
-    def _read_dir(self, path: str, schema: T.StructType, partitioned: bool = False) -> DataFrame:
-        if os.path.isdir(path) and (
-            partitioned or any(f.endswith(".parquet") for f in os.listdir(path))
-        ):
-            if partitioned and not os.listdir(path):
-                return self.spark.createDataFrame([], schema)
-            return self.spark.read.schema(schema).parquet(path)
-        return self.spark.createDataFrame([], schema)
-
-    def _has_parquet(self, path: str) -> bool:
-        return os.path.isdir(path) and any(f.endswith(".parquet") for f in os.listdir(path))
-
     def cf(self, ks: str, cf_name: str) -> CF:
-        """Bind a CF handle: compacted table ∪ delta cells ∪ pending memtable.
+        """Bind a CF handle: compacted generation ∪ delta cells ∪ pending memtable.
 
-        When the compacted bucketed table is the *only* source (no delta
-        files since compaction, nothing pending), the CF is marked
-        ``pre_reconciled``: reads skip the LWW aggregate and run
-        exchange-free off the bucketed scan."""
+        When the compacted generation is the *only* source (no delta files
+        since compaction, nothing pending), the CF is marked
+        ``pre_reconciled``: reads skip the LWW aggregate (and, off the
+        bucketed table, run exchange-free)."""
         cfdef: CFDef = self.catalog.keyspace(ks).cf(cf_name)
-        domain = self._domain_split(ks, cf_name)
+        domain = cfdef.domain_split
         cell_schema = CELL_SCHEMA
         if domain:
             cell_schema = T.StructType(list(CELL_SCHEMA.fields) + [T.StructField("_dom", T.StringType(), True)])
-        meta = None if domain else self.compacted_meta(ks, cf_name)
+        meta = self.compacted_meta(ks, cf_name)
         parts: list[DataFrame] = []
         if meta is not None:
-            parts.append(self._compacted_df(meta))
-        cells_dir = self._cells_dir(ks, cf_name)
-        has_delta = (
-            os.path.isdir(cells_dir) and bool(os.listdir(cells_dir))
-            if domain
-            else self._has_parquet(cells_dir)
-        )
-        if has_delta:
-            parts.append(self._read_dir(cells_dir, cell_schema, partitioned=domain))
+            if "retire" in meta:  # a compaction cut short after its flip
+                self._retire(ks, cf_name, meta)
+            parts.append(self._compacted_df(ks, cf_name, meta, cell_schema))
+        if self._files(ks, cf_name, "cells"):
+            parts.append(self.spark.read.schema(cell_schema).parquet(self._cells_dir(ks, cf_name)))
         # container tombstones: bind None (not an empty frame) when no row/sc
         # deletes exist, so the read path skips the watermark joins entirely —
         # a CF with no container deletes pays nothing for the feature
         tombs: DataFrame | None = None
-        if self._has_parquet(self._ctombs_dir(ks, cf_name)):
-            tombs = self._read_dir(self._ctombs_dir(ks, cf_name), CONTAINER_TOMBSTONE_SCHEMA)
+        if self._files(ks, cf_name, "ctombs"):
+            tombs = self.spark.read.schema(CONTAINER_TOMBSTONE_SCHEMA).parquet(self._ctombs_dir(ks, cf_name))
         pend = self._pending.get((ks, cf_name))
         if pend is not None:
             if pend.cells:
                 pend_cells = self.spark.createDataFrame(pend.cells, CELL_SCHEMA)
                 if domain:
-                    from apache_cassandra_spark.functions.tokens import OdklDomainPartitioner
-
                     pend_cells = pend_cells.withColumn("_dom", OdklDomainPartitioner().domain(F.col("key")))
                 parts.append(pend_cells)
             if pend.container_tombstones:

@@ -124,19 +124,14 @@ def changes_stream(store: CellStore, ks: str, cf: str) -> DataFrame:
 
     Retention contract — the commitlog analogy cuts both ways: major
     compaction CONSUMES the delta files (they are folded into the next
-    bucketed generation and removed), exactly as the reference recycles
-    commitlog segments once their memtables flush
-    (``db/commitlog/CommitLog.java`` segment deletion). A subscriber
-    must therefore drain the changelog before compaction runs (schedule
-    compaction after the subscriber checkpoint advances, or don't
-    compact the CF while a subscription is live); replay reaches back to
-    the last compaction, not the beginning of time. Domain-split CFs are
-    rejected: their compaction swaps the reconciled table back INTO the
-    partitioned delta directory, which would re-emit surviving cells as
-    fresh mutations."""
-    if store._domain_split(ks, cf):
-        raise ValueError(
-            "changes_stream does not support domain-split CFs: compaction "
-            "rewrites into the streamed directory (see retention contract)"
-        )
+    compacted generation, which lives outside the delta directory, and
+    removed), exactly as the reference recycles commitlog segments once
+    their memtables flush (``db/commitlog/CommitLog.java`` segment
+    deletion). A subscriber must therefore drain the changelog before
+    compaction runs (schedule compaction after the subscriber checkpoint
+    advances, or don't compact the CF while a subscription is live);
+    replay reaches back to the last compaction, not the beginning of
+    time, and never re-emits a cell the compaction kept. Domain-split CFs
+    stream the same way: their ``_dom=XX/`` delta directories are read
+    as partitions of the one changelog."""
     return store.spark.readStream.schema(CELL_SCHEMA).parquet(store._cells_dir(ks, cf))

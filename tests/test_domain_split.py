@@ -66,10 +66,18 @@ def test_compaction_preserves_domain_layout(loaded):
 
     loaded.remove("KS", "x", ColumnPath("Dom"), 5, ldt=100)
     compact(loaded.store, "KS", "Dom", gc_grace_seconds=0)
-    cells_dir = loaded.store._cells_dir("KS", "Dom")
-    doms = sorted(d for d in os.listdir(cells_dir) if d.startswith("_dom="))
+    meta = loaded.store.compacted_meta("KS", "Dom")
+    assert meta["table"] is None  # a _dom-partitioned generation, no catalog table
+    gen_dir = os.path.join(loaded.store.root, "KS", "Dom", meta["path"])
+    doms = sorted(d for d in os.listdir(gen_dir) if d.startswith("_dom="))
     assert doms == ["_dom=ab", "_dom=cd"]  # 'x' row purged, layout intact
+    cells_dir = loaded.store._cells_dir("KS", "Dom")
+    assert not [d for d in os.listdir(cells_dir) if d.startswith("_dom=")]  # deltas retired
     cf = loaded.cf("KS", "Dom")
+    assert cf.pre_reconciled
+    df = read.get_slice(cf, "user_ab", SlicePredicate(slice_range=SliceRange(count=10)))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "_dom" in plan and ("PartitionFilters" in plan or "partitionFilters" in plan)
     assert read.get_count(cf, "user_ab").collect()[0]["count"] == 1
 
 

@@ -18,6 +18,7 @@ def store(spark, tmp_path):
                 "Standard1": {"compare_with": "BytesType"},
                 "Proc1": {"compare_with": "BytesType", "row_processors": ["RemoveDeleted"]},
                 "FlushProc1": {"compare_with": "BytesType", "row_processors": ["DropMarked", "RemoveDeleted"]},
+                "Dom1": {"compare_with": "BytesType", "domain_split": True},
             }
         }
     )
@@ -220,13 +221,103 @@ def test_export_import_roundtrip(store, spark, tmp_path):
     assert len(rows) == 1 and bytes(rows[0]["value"]) == b"v1" and rows[0]["ts"] == 1
 
 
-def test_snapshot_hardlinks(store):
-    ks, cfn = "Keyspace1", "Standard1"
-    store.apply(ks, cfn, write.insert("k1", ColumnPath(cfn, column=b"c1"), b"v1", 1))
+def test_snapshot_hardlinks(store, spark):
+    import json
     import os
 
+    ks, cfn = "Keyspace1", "Standard1"
+    store.apply(ks, cfn, write.insert("k1", ColumnPath(cfn, column=b"c1"), b"v1", 1))
     dst = maintenance.snapshot(store, ks, cfn, "tag1")
     assert any(f.endswith(".parquet") for f in os.listdir(dst))
+    # a row delete lives in ctombs/: a snapshot without it would bring the
+    # deleted row back on restore
+    store.apply(ks, cfn, write.remove("k1", ColumnPath(cfn), 2))
+    dst = maintenance.snapshot(store, ks, cfn, "tag2")
+    assert [r["key"] for r in spark.read.parquet(os.path.join(dst, "ctombs")).collect()] == ["k1"]
+    # after a compaction the snapshot links the generation and its pointer
+    store.apply(ks, cfn, write.insert("k2", ColumnPath(cfn, column=b"c1"), b"v2", 1))
+    maintenance.compact(store, ks, cfn)
+    dst = maintenance.snapshot(store, ks, cfn, "tag3")
+    with open(os.path.join(dst, "COMPACTED.json")) as fh:
+        gen = os.path.join(dst, json.load(fh)["path"])
+    assert [r["key"] for r in spark.read.parquet(gen).collect()] == ["k2"]
+    assert [r["key"] for r in spark.read.parquet(os.path.join(dst, "ctombs")).collect()] == ["k1"]
+
+
+class Crash(Exception):
+    pass
+
+
+def _live(store, ks, cfn):
+    return sorted(
+        (r["key"], bytes(r["column"]), bytes(r["value"])) for r in store.cf(ks, cfn).live().collect()
+    )
+
+
+@pytest.mark.parametrize("cfn", ["Standard1", "Dom1"])
+@pytest.mark.parametrize("crash", ["before_flip", "after_flip", "mid_retire"])
+def test_compaction_crash_leaves_pre_or_post_state(store, spark, monkeypatch, cfn, crash):
+    """Major compaction's pointer flip is its only commit point. Compaction
+    1 keeps a cell tombstone (ts 10) and two row tombstones; late writes at
+    ts 5 land in a delta behind them. Compaction 2 purges the old
+    tombstones, so a consumed delta left beside its output would resurrect
+    the late writes. Whatever step it dies at, a reopened store reads the
+    pre- or post-compaction state (the same live view)."""
+    import os
+
+    ks = "Keyspace1"
+    c, row = ColumnPath(cfn, column=b"c"), ColumnPath(cfn)
+    batch = write.insert("live", c, b"v", 1)
+    for m in (
+        write.insert("k", c, b"v", 1),
+        write.remove("k", c, 10, local_deletion_time=100),
+        write.insert("gone", c, b"v", 1),
+        write.remove("gone", row, 10, local_deletion_time=100),
+        write.insert("young", c, b"v", 1),
+        write.remove("young", row, 10, local_deletion_time=2**31 - 10),
+    ):
+        batch.extend(m)
+    store.apply(ks, cfn, batch)
+    maintenance.compact(store, ks, cfn, gc_grace_seconds=0, now=50)  # keeps every tombstone
+    late = write.insert("k", c, b"late", 5)
+    for k in ("gone", "young"):
+        late.extend(write.insert(k, c, b"late", 5))
+    store.apply(ks, cfn, late)
+    model = [("live", b"c", b"v")]
+
+    flip = store.write_compacted_meta
+    removed = []
+
+    def fail_before_flip(*args):
+        raise Crash
+
+    def fail_after_flip(*args):
+        flip(*args)
+        raise Crash
+
+    def fail_second_remove(path, real_remove=os.remove):
+        if path.startswith(store.root):
+            removed.append(path)
+            if len(removed) == 2:
+                raise Crash
+        real_remove(path)
+
+    with monkeypatch.context() as m:
+        if crash == "before_flip":
+            m.setattr(store, "write_compacted_meta", fail_before_flip)
+        elif crash == "after_flip":
+            m.setattr(store, "write_compacted_meta", fail_after_flip)
+        else:
+            m.setattr(os, "remove", fail_second_remove)
+        with pytest.raises(Crash):
+            maintenance.compact(store, ks, cfn, gc_grace_seconds=0)
+
+    reopened = CellStore(spark, store.root, store.catalog)
+    assert _live(reopened, ks, cfn) == model
+    # the bind finished a cut-short retirement; before the flip the
+    # pointer still names compaction 1's generation
+    meta = reopened.compacted_meta(ks, cfn)
+    assert "retire" not in meta and meta["gen"] == (1 if crash == "before_flip" else 2)
 
 
 def test_rows_may_exist_probe(store):

@@ -19,7 +19,14 @@ from apache_cassandra_spark.streaming.ingest import (
 
 @pytest.fixture()
 def store(spark, tmp_path):
-    catalog = Catalog.from_dict({"KS": {"Streamed": {"compare_with": "UTF8Type"}}})
+    catalog = Catalog.from_dict(
+        {
+            "KS": {
+                "Streamed": {"compare_with": "UTF8Type"},
+                "DomStreamed": {"compare_with": "UTF8Type", "domain_split": True},
+            }
+        }
+    )
     return CellStore(spark, str(tmp_path / "store"), catalog)
 
 
@@ -539,6 +546,38 @@ def test_changes_stream_emits_mutations_in_arrival_order(spark, tmp_path, store)
     )
     q.awaitTermination(120)
     assert [(r["key"], r["ts"]) for r in rows2] == [("k2", 300)]
+
+
+def test_changes_stream_domain_split_cf_survives_compaction(spark, tmp_path, store):
+    """Domain-split CFs stream their ``_dom=XX/`` deltas like any CF, and a
+    major compaction writes its generation outside the streamed directory:
+    no surviving cell is emitted again."""
+    from apache_cassandra_spark.model import ColumnPath
+    from apache_cassandra_spark.operators import maintenance, write
+    from apache_cassandra_spark.streaming.ingest import changes_stream
+
+    cfn = "DomStreamed"
+    batch = write.insert("user_ab", ColumnPath(cfn, column=b"c"), b"v1", 100)
+    batch.extend(write.insert("user_cd", ColumnPath(cfn, column=b"c"), b"v2", 100))
+    store.apply("KS", cfn, batch)
+
+    def drain():
+        rows = []
+        q = (
+            changes_stream(store, "KS", cfn)
+            .writeStream.outputMode("append")
+            .foreachBatch(lambda df, _id: rows.extend(df.collect()))
+            .option("checkpointLocation", str(tmp_path / "ckpt_dom"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        return sorted((r["key"], r["ts"]) for r in rows)
+
+    assert drain() == [("user_ab", 100), ("user_cd", 100)]
+    maintenance.compact(store, "KS", cfn, gc_grace_seconds=0)
+    store.apply("KS", cfn, write.insert("user_ab", ColumnPath(cfn, column=b"c"), b"v3", 300))
+    assert drain() == [("user_ab", 300)]
 
 
 def test_dedup_ingest_durable_reference_survives_new_query(spark, tmp_path):
