@@ -2,14 +2,15 @@
 
 The reference's write path is WAL + in-memory LWW merge + flush
 (``db/Table.java:568-660``); ours is append-only delta batches in cell
-layout — the atomic Parquet commit *is* the WAL, and the LWW merge happens
+layout — the driver-written Parquet commit *is* the WAL, and the LWW merge happens
 declaratively at read/compaction time (``functions/reconcile.py``). These
 functions translate the Thrift mutation surface into cell / container-
 tombstone rows; ``sources/cellstore.py`` persists them.
 
 A ``MutationBatch`` for one CF == the reference's per-CF slice of a
-``batch_mutate`` call (``db/RowMutation.java:270``): applied atomically
-(one commit), LWW-resolved against everything else by timestamp.
+``batch_mutate`` call (``db/RowMutation.java:270``): committed as one
+atomic Parquet file per kind (cells, then container tombstones),
+LWW-resolved against everything else by timestamp.
 """
 
 from __future__ import annotations
@@ -86,8 +87,9 @@ def batch_mutate(
 ) -> dict[str, MutationBatch]:
     """W3 ``batch_mutate`` — per-row-atomic batch of upserts and deletes
     (``CassandraServer.java:384-425``). Returns one MutationBatch per CF
-    name; caller commits each (the per-CF commit is the atomicity unit,
-    matching the reference's per-row RowMutation application).
+    name; caller commits each (each kind's file of the per-CF commit is
+    atomic; a crash between the cells and the container tombstones leaves
+    the cells without the delete).
 
     ``super_cfs`` names the Super CFs in the batch: a name-predicate
     deletion without ``super_column`` on one of those deletes whole

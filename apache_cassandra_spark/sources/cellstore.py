@@ -4,8 +4,12 @@ Replaces the reference's storage stack — commitlog
 (``db/commitlog/CommitLog.java``), memtable (``db/Memtable.java:62``), and
 row-major SSTables (``io/SSTableWriter.java``) — with:
 
-* **delta commits**: each applied MutationBatch is one atomic Parquet
-  append (the commit is the WAL; recovery = the files are simply there);
+* **delta commits**: each applied MutationBatch becomes one Parquet file
+  per kind (cells, then container tombstones; one cells file per ``_dom=``
+  directory for domain-split CFs), written on the driver under a hidden
+  temp name, fsynced and renamed into place — no Spark job. The commit is
+  the WAL: recovery is the files simply being there, and a crash leaves at
+  most a hidden temp file that no reader lists;
 * **memtable analog**: an in-session row buffer, unioned into every read
   until flushed (reads always see their own writes, like the reference's
   memtable+SSTable collation);
@@ -36,10 +40,15 @@ import hashlib
 import json
 import os
 import shutil
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _make_type_verifier
 
 from apache_cassandra_spark.catalog import Catalog, CFDef
 from apache_cassandra_spark.functions.tokens import OdklDomainPartitioner, Partitioner, RandomPartitioner
@@ -66,6 +75,69 @@ CONTAINER_TOMBSTONE_SCHEMA = T.StructType(
         T.StructField("ldt", T.IntegerType(), False),
     ]
 )
+
+# the characters Spark escapes as %XX in a partition directory name
+# (ExternalCatalogUtils.escapePathName), so a committed file lands in the
+# same ``_dom=`` directory as bulk_load's and reads back the same domain
+_PATH_ESCAPED = frozenset(map(chr, range(1, 32))) | frozenset("\"#%'*/:=?\\\x7f{[]^")
+
+
+def _dom_dir(key: str) -> str:
+    dom = OdklDomainPartitioner().domain_of(key)
+    return "_dom=" + "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPED else c for c in dom)
+
+
+def _arrow_table(rows: list, schema: T.StructType) -> pa.Table:
+    """``rows`` as an Arrow table of ``schema``. Each row first passes
+    pyspark's schema verifier, the check Spark makes when it builds a
+    DataFrame from Python rows: pyarrow alone would encode a ``str`` into a
+    binary field, take a float ``ts`` and write a null into a non-nullable
+    field."""
+    verify = _make_type_verifier(schema)
+    for row in rows:
+        verify(row)
+    arrow = to_arrow_schema(schema)
+    return pa.Table.from_arrays([pa.array(col, f.type) for col, f in zip(zip(*rows), arrow)], schema=arrow)
+
+
+def _fsync_dir(path: str) -> None:
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
+
+def _makedirs_durable(path: str) -> None:
+    """``os.makedirs``, with each directory it creates fsynced into its parent."""
+    if os.path.isdir(path):
+        return
+    parent = os.path.dirname(path) or os.curdir
+    _makedirs_durable(parent)
+    try:
+        os.mkdir(path)
+    except FileExistsError:
+        return
+    _fsync_dir(parent)
+
+
+def _publish(table: pa.Table, dirpath: str) -> None:
+    """Commit ``table`` as one visible Parquet file in ``dirpath``. It is
+    written under a temp name that starts with ``.`` and does not end in
+    ``.parquet`` (Spark skips ``.`` names; every store lookup selects by the
+    suffix), fsynced, renamed into place, and the rename fsynced. A crash
+    leaves either nothing visible or the whole file."""
+    _makedirs_durable(dirpath)
+    name = f"part-{uuid.uuid4()}.zstd.parquet"
+    tmp = os.path.join(dirpath, f".{name}.tmp")
+    with open(tmp, "wb") as fh:
+        # zstd like every Parquet file the session writes (session.py);
+        # every delta is read with an explicit schema: no Arrow schema blob
+        pq.write_table(table, fh, compression="zstd", store_schema=False)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.replace(tmp, os.path.join(dirpath, name))
+    _fsync_dir(dirpath)
 
 
 class CellStore:
@@ -100,7 +172,8 @@ class CellStore:
 
     def _files(self, ks: str, cf: str, sub: str) -> list[str]:
         """CF-relative paths of the Parquet files under ``sub``, ``_dom=``
-        partition directories included (Spark's ``_temporary`` is not)."""
+        partition directories included (Spark's ``_temporary`` is not, nor
+        is a commit's hidden temp file)."""
         base = self._cf_dir(ks, cf)
         out = []
         for dirpath, dirnames, filenames in os.walk(os.path.join(base, sub)):
@@ -336,19 +409,6 @@ class CellStore:
         for k in keys:
             self._commit(k[0], k[1], self._pending.pop(k))
 
-    def _write_cells(self, ks: str, cf: str, df: DataFrame, single_file: bool = False) -> None:
-        if self.catalog.keyspace(ks).cf(cf).domain_split:
-            # fork domain-split CFs (CFMetaData.java:49-53): physically
-            # partition by the key's domain so point reads prune to 1/256
-            dom = OdklDomainPartitioner().domain(F.col("key"))
-            df.withColumn("_dom", dom).write.mode("append").partitionBy("_dom").parquet(
-                self._cells_dir(ks, cf)
-            )
-            return
-        if single_file:
-            df = df.coalesce(1)
-        df.write.mode("append").parquet(self._cells_dir(ks, cf))
-
     def _commit(self, ks: str, cf: str, batch: MutationBatch) -> None:
         # a cf() bind between apply(durable=False) and flush can re-prime
         # the warm cache from RAW pending cells; the commit (which may drop
@@ -357,12 +417,23 @@ class CellStore:
         cells = batch.cells
         if cells:
             cells = self._apply_flush_processors(ks, cf, cells)
+        # check and convert both kinds before either becomes visible
+        files: list[tuple[str, pa.Table]] = []
         if cells:
-            df = self.spark.createDataFrame(cells, CELL_SCHEMA)
-            self._write_cells(ks, cf, df, single_file=True)
+            table = _arrow_table(cells, CELL_SCHEMA)
+            cells_dir = self._cells_dir(ks, cf)
+            if self.catalog.keyspace(ks).cf(cf).domain_split:
+                doms: dict[str, list[int]] = {}
+                for i, key in enumerate(table.column("key").to_pylist()):
+                    doms.setdefault(_dom_dir(key), []).append(i)
+                files += [(os.path.join(cells_dir, d), table.take(rows)) for d, rows in doms.items()]
+            else:
+                files.append((cells_dir, table))
         if batch.container_tombstones:
-            df = self.spark.createDataFrame(batch.container_tombstones, CONTAINER_TOMBSTONE_SCHEMA)
-            df.coalesce(1).write.mode("append").parquet(self._ctombs_dir(ks, cf))
+            tombs = _arrow_table(batch.container_tombstones, CONTAINER_TOMBSTONE_SCHEMA)
+            files.append((self._ctombs_dir(ks, cf), tombs))
+        for dirpath, table in files:
+            _publish(table, dirpath)
 
     def _apply_flush_processors(self, ks: str, cf: str, cells: list) -> list:
         """Run the CF's flush-capable row-processor chain over the cells
@@ -395,8 +466,7 @@ class CellStore:
         pdf = pd.DataFrame(cells, columns=CELL_SCHEMA.fieldNames())
 
         def clean(row: tuple) -> tuple:
-            # undo pandas' nullable-int → float64/NaN coercion (ldt) so the
-            # tuples re-enter createDataFrame(CELL_SCHEMA) unchanged
+            # undo pandas' nullable-int → float64/NaN coercion (ldt)
             key, sc, column, value, ts, tombstone, ldt = row
             return (
                 key,
@@ -423,7 +493,13 @@ class CellStore:
         cell DataFrame straight to storage, bypassing the memtable path."""
         self.invalidate_row_cache(ks, cf)
         shaped = cells.select([F.col(f.name).cast(f.dataType) for f in CELL_SCHEMA.fields])
-        self._write_cells(ks, cf, shaped)
+        writer = shaped.write
+        if self.catalog.keyspace(ks).cf(cf).domain_split:
+            # fork domain-split CFs (CFMetaData.java:49-53): physically
+            # partition by the key's domain so point reads prune to 1/256
+            dom = OdklDomainPartitioner().domain(F.col("key"))
+            writer = shaped.withColumn("_dom", dom).write.partitionBy("_dom")
+        writer.mode("append").parquet(self._cells_dir(ks, cf))
 
     # -- read path -----------------------------------------------------------
     def cf(self, ks: str, cf_name: str) -> CF:

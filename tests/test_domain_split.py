@@ -2,10 +2,14 @@
 physical partitioning by key domain + partition pruning on point reads."""
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from apache_cassandra_spark.catalog import Catalog
 from apache_cassandra_spark.engine import Engine
-from apache_cassandra_spark.model import ColumnPath, SlicePredicate, SliceRange
+from apache_cassandra_spark.functions.tokens import OdklDomainPartitioner
+from apache_cassandra_spark.model import ColumnPath, Mutation, SlicePredicate, SliceRange
 from apache_cassandra_spark.operators import read
 
 
@@ -88,3 +92,46 @@ def test_range_scan_over_domain_cf(loaded):
     pred = SlicePredicate(slice_range=SliceRange(count=10))
     kr = KeyRange(start_token="", end_token="", count=10)
     assert read.get_range_slices(cf, pred, kr).count() == 4
+
+
+def test_durable_batch_commits_one_file_per_domain(engine, spark):
+    """One durable batch_mutate over three domains adds exactly one file
+    under each domain's directory. A domain holding characters Spark
+    escapes gets the directory name Spark's partitionBy gives it, so
+    bulk_load's file for that domain lands beside the commit's."""
+    import os
+
+    from apache_cassandra_spark.sources.cellstore import CELL_SCHEMA
+
+    keys = ["user_ab", "other_ab", "user_cd", "user:/"]
+    muts = {k: {"Dom": [Mutation(column_name=b"c", value=k.encode(), timestamp=1)]} for k in keys}
+    engine.batch_mutate("KS", muts)
+    cells_dir = engine.store._cells_dir("KS", "Dom")
+
+    def files_per_domain():
+        return {
+            d: len([f for f in os.listdir(os.path.join(cells_dir, d)) if f.endswith(".parquet")])
+            for d in os.listdir(cells_dir)
+            if d.startswith("_dom=")
+        }
+
+    assert files_per_domain() == {"_dom=ab": 1, "_dom=cd": 1, "_dom=%3A%2F": 1}
+    bulk = spark.createDataFrame([("bulk:/", None, b"c", b"bulk:/", 1, False, None)], CELL_SCHEMA)
+    engine.store.bulk_load("KS", "Dom", bulk)
+    assert files_per_domain() == {"_dom=ab": 1, "_dom=cd": 1, "_dom=%3A%2F": 2}
+    cf = engine.cf("KS", "Dom")
+    pred = SlicePredicate(slice_range=SliceRange(count=10))
+    for k in keys + ["bulk:/"]:
+        assert [bytes(r["value"]) for r in read.get_slice(cf, k, pred).collect()] == [k.encode()]
+
+
+@settings(max_examples=5, deadline=None)
+@given(st.lists(st.text(st.characters(blacklist_categories=("Cs",)), min_size=1, max_size=4), min_size=20))
+def test_domain_of_matches_the_column_domain(spark, keys):
+    """The commit places a cell by ``domain_of(key)`` and reads prune by
+    it, while bulk_load and compaction partition by ``domain(col)``: the
+    two must agree on every key, 1-character and non-ASCII ones included."""
+    p = OdklDomainPartitioner()
+    df = spark.createDataFrame([(k,) for k in keys], "key string")
+    got = [tuple(r) for r in df.select("key", p.domain(F.col("key"))).collect()]
+    assert got == [(k, p.domain_of(k)) for k in keys]

@@ -320,6 +320,127 @@ def test_compaction_crash_leaves_pre_or_post_state(store, spark, monkeypatch, cf
     assert "retire" not in meta and meta["gen"] == (1 if crash == "before_flip" else 2)
 
 
+def _store_files(store, ks, cfn):
+    import os
+
+    base = store._cf_dir(ks, cfn)
+    return sorted(
+        os.path.relpath(os.path.join(d, f), base)
+        for sub in ("cells", "ctombs")
+        for d, _, fs in os.walk(os.path.join(base, sub))
+        for f in fs
+    )
+
+
+@pytest.mark.parametrize(
+    "cells, tombs",
+    [
+        ([(None, None, b"c", b"v", 1, False, None)], []),
+        ([("k", None, None, b"v", 1, False, None)], []),
+        ([("k", None, b"c", b"v", None, False, None)], []),
+        ([("k", None, b"c", "v", 1, False, None)], []),
+        ([("k", None, b"c", b"v", 1.0, False, None)], []),
+        ([("k", None, b"c", b"v", True, False, None)], []),
+        ([("k", None, b"c", None, 1, True, 2**31)], []),
+        ([], [("k", None, None, 100)]),
+    ],
+    ids=["null_key", "null_column", "null_ts", "str_value", "float_ts", "bool_ts", "ldt_overflow", "null_tomb_ts"],
+)
+def test_commit_rejects_bad_rows_and_leaves_no_file(store, cells, tombs):
+    """A durable commit checks its rows as ``createDataFrame(rows,
+    CELL_SCHEMA)`` does: a null in a non-nullable field, a ``str`` in a
+    binary field, a non-int ``ts`` or an out-of-range ``ldt`` raises before
+    any file, hidden or visible, is written."""
+    batch = write.MutationBatch(cells=list(cells), container_tombstones=list(tombs))
+    with pytest.raises((TypeError, ValueError)):
+        store.apply("Keyspace1", "Standard1", batch, durable=True)
+    assert _store_files(store, "Keyspace1", "Standard1") == []
+
+
+def test_commit_checks_both_kinds_before_publishing_either(store):
+    """Good cells beside a bad container tombstone: nothing is published."""
+    good = ("k", None, b"c", b"v", 1, False, None)
+    batch = write.MutationBatch(cells=[good], container_tombstones=[("k", None, None, 100)])
+    with pytest.raises(ValueError):
+        store.apply("Keyspace1", "Standard1", batch, durable=True)
+    assert _store_files(store, "Keyspace1", "Standard1") == []
+
+
+@pytest.mark.parametrize("crash", ["temp_write", "before_replace", "between_kinds"])
+def test_commit_crash_leaves_pre_or_cells_only_state(store, spark, monkeypatch, crash):
+    """A durable commit publishes one file per kind, cells first. A crash
+    while a file is written or before its rename leaves the pre-state and a
+    hidden temp file; a crash between the kinds leaves the batch's cells
+    without its row delete, as if the insert had been committed before a
+    separate row remove. No reader -- the bind, minor compaction, snapshot,
+    major compaction -- takes the temp file for data, and the next commit
+    works."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    ks, cfn = "Keyspace1", "Standard1"
+    for key in ("k", "other"):
+        store.apply(ks, cfn, write.insert(key, ColumnPath(cfn, column=b"old"), b"v", 1))
+    pre = _live(store, ks, cfn)
+    batch = write.remove("k", ColumnPath(cfn), 5, local_deletion_time=2**31 - 10)
+    batch.extend(write.insert("k", ColumnPath(cfn, column=b"new"), b"v2", 6))
+
+    real_replace, replaced = os.replace, []
+
+    def torn_write(table, where, **kwargs):
+        where.write(b"PAR1 torn")
+        raise Crash
+
+    def fail_replace(src, dst):
+        replaced.append(dst)
+        if len(replaced) == (2 if crash == "between_kinds" else 1):
+            raise Crash
+        real_replace(src, dst)
+
+    with monkeypatch.context() as m:
+        if crash == "temp_write":
+            m.setattr(pq, "write_table", torn_write)
+        else:
+            m.setattr(os, "replace", fail_replace)
+        with pytest.raises(Crash):
+            store.apply(ks, cfn, batch)
+    expected = pre if crash != "between_kinds" else sorted(pre + [("k", b"new", b"v2")])
+    temps = [f for f in _store_files(store, ks, cfn) if not f.endswith(".parquet")]
+    assert len(temps) == 1 and os.path.basename(temps[0]).startswith(".")
+
+    reopened = CellStore(spark, store.root, store.catalog)
+    assert _live(reopened, ks, cfn) == expected
+    snap = maintenance.snapshot(reopened, ks, cfn, "after_crash")
+    assert all(f.endswith(".parquet") for _, _, fs in os.walk(snap) for f in fs)
+    assert maintenance.submit_minor_if_needed(reopened, ks, cfn, min_threshold=2)
+    assert _live(reopened, ks, cfn) == expected
+    reopened.apply(ks, cfn, write.insert("k2", ColumnPath(cfn, column=b"c"), b"v3", 7))
+    expected = sorted(expected + [("k2", b"c", b"v3")])
+    maintenance.compact(reopened, ks, cfn)
+    assert _live(CellStore(spark, store.root, store.catalog), ks, cfn) == expected
+
+
+def test_commit_runs_no_spark_job(store, spark):
+    """Durable batch_mutate, a whole-row remove and the flush of a buffered
+    batch are driver-side file commits: not one Spark job."""
+    from apache_cassandra_spark.engine import Engine
+
+    engine = Engine(spark, store.root, store.catalog)
+    ks, sc, group = "Keyspace1", spark.sparkContext, "commit-runs-no-job"
+    muts = [Mutation(column_name=b"c", value=b"v", timestamp=1), Mutation(deletion=Deletion(timestamp=2))]
+    sc.setJobGroup(group, "durable commits")
+    try:
+        engine.batch_mutate(ks, {"k1_ab": {"Standard1": muts[:1], "Dom1": muts[:1]}, "k2_cd": {"Dom1": muts}})
+        engine.remove(ks, "k1_ab", ColumnPath("Standard1"), 3)
+        engine.batch_mutate(ks, {"k3": {"Standard1": muts}}, durable=False)
+        engine.flush(ks, "Standard1")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert len(_store_files(store, ks, "Standard1")) == 4  # 2 cells + 2 ctombs files
+
+
 def test_rows_may_exist_probe(store):
     ks, cfn = "Keyspace1", "Standard1"
     store.apply(ks, cfn, write.insert("k1", ColumnPath(cfn, column=b"c1"), b"v1", 1))
