@@ -117,7 +117,8 @@ class CF:
     #: (``db/ColumnFamilyStore.java:213-311`` initRowCache analog): the
     #: persisted reconciled live view of the saved hot keys. Point reads
     #: whose keys are all in ``row_cache_keys`` serve from it without a
-    #: manual ``cached_rows()`` call; the store invalidates it on writes.
+    #: manual ``cached_rows()`` call; a bind that finds the CF changed
+    #: since the store's last bind drops it and primes a fresh one.
     row_cache: DataFrame | None = None
     row_cache_keys: frozenset = frozenset()
 
@@ -145,8 +146,10 @@ class CF:
         """Row-cache analog (``db/ColumnFamilyStore.java:975-986``,
         ``cache/InstrumentedCache.java``): the reconciled live view pinned
         with MEMORY_AND_DISK so repeated point reads skip the merge. The
-        caller owns the lifetime (``.unpersist()``) — invalidate after
-        writes, exactly like the reference invalidates on mutation.
+        caller owns the lifetime (``.unpersist()``). The frame stays
+        current across writes: a fresh ``store.cf()`` bind that finds the
+        CF changed refreshes every cached plan over its directory, so a
+        held frame re-reads current storage when next used.
 
         Deliberately INDEPENDENT of the store-primed warm cache
         (``row_cache``): that one is store-owned and a contract-following

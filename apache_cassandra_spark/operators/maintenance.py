@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from apache_cassandra_spark.functions.reconcile import gc_view
-from apache_cassandra_spark.sources.cellstore import CELL_SCHEMA, CONTAINER_TOMBSTONE_SCHEMA, CellStore
+from apache_cassandra_spark.sources.cellstore import CELL_SCHEMA, CellStore, _fsync
 
 #: IRowProcessor analog: pandas frame of one row's cells -> transformed
 #: frame (empty frame == drop the row, mirroring "return null")
@@ -85,13 +85,6 @@ def compact(
     kept = None if tombs is None else tombs.where(F.col("ldt") >= F.lit(gc_before))
     store.publish_compaction(ks, cf_name, out, kept, n_buckets)
 
-    # saved-caches maintenance (ColumnFamilyStore.java:213-311): persist
-    # the current hot-key list, then drop the primed cache — its lineage
-    # points at the pre-compaction files; the next bind re-reconciles the
-    # saved keys from the new generation.
-    store.save_row_cache(ks, cf_name)
-    store.invalidate_row_cache(ks, cf_name)
-
 
 def submit_minor_if_needed(
     store: CellStore,
@@ -111,84 +104,55 @@ def submit_minor_if_needed(
     no older version can exist elsewhere, i.e. major compaction; the
     reference guards this with ``isKeyInRemainingSSTables``,
     ``db/ColumnFamilyStore.java:727``). Returns True if a merge ran.
+
+    Each directory of delta cells is its own pool: ``cells/``, or each
+    ``_dom=`` directory of a domain-split CF, whose merged file stays in it.
     """
-    cells_dir = store._cells_dir(ks, cf_name)
-    if not os.path.isdir(cells_dir):
-        return False
+    base = store._cf_dir(ks, cf_name)
+    pools: dict[str, list[tuple[int, str]]] = {}
+    for rel in store._files(ks, cf_name, "cells"):
+        path = os.path.join(base, rel)
+        pools.setdefault(os.path.dirname(path), []).append((os.path.getsize(path), path))
+    # every pool stages its output in one hidden directory of the CF,
+    # outside every directory a read lists: a crash leaves nothing that
+    # partition discovery would see
+    tmp = os.path.join(base, ".minor_tmp")
     ran = False
-    try:
-        if store.catalog.keyspace(ks).cf(cf_name).domain_split:
-            # domain-split CFs keep files under _dom=XX/ partition dirs;
-            # each domain is an independent size-tiered pool
-            for d in sorted(os.listdir(cells_dir)):
-                sub = os.path.join(cells_dir, d)
-                if d.startswith("_dom=") and os.path.isdir(sub):
-                    ran = _minor_in_dir(store, sub, min_threshold, max_threshold, bucket_ratio) or ran
-        else:
-            ran = _minor_in_dir(store, cells_dir, min_threshold, max_threshold, bucket_ratio)
-    except BaseException:
-        # crash MID-merge: some pool may already have rewritten and
-        # deleted its inputs — the primed (lazy) row cache must drop so
-        # its lineage can't materialize over missing files. Best-effort:
-        # the invalidate itself failing (e.g. dead SparkContext, the same
-        # condition that killed the merge) must not mask the root cause.
-        # NOTE: not sys.exc_info()-in-finally — that also reports a
-        # CALLER'S in-flight handled exception and would spuriously
-        # invalidate on every no-op call made from an except block.
-        try:
-            store.invalidate_row_cache(ks, cf_name)
-        except Exception:
-            pass
-        raise
-    if ran:
-        # the merge deleted its input delta files; content is unchanged,
-        # so the next bind re-primes identically. Only on a real merge:
-        # the common no-op call keeps the warm cache.
-        store.invalidate_row_cache(ks, cf_name)
+    for pool in sorted(pools):
+        ran = _minor_in_pool(store, sorted(pools[pool]), tmp, min_threshold, max_threshold, bucket_ratio) or ran
     return ran
 
 
-def _minor_in_dir(
-    store: CellStore, cells_dir: str, min_threshold: int, max_threshold: int, bucket_ratio: float
+def _minor_in_pool(
+    store: CellStore, files: list, tmp: str, min_threshold: int, max_threshold: int, bucket_ratio: float
 ) -> bool:
-    files = sorted(
-        (os.path.getsize(os.path.join(cells_dir, f)), f)
-        for f in os.listdir(cells_dir)
-        if f.endswith(".parquet")
-    )
-    # greedy size-tiered bucketing over the sorted file list
+    # greedy size-tiered bucketing over the pool's sorted (size, path) list
     buckets: list[list[tuple[int, str]]] = []
-    for size, name in files:
+    for size, path in files:
         if buckets and size <= bucket_ratio * (sum(s for s, _ in buckets[-1]) / len(buckets[-1])):
-            buckets[-1].append((size, name))
+            buckets[-1].append((size, path))
         else:
-            buckets.append([(size, name)])
+            buckets.append([(size, path)])
     target = next((b for b in buckets if len(b) >= min_threshold), None)
     if target is None:
         return False
     target = target[:max_threshold]
-    paths = [os.path.join(cells_dir, name) for _, name in target]
+    paths = [path for _, path in target]
     merged = store.spark.read.schema(CELL_SCHEMA).parquet(*paths)
     from apache_cassandra_spark.functions.reconcile import reconcile
 
     out = reconcile(merged).sortWithinPartitions("key", "sc", "column")
-    # tmp dir must live OUTSIDE the cells root: for domain-split CFs
-    # cells_dir is ".../cells/_dom=XX", and a tmp dir named "..._dom=XX.minor_tmp"
-    # inside cells/ would be picked up by partition discovery as a bogus
-    # _dom value after a crash. A dot-prefixed sibling of the CF dir is
-    # invisible to Spark's file listing wherever it lands.
-    base = os.path.basename(cells_dir)
-    if base.startswith("_dom="):
-        tmp = os.path.join(os.path.dirname(os.path.dirname(cells_dir)), f".minor_tmp_{base[5:]}")
-    else:
-        tmp = os.path.join(os.path.dirname(cells_dir), ".minor_tmp")
     out.coalesce(max(1, len(target) // 4)).write.mode("overwrite").parquet(tmp)
-    # swap order: link the merged output IN first, then remove the inputs.
-    # A crash in between leaves duplicates (merged ∪ inputs), which LWW
-    # reconcile collapses back to the same winners — never lost rows.
+    # swap order: link the merged output IN and fsync it (Spark does not),
+    # then remove the inputs. A crash in between leaves duplicates (merged
+    # ∪ inputs), which LWW reconcile collapses back to the same winners —
+    # never lost rows.
+    pool = os.path.dirname(paths[0])
     for f in os.listdir(tmp):
         if f.endswith(".parquet"):
-            os.rename(os.path.join(tmp, f), os.path.join(cells_dir, "minor_" + f))
+            os.rename(os.path.join(tmp, f), os.path.join(pool, "minor_" + f))
+            _fsync(os.path.join(pool, "minor_" + f))
+    _fsync(pool)
     for p in paths:
         os.remove(p)
     shutil.rmtree(tmp, ignore_errors=True)
@@ -367,9 +331,6 @@ def snapshot(store: CellStore, ks: str, cf_name: str, tag: str) -> str:
     base = store._cf_dir(ks, cf_name)
     dst = os.path.join(base, "snapshots", tag)
     os.makedirs(dst, exist_ok=True)
-    # persist the hot-key list with the snapshot (saved-caches analog) —
-    # data is unchanged, so the primed cache stays valid
-    store.save_row_cache(ks, cf_name)
     files = store._delta_files(ks, cf_name)
     meta = store.compacted_meta(ks, cf_name)
     if meta is not None:

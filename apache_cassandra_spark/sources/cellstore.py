@@ -13,6 +13,11 @@ row-major SSTables (``io/SSTableWriter.java``) — with:
 * **memtable analog**: an in-session row buffer, unioned into every read
   until flushed (reads always see their own writes, like the reference's
   memtable+SSTable collation);
+* **one freshness check**: each ``cf()`` bind compares the CF's state
+  (compacted generation, delta file names, memtable rows) with the state
+  this store last bound; on a change it drops the primed row cache and
+  refreshes Spark's cached plans over the CF directory. Writes,
+  compactions and other stores on the root invalidate nothing themselves;
 * **compaction** (``operators/maintenance.py``) periodically rewrites the
   reconciled view sorted by (key, sc, column) so the file count stays
   bounded and scans read one version per cell.
@@ -100,7 +105,8 @@ def _arrow_table(rows: list, schema: T.StructType) -> pa.Table:
     return pa.Table.from_arrays([pa.array(col, f.type) for col, f in zip(zip(*rows), arrow)], schema=arrow)
 
 
-def _fsync_dir(path: str) -> None:
+def _fsync(path: str) -> None:
+    """fsync a file or a directory by path."""
     fd = os.open(path, os.O_RDONLY)
     try:
         os.fsync(fd)
@@ -118,7 +124,7 @@ def _makedirs_durable(path: str) -> None:
         os.mkdir(path)
     except FileExistsError:
         return
-    _fsync_dir(parent)
+    _fsync(parent)
 
 
 def _publish(table: pa.Table, dirpath: str) -> None:
@@ -129,15 +135,24 @@ def _publish(table: pa.Table, dirpath: str) -> None:
     leaves either nothing visible or the whole file."""
     _makedirs_durable(dirpath)
     name = f"part-{uuid.uuid4()}.zstd.parquet"
-    tmp = os.path.join(dirpath, f".{name}.tmp")
+    # zstd like every Parquet file the session writes (session.py); every
+    # delta is read with an explicit schema: no Arrow schema blob
+    _replace_durably(
+        os.path.join(dirpath, f".{name}.tmp"),
+        os.path.join(dirpath, name),
+        lambda fh: pq.write_table(table, fh, compression="zstd", store_schema=False),
+    )
+
+
+def _replace_durably(tmp: str, path: str, write) -> None:
+    """``write(fh)`` into ``tmp``, fsync it, rename it to ``path`` and fsync
+    the rename."""
     with open(tmp, "wb") as fh:
-        # zstd like every Parquet file the session writes (session.py);
-        # every delta is read with an explicit schema: no Arrow schema blob
-        pq.write_table(table, fh, compression="zstd", store_schema=False)
+        write(fh)
         fh.flush()
         os.fsync(fh.fileno())
-    os.replace(tmp, os.path.join(dirpath, name))
-    _fsync_dir(dirpath)
+    os.replace(tmp, path)
+    _fsync(os.path.dirname(path))
 
 
 class CellStore:
@@ -159,6 +174,8 @@ class CellStore:
         # warm row caches primed from saved-caches files:
         # (ks, cf) -> (hot key set, persisted reconciled live view)
         self._row_caches: dict[tuple[str, str], tuple[frozenset, DataFrame]] = {}
+        # (ks, cf) -> the CF state this store last bound (see cf())
+        self._bound: dict[tuple[str, str], tuple] = {}
 
     # -- paths --------------------------------------------------------------
     def _cf_dir(self, ks: str, cf: str) -> str:
@@ -197,18 +214,15 @@ class CellStore:
     # fresh store binding re-reconciles those keys from current storage and
     # pins the result, so the warm cache is never stale data — staleness of
     # the KEY LIST just means warming a slightly old hot set.
+    #
+    # Writers never touch the primed cache: a CF's files also change from
+    # other stores on the root, so the ``cf()`` bind alone decides when to
+    # drop it (see the module docstring).
 
-    def save_row_cache(self, ks: str, cf_name: str, keys=None) -> None:
+    def save_row_cache(self, ks: str, cf_name: str, keys) -> None:
         """Persist the hot-key list (``submitRowCacheWrite`` /
         ``readSavedCache`` analog — sorted on write, the price the
-        reference pays on read) and prime the in-session cache. With
-        ``keys=None``, re-saves the currently primed set (the
-        periodic-save-task analog used by snapshot/compact)."""
-        if keys is None:
-            ent = self._row_caches.get((ks, cf_name))
-            if ent is None:
-                return
-            keys = ent[0]
+        reference pays on read); the next ``cf()`` bind primes it."""
         keys = sorted(set(keys))
         path = self._saved_cache_path(ks, cf_name)
         os.makedirs(os.path.dirname(path), exist_ok=True)
@@ -216,15 +230,13 @@ class CellStore:
         with open(tmp, "w") as fh:
             json.dump(keys, fh)
         os.replace(tmp, path)
-        # an explicit NEW key set replaces any primed cache; a keys=None
-        # re-save leaves the primed (still-valid) cache alone
+        # a new key set replaces the primed cache
         if keys != sorted(self._row_caches.get((ks, cf_name), ((),))[0]):
             self.invalidate_row_cache(ks, cf_name)
 
     def invalidate_row_cache(self, ks: str, cf_name: str) -> None:
-        """Drop the primed cache (reference: invalidate on mutation /
-        compaction). The saved key list stays — the next ``cf()`` bind
-        re-reconciles those keys from current storage."""
+        """Drop the primed cache. The saved key list stays — the next
+        ``cf()`` bind re-reconciles those keys from current storage."""
         ent = self._row_caches.pop((ks, cf_name), None)
         if ent is not None:
             ent[1].unpersist()
@@ -292,10 +304,7 @@ class CellStore:
 
     def write_compacted_meta(self, ks: str, cf: str, meta: dict) -> None:
         p = self._compacted_meta_path(ks, cf)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-        os.replace(tmp, p)  # atomic pointer flip
+        _replace_durably(p + ".tmp", p, lambda fh: fh.write(json.dumps(meta).encode()))  # atomic pointer flip
 
     def publish_compaction(
         self, ks: str, cf: str, out: DataFrame, kept_tombs: DataFrame | None, buckets: int
@@ -305,7 +314,8 @@ class CellStore:
         (container tombstones inside grace) to ``ctombs/`` — a duplicate
         watermark is harmless, only the max per container counts; (3) flip
         ``COMPACTED.json`` to the generation, listing what it retires: the
-        delta files listed before (1) and the previous generation; (4)
+        delta files listed before (1) and the previous generation, once
+        the outputs of (1) and (2) are fsynced; (4)
         ``_retire`` them. A crash before (3) leaves the old pointer over
         every input; the next ``cf()`` bind finishes a crash after it. So
         no reader sees a consumed delta beside a generation that purged
@@ -344,6 +354,12 @@ class CellStore:
             retire.append(os.path.relpath(os.path.join(base, old["path"]), base))
         meta = {"gen": gen, "table": table, "path": os.path.basename(path), "buckets": buckets}
         meta.update(retire=retire, retire_table=old["table"] if old else None)
+        # Spark does not fsync what it writes: make the generation and the
+        # kept tombstones durable before the flip lets _retire delete inputs
+        retired = set(retire)
+        outputs = [f for f in self._files(ks, cf, meta["path"]) + self._files(ks, cf, "ctombs") if f not in retired]
+        for rel in outputs + sorted({os.path.dirname(f) for f in outputs} | {meta["path"]}):
+            _fsync(os.path.join(base, rel))
         self.write_compacted_meta(ks, cf, meta)
         self._retire(ks, cf, meta)
 
@@ -394,7 +410,6 @@ class CellStore:
         ``db/Table.java:568-660``). ``durable=True`` commits immediately
         (batch commitlog mode); ``False`` buffers in the memtable analog
         until ``flush`` or the threshold (periodic mode)."""
-        self.invalidate_row_cache(ks, cf)  # reference: invalidate on mutation
         if durable:
             self._commit(ks, cf, batch)
             return
@@ -410,10 +425,6 @@ class CellStore:
             self._commit(k[0], k[1], self._pending.pop(k))
 
     def _commit(self, ks: str, cf: str, batch: MutationBatch) -> None:
-        # a cf() bind between apply(durable=False) and flush can re-prime
-        # the warm cache from RAW pending cells; the commit (which may drop
-        # cells via the flush chain) must invalidate it again
-        self.invalidate_row_cache(ks, cf)
         cells = batch.cells
         if cells:
             cells = self._apply_flush_processors(ks, cf, cells)
@@ -491,7 +502,6 @@ class CellStore:
     def bulk_load(self, ks: str, cf: str, cells: DataFrame) -> None:
         """W5 binary/bulk load (``db/BinaryMemtable.java:45``): pre-shaped
         cell DataFrame straight to storage, bypassing the memtable path."""
-        self.invalidate_row_cache(ks, cf)
         shaped = cells.select([F.col(f.name).cast(f.dataType) for f in CELL_SCHEMA.fields])
         writer = shaped.write
         if self.catalog.keyspace(ks).cf(cf).domain_split:
@@ -515,20 +525,35 @@ class CellStore:
         if domain:
             cell_schema = T.StructType(list(CELL_SCHEMA.fields) + [T.StructField("_dom", T.StringType(), True)])
         meta = self.compacted_meta(ks, cf_name)
+        if meta is not None and "retire" in meta:  # a compaction cut short after its flip
+            self._retire(ks, cf_name, meta)
+        cell_files = self._files(ks, cf_name, "cells")
+        tomb_files = self._files(ks, cf_name, "ctombs")
+        pend = self._pending.get((ks, cf_name))
+        # what this bind reads (file names are unique). On any change since
+        # this store's last bind, refresh as Spark's writer does a path it
+        # wrote, and drop the primed rows
+        state = (
+            meta and meta["gen"],
+            sorted(cell_files),
+            sorted(tomb_files),
+            pend and (tuple(pend.cells), tuple(pend.container_tombstones)),
+        )
+        if self._bound.get((ks, cf_name)) != state:
+            self._bound[(ks, cf_name)] = state
+            self.invalidate_row_cache(ks, cf_name)
+            self.spark.catalog.refreshByPath(self._cf_dir(ks, cf_name))
         parts: list[DataFrame] = []
         if meta is not None:
-            if "retire" in meta:  # a compaction cut short after its flip
-                self._retire(ks, cf_name, meta)
             parts.append(self._compacted_df(ks, cf_name, meta, cell_schema))
-        if self._files(ks, cf_name, "cells"):
+        if cell_files:
             parts.append(self.spark.read.schema(cell_schema).parquet(self._cells_dir(ks, cf_name)))
         # container tombstones: bind None (not an empty frame) when no row/sc
         # deletes exist, so the read path skips the watermark joins entirely —
         # a CF with no container deletes pays nothing for the feature
         tombs: DataFrame | None = None
-        if self._files(ks, cf_name, "ctombs"):
+        if tomb_files:
             tombs = self.spark.read.schema(CONTAINER_TOMBSTONE_SCHEMA).parquet(self._ctombs_dir(ks, cf_name))
-        pend = self._pending.get((ks, cf_name))
         if pend is not None:
             if pend.cells:
                 pend_cells = self.spark.createDataFrame(pend.cells, CELL_SCHEMA)

@@ -84,6 +84,26 @@ def test_every_query_builder_and_oracle_is_registered():
     assert set(Q.ORACLES) <= set(Q.QUERIES), f"stray oracles: {sorted(set(Q.ORACLES) - set(Q.QUERIES))}"
 
 
+def test_row_cache_is_kept_only_by_the_cell_store():
+    """Spark-free owner guard: ``CellStore.cf()``'s bind-time freshness
+    check is the one place that drops the primed row cache. A writer or an
+    operator that invalidates or re-saves it by hand is a second owner
+    that can miss a case -- delete the call instead."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "apache_cassandra_spark"
+    call = re.compile(r"\b(invalidate_row_cache|save_row_cache)\(")
+    hits = [
+        f"{path.relative_to(pkg)}:{n}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != pkg / "sources" / "cellstore.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if call.search(line)
+    ]
+    assert not hits, f"row-cache calls outside sources/cellstore.py: {hits}"
+
+
 def test_bench_queries_are_unique_and_declared():
     """Spark-free bench-list guard: a renamed or retired query left in
     ``bench.BENCH_QUERIES`` would otherwise surface only as a KeyError

@@ -2,6 +2,8 @@
 existence probes — mirrors db/CompactionsPurgeTest.java,
 db/CompactionRowProcTest.java:39, db/ColumnFamilyStoreTest.java:147,172."""
 
+import os
+
 import pytest
 
 from apache_cassandra_spark.catalog import Catalog
@@ -320,6 +322,78 @@ def test_compaction_crash_leaves_pre_or_post_state(store, spark, monkeypatch, cf
     assert "retire" not in meta and meta["gen"] == (1 if crash == "before_flip" else 2)
 
 
+def test_minor_compaction_merges_each_domain_in_its_own_directory(store):
+    """A domain-split CF's ``_dom=`` directories are separate size-tiered
+    pools: two similar files in one domain merge inside it, the other
+    domain's lone file stays, and nothing is left staged."""
+    ks, cfn = "Keyspace1", "Dom1"
+    c = ColumnPath(cfn, column=b"c")
+    for key, value, ts in (("k1_ab", b"v1", 1), ("k1_ab", b"v2", 2), ("k2_ab", b"v3", 1), ("k3_cd", b"v4", 1)):
+        store.apply(ks, cfn, write.insert(key, c, value, ts))
+    keys = ("k1_ab", "k2_ab", "k3_cd")
+
+    def points():
+        cf = store.cf(ks, cfn)
+        return {k: [bytes(r["value"]) for r in read.get(cf, k, c).collect()] for k in keys}
+
+    before, files = points(), _store_files(store, ks, cfn)
+    other = [f for f in files if "_dom=cd" in f]
+    assert len(files) == 4 and len(other) == 1
+    assert maintenance.submit_minor_if_needed(store, ks, cfn, min_threshold=2)
+    merged = [f for f in _store_files(store, ks, cfn) if f not in other]
+    assert len(merged) == 1 and merged[0].startswith(os.path.join("cells", "_dom=ab", "minor_"))
+    assert _store_files(store, ks, cfn) == sorted(merged + other)
+    assert not os.path.exists(os.path.join(store._cf_dir(ks, cfn), ".minor_tmp"))
+    assert points() == before == {"k1_ab": [b"v2"], "k2_ab": [b"v3"], "k3_cd": [b"v4"]}
+
+
+@pytest.mark.skipif(not os.path.isdir("/proc/self/fd"), reason="maps an fsynced descriptor to its path")
+@pytest.mark.parametrize("cfn", ["Standard1", "Dom1"])
+@pytest.mark.parametrize("kind", ["minor", "major"])
+def test_compaction_outputs_are_fsynced_before_inputs_are_removed(store, monkeypatch, kind, cfn):
+    """Spark does not fsync the files it writes. Before a compaction
+    removes its first input, each output file and the directories holding
+    it are fsynced, and so are a major compaction's pointer and the CF
+    directory it is renamed in."""
+    ks = "Keyspace1"
+    c = ColumnPath(cfn, column=b"c")
+    store.apply(ks, cfn, write.insert("k1_ab", c, b"v1", 1))
+    store.apply(ks, cfn, write.insert("k2_ab", c, b"v2", 1))
+    store.apply(ks, cfn, write.remove("k3_ab", ColumnPath(cfn), 3, local_deletion_time=2**31 - 10))
+    base = os.path.realpath(store._cf_dir(ks, cfn))
+    tombs_before = set(store._files(ks, cfn, "ctombs"))
+    events = []
+    real_fsync, real_remove = os.fsync, os.remove
+
+    def fsync(fd):
+        events.append(("fsync", os.readlink(f"/proc/self/fd/{fd}")))
+        real_fsync(fd)
+
+    def remove(path):
+        events.append(("remove", os.path.realpath(path)))
+        real_remove(path)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "fsync", fsync)
+        m.setattr(os, "remove", remove)
+        if kind == "minor":
+            assert maintenance.submit_minor_if_needed(store, ks, cfn, min_threshold=2)
+        else:
+            maintenance.compact(store, ks, cfn)
+    if kind == "minor":
+        outputs = [f for f in store._files(ks, cfn, "cells") if os.path.basename(f).startswith("minor_")]
+        required = outputs + [os.path.dirname(outputs[0])]
+    else:
+        gen = store.compacted_meta(ks, cfn)["path"]
+        outputs = store._files(ks, cfn, gen) + sorted(set(store._files(ks, cfn, "ctombs")) - tombs_before)
+        required = outputs + [os.path.dirname(f) for f in outputs] + [gen, "COMPACTED.json.tmp", "."]
+    assert outputs
+    first_remove = next(i for i, (op, path) in enumerate(events) if op == "remove" and path.startswith(base))
+    synced = {os.path.realpath(path) for op, path in events[:first_remove] if op == "fsync"}
+    missing = sorted(p for p in required if os.path.realpath(os.path.join(base, p)) not in synced)
+    assert not missing, f"not fsynced before the first input was removed: {missing}"
+
+
 def _store_files(store, ks, cfn):
     import os
 
@@ -512,32 +586,171 @@ def test_saved_caches_warm_start_on_reopen(store, spark, tmp_path):
         reopened.invalidate_row_cache(ks, cfn)
 
 
-def test_saved_caches_invalidated_by_writes_and_refreshed(store, spark):
-    """Reference invalidates the row cache on mutation; the saved key list
-    survives and the next bind re-reconciles CURRENT data — a warm cache
-    must never serve stale values."""
-    ks, cfn = "Keyspace1", "Standard1"
-    store.apply(ks, cfn, write.insert("hot", ColumnPath(cfn, column=b"c"), b"old", 1))
+_HOT = SlicePredicate(slice_range=SliceRange(count=10))
+
+
+def _hot_values(cf) -> list:
+    return [bytes(r["value"]) for r in read.get_slice(cf, "hot", _HOT).collect()]
+
+
+def _hot_from_memory(cf) -> bool:
+    return "InMemoryTableScan" in read.get_slice(cf, "hot", _HOT)._jdf.queryExecution().executedPlan().toString()
+
+
+def _put(store, cfn, value, ts, **kwargs):
+    store.apply("Keyspace1", cfn, write.insert("hot", ColumnPath(cfn, column=b"c"), value, ts), **kwargs)
+
+
+def _crash_on_remove(store, monkeypatch):
+    def crash(path):
+        raise Crash
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "remove", crash)
+        with pytest.raises(Crash):
+            maintenance.submit_minor_if_needed(store, "Keyspace1", "Standard1", min_threshold=2)
+
+
+def _bulk_load_new(store, spark):
+    from apache_cassandra_spark.sources.cellstore import CELL_SCHEMA
+
+    cells = spark.createDataFrame([("hot", None, b"c", b"new", 2, False, None)], CELL_SCHEMA)
+    store.bulk_load("Keyspace1", "Standard1", cells)
+
+
+# case -> (CF, prepare, change, expected hot values); prepare runs before
+# the cache is primed, change after it
+_STATE_CHANGES = {
+    "durable_insert": ("Standard1", None, lambda s, sp, mp: _put(s, "Standard1", b"new", 2), [b"new"]),
+    "row_remove": (
+        "Standard1",
+        None,
+        lambda s, sp, mp: s.apply("Keyspace1", "Standard1", write.remove("hot", ColumnPath("Standard1"), 2)),
+        [],
+    ),
+    "buffered_insert": (
+        "Standard1",
+        None,
+        lambda s, sp, mp: _put(s, "Standard1", b"new", 2, durable=False),
+        [b"new"],
+    ),
+    # the cache is primed from the raw memtable; the flush chain then drops
+    # the buffered cell, so no file is written
+    "flush_dropping_processor": (
+        "FlushProc1",
+        lambda s: _put(s, "FlushProc1", b"DROPME", 2, durable=False),
+        lambda s, sp, mp: s.flush(),
+        [b"old"],
+    ),
+    "bulk_load": ("Standard1", None, lambda s, sp, mp: _bulk_load_new(s, sp), [b"new"]),
+    "minor_compaction": (
+        "Standard1",
+        lambda s: _put(s, "Standard1", b"new", 2),
+        lambda s, sp, mp: maintenance.submit_minor_if_needed(s, "Keyspace1", "Standard1", min_threshold=2),
+        [b"new"],
+    ),
+    # renames done, inputs not yet removed: merged file beside its inputs
+    "minor_cut_short": (
+        "Standard1",
+        lambda s: _put(s, "Standard1", b"new", 2),
+        lambda s, sp, mp: _crash_on_remove(s, mp),
+        [b"new"],
+    ),
+    "major_compaction": (
+        "Standard1",
+        None,
+        lambda s, sp, mp: maintenance.compact(s, "Keyspace1", "Standard1"),
+        [b"old"],
+    ),
+    "second_store": (
+        "Standard1",
+        None,
+        lambda s, sp, mp: _put(CellStore(sp, s.root, s.catalog), "Standard1", b"new", 2),
+        [b"new"],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", list(_STATE_CHANGES))
+def test_saved_caches_invalidated_by_writes_and_refreshed(store, spark, monkeypatch, drop_marked_processor, case):
+    """Every change to a CF's state -- a write, a flush, a bulk load, a
+    compaction (also one cut short) or a write by another store -- drops
+    the primed cache at the next bind; the saved key list survives and the
+    bind re-reconciles CURRENT data, so a warm cache never serves stale
+    values."""
+    cfn, prepare, change, expected = _STATE_CHANGES[case]
+    ks = "Keyspace1"
+    _put(store, cfn, b"old", 1)
     store.save_row_cache(ks, cfn, ["hot"])
+    if prepare is not None:
+        prepare(store)
     cf = store.cf(ks, cfn)
-    assert cf.row_cache is not None  # primed
-    store.apply(ks, cfn, write.insert("hot", ColumnPath(cfn, column=b"c"), b"new", 2))
-    cf = store.cf(ks, cfn)  # re-primed from the saved list over new data
+    primed = cf.row_cache
     try:
-        rows = read.get_slice(cf, "hot", SlicePredicate(slice_range=SliceRange(count=10))).collect()
-        assert [bytes(r["value"]) for r in rows] == [b"new"]
-        assert "InMemoryTableScan" in (
-            read.get_slice(cf, "hot", SlicePredicate(slice_range=SliceRange(count=10)))
-            ._jdf.queryExecution().executedPlan().toString()
-        )
+        assert primed is not None and _hot_values(cf)  # primed and materialized
+        change(store, spark, monkeypatch)
+        cf = store.cf(ks, cfn)  # re-primed from the saved list over new data
+        assert cf.row_cache is not None and cf.row_cache is not primed
+        assert _hot_values(cf) == expected
+        assert _hot_from_memory(cf)
+    finally:
+        store.invalidate_row_cache(ks, cfn)
+
+
+def test_fresh_bind_after_write_is_not_served_by_a_held_cached_frame(store):
+    """A held ``cached_rows()`` frame must not answer a fresh bind's read
+    with the value a later write overwrote."""
+    ks, cfn = "Keyspace1", "Standard1"
+    _put(store, cfn, b"old", 1)
+    held = store.cf(ks, cfn).cached_rows()
+    try:
+        assert held.count() == 1  # materializes the cache
+        _put(store, cfn, b"new", 2)
+        assert [bytes(r["value"]) for r in store.cf(ks, cfn).live().collect()] == [b"new"]
+    finally:
+        held.unpersist()
+
+
+def test_two_stores_on_one_root_read_each_others_writes(store, spark):
+    """Store A primes its row cache; store B commits a new value. Both
+    read it, though neither store saw the other's write happen."""
+    ks, cfn = "Keyspace1", "Standard1"
+    _put(store, cfn, b"old", 1)
+    store.save_row_cache(ks, cfn, ["hot"])
+    other = CellStore(spark, store.root, store.catalog)
+    try:
+        assert _hot_values(store.cf(ks, cfn)) == [b"old"]
+        _put(other, cfn, b"new", 2)
+        assert _hot_values(other.cf(ks, cfn)) == [b"new"]
+        assert _hot_values(store.cf(ks, cfn)) == [b"new"]
+    finally:
+        store.invalidate_row_cache(ks, cfn)
+        other.invalidate_row_cache(ks, cfn)
+
+
+def test_compaction_keeps_the_saved_key_list_of_another_store(store, spark):
+    """The saved hot-key list is written only by ``save_row_cache``: a
+    compaction by a store primed with an older list must not overwrite
+    the list another store saved since."""
+    import json
+
+    ks, cfn = "Keyspace1", "Standard1"
+    _put(store, cfn, b"v", 1)
+    store.save_row_cache(ks, cfn, ["hot"])
+    store.cf(ks, cfn)  # primes ["hot"]
+    CellStore(spark, store.root, store.catalog).save_row_cache(ks, cfn, ["hot", "other"])
+    try:
+        maintenance.compact(store, ks, cfn)
+        with open(store._saved_cache_path(ks, cfn)) as fh:
+            assert json.load(fh) == ["hot", "other"]
     finally:
         store.invalidate_row_cache(ks, cfn)
 
 
 def test_saved_caches_survive_compaction(store, spark):
-    """compact() persists the hot list and drops the primed cache (its
-    lineage points at rewritten files); the next bind re-primes off the
-    compacted generation."""
+    """The saved hot list outlives compaction; the next bind finds a new
+    generation, drops the primed cache (its lineage points at rewritten
+    files) and re-primes off the compacted generation."""
     ks, cfn = "Keyspace1", "Standard1"
     store.apply(ks, cfn, write.insert("hot", ColumnPath(cfn, column=b"c"), b"v", 1))
     store.save_row_cache(ks, cfn, ["hot"])
