@@ -3,8 +3,9 @@
 ``entry(spark)`` smoke-runs the flagship query (LWW reconcile + container-
 tombstone shadowing over the events stream) at sf0.001. ``queries()`` /
 ``oracle_sql()`` declare the full operator surface; see
-apache_cassandra_spark/queries.py for the implementations and SURVEY.md §2
-for the operator inventory each entry covers.
+the family modules under apache_cassandra_spark/gates/ for the
+implementations and SURVEY.md §2 for the operator inventory each entry
+covers.
 """
 
 from __future__ import annotations

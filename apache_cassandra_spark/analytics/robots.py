@@ -39,8 +39,8 @@ Percent-encoding equivalence (RFC 9309 §2.2.2: comparison happens on
 normalized octets, so rule ``/a%20b`` matches URL ``/a b`` and vice
 versa, ``%3a``≡``%3A``, and a rule's literal ``%24``/``%2A`` match a
 URL's raw ``$``/``*`` — every §2.2.2 example) is handled by
-:func:`_pct_canon`: both sides normalize to one canonical
-percent-DECODED space before :func:`_glob_hit`, with the rule's meta
+:func:`_pct_canon_sql`: both sides normalize to one canonical
+percent-DECODED space before :func:`_glob_hit_sql`, with the rule's meta
 ``*`` / trailing-``$`` preserved on sentinels and literal ``*``/``$``
 on private code points. Fuzz-locked against an independent Python
 model including %-cases.
@@ -51,19 +51,19 @@ extends the engine for the LLM-pipeline mandate (RFC 9309 is public).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
 # Private-use code points: _SENT_* carry a rule's META '*' and '$'
 # through the percent-decode; _LIT_* hold LITERAL '*' and '$' (a URL's
-# raw ones, or either side's decoded %2A%24) so _glob_hit never reads
-# them as wildcard/anchor. _ESC escapes any PRE-EXISTING occurrence of
-# these code points in hostile input (see _protect_private).
+# raw ones, or either side's decoded %2A%24) so _glob_hit_sql never
+# reads them as wildcard/anchor. _ESC escapes any PRE-EXISTING occurrence
+# of these code points in hostile input (see _protect_private_sql).
 _SENT_STAR, _SENT_DOLLAR = "\ue000", "\ue001"
 _LIT_STAR, _LIT_DOLLAR = "\ue002", "\ue003"
 _ESC = "\ue004"
-#: one cheap scan deciding whether _protect_private must run at all \u2014
+#: one cheap scan deciding whether _protect_private_sql must run at all \u2014
 #: a raw U+E000..U+E004 code point, or a percent-triplet spelling of
 #: its UTF-8 (EE 80 80..84, any hex case)
 _PRIVATE_HAZARD_RE = "[\ue000-\ue004]|(?i)%EE%80%8[0-4]"
@@ -77,7 +77,7 @@ def _sql_lit(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def _protect_private(x: Column) -> Column:
+def _protect_private_sql(x: str) -> str:
     """Escape pre-existing private-use marker code points so hostile
     bytes cannot fabricate matcher metacharacters (the r13 verdict's
     sentinel-collision edge): robots bytes are attacker-controlled by
@@ -94,20 +94,22 @@ def _protect_private(x: Column) -> Column:
     function inserts can never be re-read as escapes. After this, a
     bare sentinel/literal code point in the canonical string can only
     be one the pipeline itself inserted. Fixed-literal replaces only \u2014
-    no backtracking risk."""
-    x = F.regexp_replace(x, _ESC, _ESC + "4")
+    no backtracking risk. Rendered as SQL text for the reason
+    :func:`_pct_canon_sql` gives."""
+    out = f"regexp_replace({x}, {_sql_lit(_ESC)}, {_sql_lit(_ESC + '4')})"
     for i, ch in enumerate((_SENT_STAR, _SENT_DOLLAR, _LIT_STAR, _LIT_DOLLAR)):
-        x = F.regexp_replace(x, ch, _ESC + str(i))
+        out = f"regexp_replace({out}, {_sql_lit(ch)}, {_sql_lit(_ESC + str(i))})"
     for i in range(5):
-        x = F.regexp_replace(x, f"(?i)%EE%80%8{i}", _ESC + str(i))
-    return x
+        out = f"regexp_replace({out}, {_sql_lit(f'(?i)%EE%80%8{i}')}, {_sql_lit(_ESC + str(i))})"
+    return out
 
 
-def _pct_canon(s: Column, is_rule: bool = False) -> Column:
-    """Normalize a robots rule path or a URL path+query to the RFC 9309
-    §2.2.2 comparison space, so percent-encoding differences don't flip
-    policy: a rule ``/a%20b`` and a captured ``/a b`` (either way
-    around) land on the same octets before :func:`_glob_hit`.
+def _pct_canon_sql(s: str, is_rule: bool = False) -> str:
+    """Normalize a robots rule path or a URL path+query (a column or
+    expression string) to the RFC 9309 §2.2.2 comparison space, so
+    percent-encoding differences don't flip policy: a rule ``/a%20b``
+    and a captured ``/a b`` (either way around) land on the same octets
+    before :func:`_glob_hit_sql`.
 
     Canonical form = fully percent-DECODED text: every valid triplet
     becomes its character (multi-octet UTF-8 sequences become the code
@@ -127,87 +129,51 @@ def _pct_canon(s: Column, is_rule: bool = False) -> Column:
     map to the ``_LIT_*`` code points, equal across sides, invisible
     to the matcher's meta grammar. A string with a malformed triplet
     (``%`` not followed by two hex digits) is compared RAW —
-    fail-open to literal comparison, never a task error. The r13
-    sentinel-collision edge is CLOSED (r14): pre-existing private-use
-    marker code points — raw U+E000..E004 or their percent-triplet
-    spellings (``%EE%80%80``… any hex case) — are escaped by
-    :func:`_protect_private` before the decode, so hostile robots
-    bytes cannot fabricate meta characters; the escape is identical
-    on both sides, preserving cross-side equality (fuzz-locked with
-    the sentinel-hazard alphabet in tests/test_robots.py).
+    fail-open to literal comparison, never a task error. Pre-existing
+    private-use marker code points — raw U+E000..E004 or their
+    percent-triplet spellings (``%EE%80%80``… any hex case) — are
+    escaped by :func:`_protect_private_sql` before the decode, so
+    hostile robots bytes cannot fabricate meta characters; the escape
+    is identical on both sides, preserving cross-side equality.
 
     Wholly JVM-side: a validity rlike, ONE ``url_decode`` (raw ``+``
     is pre-escaped so the form codec's ``+``→space rule can't fire),
     and fixed-literal regexp_replaces — no backtracking risk anywhere.
-    Applied ONCE per row in its own projection (the staging keeps
-    :func:`_glob_hit`'s many references reading a materialized
-    attribute, not re-inlining this tree — the 64KB codegen
-    pitfall).
+    Apply it ONCE per row in its own projection, so that
+    :func:`_glob_hit_sql`'s many references read a materialized
+    attribute instead of re-inlining this tree (the 64KB codegen
+    pitfall). It is rendered as SQL text and parsed in ONE pass
+    instead of ~250-400 py4j constructor RPCs (guide §7.3 "very large
+    plans": the composed crawl operators rebuild this tree several
+    times per invocation, all single-threaded driver time).
 
-    Fast path (r14, pricing the r13 §2.2.2 regression back down): a
-    string containing NONE of ``% * $ +`` or the private-use markers
-    is a FIXED POINT of the whole chain — nothing to decode, no meta
-    to carry, nothing to escape ('+' only matters because url_decode
-    would form-decode it; with no '%' the decode is the identity on
-    the rest) — so one character-class scan skips the decode and all
-    replaces for it. Typical crawl paths are exactly this shape; the
-    rules side keeps the full chain (rules carry meta chars by
-    design). CASE WHEN short-circuits per row, so complex rows pay
-    what they always paid plus one scan."""
-    valid = ~s.rlike("%(?![0-9A-Fa-f]{2})")
-    # hostile-input hardening (hazard-gated so the common row pays ONE
-    # extra scan, not ten replaces): pre-escape pre-existing private-use
-    # marker code points — raw or percent-spelled — before anything can
-    # read them as matcher meta (CASE WHEN short-circuits; the replace
-    # chain only evaluates on hazard rows)
-    base = F.when(s.rlike(_PRIVATE_HAZARD_RE), _protect_private(s)).otherwise(s)
-    x = F.regexp_replace(base, r"\+", "%2B")  # url_decode form-decodes '+'
-    if is_rule:
-        x = F.regexp_replace(x, r"\*", _SENT_STAR)
-        # only a TRAILING '$' is the end anchor (the grammar); a
-        # mid-rule raw '$' is a literal and must keep matching a URL's
-        # raw '$' — it falls through to _LIT_DOLLAR with the URL side
-        x = F.regexp_replace(x, r"\$$", _SENT_DOLLAR)
-    x = F.call_function("url_decode", x)
-    x = F.regexp_replace(x, r"\*", _LIT_STAR)
-    x = F.regexp_replace(x, r"\$", _LIT_DOLLAR)
-    if is_rule:
-        x = F.regexp_replace(x, _SENT_STAR, "*")  # sentinels back to meta
-        x = F.regexp_replace(x, _SENT_DOLLAR, r"\$")  # \$: literal in replacement
-    simple = ~s.rlike("[%*$+\ue000-\ue004]")
-    return F.when(simple, s).otherwise(F.when(valid, x).otherwise(s))
+    Fast path: a string containing NONE of ``% * $ +`` or the
+    private-use markers is a FIXED POINT of the whole chain — nothing
+    to decode, no meta to carry, nothing to escape ('+' only matters
+    because url_decode would form-decode it; with no '%' the decode is
+    the identity on the rest) — so one character-class scan skips the
+    decode and all replaces for it. Typical crawl paths are exactly
+    this shape; the rules side keeps the full chain (rules carry meta
+    chars by design). CASE WHEN short-circuits per row, so complex
+    rows pay the full chain plus one scan.
 
-
-def _protect_private_sql(x: str) -> str:
-    """SQL-text twin of :func:`_protect_private` — same replace chain
-    rendered as one string (see :func:`_pct_canon_sql` for why)."""
-    out = f"regexp_replace({x}, {_sql_lit(_ESC)}, {_sql_lit(_ESC + '4')})"
-    for i, ch in enumerate((_SENT_STAR, _SENT_DOLLAR, _LIT_STAR, _LIT_DOLLAR)):
-        out = f"regexp_replace({out}, {_sql_lit(ch)}, {_sql_lit(_ESC + str(i))})"
-    for i in range(5):
-        out = f"regexp_replace({out}, {_sql_lit(f'(?i)%EE%80%8{i}')}, {_sql_lit(_ESC + str(i))})"
-    return out
-
-
-def _pct_canon_sql(s: str, is_rule: bool = False) -> str:
-    """SQL-text twin of :func:`_pct_canon` over a column/expression
-    string — node-for-node the same expression, rendered in Python and
-    parsed in ONE pass instead of ~250-400 py4j constructor RPCs (the
-    r14 similarity-family lever, guide §7.3 "very large plans": the
-    composed crawl operators rebuild this tree several times per
-    invocation, all single-threaded driver time). Locked result-
-    identical to the Column twin on the percent-hazard alphabet by
-    tests/test_robots.py::test_sql_text_twins_match_column_builders."""
+    Locked against the independent Python model on the hazard
+    alphabet by tests/test_robots.py::test_sql_forms_match_the_python_models."""
     valid = f"NOT ({s} RLIKE {_sql_lit('%(?![0-9A-Fa-f]{2})')})"
+    # hostile-input hardening, hazard-gated so the common row pays ONE
+    # extra scan, not ten replaces
     base = (
         f"CASE WHEN {s} RLIKE {_sql_lit(_PRIVATE_HAZARD_RE)} "
         f"THEN {_protect_private_sql(s)} ELSE {s} END"
     )
     esc_plus, esc_star = _sql_lit(r"\+"), _sql_lit(r"\*")
     esc_dollar, esc_tail_dollar = _sql_lit(r"\$"), _sql_lit(r"\$$")
-    x = f"regexp_replace({base}, {esc_plus}, '%2B')"
+    x = f"regexp_replace({base}, {esc_plus}, '%2B')"  # url_decode form-decodes '+'
     if is_rule:
         x = f"regexp_replace({x}, {esc_star}, {_sql_lit(_SENT_STAR)})"
+        # only a TRAILING '$' is the end anchor (the grammar); a mid-rule
+        # raw '$' is a literal and must keep matching a URL's raw '$' —
+        # it falls through to _LIT_DOLLAR with the URL side
         x = f"regexp_replace({x}, {esc_tail_dollar}, {_sql_lit(_SENT_DOLLAR)})"
     x = f"url_decode({x})"
     x = f"regexp_replace({x}, {esc_star}, {_sql_lit(_LIT_STAR)})"
@@ -219,72 +185,26 @@ def _pct_canon_sql(s: str, is_rule: bool = False) -> str:
     return f"CASE WHEN {simple} THEN {s} WHEN {valid} THEN {x} ELSE {s} END"
 
 
-def _glob_hit(path: Column, rule_path: Column) -> Column:
-    """Does ``rule_path`` (RFC 9309 pattern: literal bytes, ``*``
-    wildcards, optional trailing ``$`` anchor, ``$`` elsewhere literal,
-    anchored at the path start) match ``path``? LINEAR-TIME greedy
-    segment placement — the approach of the reference matcher (Google's
+def _glob_hit_sql(path: str, rule: str) -> str:
+    """Does ``rule`` (RFC 9309 pattern: literal bytes, ``*`` wildcards,
+    optional trailing ``$`` anchor, ``$`` elsewhere literal, anchored at
+    the path start) match ``path``? LINEAR-TIME greedy segment
+    placement — the approach of the reference matcher (Google's
     robotstxt ``Matches()``), chosen over regex compilation because the
     rules are attacker-controlled and Java regex backtracking on
     ``/*a*a*a*a`` is superlinear (r11 advice). Wholly JVM-side: one
     ``aggregate`` fold over the ``*``-separated literal segments, each
-    step a single ``locate`` scan.
+    step a single ``locate`` scan, rendered as one parsed string
+    instead of ~680 constructor RPCs.
 
     Greedy-leftmost is exact for this grammar: the first segment must
     be a prefix; every middle segment is placed at its earliest
     position after the previous one (minimizing consumed length keeps
     all later placements feasible); a trailing anchor requires the last
     segment to sit exactly at the end, at or after the greedy frontier.
-    Equivalence to an independent Python model is fuzz-locked in
-    tests/test_robots.py."""
-    anchored = rule_path.endswith("$")
-    body = F.when(anchored, F.substring(rule_path, 1, F.length(rule_path) - 1)).otherwise(
-        rule_path
-    )
-    segs = F.split(body, r"\*", -1)
-    n = F.size(segs)
-    first = F.element_at(segs, 1)
-    last = F.element_at(segs, -1)
-    init = F.struct(
-        path.startswith(first).alias("ok"), F.length(first).alias("pos")
-    )
-    # middle segments: everything after the first (unanchored — the tail
-    # may float), or strictly between first and last (anchored — the
-    # last is pinned to the end and checked separately)
-    mid = F.when(anchored, F.slice(segs, 2, F.greatest(n - 2, F.lit(0)))).otherwise(
-        F.slice(segs, 2, n - 1)
-    )
-    folded = F.aggregate(
-        mid,
-        init,
-        lambda st, s: F.when(~st["ok"] | (F.length(s) == 0), st).otherwise(
-            F.struct(
-                (F.call_function("locate", s, path, st["pos"] + 1) > 0).alias("ok"),
-                (
-                    F.call_function("locate", s, path, st["pos"] + 1)
-                    - 1
-                    + F.length(s)
-                ).alias("pos"),
-            )
-        ),
-    )
-    return F.when(
-        anchored,
-        F.when(n == 1, path == first).otherwise(
-            folded["ok"]
-            & path.endswith(last)
-            & (F.length(path) - F.length(last) >= folded["pos"])
-        ),
-    ).otherwise(folded["ok"])
-
-
-def _glob_hit_sql(path: str, rule: str) -> str:
-    """SQL-text twin of :func:`_glob_hit` (same greedy linear-time
-    fold, one parsed string instead of ~680 constructor RPCs). Both
-    operands should be materialized attributes — the text references
-    them several times, exactly as the Column twin's shared
-    references evaluate. Locked result-identical to the Column twin
-    by tests/test_robots.py::test_sql_text_twins_match_column_builders."""
+    Both operands should be materialized attributes — the text
+    references them several times. Equivalence to an independent Python
+    model is fuzz-locked in tests/test_robots.py."""
     anchored = f"endswith({rule}, '$')"
     body = f"CASE WHEN {anchored} THEN substring({rule}, 1, length({rule}) - 1) ELSE {rule} END"
     esc_star = _sql_lit(r"\*")
@@ -293,6 +213,9 @@ def _glob_hit_sql(path: str, rule: str) -> str:
     first = f"element_at({segs}, 1)"
     last = f"element_at({segs}, -1)"
     init = f"named_struct('ok', startswith({path}, {first}), 'pos', length({first}))"
+    # middle segments: everything after the first (unanchored — the tail
+    # may float), or strictly between first and last (anchored — the
+    # last is pinned to the end and checked separately)
     mid = (
         f"CASE WHEN {anchored} THEN slice({segs}, 2, greatest({n} - 2, 0)) "
         f"ELSE slice({segs}, 2, {n} - 1) END"
@@ -507,7 +430,7 @@ def match_allowed(
     Plan: LEFT join pages→rules on domain (per-domain rule lists are
     tens of rows, capped at parse time — the fan-out is
     O(pages × rules/domain), AQE-decided), a LINEAR-TIME per-row glob
-    match (``_glob_hit`` — no regex compilation, no backtracking), then
+    match (``_glob_hit_sql`` — no regex compilation, no backtracking), then
     one WindowGroupLimit per page for the longest winner."""
     from apache_cassandra_spark.analytics.web import _REST_RE
 
@@ -515,7 +438,8 @@ def match_allowed(
     # canonicalization + matcher trees below cost ~1,900 py4j RPCs per
     # call in Column-constructor form, rebuilt on every invocation of
     # the composed crawl operators (guide §7.3). The rendered
-    # expressions are locked result-identical to the Column twins.
+    # expressions are locked against the Python models in
+    # tests/test_robots.py.
     #
     # the rules side is renamed up front so a pages frame carrying any
     # 'allow'/'rule_*' column can't make references ambiguous

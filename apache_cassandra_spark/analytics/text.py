@@ -307,7 +307,7 @@ def tfidf_top_terms(df: DataFrame, k: int = 3, text_col: str = "text", id_col: s
 
 
 #: fixed lexical benchmark queries over the driver corpus vocabulary —
-#: shared by the corpus_bm25_topk gate (queries.py, incl. its oracle's
+#: shared by the corpus_bm25_topk gate (gates/corpus.py, incl. its oracle's
 #: VALUES clause) and the scale probe, so the two workloads cannot drift
 BM25_BENCH_QUERIES: tuple[tuple[int, str], ...] = (
     (0, "fast key order sort"),

@@ -1,12 +1,9 @@
-"""Declared queries + DuckDB oracle SQL — the driver correctness surface.
+"""The declared-query registry: the driver correctness surface.
 
-Each entry exercises one operator family from SURVEY.md §2 (or a mandated
-LLM-pipeline operator) against the driver's parquet tables, paired with an
-ANSI-SQL oracle that DuckDB runs on the same tables. The canonical value
-encoding (``sources/ingest._canon``) is chosen so both engines produce
-byte-identical strings; all hashing is md5; all float outputs are either
-exact-decimal-derived doubles or rounded at 6 digits after bit-identical
-double arithmetic (verified empirically in tools/check_oracle.py).
+``QUERIES`` maps each declared name to its Spark builder and ``ORACLES``
+maps each exactly-checked name to the DuckDB SQL it must match. Both are
+assembled from the family modules under ``apache_cassandra_spark.gates``,
+where each builder shares a module with its oracle.
 """
 
 from __future__ import annotations
@@ -14,6573 +11,8 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from apache_cassandra_spark.analytics import dedup, multimodal, similarity, text
-from apache_cassandra_spark.catalog import CFDef
-from apache_cassandra_spark.functions.tokens import OrderPreservingPartitioner, RandomPartitioner
-from apache_cassandra_spark.model import CF, KeyRange, SlicePredicate, SliceRange
-from apache_cassandra_spark.operators import read as R
-from apache_cassandra_spark.sources.cellstore import CONTAINER_TOMBSTONE_SCHEMA
-from apache_cassandra_spark.sources.ingest import cf_from_table
-
-# ---------------------------------------------------------------------------
-# table metadata (stable driver testdata; see TESTDATA.md)
-# ---------------------------------------------------------------------------
-
-#: value columns per CF-mapped table, with dtypes for canonical encoding
-TABLES: dict[str, dict] = {
-    "orders": {
-        "key": "o_orderkey",
-        "cols": {
-            "o_custkey": "bigint",
-            "o_orderdate": "timestamp",
-            "o_orderpriority": "varchar",
-            "o_orderstatus": "varchar",
-            "o_totalprice": "double",
-        },
-    },
-    "part": {
-        "key": "p_partkey",
-        "cols": {
-            "p_brand": "varchar",
-            "p_name": "varchar",
-            "p_retailprice": "double",
-            "p_size": "int",
-            "p_type": "varchar",
-        },
-    },
-    "supplier": {
-        "key": "s_suppkey",
-        "cols": {"s_acctbal": "double", "s_name": "varchar", "s_nationkey": "int"},
-    },
-    "lineitem": {
-        "key": "l_orderkey",
-        "sc": "l_linenumber",
-        "cols": {
-            "l_discount": "double",
-            "l_extendedprice": "double",
-            "l_linestatus": "varchar",
-            "l_partkey": "bigint",
-            "l_quantity": "double",
-            "l_returnflag": "varchar",
-            "l_shipdate": "timestamp",
-            "l_suppkey": "bigint",
-            "l_tax": "double",
-        },
-    },
-}
-
-
-def _duck_canon(col: str, dt: str) -> str:
-    """DuckDB twin of sources/ingest._canon — must stay in lockstep."""
-    if dt in ("double", "float"):
-        return f"cast(cast({col} as decimal(18,4)) as varchar)"
-    if dt.startswith("timestamp"):
-        return f"strftime({col}, '%Y-%m-%d %H:%M:%S')"
-    return f"cast({col} as varchar)"
-
-
-def _unpivot_sql(table: str, where: str = "1=1", cols: list[str] | None = None, with_sc: bool = False) -> str:
-    """UNION-ALL unpivot of a table row-range into cell rows."""
-    meta = TABLES[table]
-    key, dtypes = meta["key"], meta["cols"]
-    names = sorted(cols or dtypes)
-    parts = []
-    for c in names:
-        sc_sel = f"cast({meta['sc']} as varchar) AS sc, " if with_sc else ""
-        parts.append(
-            f"SELECT cast({key} as varchar) AS key, {sc_sel}'{c}' AS \"column\", "
-            f"{_duck_canon(c, dtypes[c])} AS value FROM {table} WHERE {where}"
-        )
-    return " UNION ALL ".join(parts)
-
-
-# ---------------------------------------------------------------------------
-# loading
-# ---------------------------------------------------------------------------
-
-
-#: memoized scan-width decisions per (session, file path) — the probe
-#: converts the scan to an RDD once to read its split count
-_SCAN_WIDTH: dict[tuple[int, str], bool] = {}
-
-#: files below this size stay narrow: their pipelines are trivial and the
-#: round-robin exchange would be pure overhead (tiny dims broadcast anyway)
-_WIDEN_MIN_BYTES = 256 * 1024
-
-
-def _widened(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
-    """Scale-adaptive input width (guide §2.5 — the unsplittable-input
-    fix): the driver testdata ships each table as ONE parquet row group,
-    so a compute-heavy stage-1 (Python codec batches) would run in a
-    single task no matter the core count — split-size configs cannot
-    help because a row group is the parallelism atom. When the scan
-    arrives with fewer splits than defaultParallelism (and the file is
-    big enough to matter), add ONE round-robin exchange of the raw rows
-    right after the read. At cluster scale inputs arrive with >=
-    parallelism splits and this is a no-op — the decision is measured
-    per input, not a constant. Filters still reach the scan (predicates
-    push through Repartition; locked by
-    test_plans.py::test_widened_scan_keeps_pushdown).
-
-    OPT-IN per call site (``load_table(..., wide=True)``), not blanket:
-    after the r14 eager-checkpoint restructurings the interleaved A/B at
-    sf0.1/32 cores shows the exchange only pays when per-row Python cost
-    is extreme — media_decode_jpeg 0.23x, gif 0.67x, audio 0.91x — while
-    everywhere else the full-row shuffle costs more than the single-task
-    stage it widens (tpch_q17ish 3.1x, wordcount 2.8x, dedup_lines 2.9x,
-    text family 1.6-2.1x, minhash 1.2x slower with widening). Only the
-    Python-codec pipelines opt in."""
-    key = (id(spark), path)
-    widen = _SCAN_WIDTH.get(key)
-    if widen is None:
-        par = spark.sparkContext.defaultParallelism
-        try:
-            import os as _os
-
-            widen = (
-                _os.path.getsize(path) >= _WIDEN_MIN_BYTES if _os.path.isfile(path)
-                else sum(
-                    _os.path.getsize(_os.path.join(path, f))
-                    for f in _os.listdir(path)
-                    if not f.startswith((".", "_"))
-                ) >= _WIDEN_MIN_BYTES
-            ) and df.rdd.getNumPartitions() < par
-        except OSError:
-            widen = False
-        _SCAN_WIDTH[key] = widen
-    return df.repartition(spark.sparkContext.defaultParallelism) if widen else df
-
-
-def load_table(
-    spark: SparkSession, sf_dir: str, name: str, wide: bool = False
-) -> DataFrame:
-    if name == "events":
-        ev = load_events(spark, sf_dir)
-        return _widened(spark, ev, f"{sf_dir}/events.parquet") if wide else ev
-    path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
-    return _widened(spark, df, path) if wide else df
-
-
-_EVENTS_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
-def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events table with ``ts`` normalized to bigint epoch-NANOS whatever
-    the file's physical type. Generations of the driver testdata have
-    shipped ``ts`` as TIMESTAMP(NANOS) (rejected by Spark 4 unless read as
-    raw long via the legacy conf) and as TIMESTAMP(MICROS) (read as
-    timestamp_ntz); every downstream query does ``ts div 1000`` to get
-    epoch-us, so the contract here is: ``ts`` is always nanos. The session
-    timezone is UTC (session.py), so the ntz→timestamp cast below matches
-    DuckDB's naive-as-UTC ``epoch_us(ts)`` in the oracles. Memoized per
-    session; read errors surface from Spark, with no pandas-side fallback."""
-    return _events_norm(load_events_raw(spark, sf_dir))
-
-
-def _events_norm(df: DataFrame) -> DataFrame:
-    """Normalize a raw events frame so ``ts`` is bigint epoch-nanos."""
-    if dict(df.dtypes)["ts"].startswith("timestamp"):
-        df = df.withColumn("ts", F.unix_micros(F.col("ts").cast("timestamp")) * F.lit(1000))
-    return df
-
-
-def load_events_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.parquet as read — ``ts`` may be long (nanos) or timestamp.
-    Predicates that must reach the parquet scan (snapshot reads) belong on
-    THIS frame, typed against the raw column; `_events_norm`'s
-    ``unix_micros`` projection would otherwise block pushdown."""
-    cache_key = (id(spark), sf_dir)
-    if cache_key in _EVENTS_CACHE:
-        return _EVENTS_CACHE[cache_key]
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
-    _EVENTS_CACHE[cache_key] = df
-    return df
-
-
-def _cf(spark: SparkSession, sf_dir: str, table: str, order_preserving: bool = True) -> CF:
-    meta = TABLES[table]
-    part = OrderPreservingPartitioner() if order_preserving else RandomPartitioner()
-    return cf_from_table(
-        load_table(spark, sf_dir, table),
-        key_col=meta["key"],
-        value_cols=sorted(meta["cols"]),
-        sc_col=meta.get("sc"),
-        partitioner=part,
-        cfdef=CFDef(
-            name=table,
-            column_type="Super" if "sc" in meta else "Standard",
-            compare_with="UTF8Type",
-            compare_subcolumns_with="UTF8Type",
-        ),
-    )
-
-
-def _strings(df: DataFrame, with_sc: bool = False, with_ts: bool = False) -> DataFrame:
-    cols = [F.col("key")]
-    if with_sc:
-        cols.append(F.col("sc").cast("string").alias("sc"))
-    cols += [F.col("column").cast("string").alias("column"), F.col("value").cast("string").alias("value")]
-    if with_ts:
-        cols.append(F.col("ts"))
-    return df.select(*cols)
-
-
-# ---------------------------------------------------------------------------
-# engine-operator queries (SURVEY.md §2.1)
-# ---------------------------------------------------------------------------
-
-
-def q_get_slice(spark, sf_dir):
-    cf = _cf(spark, sf_dir, "orders")
-    pred = SlicePredicate(slice_range=SliceRange(count=100))
-    return _strings(R.get_slice(cf, "32", pred))
-
-
-def q_get_slice_names(spark, sf_dir):
-    cf = _cf(spark, sf_dir, "orders")
-    pred = SlicePredicate(column_names=(b"o_orderstatus", b"o_totalprice"))
-    return _strings(R.get_slice(cf, "32", pred))
-
-
-def q_get_slice_reversed(spark, sf_dir):
-    cf = _cf(spark, sf_dir, "orders")
-    pred = SlicePredicate(slice_range=SliceRange(reversed=True, count=3))
-    return _strings(R.get_slice(cf, "32", pred))
-
-
-def q_get_slice_bounded(spark, sf_dir):
-    cf = _cf(spark, sf_dir, "orders")
-    pred = SlicePredicate(slice_range=SliceRange(start=b"o_orderdate", finish=b"o_orderstatus", count=100))
-    return _strings(R.get_slice(cf, "32", pred))
-
-
-def q_multiget_slice(spark, sf_dir):
-    cf = _cf(spark, sf_dir, "orders")
-    pred = SlicePredicate(slice_range=SliceRange(count=2))
-    return _strings(R.multiget_slice(cf, ["1", "2", "3", "4", "5", "6", "7"], pred))
-
-
-def q_range_slices_keys(spark, sf_dir):
-    cf = _cf(spark, sf_dir, "part", order_preserving=True)
-    pred = SlicePredicate(slice_range=SliceRange(count=2))
-    kr = KeyRange(start_key="100", end_key="120", count=10)
-    return _strings(R.get_range_slices(cf, pred, kr))
-
-
-def q_range_slices_wrapped(spark, sf_dir):
-    cf = _cf(spark, sf_dir, "supplier", order_preserving=False)
-    pred = SlicePredicate(slice_range=SliceRange(count=1))
-    kr = KeyRange(start_token="e8", end_token="18", count=1000)
-    return _strings(R.get_range_slices(cf, pred, kr))
-
-
-def q_super_slice(spark, sf_dir):
-    cf = _cf(spark, sf_dir, "lineitem")
-    pred = SlicePredicate(slice_range=SliceRange(count=3))
-    return _strings(R.get_slice(cf, "1", pred), with_sc=True)
-
-
-def q_super_subcolumn_slice(spark, sf_dir):
-    cf = _cf(spark, sf_dir, "lineitem")
-    pred = SlicePredicate(slice_range=SliceRange(start=b"l_discount", finish=b"l_returnflag", count=4))
-    return _strings(R.get_slice(cf, "1", pred, super_column=b"7"), with_sc=True)
-
-
-def _event_cells(spark, sf_dir, where=None, ts_nanos_leq=None):
-    """``ts_nanos_leq`` is the snapshot cutoff, applied to the RAW frame
-    with a literal of the raw column's own type so it reaches the parquet
-    scan as a pushed ``ts <= _`` filter (a post-normalization predicate on
-    the ``unix_micros`` projection would not push)."""
-    raw = load_events_raw(spark, sf_dir)
-    if ts_nanos_leq is not None:
-        if dict(raw.dtypes)["ts"].startswith("timestamp"):
-            cutoff = F.timestamp_micros(F.lit(ts_nanos_leq // 1000)).cast(
-                raw.schema["ts"].dataType
-            )
-        else:
-            cutoff = F.lit(ts_nanos_leq)
-        raw = raw.where(F.col("ts") <= cutoff)
-    ev = _events_norm(raw)
-    if where is not None:
-        ev = ev.where(where)
-    return ev.select(
-        F.col("user_id").cast("string").alias("key"),
-        F.lit(None).cast("binary").alias("sc"),
-        F.encode("event_type", "UTF-8").alias("column"),
-        F.encode(F.col("value").cast("decimal(18,4)").cast("string"), "UTF-8").alias("value"),
-        F.expr("ts div 1000").alias("ts"),
-        F.lit(False).alias("tombstone"),
-        F.lit(None).cast("int").alias("ldt"),
-    )
-
-
-def q_lww_events(spark, sf_dir):
-    """LWW reconcile over a real multi-version stream: latest event per
-    (user, event_type), Column.comparePriority tie-breaks."""
-    cf = CF(cfdef=CFDef(name="events", compare_with="UTF8Type"), cells=_event_cells(spark, sf_dir))
-    return _strings(cf.live(), with_ts=True)
-
-
-#: snapshot cutoff for cass_read_at_ts — 2024-01-16T00:00Z in epoch-us,
-#: mid-stream at every sf of the events fixture
-_SNAPSHOT_TS_US = 1_705_363_200_000_000
-
-
-def q_read_at_ts(spark, sf_dir):
-    """Snapshot (time-travel) read: the LWW view as of a fixed timestamp.
-    Client-supplied timestamps make every historical state well-defined —
-    the reference materializes exactly this on commitlog replay with
-    ``recover(maxReplayTimestamp)`` (``db/commitlog/CommitLog.java:173``);
-    here it is one cell-level predicate ``ts <= T`` *below* the reconcile
-    aggregate, so it pushes to the Parquet scan and the snapshot read
-    costs less than the full-history read, not more."""
-    cells = _event_cells(spark, sf_dir, ts_nanos_leq=_SNAPSHOT_TS_US * 1000)
-    cf = CF(cfdef=CFDef(name="events", compare_with="UTF8Type"), cells=cells)
-    return _strings(cf.live(), with_ts=True)
-
-
-def q_lww_row_tombstones(spark, sf_dir):
-    """Container-tombstone shadowing: each user's 'error' events mark the
-    row deleted at that ts; only strictly-newer cells survive."""
-    cells = _event_cells(spark, sf_dir, where=F.col("event_type") != "error")
-    ev = load_events(spark, sf_dir)
-    tombs = (
-        ev.where(F.col("event_type") == "error")
-        .groupBy(F.col("user_id").cast("string").alias("key"))
-        .agg(F.expr("max(ts div 1000)").alias("ts"))
-        .select(
-            "key",
-            F.lit(None).cast("binary").alias("sc"),
-            F.col("ts").cast("long").alias("ts"),
-            F.lit(0).cast("int").alias("ldt"),
-        )
-    )
-    cf = CF(cfdef=CFDef(name="events", compare_with="UTF8Type"), cells=cells, container_tombstones=tombs)
-    return _strings(cf.live(), with_ts=True)
-
-
-def q_super_get_count(spark, sf_dir):
-    """R5 on a Super CF parent: counts supercolumns (linenumbers)."""
-    cf = _cf(spark, sf_dir, "lineitem")
-    return R.get_count(cf, "1")
-
-
-def q_events_props_json(spark, sf_dir):
-    """Scalar JSON extraction over the events props column — part of the
-    function library the reference lacked entirely (Spark-native)."""
-    ev = load_events(spark, sf_dir)
-    return (
-        ev.select(F.get_json_object("props", "$.k").cast("int").alias("k"))
-        .groupBy("k")
-        .agg(F.count("*").alias("n"))
-    )
-
-
-def q_long_comparator_slice(spark, sf_dir):
-    """LongType comparator in the gate: column names are 8-byte big-endian
-    event ids; a reversed count-3 slice must pick the numerically-largest
-    ids per user (byte-order-only sorting would get this wrong for mixed
-    digit counts)."""
-    ev = load_events(spark, sf_dir).where(F.col("user_id") < 3)
-    cells = ev.select(
-        F.col("user_id").cast("string").alias("key"),
-        F.lit(None).cast("binary").alias("sc"),
-        F.unhex(F.lpad(F.hex(F.col("event_id")), 16, "0")).alias("column"),
-        F.encode("event_type", "UTF-8").alias("value"),
-        F.lit(0).cast("long").alias("ts"),
-        F.lit(False).alias("tombstone"),
-        F.lit(None).cast("int").alias("ldt"),
-    )
-    cf = CF(cfdef=CFDef(name="ev_long", compare_with="LongType"), cells=cells)
-    pred = SlicePredicate(slice_range=SliceRange(reversed=True, count=3))
-    out = R.multiget_slice(cf, ["0", "1", "2"], pred)
-    return out.select(
-        "key",
-        F.conv(F.hex("column"), 16, 10).cast("bigint").alias("event_id"),
-        F.col("value").cast("string").alias("value"),
-    )
-
-
-def q_timeuuid_comparator_slice(spark, sf_dir):
-    """TimeUUIDType comparator in the gate: column names are deterministic
-    v1 UUIDs built from (event µs timestamp, event_id) — a reversed count-3
-    slice must return the newest-by-embedded-timestamp per user. Raw-byte
-    sorting (time_low first) would order completely differently, so this
-    pins the nibble-reassembly logic."""
-    ev = load_events(spark, sf_dir).where(F.col("user_id") < 3)
-    us = F.expr("ts div 1000")
-    h = lambda c, n: F.lpad(F.hex(c), n, "0")  # noqa: E731
-    uuid_hex = F.concat(
-        h(us.bitwiseAND(F.lit(0xFFFFFFFF)), 8),  # time_low
-        h(F.expr("(ts div 1000) >> 32").bitwiseAND(F.lit(0xFFFF)), 4),  # time_mid
-        F.lit("1"),
-        h(F.expr("(ts div 1000) >> 48").bitwiseAND(F.lit(0xFFF)), 3),  # version+time_hi
-        # event_id split high-bits-first across (clock_seq, node) so the
-        # engine's raw-byte tiebreak for equal 60-bit timestamps == numeric
-        # event_id order (keeps the gate robust if two events of one user
-        # share a microsecond timestamp)
-        h(F.expr("event_id >> 48").bitwiseAND(F.lit(0xFFFF)), 4),  # clock seq = high 16 bits
-        h(F.col("event_id").bitwiseAND(F.lit(0xFFFFFFFFFFFF)), 12),  # node = low 48 bits
-    )
-    cells = ev.select(
-        F.col("user_id").cast("string").alias("key"),
-        F.lit(None).cast("binary").alias("sc"),
-        F.unhex(uuid_hex).alias("column"),
-        F.encode("event_type", "UTF-8").alias("value"),
-        F.lit(0).cast("long").alias("ts"),
-        F.lit(False).alias("tombstone"),
-        F.lit(None).cast("int").alias("ldt"),
-    )
-    cf = CF(cfdef=CFDef(name="ev_uuid", compare_with="TimeUUIDType"), cells=cells)
-    pred = SlicePredicate(slice_range=SliceRange(reversed=True, count=3))
-    out = R.multiget_slice(cf, ["0", "1", "2"], pred)
-    hx = F.hex(F.col("column"))
-    ts_hex = F.concat(F.substring(hx, 14, 3), F.substring(hx, 9, 4), F.substring(hx, 1, 8))
-    return out.select(
-        "key",
-        F.conv(ts_hex, 16, 10).cast("bigint").alias("event_us"),
-        # unsigned 64-bit decode: assumes event_id < 2^63 (holds for the
-        # driver testdata generator's sequential ids; ids >= 2^63 would
-        # need functions.comparators._signed64 — same latent bound as the
-        # >>48 arithmetic shift in the uuid construction above)
-        F.conv(F.substring(hx, 17, 16), 16, 10).cast("bigint").alias("event_id"),
-        F.col("value").cast("string").alias("value"),
-    )
-
-
-def q_rows_may_exist(spark, sf_dir):
-    """Fork existence probe (FastRowMayExistQueryFilter): one-sided
-    may-exist check; our realization is exact, a valid tightening."""
-    from apache_cassandra_spark.operators import exists
-
-    cf = _cf(spark, sf_dir, "supplier")
-    return exists.rows_may_exist(cf, [str(k) for k in range(95, 106)])
-
-
-def q_columns_may_exist(spark, sf_dir):
-    """Fork existence probe (ColumnsMayExistQueryFilter,
-    ``db/filter/ColumnsMayExistQueryFilter.java:28-156``): per-column
-    may-exist for one row, raw-cell probe (no reconcile). The contract is
-    one-sided — false positives allowed, never false negatives; our
-    realization is exact, a valid tightening, so the exact oracle holds."""
-    from apache_cassandra_spark.operators import exists
-
-    cf = _cf(spark, sf_dir, "orders")
-    probes = [b"o_custkey", b"o_totalprice", b"no_such_col", b"o_orderstatus"]
-    out = exists.columns_may_exist(cf, "32", probes)
-    return out.select(F.col("column").cast("string").alias("name"), "may_exist")
-
-
-def q_describe_splits(spark, sf_dir):
-    """R8 describe_splits: ~equal token sub-ranges over supplier keys."""
-    cf = _cf(spark, sf_dir, "supplier", order_preserving=False)
-    bounds = R.describe_splits(cf, keys_per_split=25)
-    return spark.createDataFrame([(i, b) for i, b in enumerate(bounds)], "split_id int, end_token string")
-
-
-# ---------------------------------------------------------------------------
-# bulk analytics (SURVEY.md §2.6 — the Hadoop/Pig replacement)
-# ---------------------------------------------------------------------------
-
-
-def q_pig_parity(spark, sf_dir):
-    """The reference's Pig example (contrib/pig/example-script.pig):
-    group-by-value + count + order + limit, through the CF scan() handoff."""
-    cf = _cf(spark, sf_dir, "orders")
-    return (
-        cf.scan()
-        .where(F.col("column") == F.lit(bytearray(b"o_orderpriority")))
-        .groupBy(F.col("value").cast("string").alias("o_orderpriority"))
-        .agg(F.count("*").alias("n_orders"))
-    )
-
-
-def q_wordcount(spark, sf_dir):
-    """contrib/word_count parity: tokenize + count, top 100."""
-    docs = load_table(spark, sf_dir, "documents")
-    words = docs.select(F.explode(text.tokens(F.lower(F.col("text")))).alias("word"))
-    return (
-        words.groupBy("word")
-        .agg(F.count("*").alias("cnt"))
-        .orderBy(F.col("cnt").desc(), F.col("word"))
-        .limit(100)
-    )
-
-
-def q_tpch_q1ish(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem")
-    dec = lambda c: F.col(c).cast("decimal(18,4)")  # noqa: E731
-    disc_price = F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).cast("decimal(18,4)")
-    return (
-        li.where(F.col("l_shipdate") <= "1998-09-02")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(dec("l_quantity")).cast("double").alias("sum_qty"),
-            F.sum(dec("l_extendedprice")).cast("double").alias("sum_base_price"),
-            F.sum(disc_price).cast("double").alias("sum_disc_price"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-def q_events_daily_active(spark, sf_dir):
-    """Daily active users — exact distinct-count per day (Spark plans
-    the two-phase Expand dedup itself). The scale path for wider windows
-    is `approx_count_distinct` (HLL++): test_analytics pins its error
-    within 5% of this exact result, but the GATE stays exact so any sf
-    hash-matches."""
-    ev = load_events(spark, sf_dir)
-    day = F.date_format(F.timestamp_micros(F.expr("ts div 1000")), "yyyy-MM-dd")
-    return (
-        ev.groupBy(day.alias("day"))
-        .agg(
-            F.countDistinct("user_id").alias("dau"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-    )
-
-
-def q_events_interval_join(spark, sf_dir):
-    """Batch form of the stream-stream interval join (streaming/joins.py):
-    click events joined to the same user's view events within a 1-hour
-    horizon, aggregated to per-user-bucket match counts so the gate frame
-    stays small. The streaming path is pinned equal by
-    test_interval_join_stream_matches_batch."""
-    from apache_cassandra_spark.streaming.joins import interval_join
-
-    ev = load_events(spark, sf_dir).withColumn("ts_micros", F.expr("ts div 1000"))
-    views = ev.where(F.col("event_type") == "view").select("user_id", "ts_micros", "event_id")
-    clicks = ev.where(F.col("event_type") == "click").select("user_id", "ts_micros", "event_id")
-    joined = interval_join(views, clicks, horizon="1 hour")
-    return (
-        joined.groupBy(F.pmod("user_id", F.lit(100)).cast("int").alias("user_bucket"))
-        .agg(F.count(F.lit(1)).alias("n_pairs"))
-    )
-
-
-def q_events_salted_agg(spark, sf_dir):
-    """Skew-salted two-phase aggregation over the zipf-headed event_type
-    key: hash(event_id) spreads each type over 16 reduce partitions,
-    then a group-count-sized merge shuffle. Result-identical to the
-    plain GROUP BY (the oracle)."""
-    from apache_cassandra_spark.functions.skew import salted_agg
-
-    ev = load_events(spark, sf_dir)
-    out = salted_agg(
-        ev,
-        keys=["event_type"],
-        aggs={
-            "n": ("count", "event_id"),
-            "total": ("sum", F.col("value").cast("decimal(18,4)")),
-            "max_value": ("max", F.col("value").cast("decimal(18,4)")),
-        },
-        n_salts=16,
-        salt_on="event_id",
-    )
-    return out.select(
-        "event_type",
-        F.col("n").cast("bigint").alias("n"),
-        F.col("total").cast("double").alias("total"),
-        F.col("max_value").cast("double").alias("max_value"),
-    )
-
-
-def q_events_salted_join(spark, sf_dir):
-    """Replicate-salt join: events (big, skewed on user_id) against
-    orders replicated 8x on a deterministic hash(event_id) salt, then a
-    per-event_type match count. Result-identical to the plain equi-join
-    (the oracle); the salt never escapes the operator."""
-    from apache_cassandra_spark.functions.skew import salted_join
-
-    ev = load_events(spark, sf_dir).select("event_id", "user_id", "event_type")
-    orders = load_table(spark, sf_dir, "orders").select("o_custkey", "o_orderstatus")
-    joined = salted_join(
-        ev, orders, on=[("user_id", "o_custkey")], n_salts=8, salt_on="event_id"
-    )
-    return (
-        joined.groupBy("event_type", "o_orderstatus")
-        .agg(F.count(F.lit(1)).alias("n_matches"))
-    )
-
-
-def q_events_sessionize(spark, sf_dir):
-    """Gap-based sessionization: a user's events belong to one session
-    until a silence longer than 30 minutes, the classic event-analytics
-    operator the reference delegated to Hadoop. One window pass per user
-    (lag → new-session flag → running sum); session ids are (user,
-    ordinal), deterministic. Emits per-session aggregates."""
-    ev = load_events(spark, sf_dir)
-    from pyspark.sql import Window
-
-    us = F.expr("ts div 1000")
-    w = Window.partitionBy("user_id").orderBy("_us", "event_id")
-    gap_us = 30 * 60 * 1_000_000
-    sessions = (
-        ev.select("user_id", "event_id", us.alias("_us"))
-        .withColumn("_prev", F.lag("_us").over(w))
-        .withColumn(
-            # strict >: native session_window merges an event landing
-            # EXACTLY `gap` after the previous one (closed [t, t+gap]
-            # interval — verified against Spark's operator in
-            # test_session_boundary_exact_gap_merges), so the lag rule
-            # and the oracle both split only on silence STRICTLY longer
-            "_new",
-            F.when(F.col("_prev").isNull() | (F.col("_us") - F.col("_prev") > gap_us), 1).otherwise(0),
-        )
-        .withColumn("session_no", F.sum("_new").over(w))
-    )
-    return sessions.groupBy("user_id", "session_no").agg(
-        F.count("*").alias("n_events"),
-        F.min("_us").alias("start_us"),
-        F.max("_us").alias("end_us"),
-        ((F.max("_us") - F.min("_us")) / F.lit(1_000_000)).alias("duration_s"),
-    )
-
-
-def q_events_rolling(spark, sf_dir):
-    """Trailing-hour rolling aggregates per user (RANGE frame on event
-    time): for every event, how many events and how much value the user
-    produced in the preceding hour — the per-entity rate/feature operator
-    of both abuse detection and feature pipelines. Decimal-exact sum so
-    in-frame addition order can't break the hash."""
-    from pyspark.sql import Window
-
-    ev = load_events(spark, sf_dir).select(
-        "user_id", "event_id", F.expr("ts div 1000").alias("us"), "value"
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("us")
-        .rangeBetween(-3_600_000_000, Window.currentRow)
-    )
-    return ev.select(
-        "user_id",
-        "event_id",
-        "us",
-        F.count("*").over(w).alias("n_last_hour"),
-        F.sum(F.col("value").cast("decimal(18,4)")).over(w).cast("double").alias("value_last_hour"),
-    )
-
-
-def q_orders_rollup(spark, sf_dir):
-    """Native grouping-sets surface: ROLLUP over (status, priority) with
-    the grouping-id disambiguating subtotal levels; decimal-exact sums so
-    the float addition order can't break the cross-engine hash."""
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.rollup("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.count("*").alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,4)")).cast("double").alias("total"),
-            F.grouping_id().cast("long").alias("gid"),
-        )
-    )
-
-
-def q_events_funnel(spark, sf_dir):
-    """Ordered conversion funnel signup → click → purchase: a user
-    advances only with an event STRICTLY after their previous stage time
-    (min-timestamp chaining). Three user-keyed aggregates + joins —
-    co-partitioned after the first shuffle, no windows."""
-    ev = load_events(spark, sf_dir).select(
-        "user_id", "event_type", F.expr("ts div 1000").alias("us")
-    )
-    s1 = ev.where(F.col("event_type") == "signup").groupBy("user_id").agg(F.min("us").alias("t1"))
-    s2 = (
-        ev.where(F.col("event_type") == "click")
-        .join(s1, "user_id")
-        .where(F.col("us") > F.col("t1"))
-        .groupBy("user_id")
-        .agg(F.min("us").alias("t2"))
-    )
-    s3 = (
-        ev.where(F.col("event_type") == "purchase")
-        .join(s2, "user_id")
-        .where(F.col("us") > F.col("t2"))
-        .groupBy("user_id")
-        .agg(F.min("us").alias("t3"))
-    )
-    counts = [
-        s1.agg(F.count("*").alias("n_users")).select(F.lit("x1_signup").alias("stage"), "n_users"),
-        s2.agg(F.count("*").alias("n_users")).select(F.lit("x2_click").alias("stage"), "n_users"),
-        s3.agg(F.count("*").alias("n_users")).select(F.lit("x3_purchase").alias("stage"), "n_users"),
-    ]
-    out = counts[0]
-    for c in counts[1:]:
-        out = out.unionByName(c)
-    return out
-
-
-def q_events_retention(spark, sf_dir):
-    """Weekly retention cohorts: cohort = the user's first-activity week
-    (integer epoch-week), each cell = distinct users of that cohort
-    active ``week_offset`` weeks later. Pure integer arithmetic so every
-    cell replays in SQL."""
-    ev = load_events(spark, sf_dir).select(
-        "user_id", F.expr("(ts div 1000) div 604800000000").alias("week")
-    )
-    first = ev.groupBy("user_id").agg(F.min("week").alias("cohort_week"))
-    act = ev.distinct().join(first, "user_id")
-    return act.groupBy(
-        "cohort_week", (F.col("week") - F.col("cohort_week")).alias("week_offset")
-    ).agg(F.count_distinct("user_id").alias("n_users"))
-
-
-def q_events_asof(spark, sf_dir):
-    """As-of join: each purchase matched to the user's newest click AT OR
-    BEFORE it — the interleave/window implementation (one shuffle on the
-    key, no inequality join, no BroadcastNestedLoop). Clicks are
-    pre-reduced to one row per (user, time) so the oracle's winner rule
-    is plain max()."""
-    from apache_cassandra_spark.analytics.temporal import asof_join
-
-    ev = load_events(spark, sf_dir).select(
-        "user_id", "event_id", "event_type", F.expr("ts div 1000").alias("us")
-    )
-    purchases = ev.where(F.col("event_type") == "purchase").select(
-        "user_id", F.col("event_id").alias("purchase_id"), "us"
-    )
-    clicks = (
-        ev.where(F.col("event_type") == "click")
-        .groupBy("user_id", F.col("us").alias("click_us"))
-        .agg(F.max("event_id").alias("click_id"))
-    )
-    out = asof_join(purchases, clicks, "user_id", "us", "click_us")
-    return out.select(
-        "user_id", "purchase_id", "us",
-        F.col("click_us_right").alias("click_us"),
-        F.col("click_id_right").alias("click_id"),
-    )
-
-
-#: 2024-01-01T00:00Z in epoch-us — the events fixture's first day
-_JAN1_US = 1_704_067_200_000_000
-
-
-def q_events_range_join(spark, sf_dir):
-    """Range join via bucketized equality: 30 one-hour "promo windows"
-    (noon each January day) joined to the events inside them — interval
-    containment as a hash join on the hour slot (no theta-join
-    fallback), exact bounds filtered after the match."""
-    from apache_cassandra_spark.analytics.temporal import range_join
-
-    hour_us = 3_600 * 1_000_000
-    promos = (
-        spark.range(0, 30)
-        .select(
-            F.col("id").alias("promo_id"),
-            (F.lit(_JAN1_US) + (F.col("id") * 24 + 12) * hour_us).alias("start_us"),
-            (F.lit(_JAN1_US) + (F.col("id") * 24 + 13) * hour_us).alias("end_us"),
-        )
-    )
-    ev = load_events(spark, sf_dir).select("user_id", F.expr("ts div 1000").alias("us"))
-    joined = range_join(ev, promos, "us", "start_us", "end_us", bucket=hour_us)
-    return joined.groupBy("promo_id").agg(
-        F.count("*").alias("n_events"), F.count_distinct("user_id").alias("n_users")
-    )
-
-
-def q_text_quality_score(spark, sf_dir):
-    """Model-based quality filter: fixed-weight linear classifier over
-    the quality features (logit + keep decision). The oracle recomputes
-    the same fixed-order linear combination over the same rounded
-    features — bit-exact, no transcendental in the gate path."""
-    return text.quality_score(load_table(spark, sf_dir, "documents"))
-
-
-def q_text_normalize(spark, sf_dir):
-    """Canonical cleanup pass over a deliberately-dirtied corpus (tabs,
-    newlines, double spaces injected from doc_id arithmetic so every sf
-    has changed rows): md5 of the cleaned text pins the exact output."""
-    docs = load_table(spark, sf_dir, "documents")
-    dirty = docs.select(
-        "doc_id",
-        F.concat(
-            F.when(F.col("doc_id") % 3 == 0, F.lit("\t")).otherwise(F.lit("")),
-            F.col("text"),
-            F.when(F.col("doc_id") % 2 == 0, F.lit("  trailing\n")).otherwise(F.lit("")),
-        ).alias("text"),
-    )
-    out = text.normalize_text(dirty)
-    return out.select("doc_id", F.md5("text").alias("text_md5"), "changed", "n_chars")
-
-
-def q_basket_pairs(spark, sf_dir):
-    """Market-basket co-occurrence over lineitem: part pairs sharing an
-    order, a-priori item pruning + basket-size guard before the pair
-    join, top-25 by support."""
-    from apache_cassandra_spark.analytics.basket import frequent_item_pairs
-
-    li = load_table(spark, sf_dir, "lineitem")
-    return frequent_item_pairs(
-        li, basket_col="l_orderkey", item_col="l_partkey",
-        min_pair_support=1, min_item_support=2, k=25,
-    )
-
-
-def q_corpus_split(spark, sf_dir):
-    """Deterministic train/val/test split (80/10/10) by the engine's
-    shared md5 draw — per-split doc and token counts. A document's split
-    is a pure function of its id (stable under corpus growth)."""
-    from apache_cassandra_spark.analytics.pipeline import split_corpus
-
-    docs = load_table(spark, sf_dir, "documents")
-    out = split_corpus(docs, {"train": 0.8, "val": 0.1, "test": 0.1})
-    return out.groupBy("split").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(text.token_count(F.col("text"))).cast("bigint").alias("n_tokens"),
-    )
-
-
-def q_corpus_blocklist(spark, sf_dir):
-    """Blocklist exclusion via broadcast LEFT ANTI join (the
-    million-domain production path — exercised here with a two-row
-    blocklist frame), then a per-source survivor count."""
-    from apache_cassandra_spark.analytics.pipeline import filter_blocklist
-
-    docs = load_table(spark, sf_dir, "documents")
-    blocked = spark.createDataFrame([("src1",), ("src3",)], "domain string")
-    return (
-        filter_blocklist(docs, blocked)
-        .groupBy("source")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-    )
-
-
-def q_cf_join(spark, sf_dir):
-    """Cross-CF co-located join: two CFs written through the real write
-    path (LWW overwrites included), compacted to same-bucket-count
-    tables, joined on (key, column) via `read.join_cf` — exchange-free
-    post-compaction (plan-locked in test_plans); the oracle replays the
-    mutation logs and the join in SQL."""
-    import tempfile
-
-    from apache_cassandra_spark.catalog import Catalog
-    from apache_cassandra_spark.engine import Engine
-    from apache_cassandra_spark.model import ColumnPath
-    from apache_cassandra_spark.operators import maintenance
-    from apache_cassandra_spark.operators import read as R2
-
-    ks = "Gate"
-    root = tempfile.mkdtemp(prefix="cfjoin_gate_")
-    eng = Engine(
-        spark, root,
-        Catalog.from_dict({ks: {"JA": {"compare_with": "UTF8Type"},
-                                "JB": {"compare_with": "UTF8Type"}}}),
-    )
-    # CF JA: profile-ish cells, with one LWW overwrite and one JA-only row
-    for k in range(8):
-        eng.insert(ks, f"u{k}", ColumnPath("JA", column=b"name"), f"n{k}".encode(), 100)
-        eng.insert(ks, f"u{k}", ColumnPath("JA", column=b"age"), str(20 + k).encode(), 100)
-    eng.insert(ks, "u3", ColumnPath("JA", column=b"name"), b"renamed", 200)
-    eng.insert(ks, "only_a", ColumnPath("JA", column=b"name"), b"solo", 100)
-    # CF JB: overlapping keys, same 'name' coordinate + a JB-only column
-    for k in range(5):
-        eng.insert(ks, f"u{k}", ColumnPath("JB", column=b"name"), f"m{k}".encode(), 100)
-        eng.insert(ks, f"u{k}", ColumnPath("JB", column=b"city"), f"c{k}".encode(), 100)
-    maintenance.compact(eng.store, ks, "JA", buckets=4)
-    maintenance.compact(eng.store, ks, "JB", buckets=4)
-    out = R2.join_cf(eng.cf(ks, "JA"), eng.cf(ks, "JB"))
-    return out.select(
-        "key",
-        F.col("column").cast("string").alias("column"),
-        F.col("value_a").cast("string").alias("value_a"),
-        "ts_a",
-        F.col("value_b").cast("string").alias("value_b"),
-        "ts_b",
-    )
-
-
-def q_corpus_stats(spark, sf_dir):
-    """Per-source corpus inventory (docs, tokens, char bounds) — the
-    one-pass summary every mixing/sampling decision starts from."""
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.groupBy("source").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(text.token_count(F.col("text"))).alias("n_tokens"),
-        F.min("n_chars").alias("min_chars"),
-        F.max("n_chars").alias("max_chars"),
-        F.round(F.sum("n_chars") / F.count("*"), 6).alias("avg_chars"),
-    )
-
-
-def q_events_sliding(spark, sf_dir):
-    """SLIDING event-time windows (2h length, 1h slide): every event lands
-    in exactly two overlapping windows — the hopping-aggregate shape the
-    tumbling `windowed_event_stats` operator doesn't cover. Runs identically under
-    readStream (same `F.window` operator)."""
-    ev = load_events(spark, sf_dir)
-    t = F.timestamp_micros(F.expr("ts div 1000"))
-    return (
-        ev.groupBy(F.window(t, "2 hours", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "n",
-        )
-    )
-
-
-def q_events_pivot(spark, sf_dir):
-    """Pivot (crosstab): daily event counts with one column per event
-    type — the reshape operator; oracle = conditional aggregation."""
-    ev = load_events(spark, sf_dir)
-    day = F.date_format(F.timestamp_micros(F.expr("ts div 1000")), "yyyy-MM-dd")
-    types = ["click", "purchase", "signup", "view", "error"]
-    return (
-        ev.groupBy(day.alias("day"))
-        .pivot("event_type", types)
-        .agg(F.count(F.lit(1)))
-        .select(
-            "day",
-            *[F.coalesce(F.col(t), F.lit(0)).cast("bigint").alias(f"n_{t}") for t in types],
-        )
-    )
-
-
-def q_latest_order_per_customer(spark, sf_dir):
-    """Window function: most recent order per customer (ties -> highest
-    order key), the per-key top-1 shape used everywhere in feed systems."""
-    from pyspark.sql import Window
-
-    o = load_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(F.col("o_orderdate").desc(), F.col("o_orderkey").desc())
-    return (
-        o.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(
-            "o_custkey",
-            F.col("o_orderkey").alias("latest_orderkey"),
-            F.date_format("o_orderdate", "yyyy-MM-dd HH:mm:ss").alias("latest_orderdate"),
-        )
-    )
-
-
-def q_status_priority_matrix(spark, sf_dir):
-    """Two-dimensional grouping (the reference's Pig GROUP story, wider)."""
-    o = load_table(spark, sf_dir, "orders")
-    return (
-        o.groupBy("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.count("*").alias("n"),
-            # exact decimal sum -> double division: bit-identical across engines
-            # (native AVG(decimal) result types differ between engines)
-            (F.sum(F.col("o_totalprice").cast("decimal(18,4)")).cast("double") / F.count("*")).alias("avg_price"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# LLM-pipeline operators
-# ---------------------------------------------------------------------------
-
-
-def q_dedup_exact(spark, sf_dir):
-    return dedup.exact_dup_groups(load_table(spark, sf_dir, "documents"))
-
-
-def q_dedup_jaccard(spark, sf_dir):
-    return dedup.ngram_jaccard_pairs(load_table(spark, sf_dir, "documents"), n=3, threshold=0.5)
-
-
-def q_dedup_prefix_jaccard(spark, sf_dir):
-    """PPJoin-style prefix-filtered Jaccard self-join
-    (dedup.prefix_jaccard_pairs): candidates restricted to collisions on
-    each document's rarest ``n − ceil(t·n) + 1`` shingles (global
-    doc-freq order) + length filter, then exact verification on the
-    survivors. LOSSLESS by the prefix-filter theorem, so the oracle is
-    the plain all-pairs Jaccard SQL at the same threshold — the gate
-    proves the optimization changes nothing. Gated at t=0.8, the
-    operator's home regime (prefix ≈ 20% of each doc; common shingles
-    never enter it — SCALE.md round-7 probes): the scale path for
-    set-similarity joins where the full inverted-index join's Σ df²
-    blows up on corpus-wide boilerplate."""
-    return dedup.prefix_jaccard_pairs(
-        load_table(spark, sf_dir, "documents"), n=3, threshold=0.8
-    )
-
-
-def q_dedup_prefix_containment(spark, sf_dir):
-    """Prefix-filtered DIRECTED containment
-    (dedup.prefix_containment_pairs): one-sided prefix theorem —
-    c(A→B) >= t forces the intersection into A's rarest
-    |A| − ceil(t·|A|) + 1 tokens, so candidates are π(A) against B's
-    full postings with the |B| >= t·|A| size prune. LOSSLESS: gated
-    against the same naive all-pairs oracle as dedup_containment
-    (identical threshold, shared SQL body by construction)."""
-    return dedup.prefix_containment_pairs(
-        load_table(spark, sf_dir, "documents"), n=3, threshold=0.8
-    )
-
-
-def q_dedup_minhash(spark, sf_dir):
-    return dedup.minhash_lsh_candidates(load_table(spark, sf_dir, "documents"), n=3, num_perm=16, bands=4)
-
-
-def q_dedup_simhash(spark, sf_dir):
-    return dedup.simhash(load_table(spark, sf_dir, "documents"))
-
-
-_EMB_DIM = 64  # driver embeddings.parquet dimension (TESTDATA.md)
-
-
-def _planted_dup_corpus(spark, sf_dir, offset: int = 100_000, eps: float = 0.15):
-    """Corpus ∪ deterministic near-duplicate of every vector: v' = v +
-    eps·rot(v) (rot = rotate-left-one). cos(v, v') ≈ 1/√(1+eps²) ≈ 0.989,
-    so each (id, id+offset) pair is a true near-dup with a real angular
-    offset (~8-14°) — the recall target for the LSH dedup path. The same
-    construction is reproduced in the DuckDB oracle."""
-    em = load_table(spark, sf_dir, "embeddings")
-    dbl = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    base = em.select("vec_id", dbl.alias("embedding"))
-    rot = F.concat(
-        F.slice(F.col("embedding"), 2, _EMB_DIM - 1), F.slice(F.col("embedding"), 1, 1)
-    )
-    pert = base.select(
-        (F.col("vec_id") + offset).alias("vec_id"),
-        F.zip_with(F.col("embedding"), rot, lambda a, b: a + F.lit(eps) * b).alias("embedding"),
-    )
-    return base.unionByName(pert)
-
-
-def q_dedup_embedding(spark, sf_dir):
-    """Shipped LSH near-dup path: multi-table hyperplane candidates + exact
-    cosine verify, over the corpus with planted near-identical pairs. The
-    brute-force oracle checks recall == 1.0 (any missed candidate pair
-    hash-mismatches)."""
-    return dedup.embedding_dup_pairs(_planted_dup_corpus(spark, sf_dir), threshold=0.95, dim=_EMB_DIM)
-
-
-def q_dedup_embedding_exact(spark, sf_dir):
-    """O(n²) baseline at a low threshold — small-sf oracle cross-check for
-    the cosine expression itself (not the shipped dedup path)."""
-    return dedup.embedding_dup_pairs(
-        load_table(spark, sf_dir, "embeddings"), threshold=0.35, method="brute"
-    )
-
-
-def q_dedup_groups_star(spark, sf_dir):
-    """MinHash candidates → connected components by the alternating
-    large-star/small-star algorithm (O(log n) rounds instead of
-    diameter-bound label propagation): the full dedup-grouping pipeline
-    (pair generation + transitive closure) under one oracle. (The
-    label-propagation form, dup_groups_from_pairs, retired its gate in
-    round 8 — subsumed by this one; it stays unit-tested against the
-    same contract in tests/test_analytics.py.)"""
-    docs = load_table(spark, sf_dir, "documents")
-    return dedup.dup_groups_star(dedup.minhash_lsh_candidates(docs))
-
-
-def _min_label_closure_sql(pairs_cte: str, iters: int = 8) -> str:
-    """Fixed-iteration min-label propagation in portable SQL: l0 = own id,
-    l{k+1} = least(own, min over neighbors of l{k}). Matches the Spark
-    fixpoint whenever component diameter <= iters (gate corpora are
-    shallow; the Spark side converges to the same fixpoint).
-
-    ``AS MATERIALIZED`` on the pair/edge CTEs is load-bearing: DuckDB
-    inlines CTEs by default, which would re-evaluate the whole upstream
-    candidate pipeline in every closure round."""
-    return (
-        ", ".join(_closure_ctes(pairs_cte, iters))
-        + f" SELECT id, label AS group_id FROM l{iters}"
-    )
-
-
-def _closure_ctes(pairs_cte: str, iters: int = 8) -> list[str]:
-    """CTE chain for the min-label closure, ending at ``l{iters}``."""
-    sql = [
-        f"pairs AS MATERIALIZED ({pairs_cte})",
-        "e AS MATERIALIZED (SELECT id_a AS a, id_b AS b FROM pairs "
-        "UNION SELECT id_b, id_a FROM pairs)",
-        "l0 AS (SELECT DISTINCT a AS id, a AS label FROM e)",
-    ]
-    for k in range(iters):
-        sql.append(
-            f"l{k + 1} AS MATERIALIZED (SELECT l.id, least(l.label, coalesce(min(n.label), l.label)) AS label "
-            f"FROM l{k} l LEFT JOIN e ON e.a = l.id LEFT JOIN l{k} n ON n.id = e.b "
-            "GROUP BY l.id, l.label)"
-        )
-    return sql
-
-
-def q_text_tfidf(spark, sf_dir):
-    """tf·idf keyword extraction in the gate: top-3 terms per document,
-    rank and score pinned by the oracle (rounded score is the ranking
-    key, so cross-engine float noise can't flip the order)."""
-    return text.tfidf_top_terms(load_table(spark, sf_dir, "documents"), k=3)
-
-
-def q_corpus_sample_stratified(spark, sf_dir):
-    """Deterministic per-language Bernoulli sampling (the corpus
-    rebalancing step): keep-rate looked up per stratum, the draw a pure
-    md5 function of doc_id — map-only plan, no shuffle, and every keep
-    decision is replayable by one line of ANSI SQL."""
-    from apache_cassandra_spark.analytics.pipeline import sample_stratified
-
-    docs = load_table(spark, sf_dir, "documents")
-    out = sample_stratified(docs, {"en": 0.25, "zh": 0.8, "de": 1.0}, default_rate=0.5)
-    return out.select("doc_id", "lang", "source")
-
-
-def q_corpus_sample_quota(spark, sf_dir):
-    """Exact per-language quota sampling: the 30 smallest md5 draws per
-    stratum survive (deterministic uniform-without-replacement).
-    WindowGroupLimit pre-truncates each partition to the quota before
-    the stratum shuffle."""
-    from apache_cassandra_spark.analytics.pipeline import sample_quota
-
-    docs = load_table(spark, sf_dir, "documents")
-    return sample_quota(docs, 30).select("doc_id", "lang")
-
-
-def q_corpus_sample_weighted(spark, sf_dir):
-    """Weighted without-replacement sampling (pipeline.sample_weighted,
-    Efraimidis-Spirakis A-ES): the 20 docs per source with the largest
-    quantized ln(u)/w key, weight = token count — "sample k docs per
-    source proportional to length", the draw Bernoulli sampling can't
-    size exactly and uniform quota sampling can't weight. Key is a pure
-    function of doc_id (shared 60-bit hash) quantized to integer
-    nano-units, so the oracle replays the exact formula; the rank
-    compiles to WindowGroupLimit (shuffle moves sources x k rows)."""
-    from apache_cassandra_spark.analytics.pipeline import sample_weighted
-
-    docs = load_table(spark, sf_dir, "documents")
-    weighted = docs.select(
-        "doc_id", "source", text.token_count(F.col("text")).cast("long").alias("weight")
-    )
-    return sample_weighted(weighted, k=20, weight_col="weight", strata_col="source")
-
-
-def q_text_collocations(spark, sf_dir):
-    """Top-50 adjacent-word collocations by PMI (text.collocations,
-    Church & Hanks 1990): min_count=5 floor, micro-quantized
-    ln((c_ab N^2)/(M c_a c_b)) with a fixed product order so the double
-    math replays bit-identically, ties lexicographic on the pair. The
-    corpus stream aggregates once into two cached vocab-bounded count
-    tables; the pair->unigram joins are AQE-decided (vocabulary
-    cardinality — the tfidf rule), the ranking a TakeOrderedAndProject
-    top-k."""
-    from apache_cassandra_spark.analytics.text import collocations
-
-    docs = load_table(spark, sf_dir, "documents")
-    return collocations(docs, k=50, min_count=5)
-
-
-def q_prepare_corpus_full(spark, sf_dir):
-    """The END-TO-END pipeline a pretraining data build actually runs,
-    under ONE oracle: Gopher quality gate → exact dedup → minhash
-    near-dup representatives → eval-set decontamination (trigrams vs
-    every 50th doc) → greedy packing of the survivors into 512-token
-    sequences across 8 shard streams. Pins the wiring between every
-    stage, not just the stages."""
-    from apache_cassandra_spark.analytics.pipeline import (
-        decontaminate,
-        pack_sequences,
-        prepare_corpus,
-    )
-
-    from apache_cassandra_spark.cachectl import adopt
-
-    docs = load_table(spark, sf_dir, "documents")
-    ev = docs.where(F.col("doc_id") % 50 == 0)
-    cleaned = prepare_corpus(docs, min_stop_hits=1)
-    survivors = decontaminate(cleaned, ev, n=3)
-    # lazy derivation: the packed result must adopt cleaned's owned cache
-    # or GC at return would unpersist it before the driver's action
-    return adopt(pack_sequences(survivors, budget=512, n_shards=8), cleaned)
-
-
-def _prepare_corpus_oracle() -> str:
-    gopher_features = """
-        qf AS (
-          SELECT doc_id,
-                 cast(len(t) as bigint) AS n_tokens,
-                 round(list_sum(list_transform(t, x -> len(x))) / greatest(len(t), 1), 6) AS mean_word_len,
-                 round(len(regexp_extract_all(text, '#|\\.\\.\\.|…')) / greatest(len(t), 1), 6) AS symbol_ratio,
-                 round(len(list_filter(t, x -> regexp_matches(x, '[A-Za-z]'))) / greatest(len(t), 1), 6) AS alpha_frac,
-                 cast(
-                   list_contains(list_transform(t, x -> lower(x)), 'the')::int +
-                   list_contains(list_transform(t, x -> lower(x)), 'be')::int +
-                   list_contains(list_transform(t, x -> lower(x)), 'to')::int +
-                   list_contains(list_transform(t, x -> lower(x)), 'of')::int +
-                   list_contains(list_transform(t, x -> lower(x)), 'and')::int +
-                   list_contains(list_transform(t, x -> lower(x)), 'that')::int +
-                   list_contains(list_transform(t, x -> lower(x)), 'have')::int +
-                   list_contains(list_transform(t, x -> lower(x)), 'with')::int
-                 as bigint) AS stop_hits
-          FROM (SELECT doc_id, text, list_filter(string_split(text, ' '), x -> x <> '') AS t FROM documents))"""
-    passed_exact = """
-        passed AS (
-          SELECT d.doc_id, d.text, qf.n_tokens
-          FROM documents d JOIN qf ON d.doc_id = qf.doc_id
-          WHERE qf.n_tokens >= 50 AND qf.n_tokens <= 100000
-            AND qf.mean_word_len >= 3 AND qf.mean_word_len <= 10
-            AND qf.symbol_ratio < 0.1 AND qf.alpha_frac > 0.8 AND qf.stop_hits >= 1),
-        exact AS MATERIALIZED (
-          SELECT doc_id, text, n_tokens FROM (
-            SELECT *, row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-            FROM passed) t
-          WHERE rn = 1)"""
-    mbanded = """
-        mbanded AS MATERIALIZED (
-          SELECT id, p // 4 AS band,
-                 md5(string_agg(lpad(cast(p as varchar), 2, '0') || ':' || cast(mh as varchar), ','
-                     ORDER BY lpad(cast(p as varchar), 2, '0') || ':' || cast(mh as varchar))) AS bucket
-          FROM (SELECT id, p, min((h * (2*p + 1) + p*p + 7) % 2147483647) AS mh
-                FROM (SELECT id, ('0x' || substr(md5('mh:' || shingle), 1, 15))::bigint % 2147483647 AS h
-                      FROM (SELECT DISTINCT id, shingle
-                            FROM (SELECT id, unnest(list_transform(generate_series(1, greatest(len(t)-2, 0)),
-                                                                   i -> array_to_string(t[i:i+2], ' '))) AS shingle
-                                  FROM (SELECT doc_id AS id, list_filter(string_split(lower(text),' '), x -> x <> '') AS t
-                                        FROM exact))))
-                     , (SELECT unnest(generate_series(0, 15)) AS p)
-                GROUP BY id, p)
-          GROUP BY id, p // 4)"""
-    minhash_pairs = (
-        "SELECT DISTINCT a.id AS id_a, b.id AS id_b FROM mbanded a "
-        "JOIN mbanded b ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id"
-    )
-    ctes = [gopher_features, passed_exact, mbanded] + _closure_ctes(minhash_pairs, iters=8)
-    return (
-        "WITH "
-        + ", ".join(ctes)
-        + """
-        SELECT doc_id, text, n_tokens FROM exact
-        WHERE doc_id NOT IN (SELECT id FROM l8 WHERE id <> label)
-    """
-    )
-
-
-def _prepare_corpus_full_oracle() -> str:
-    """prepare_corpus's CTE chain extended with decontamination (trigrams
-    vs the doc_id % 50 = 0 eval split of the RAW corpus) and greedy
-    512-token/8-shard packing of the survivors — the SQL twin of
-    q_prepare_corpus_full stage for stage."""
-    base = _prepare_corpus_oracle()
-    head, _, _ = base.rpartition("SELECT doc_id, text, n_tokens FROM exact")
-    return (
-        head
-        + """, surv AS MATERIALIZED (
-          SELECT doc_id, text, n_tokens FROM exact
-          WHERE doc_id NOT IN (SELECT id FROM l8 WHERE id <> label)),
-        evsh AS (SELECT DISTINCT shingle
-                 FROM (SELECT unnest(list_transform(generate_series(1, greatest(len(t)-2, 0)),
-                                                    i -> array_to_string(t[i:i+2], ' '))) AS shingle
-                       FROM (SELECT list_filter(string_split(lower(text), ' '), x -> x <> '') AS t
-                             FROM documents WHERE doc_id % 50 = 0))),
-        dirty AS (SELECT DISTINCT id
-                  FROM (SELECT id, unnest(list_transform(generate_series(1, greatest(len(t)-2, 0)),
-                                                         i -> array_to_string(t[i:i+2], ' '))) AS shingle
-                        FROM (SELECT doc_id AS id, list_filter(string_split(lower(text), ' '), x -> x <> '') AS t
-                              FROM surv))
-                  WHERE shingle IN (SELECT shingle FROM evsh)),
-        clean AS (SELECT doc_id, n_tokens FROM surv WHERE doc_id NOT IN (SELECT id FROM dirty)),
-        sharded AS (SELECT doc_id,
-                           ('0x' || substr(md5(cast(doc_id as varchar)), 1, 15))::bigint % 8 AS shard,
-                           n_tokens
-                    FROM clean),
-        packed AS (SELECT doc_id, shard, n_tokens,
-                          sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id) AS cum
-                   FROM sharded)
-        SELECT doc_id, shard, cast((cum - n_tokens) // 512 AS bigint) AS seq_in_shard,
-               cast(cum - n_tokens AS bigint) AS offset, n_tokens,
-               cast(shard * 1099511627776 + (cum - n_tokens) // 512 AS bigint) AS seq_id
-        FROM packed
-    """
-    )
-
-
-def q_semantic_dedup(spark, sf_dir):
-    """SemDeDup over the planted-dup corpus so the drop path actually
-    fires: each (id, id+100k) pair sits at cos≈0.989; the planted twin is
-    dropped whenever both land in the same coarse cluster (cross-cluster
-    escapes are SemDeDup's documented approximation — deterministic here,
-    and replayed exactly by the oracle)."""
-    return dedup.semantic_dedup(_planted_dup_corpus(spark, sf_dir))
-
-
-#: the boilerplate line planted into every document by _multiline_corpus —
-#: line-level dedup must keep it only in its first occurrence
-_BOILER_LINE = "subscribe to our newsletter for more updates and follow us on social media"
-
-
-def _multiline_corpus(spark, sf_dir):
-    """documents rewritten as three newline-joined lines — an 80-char
-    prefix, a boilerplate line shared by EVERY document, and the tail —
-    so the line-dedup drop path fires corpus-wide. The construction is
-    pure string arithmetic reproduced verbatim in the oracle."""
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        F.concat_ws(
-            "\n",
-            F.substring(F.col("text"), 1, 80),
-            F.lit(_BOILER_LINE),
-            F.expr("substring(text, 81)"),
-        ).alias("text"),
-    )
-
-
-def q_dedup_lines(spark, sf_dir):
-    """C4-style corpus-wide line dedup: each distinct line survives only
-    at its first (doc_id, position) occurrence; documents reassemble from
-    surviving lines. On the planted corpus the shared boilerplate line
-    must survive in exactly one document."""
-    return dedup.remove_duplicate_lines(_multiline_corpus(spark, sf_dir), min_chars=5)
-
-
-def q_dedup_spans(spark, sf_dir):
-    """Suffix-array-style exact duplicated-span removal (Lee et al., ACL
-    2022): every 8-token window occurring more than once corpus-wide is
-    cut everywhere except its globally-first (doc_id, pos) occurrence;
-    documents reassemble from surviving tokens."""
-    return dedup.dedup_spans(load_table(spark, sf_dir, "documents"), k=8)
-
-
-def q_corpus_overlap(spark, sf_dir):
-    """Graded decontamination: per-train-doc fraction of distinct word
-    trigrams appearing in the eval set (every 50th doc) — the
-    thresholdable overlap metric, same broadcast-probe shape as
-    corpus_decontaminate."""
-    from apache_cassandra_spark.analytics.pipeline import contamination_overlap
-
-    docs = load_table(spark, sf_dir, "documents")
-    ev = docs.where(F.col("doc_id") % 50 == 0)
-    tr = docs.where(F.col("doc_id") % 50 != 0)
-    return contamination_overlap(tr, ev, n=3)
-
-
-def q_corpus_shard_roundtrip(spark, sf_dir):
-    """Sharded-sink round-trip: documents written as ``shard=NN`` JSONL
-    directories (closed-form md5 shard membership, bounded files,
-    deterministic in-file order) and read back schema-first. The oracle
-    recomputes every row INCLUDING its shard id from the original table —
-    so the gate pins the sink's layout arithmetic, the JSON value
-    round-trip, and the reader's partition-column handling at once."""
-    import tempfile
-
-    from apache_cassandra_spark.sources import corpus as corpus_io
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang", "n_chars")
-    out_dir = tempfile.mkdtemp(prefix="corpus_shards_")
-    corpus_io.write_sharded(docs, out_dir, key_col="doc_id", n_shards=8, rows_per_file=200, fmt="json")
-    back = corpus_io.read_corpus(
-        spark, out_dir, fmt="json", schema="doc_id long, text string, lang string, n_chars long"
-    )
-    return back.select(
-        "doc_id", "text", "lang", "n_chars", F.col("shard").cast("long").alias("shard")
-    )
-
-
-def q_corpus_sample_token_budget(spark, sf_dir):
-    """Token-budget corpus mixing: src0 capped at 700 tokens (partial
-    keep), src1 at 5000 (whole stratum fits), src2 at 300, every other
-    source dropped — all three budget regimes in one gate. Keep order is
-    the md5 draw, so the oracle replays each decision."""
-    from apache_cassandra_spark.analytics.pipeline import sample_token_budget
-
-    docs = load_table(spark, sf_dir, "documents")
-    out = sample_token_budget(docs, {"src0": 700, "src1": 5000, "src2": 300})
-    return out.select("doc_id", "source")
-
-
-def q_corpus_pack_sequences(spark, sf_dir):
-    """Greedy contiguous packing of the corpus into 512-token training
-    sequences, 8 shard streams: each document's sequence/offset is a
-    closed-form function of (shard hash, id order, cumulative tokens) —
-    the oracle recomputes every assignment in SQL."""
-    from apache_cassandra_spark.analytics.pipeline import pack_sequences
-
-    docs = load_table(spark, sf_dir, "documents")
-    return pack_sequences(docs, budget=512, n_shards=8)
-
-
-def q_text_unigram_logprob(spark, sf_dir):
-    """Unigram-LM quality scores with the corpus as its own model:
-    per-token ln-probabilities quantized to integer micro-units before
-    the per-doc sum, so every value replays exactly in SQL."""
-    return text.unigram_logprob(load_table(spark, sf_dir, "documents"))
-
-
-def q_text_bigram_logprob(spark, sf_dir):
-    """Interpolated bigram-LM quality scores (Jelinek-Mercer λ=0.7 with
-    the corpus unigram model): per-bigram ln-probabilities quantized to
-    integer micro-units before the per-doc sum — word-order disfluency
-    signal, exactly replayable in SQL."""
-    return text.bigram_logprob(load_table(spark, sf_dir, "documents"))
-
-
-def _props_k_int():
-    """``props.k`` as int for the flat integer-valued props grammar of the
-    events corpus — the regexp twin of ``get_json_object(props, '$.k')``
-    (see the equivalence contract in ``_clickstream_edges``)."""
-    return F.nullif(F.regexp_extract("props", '"k"\\s*:\\s*(-?\\d+)', 1), F.lit("")).cast("int")
-
-
-def _clickstream_edges(spark, sf_dir):
-    """Per-user page-transition edges: nodes are props.k page ids, one
-    edge src→dst per consecutive pair in a user's ts-ordered stream (the
-    per-user lead window is bounded by that user's event count).
-
-    The page id is extracted with an unanchored regexp (first
-    ``"k": <int>`` anywhere in the string) instead of
-    ``get_json_object``: the events corpus's ``props`` rows are flat
-    single-level JSON objects whose ``k`` values are bare integers, and
-    for that grammar the two extractions are row-identical while the
-    regexp skips the per-row Jackson parse (measured 0.70s → 0.22s for
-    the 100k-row sf0.1 parse stage, ×5 consumer queries — guide §1.2
-    step 2 per-task work). Outside that grammar they diverge, and the
-    divergence is accepted: a ``"k": N`` fragment in invalid JSON or in
-    a nested object yields N here where ``get_json_object`` yields null.
-    Both sides are pinned by
-    tests/test_analytics.py::test_clickstream_props_regex_lock (full
-    sf0.001 corpus exceptAll both directions vs the get_json_object
-    twin, a corpus-grammar fuzz, and the out-of-grammar rows); revert
-    to ``get_json_object`` if the events generator ever widens the
-    props grammar (nested objects, quoted or non-integer k)."""
-    from pyspark.sql import Window
-
-    ev = load_events(spark, sf_dir)
-    stream = ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        _props_k_int().alias("page"),
-    ).where(F.col("page").isNotNull())
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return stream.select(
-        F.col("page").alias("src"), F.lead("page").over(w).alias("dst")
-    ).where(F.col("dst").isNotNull())
-
-
-def q_events_pagerank(spark, sf_dir):
-    """PageRank over the per-user clickstream transition graph: 3
-    integer-exact iterations (micro-unit ranks, 85/100 rational damping)
-    so the fixpoint replays bit-for-bit in SQL."""
-    from apache_cassandra_spark.analytics.graph import pagerank
-
-    return pagerank(_clickstream_edges(spark, sf_dir), iters=3)
-
-
-def q_events_hits(spark, sf_dir):
-    """HITS hubs/authorities over the same clickstream graph: 2
-    integer-exact iterations with max-normalization by integer division
-    (top score pinned at MICRO) — the float-free replayable variant of
-    the classic L2 normalization."""
-    from apache_cassandra_spark.analytics.graph import hits
-
-    return hits(_clickstream_edges(spark, sf_dir), iters=2)
-
-
-def q_events_communities(spark, sf_dir):
-    """Deterministic synchronous label propagation (min-label ties) over
-    the undirected clickstream graph, 2 rounds — density communities,
-    complementing components (connectivity) and PageRank/HITS
-    (centrality); replayable because every step is a sum/max/min."""
-    from apache_cassandra_spark.analytics.graph import label_propagation
-
-    return label_propagation(_clickstream_edges(spark, sf_dir), iters=2)
-
-
-def q_text_bpe_train(spark, sf_dir):
-    """Iterative BPE merge-table training (8 rounds). The training loop
-    is genuinely sequential in the merge list, but each round is a pure
-    function of the previous word frame — so the oracle UNROLLS all 8
-    rounds as chained CTEs (`_bpe_train_oracle`, the
-    `_kmeans_exact_oracle` discipline), replaying pair-count → top-1
-    (cnt desc, a, b) → greedy left-to-right fold per round. Also pinned
-    by the reference-algorithm equivalence test in
-    tests/test_analytics.py."""
-    merges = text.bpe_train(load_table(spark, sf_dir, "documents"), n_merges=8)
-    return spark.createDataFrame(
-        [(i, a, b, c) for i, (a, b, c) in enumerate(merges)],
-        "rank long, left string, right string, cnt long",
-    )
-
-
-#: fixed BPE merge table for the encode gate — literal (not trained at
-#: query time) so the gate is deterministic at every sf; includes a
-#: 4-deep chained family (t+a→ta→tab→tabl→table) so multi-level merge
-#: application is actually exercised, not just pair fusion.
-BPE_MERGES: list[tuple[str, str]] = [
-    ("e", "r"),
-    ("i", "n"),
-    ("s", "t"),
-    ("t", "a"),
-    ("ta", "b"),
-    ("tab", "l"),
-    ("tabl", "e"),
-    ("o", "w"),
-    ("q", "u"),
-    ("er", "y"),
-]
-
-
-def q_text_bpe_encode(spark, sf_dir):
-    """BPE *encode* under a fixed merge table: corpus token histogram
-    after folding the merges (in training order) over every distinct
-    word. The library entry (`text.bpe_encode`) also does per-document
-    encoding; the gate uses the vocabulary-frame histogram so the fold
-    runs per distinct word, not per corpus token."""
-    return text.bpe_token_counts(load_table(spark, sf_dir, "documents"), BPE_MERGES, k=50)
-
-
-def _sql_quote(s: str) -> str:
-    return s.replace("'", "''")
-
-
-def _bpe_encode_oracle(k: int = 50) -> str:
-    """Oracle for q_text_bpe_encode: each merge is one `list_reduce`
-    left-fold accumulating a space-delimited symbol string (space cannot
-    appear inside a symbol — words are space-split), fusing the incoming
-    symbol with the accumulator tail when the (a, b) pair matches —
-    byte-identical to the Spark-side `_apply_bpe_merge` fold. A plain
-    string `replace(' a b ', ' ab ')` oracle is WRONG for a==b runs
-    ('a a a a a a' needs >2 passes); the fold is exact by construction."""
-    expr = "list_transform(generate_series(1, len(word)), i -> word[i:i])"
-    for a, b in BPE_MERGES:
-        a_, b_ = _sql_quote(a), _sql_quote(b)
-        fold = (
-            f"list_reduce({expr}, (acc, x) -> CASE WHEN x = '{b_}' AND "
-            f"(acc = '{a_}' OR ends_with(acc, ' {a_}')) THEN acc || '{b_}' "
-            f"ELSE acc || ' ' || x END)"
-        )
-        expr = f"string_split({fold}, ' ')"
-    return f"""
-        WITH toks AS (SELECT unnest(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS word
-                      FROM documents),
-        w AS (SELECT word, count(*) AS c FROM toks GROUP BY word),
-        enc AS (SELECT unnest({expr}) AS token, c FROM w)
-        SELECT token, cast(sum(c) as bigint) AS cnt
-        FROM enc GROUP BY token ORDER BY cnt DESC, token LIMIT {k}
-    """
-
-
-def _bpe_train_oracle(n_merges: int = 8) -> str:
-    """Unrolled oracle for q_text_bpe_train (judge r5 ask #4, the
-    `_kmeans_exact_oracle` discipline): each training round is three
-    chained CTEs — pair counts over the current word frame (weighted by
-    word frequency), the round's merge as the top-1 pair (cnt DESC, a,
-    b — Spark's exact tie-break, binary collation both sides), and the
-    next word frame via the same greedy left-to-right `list_reduce`
-    fold `_bpe_encode_oracle` uses (space-delimited accumulator; space
-    cannot appear inside a symbol because words are space-split). All
-    counts are integer, so no float-parity concerns."""
-    ctes = [
-        "toks AS (SELECT unnest(list_filter(string_split(lower(text), ' '), "
-        "x -> x <> '')) AS word FROM documents)",
-        "w0 AS (SELECT list_transform(generate_series(1, len(word)), "
-        "i -> word[i:i]) AS syms, count(*) AS c FROM toks GROUP BY word)",
-    ]
-    for r in range(n_merges):
-        ctes.append(
-            f"p{r} AS (SELECT p.a AS a, p.b AS b, cast(sum(c) AS bigint) AS cnt "
-            f"FROM (SELECT unnest(list_transform(generate_series(1, len(syms) - 1), "
-            f"i -> struct_pack(a := syms[i], b := syms[i + 1]))) AS p, c FROM w{r}) "
-            f"GROUP BY p.a, p.b)"
-        )
-        ctes.append(
-            f"m{r} AS (SELECT a, b, cnt FROM p{r} ORDER BY cnt DESC, a, b LIMIT 1)"
-        )
-        ctes.append(
-            f"w{r + 1} AS (SELECT string_split(list_reduce(syms, "
-            f"(acc, x) -> CASE WHEN x = m.b AND (acc = m.a OR ends_with(acc, ' ' || m.a)) "
-            f"THEN acc || m.b ELSE acc || ' ' || x END), ' ') AS syms, c "
-            f"FROM w{r}, m{r} m)"
-        )
-    sel = " UNION ALL ".join(
-        f'SELECT cast({r} AS bigint) AS rank, a AS "left", b AS "right", cnt FROM m{r}'
-        for r in range(n_merges)
-    )
-    return "WITH " + ",\n".join(ctes) + "\nSELECT * FROM (" + sel + ") ORDER BY rank"
-
-
-def q_corpus_mixture(spark, sf_dir):
-    """Token-mass mixture rebalancing toward fixed source shares:
-    src0 capped at 2% of the named-strata token total, src1 at 30%
-    (clamps to keep-all), src2 at 10%; every other source dropped.
-    Rates derive from integer token sums, so the oracle recomputes the
-    exact thresholds."""
-    from apache_cassandra_spark.analytics.pipeline import mixture_sample
-
-    docs = load_table(spark, sf_dir, "documents")
-    return mixture_sample(docs, {"src0": 0.02, "src1": 0.30, "src2": 0.10}).select(
-        "doc_id", "source"
-    )
-
-
-def q_media_audio_features(spark, sf_dir):
-    """Signal-level audio features over JVM-generated sawtooth WAVs:
-    Spark builds real RIFF/PCM16 bytes from doc_id arithmetic, Python
-    decodes them with stdlib wave + numpy, and the oracle recomputes
-    every field from the same arithmetic — the binary round-trip is the
-    thing under test. All sums are integer-exact in doubles, so rounded
-    values match bit-for-bit."""
-    from apache_cassandra_spark.analytics.multimodal import (
-        audio_features,
-        synthetic_wav_sawtooth_payload,
-    )
-
-    # wide=True: stdlib-wave + numpy decode per row (A/B 0.91x widened)
-    docs = load_table(spark, sf_dir, "documents", wide=True)
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        synthetic_wav_sawtooth_payload(F.col("doc_id")).alias("payload"),
-    )
-    return audio_features(media)
-
-
-def q_media_frame_sample(spark, sf_dir):
-    """Every-2nd-frame sampling over JVM-generated multi-frame P6 video
-    containers: Spark builds the concatenated-frame bytes from doc_id
-    arithmetic, Python walks and decodes the stream, the oracle replays
-    the frame/color arithmetic."""
-    from apache_cassandra_spark.analytics.multimodal import (
-        sample_frames,
-        synthetic_video_payload,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        synthetic_video_payload(F.col("doc_id")).alias("payload"),
-    )
-    return sample_frames(media, every_k=2)
-
-
-def q_dedup_within_doc(spark, sf_dir):
-    """Intra-document repeated-segment removal on a corpus with a planted
-    duplicated paragraph: text rebuilt as prefix / boiler / boiler / tail,
-    so every document must drop exactly one segment (plus any incidental
-    repeats among prefix/tail). Shuffle-free per-row lambda filter."""
-    docs = load_table(spark, sf_dir, "documents")
-    # coalesce(text, ''): Spark's concat_ws SKIPS nulls while SQL '||'
-    # nullifies the whole string — a null-text doc would silently build
-    # different fixtures in the two engines
-    planted = docs.select(
-        "doc_id",
-        F.concat_ws(
-            "\n",
-            F.substring(F.coalesce(F.col("text"), F.lit("")), 1, 80),
-            F.lit(_BOILER_LINE),
-            F.lit(_BOILER_LINE),
-            F.expr("substring(coalesce(text, ''), 81)"),
-        ).alias("text"),
-    )
-    return dedup.dedup_within_doc(planted)
-
-
-def q_corpus_chunk(spark, sf_dir):
-    """Context-length chunking: every document split into 32-token
-    windows at stride 24 (25% overlap); tail chunks kept. Pure
-    sequence/posexplode/slice built-ins — the oracle replays the same
-    arithmetic with DuckDB list slicing."""
-    from apache_cassandra_spark.analytics.pipeline import chunk_documents
-
-    docs = load_table(spark, sf_dir, "documents")
-    return chunk_documents(docs, window=32, stride=24)
-
-
-def q_corpus_sample_importance(spark, sf_dir):
-    """Quality-weighted resampling: keep-probability = 0.5·(stopword
-    richness) + 0.5·(length saturation at 80 tokens). Both score terms
-    are integer-derived, so the oracle reproduces the exact threshold."""
-    from apache_cassandra_spark.analytics.pipeline import sample_by_score
-    from apache_cassandra_spark.analytics.text import gopher_quality
-
-    docs = load_table(spark, sf_dir, "documents")
-    # keep_cols carries the payload columns through the feature projection
-    # — one per-row pass, no corpus-to-its-own-features self-join
-    scored = gopher_quality(docs, keep_cols=("lang", "source"))
-    score = (F.col("stop_hits") / 16.0) + (F.least(F.col("n_tokens"), F.lit(80)) / 160.0)
-    return sample_by_score(scored, score).select("doc_id", "lang", "source")
-
-
-def q_sim_topk(spark, sf_dir):
-    em = load_table(spark, sf_dir, "embeddings")
-    return similarity.cosine_topk(em, em.where(F.col("vec_id") < 5), k=5)
-
-
-def q_embedding_quantize(spark, sf_dir):
-    """Symmetric int8 quantization audit: per-vector scale plus integer
-    aggregates of the quantized vector (sum / min / max / l2sq) — the
-    arithmetic is half-up `floor(x/scale + 0.5)` in IEEE doubles, so the
-    oracle reproduces every value bit-for-bit."""
-    em = load_table(spark, sf_dir, "embeddings")
-    q = similarity.quantize_embeddings(em)
-    return q.select(
-        "vec_id",
-        F.col("scale"),
-        F.aggregate("qvec", F.lit(0).cast("bigint"), lambda a, x: a + x).alias("q_sum"),
-        F.array_min("qvec").alias("q_min"),
-        F.array_max("qvec").alias("q_max"),
-        F.aggregate("qvec", F.lit(0).cast("bigint"), lambda a, x: a + x * x).alias("q_l2sq"),
-    )
-
-
-def q_embedding_project(spark, sf_dir):
-    """Rademacher (±1) Johnson–Lindenstrauss projection to 4 dims — the
-    pre-ANN dimensionality reducer. Deterministic md5-derived sign
-    matrix; the oracle replays the same literal matrix with the same
-    left-to-right summation order, so doubles match bit-for-bit."""
-    return similarity.random_project(
-        load_table(spark, sf_dir, "embeddings"), out_dim=4, in_dim=64
-    )
-
-
-def _pq_codebooks(spark, sf_dir):
-    return similarity.pq_codebooks_from_first_k(
-        load_table(spark, sf_dir, "embeddings"), m=4, k=8
-    )
-
-
-def q_embedding_pq_encode(spark, sf_dir):
-    """Product-quantization encode (m=4 subspaces × k=8 codewords from
-    the vectors with ids 0..7): each 64-dim vector compresses to 4 code
-    bytes — map-only, codebooks folded as plan literals; the oracle
-    rebuilds the identical codebook from the table and replays the
-    round-6 argmin.
-
-    Gate shape: the public ``pq_encode`` API returns ``codes
-    array<int>``, but the driver's pandas canonicalizer cannot hash
-    list cells (round-5 red row), so the GATE projects the array to
-    scalar columns — ``code_0..code_3`` plus the base-8 packed int
-    (each code is 0..7 with k=8 codewords)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    enc = similarity.pq_encode(emb, _pq_codebooks(spark, sf_dir))
-    c = [F.col("codes")[j] for j in range(4)]
-    return enc.select(
-        "vec_id",
-        *[c[j].cast("int").alias(f"code_{j}") for j in range(4)],
-        (c[0] * 512 + c[1] * 64 + c[2] * 8 + c[3]).cast("int").alias("codes_packed"),
-    )
-
-
-def q_sim_pq_topk(spark, sf_dir):
-    """Asymmetric-distance (ADC) top-25 for query vector vec_id=0 over
-    the PQ codes: per-subspace lookup-table distances in integer
-    micro-units, so the per-row sum is addition-order-exact and the SQL
-    replay matches bit-for-bit."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    cb = _pq_codebooks(spark, sf_dir)
-    # query = subspace-concat of codebook row 0: the codebooks ARE the
-    # vec_id 0..7 slices (pq_codebooks_from_first_k), so vec 0 needs no
-    # second scan-and-collect job
-    query = [float(v) for j in range(len(cb)) for v in cb[j][0]]
-    return similarity.pq_adc_topk(emb, query, cb, k_top=25)
-
-
-def _embedding_project_oracle(out_dim: int = 4, in_dim: int = 64) -> str:
-    """Same literal sign matrix, same fold: 0.0-seeded left-to-right sum
-    (the trailing `+ 0.0` also normalizes a would-be -0.0)."""
-    import math
-
-    signs = similarity.rademacher_signs(out_dim, in_dim)
-    scale = repr(1.0 / math.sqrt(out_dim))
-    cols = []
-    for k in range(out_dim):
-        arr = "[" + ", ".join(str(v) for v in signs[k]) + "]"
-        fold = (
-            f"list_reduce(list_prepend(0.0, list_transform(generate_series(1, {in_dim}), "
-            f"i -> CAST(embedding[i] AS DOUBLE) * ({arr}::INT[])[i])), (acc, x) -> acc + x)"
-        )
-        cols.append(f"round(({fold} + 0.0) * {scale}, 6) AS proj_{k}")
-    return "SELECT vec_id, " + ", ".join(cols) + " FROM embeddings"
-
-
-def q_cluster_kmeans(spark, sf_dir):
-    """Deterministic Lloyd's k-means (farthest-point init) — rows-only
-    entry: the fixpoint of an iterative algorithm has no portable
-    single-statement SQL equivalent; determinism + blob-recovery are
-    pinned by tests/test_analytics.py."""
-    from apache_cassandra_spark.analytics.clustering import kmeans_assign
-
-    return kmeans_assign(load_table(spark, sf_dir, "embeddings"), k=8, iters=3)
-
-
-def q_cluster_kmeans_exact(spark, sf_dir):
-    """Oracle-gated Lloyd's k-means (k=4, 2 rounds): init = vectors with
-    vec_id < 4, argmin over round-6 distances (ties -> lower index), new
-    centroids = per-dim means rounded to 6, empty clusters keep the
-    previous centroid. The oracle unrolls both rounds as CTEs and
-    replays assignment -> mean -> reassignment exactly — this anchors
-    the iterative machinery that the full-precision ``cluster_kmeans``
-    (farthest-point init, rows-only) shares."""
-    from apache_cassandra_spark.analytics.clustering import kmeans_assign_exact
-
-    return kmeans_assign_exact(load_table(spark, sf_dir, "embeddings"), k=4, iters=2)
-
-
-def _kmeans_exact_oracle(k: int = 4, iters: int = 2, dim: int = 64) -> str:
-    """Unrolled Lloyd rounds: a{i} assigns under centroid set c{i} (round-6
-    distance, row_number ties -> lower cid), m{i+1}/c{i+1} rebuild round-6
-    per-dimension means with a coalesce fallback for empty clusters."""
-    parts = [
-        f"c0 AS (SELECT vec_id AS cid, embedding::DOUBLE[] AS cent "
-        f"FROM embeddings WHERE vec_id < {k})"
-    ]
-    for i in range(iters):
-        parts.append(
-            f"a{i} AS (SELECT vec_id, cid FROM ("
-            f"SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id "
-            f"ORDER BY round(list_distance(e.embedding::DOUBLE[], c.cent), 6), c.cid) AS rn "
-            f"FROM embeddings e, c{i} c) WHERE rn = 1)"
-        )
-        parts.append(
-            f"m{i + 1} AS (SELECT a.cid, t.i, round(avg(CAST(e.embedding[t.i] AS DOUBLE)), 6) AS av "
-            f"FROM a{i} a JOIN embeddings e USING (vec_id) "
-            f"CROSS JOIN generate_series(1, {dim}) t(i) GROUP BY a.cid, t.i)"
-        )
-        parts.append(
-            f"c{i + 1} AS (SELECT c{i}.cid, coalesce(n.cent, c{i}.cent) AS cent "
-            f"FROM c{i} LEFT JOIN (SELECT cid, list(av ORDER BY i) AS cent "
-            f"FROM m{i + 1} GROUP BY cid) n USING (cid))"
-        )
-    return (
-        "WITH "
-        + ", ".join(parts)
-        + f" SELECT vec_id, cast(cid as int) AS cluster, dist FROM ("
-        f"SELECT e.vec_id, c.cid, round(list_distance(e.embedding::DOUBLE[], c.cent), 6) AS dist, "
-        f"row_number() OVER (PARTITION BY e.vec_id "
-        f"ORDER BY round(list_distance(e.embedding::DOUBLE[], c.cent), 6), c.cid) AS rn "
-        f"FROM embeddings e, c{iters} c) WHERE rn = 1"
-    )
-
-
-def q_cluster_assign(spark, sf_dir):
-    """Nearest-centroid assignment against fixed centroids (the
-    embeddings of vec_id 0..7): distances rounded to 6 BEFORE the argmin,
-    so the oracle's list_distance replays every assignment exactly —
-    the oracle-gated half of the clustering surface (the iterative
-    kmeans fixpoint stays rows-only)."""
-    from apache_cassandra_spark.analytics.clustering import assign_to_centroids
-
-    em = load_table(spark, sf_dir, "embeddings")
-    cents = [
-        [float(x) for x in r["embedding"]]
-        for r in em.where(F.col("vec_id") < 8).orderBy("vec_id").collect()
-    ]
-    return assign_to_centroids(em, cents)
-
-
-def q_sim_ann_lsh(spark, sf_dir):
-    """LSH-bucketed ANN in the gate as a rows-only entry: approximate by
-    design, so there is deliberately no SQL oracle — recall vs the exact
-    brute force is pinned by tests/test_analytics.py instead."""
-    em = load_table(spark, sf_dir, "embeddings")
-    return similarity.ann_lsh_topk(em, em.where(F.col("vec_id") < 5), k=5)
-
-
-def q_sim_ann_ivf(spark, sf_dir):
-    """IVF-flat ANN (deterministic sampled centroids, nprobe cells) —
-    rows-only gate entry, same rationale as the LSH variant."""
-    em = load_table(spark, sf_dir, "embeddings")
-    return similarity.ivf_topk(em, em.where(F.col("vec_id") < 5), k=5)
-
-
-def q_text_lang_id(spark, sf_dir):
-    return text.lang_id(load_table(spark, sf_dir, "documents"))
-
-
-def q_text_token_stats(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        text.token_count(F.col("text")).alias("n_tokens"),
-        text.subword_token_estimate(F.col("text")).alias("n_subword"),
-    )
-
-
-def q_text_fingerprint(spark, sf_dir):
-    return text.fingerprint(load_table(spark, sf_dir, "documents"))
-
-
-def q_text_repetition(spark, sf_dir):
-    return text.repetition_features(load_table(spark, sf_dir, "documents"))
-
-
-def q_text_gopher(spark, sf_dir):
-    return text.gopher_quality(load_table(spark, sf_dir, "documents"))
-
-
-def q_text_pii_scrub(spark, sf_dir):
-    """PII scrub over documents with deterministic synthetic PII injected
-    (the fixture corpus is a word salad with no natural emails/phones):
-    every 7th doc gains an email, every 11th a phone number, so the
-    redaction path actually fires and the counts discriminate."""
-    docs = load_table(spark, sf_dir, "documents")
-    injected = docs.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.when(
-                F.col("doc_id") % 7 == 0,
-                F.concat(F.lit(" contact user"), F.col("doc_id").cast("string"), F.lit("@example.com now")),
-            ).otherwise(F.lit("")),
-            F.when(
-                F.col("doc_id") % 11 == 0,
-                F.concat(F.lit(" call 555-"), F.lpad((F.col("doc_id") % 1000).cast("string"), 3, "0"), F.lit("-0199 ok")),
-            ).otherwise(F.lit("")),
-        ).alias("text"),
-    )
-    return text.pii_scrub(injected)
-
-
-def q_media_decode(spark, sf_dir):
-    """REAL multimodal decode in the gate: PPM/WAV payloads are generated
-    JVM-side from doc_id arithmetic (``multimodal.media_from_documents``),
-    parsed byte-by-byte in Arrow-batched Python
-    (``multimodal.decode_media`` → ``analytics.codecs``), and the oracle
-    recomputes every decoded field from the same arithmetic — if the
-    parser misreads a header or a sample, the hash mismatches."""
-    docs = load_table(spark, sf_dir, "documents")
-    dec = multimodal.decode_media(multimodal.media_from_documents(docs))
-    return dec.select(
-        "media_id",
-        "n_bytes",
-        "format",
-        "width",
-        "height",
-        "channels",
-        "sample_rate",
-        "n_frames",
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"),
-        F.round("rms", 6).alias("rms"),
-    )
-
-
-def q_media_resize(spark, sf_dir):
-    """REAL resize in the gate: the PPM/WAV fixture corpus goes through
-    ``multimodal.resize_media`` (decode raster → integer nearest-neighbor
-    → re-encode P6) and the resized payloads are then *decoded again*; the
-    oracle recomputes every post-resize field from doc_id arithmetic
-    (4×3 dims, 47-byte P6, constant fill preserved; WAV rows pass through
-    to the original decode record untouched)."""
-    docs = load_table(spark, sf_dir, "documents")
-    resized = multimodal.resize_media(multimodal.media_from_documents(docs), width=4, height=3)
-    dec = multimodal.decode_media(resized)
-    return dec.select(
-        "media_id",
-        "n_bytes",
-        "format",
-        "width",
-        "height",
-        "channels",
-        "sample_rate",
-        "n_frames",
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"),
-        F.round("rms", 6).alias("rms"),
-    )
-
-
-def q_media_decode_png(spark, sf_dir):
-    """Compressed-container decode in the gate: every payload is a REAL
-    spec-valid PNG generated from pure JVM expressions (stored-block
-    deflate + closed-form Adler32 + builtin crc32 — see
-    ``multimodal.synthetic_png_payload``), parsed by the honest Python
-    PNG decoder (chunk/CRC walk, zlib inflate, scanline unfilter). The
-    oracle recomputes every field from doc_id arithmetic; a wrong header
-    read, bad checksum, or mis-unfiltered scanline mismatches the hash."""
-    docs = load_table(spark, sf_dir, "documents")
-    dec = multimodal.decode_media(multimodal.png_media_from_documents(docs))
-    return dec.select(
-        "media_id",
-        "n_bytes",
-        "format",
-        "width",
-        "height",
-        "channels",
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"),
-    )
-
-
-def q_media_decode_jpeg(spark, sf_dir):
-    """Baseline-JPEG decode in the gate: every payload is a REAL T.81
-    sequential-baseline JPEG (Annex K Huffman tables, all-ones
-    quantization) encoded on the executors from doc_id arithmetic
-    (``multimodal.jpeg_media_from_documents`` — grayscale / 4:4:4 /
-    4:2:0 by ``doc_id % 3``, dims off the MCU grid), then decoded by the
-    full Huffman/IDCT/upsample decoder (``analytics.jpeg``). With
-    all-ones qtables a constant fill is exact through the DCT chain, so
-    the only lossy step is the JFIF color convert — whose IEEE-double
-    expression chain the oracle replays verbatim (same left-associated
-    operand order, same floor(x+0.5) rounding). A misread Huffman code,
-    bad restart handling, wrong dequant, or misaligned upsample all
-    shift the decoded means and mismatch the hash.
-
-    Reference parity: media are opaque byte[] column values
-    (``db/ColumnFamily.java:37``); decode was client-side there,
-    first-class mapInPandas here."""
-    # wide=True: the pure-Python T.81 decode is ~4x the scan cost, so the
-    # single-split input must be spread before the codec stage (A/B 0.23x)
-    docs = load_table(spark, sf_dir, "documents", wide=True)
-    # exact_jpeg pins the from-scratch decoder: the oracle replays ITS
-    # IEEE-double color-convert chain; libjpeg's integer rounding (the
-    # optional Pillow fast path) can differ by ±1 per pixel
-    dec = multimodal.decode_media(
-        multimodal.jpeg_media_from_documents(docs), exact_jpeg=True
-    )
-    return dec.select(
-        "media_id",
-        "format",
-        "width",
-        "height",
-        "channels",
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"),
-    )
-
-
-def q_media_decode_gif(spark, sf_dir):
-    """LZW-container decode in the gate: every payload is a real GIF87a
-    (palette + real LZW stream, built per row in mapInPandas) of
-    doc_id-parametric two-color column stripes, decoded by the honest
-    GIF parser (header/palette/extension walk + full variable-width LZW
-    with table growth and clear-reset). GIF is lossless so the oracle
-    recomputes every field from the stripe arithmetic; a wrong palette
-    read, a misstepped LZW width bump, or a dropped sub-block shifts the
-    means and mismatches the hash."""
-    # wide=True: per-row Python LZW decode dominates (A/B 0.67x widened)
-    docs = load_table(spark, sf_dir, "documents", wide=True)
-    dec = multimodal.decode_media(multimodal.gif_media_from_documents(docs))
-    return dec.select(
-        "media_id",
-        "format",
-        "width",
-        "height",
-        "channels",
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"),
-    )
-
-
-def q_lexicaluuid_comparator_slice(spark, sf_dir):
-    """LexicalUUIDType comparator in the gate: column names are 16-byte
-    pseudo-UUIDs (md5 of the event id), ordered by *signed* msb then lsb
-    longs (Java ``UUID.compareTo``; reference
-    ``db/marshal/LexicalUUIDType.java:27-46``). A reversed count-3 slice
-    per user pins the signed comparison: raw unsigned byte order would
-    rank sign-bit-set UUIDs highest instead of lowest."""
-    ev = load_events(spark, sf_dir).where(F.col("user_id") < 3)
-    cells = ev.select(
-        F.col("user_id").cast("string").alias("key"),
-        F.lit(None).cast("binary").alias("sc"),
-        F.unhex(F.md5(F.col("event_id").cast("string"))).alias("column"),
-        F.encode("event_type", "UTF-8").alias("value"),
-        F.lit(0).cast("long").alias("ts"),
-        F.lit(False).alias("tombstone"),
-        F.lit(None).cast("int").alias("ldt"),
-    )
-    cf = CF(cfdef=CFDef(name="ev_luuid", compare_with="LexicalUUIDType"), cells=cells)
-    pred = SlicePredicate(slice_range=SliceRange(reversed=True, count=3))
-    out = R.multiget_slice(cf, ["0", "1", "2"], pred)
-    return out.select(
-        "key",
-        F.lower(F.hex("column")).alias("uu"),
-        F.col("value").cast("string").alias("value"),
-    )
-
-
-def q_freshtimestamp_comparator_slice(spark, sf_dir):
-    """FreshTimestampType (fork) comparator in the gate: reverse byte order
-    with the empty name as the "freshest" sentinel (reference
-    ``db/marshal/FreshTimestampType.java:22-41``). Column names are each
-    user's event types plus one empty-name sentinel; a *forward* count-3
-    slice must return the sentinel first, then names in DESCENDING byte
-    order — exactly backwards from every other comparator."""
-    ev = load_events(spark, sf_dir).where(F.col("user_id") < 3)
-    per_type = ev.groupBy(
-        F.col("user_id").cast("string").alias("key"),
-        F.col("event_type").alias("name"),
-    ).agg(F.count("*").cast("string").alias("v"))
-    sentinel = per_type.select("key").distinct().select(
-        "key", F.lit("").alias("name"), F.lit("fresh").alias("v")
-    )
-    cells = per_type.unionByName(sentinel).select(
-        "key",
-        F.lit(None).cast("binary").alias("sc"),
-        F.encode("name", "UTF-8").alias("column"),
-        F.encode("v", "UTF-8").alias("value"),
-        F.lit(0).cast("long").alias("ts"),
-        F.lit(False).alias("tombstone"),
-        F.lit(None).cast("int").alias("ldt"),
-    )
-    cf = CF(cfdef=CFDef(name="ev_fresh", compare_with="FreshTimestampType"), cells=cells)
-    pred = SlicePredicate(slice_range=SliceRange(count=3))
-    out = R.multiget_slice(cf, ["0", "1", "2"], pred)
-    return out.select(
-        "key",
-        F.col("column").cast("string").alias("name"),
-        F.col("value").cast("string").alias("value"),
-    )
-
-
-def q_write_path(spark, sf_dir):
-    """W1-W5 end-to-end: a deterministic mutation log through the real write
-    path — Engine.insert/remove/batch_mutate (memtable + durable commits),
-    bulk_load, then major compaction and a full-scan read of the live view.
-
-    The log shapes mirror the reference's golden system tests
-    (``test/system/test_server.py:335-371`` batch_mutate inserts+deletes,
-    ``:653-820`` remove/resurrect cycles) and hit every comparePriority
-    branch (``db/Column.java:196-210``): ts-win, live-live value tiebreak,
-    live-tombstone tie, cell+row tombstones, resurrection past both.
-
-    The returned DataFrame reads the *compacted bucketed table* — the gate
-    therefore also pins the pre-reconciled exchange-free read regime.
-    """
-    import tempfile
-
-    from apache_cassandra_spark.catalog import Catalog
-    from apache_cassandra_spark.engine import Engine
-    from apache_cassandra_spark.model import ColumnPath, Deletion, Mutation
-    from apache_cassandra_spark.operators import maintenance
-    from apache_cassandra_spark.sources.cellstore import CELL_SCHEMA
-
-    ks, cfn = "Gate", "WP"
-    root = tempfile.mkdtemp(prefix="write_gate_")  # left for the lazy read
-    eng = Engine(spark, root, Catalog.from_dict({ks: {cfn: {"compare_with": "UTF8Type"}}}))
-    cp = lambda c: ColumnPath(cfn, column=c)  # noqa: E731
-
-    # W1 insert + LWW overwrite: higher ts wins
-    eng.insert(ks, "w1", cp(b"ca"), b"v1", 100)
-    eng.insert(ks, "w1", cp(b"ca"), b"v2", 200)
-    # ts tie, live vs live -> larger value wins (memtable path: durable=False)
-    eng.insert(ks, "w2", cp(b"ca"), b"a", 100, durable=False)
-    eng.insert(ks, "w2", cp(b"ca"), b"b", 100, durable=False)
-    # ts tie, live vs tombstone -> tombstone wins
-    eng.insert(ks, "w3", cp(b"ca"), b"x", 300)
-    eng.remove(ks, "w3", cp(b"ca"), 300)
-    # W4 remove cell, then resurrect with a newer write
-    eng.insert(ks, "w4", cp(b"ca"), b"x", 100)
-    eng.remove(ks, "w4", cp(b"ca"), 200)
-    eng.insert(ks, "w4", cp(b"ca"), b"y", 300)
-    # W4 row-scope remove shadows both cells; one resurrects past it
-    eng.insert(ks, "w5", cp(b"ca"), b"g", 100)
-    eng.insert(ks, "w5", cp(b"cb"), b"h", 100)
-    eng.remove(ks, "w5", ColumnPath(cfn), 150)
-    eng.insert(ks, "w5", cp(b"cb"), b"z", 200)
-    # row tombstone OLDER than the cell: cell survives
-    eng.insert(ks, "w8", cp(b"ca"), b"m", 500)
-    eng.remove(ks, "w8", ColumnPath(cfn), 400)
-    # W2/W3 batch_mutate: three inserts + a Deletion-by-names, one atomic batch
-    eng.batch_mutate(
-        ks,
-        {
-            "w6": {
-                cfn: [
-                    Mutation(column_name=b"ca", value=b"p", timestamp=100),
-                    Mutation(column_name=b"cb", value=b"q", timestamp=100),
-                    Mutation(column_name=b"cc", value=b"r", timestamp=100),
-                    Mutation(
-                        deletion=Deletion(
-                            timestamp=150,
-                            predicate=SlicePredicate(column_names=(b"ca", b"cb")),
-                        )
-                    ),
-                ]
-            }
-        },
-    )
-    # W5 bulk load, bypassing the memtable path
-    bulk = spark.createDataFrame(
-        [
-            ("w7", None, b"ca", b"p7", 100, False, None),
-            ("w7", None, b"cb", b"q7", 100, False, None),
-        ],
-        CELL_SCHEMA,
-    )
-    eng.store.bulk_load(ks, cfn, bulk)
-
-    maintenance.compact(eng.store, ks, cfn, buckets=4)
-    return _strings(eng.cf(ks, cfn).live(), with_ts=True)
-
-
-def q_streaming_sessions_replay(spark, sf_dir):
-    """Native stateful session windows in the gate: the events table
-    replayed through a REAL multi-micro-batch stream (file source with
-    maxFilesPerTrigger) into ``session_window`` state, complete-mode
-    memory sink — per-(user, session) aggregates must hash-match the
-    same DuckDB lag-based sessionization model as ``events_sessionize``
-    (the batch/stream equivalence tests pin the membership rule; this
-    entry puts the STREAMING execution itself under the oracle). Session
-    state merges across micro-batches, so the result is independent of
-    the nondeterministic file split."""
-    import shutil
-    import tempfile
-
-    from apache_cassandra_spark.streaming.sessions import sessionized_stats
-
-    ev = load_events(spark, sf_dir).select(
-        "user_id", F.expr("ts div 1000").alias("ts_micros")
-    )
-    # unlike the LWW replay's parquet staging, the memory sink holds the
-    # result rows in the driver — the source copy is dead once the query
-    # terminates, so clean it up instead of leaking a full events copy
-    # per invocation
-    root = tempfile.mkdtemp(prefix="sess_gate_")
-    src = f"{root}/src"
-    ev.repartition(6).write.mode("overwrite").parquet(src)
-
-    stream = (
-        spark.readStream.schema("user_id long, ts_micros long")
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src)
-    )
-    view = "stream_sessions_gate"
-    spark.catalog.dropTempView(view)  # returns False if absent
-    try:
-        q = (
-            # watermark OFF: replaying history from unordered files would
-            # late-drop everything a batch behind the running max event time
-            sessionized_stats(stream, watermark=None)
-            .writeStream.format("memory")
-            .queryName(view)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("streaming sessions replay did not finish")
-    finally:
-        # memory sink rows live in the driver; the source copy is dead
-        # whether the stream finished or raised — never leak it
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.table(view).select("user_id", "n_events", "start_us", "end_us")
-
-
-def q_streaming_lww_replay(spark, sf_dir):
-    """Stateful streaming in the gate: the SAME event-derived cell log as
-    ``cass_lww_events``, replayed through a REAL multi-micro-batch
-    Structured Streaming pipeline — file source with maxFilesPerTrigger,
-    ``applyInPandasWithState`` incremental LWW (``streaming.stateful``),
-    ``foreachBatch`` sink staging each batch's state *changes* — then the
-    last emitted update per coordinate is the final materialized state.
-    Hash-matched against the identical DuckDB model as the batch view:
-    commitlog-replay parity (reference ``db/commitlog/CommitLog.java:168-189``
-    recovers the memtable by replaying mutations through ``resolve``; the
-    stream is that replay, incrementalized — ``db/Memtable.java:120-139``).
-
-    Batch boundaries don't affect the fixpoint (LWW is commutative +
-    idempotent), so the nondeterministic file split is safe; what the
-    gate pins is that losers emit nothing, winners overwrite state, and
-    the final state equals the one-shot reconcile."""
-    import tempfile
-
-    from pyspark.sql import Window
-
-    from apache_cassandra_spark.streaming.stateful import lww_updates
-
-    cells = _event_cells(spark, sf_dir).drop("ldt")
-    root = tempfile.mkdtemp(prefix="stream_gate_")  # left for the lazy read
-    src, staging, ckpt = f"{root}/src", f"{root}/updates", f"{root}/ckpt"
-    cells.repartition(8).write.mode("overwrite").parquet(src)
-
-    stream = spark.readStream.schema(cells.schema).option("maxFilesPerTrigger", 2).parquet(src)
-    updates = lww_updates(stream)
-
-    def sink(df, bid):
-        df.withColumn("batch_id", F.lit(bid)).write.mode("append").parquet(staging)
-
-    q = (
-        updates.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("streaming LWW replay did not finish")
-
-    upd = spark.read.parquet(staging)
-    # the reduction key must equal lww_updates' STATE key (key, sc,
-    # column) — dropping sc happened to work only because _event_cells
-    # hardcodes sc=NULL; a super-CF log would lose coordinates
-    w = Window.partitionBy("key", "sc", "column").orderBy(F.col("batch_id").desc())
-    final = upd.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1)
-    return _strings(final.where(~F.col("tombstone")), with_ts=True)
-
-
-# ---------------------------------------------------------------------------
-# round-6 additions: multi-way OLAP join, cardinality sketches, novelty,
-# integer-exact anomaly flags, third streaming gate
-# ---------------------------------------------------------------------------
-
-
-def q_tpch_q5ish(spark, sf_dir):
-    """TPC-H Q5 shape (local supplier volume): six-table star join —
-    region→nation→(customer, supplier) with the correlation predicate
-    ``c_nationkey = s_nationkey`` tying the two dimension arms together
-    through orders→lineitem. The widest declarative join in the suite:
-    Catalyst reorders it, pushes the region/date filters to the scans,
-    and AQE picks broadcast vs shuffle per side at runtime (only the
-    two provably tiny dims are hinted). The reference could not join at
-    all server-side — this entire shape was a client-side Pig script
-    over ColumnFamilyInputFormat (contrib/pig/.../CassandraStorage.java).
-
-    Float discipline: revenue terms rounded to decimal(18,4) BEFORE the
-    sum (exact associative decimal addition), cast to double only on
-    output — the q1ish/q3ish contract."""
-    r = load_table(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
-    n = load_table(spark, sf_dir, "nation")
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    s = load_table(spark, sf_dir, "supplier")
-    rev = F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).cast("decimal(18,4)")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .where((F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1997-01-01"))
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .where(c.c_nationkey == s.s_nationkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("n_name")
-        .agg(F.sum(rev).cast("double").alias("revenue"))
-    )
-
-
-def q_events_distinct_exact(spark, sf_dir):
-    """Exact per-type cardinalities (distinct users, distinct active
-    days, total events) — the oracle-anchored twin of the HLL entry.
-    Spark plans COUNT(DISTINCT) as two-phase Expand + partial aggregate:
-    dedup happens map-side, the exchange carries (group, distinct value)
-    rows, not raw events."""
-    from apache_cassandra_spark.analytics.sketches import distinct_counts
-
-    ev = load_events(spark, sf_dir)
-    day = F.date_format(F.timestamp_micros(F.expr("ts div 1000")), "yyyy-MM-dd")
-    return distinct_counts(
-        ev.withColumn("day", day), ["event_type"], ["user_id", "day"]
-    )
-
-
-def q_events_distinct_hll(spark, sf_dir):
-    """HyperLogLog++ cardinalities — the 100 TB path: ~KB of mergeable
-    sketch per (group, column) instead of shuffling the distinct set.
-    Rows-only by design: the estimate is deterministic for a given input
-    but engine-specific (Spark's HLL++ registers vs DuckDB's), so the
-    unit tests pin it within rsd of the exact twin and the driver checks
-    the row shape (one row per event_type either way)."""
-    from apache_cassandra_spark.analytics.sketches import distinct_counts
-
-    ev = load_events(spark, sf_dir)
-    day = F.date_format(F.timestamp_micros(F.expr("ts div 1000")), "yyyy-MM-dd")
-    return distinct_counts(
-        ev.withColumn("day", day), ["event_type"], ["user_id", "day"], approx=True
-    )
-
-
-def q_docs_ngram_novelty(spark, sf_dir):
-    """Per-document n-gram novelty (memorization/boilerplate signal):
-    fraction of a doc's distinct 3-gram shingles appearing in no other
-    doc, as integer parts-per-million. See dedup.ngram_novelty for the
-    one-shuffle-per-key plan shape."""
-    from apache_cassandra_spark.analytics.dedup import ngram_novelty
-
-    docs = load_table(spark, sf_dir, "documents")
-    return ngram_novelty(docs, n=3)
-
-
-def q_events_anomaly(spark, sf_dir):
-    """Integer-exact per-user z-score outliers (k=2σ, population
-    variance, n≥5): the float-free algebraization
-    ``(n·v − S)² > k²(n·Q − S²)`` in decimal(38,0)/HUGEINT — identical
-    bits in any engine at any partitioning (anomaly.zscore_outliers)."""
-    from apache_cassandra_spark.analytics.anomaly import zscore_outliers
-
-    ev = load_events(spark, sf_dir)
-    return zscore_outliers(ev, k=2, min_count=5)
-
-
-def q_streaming_interval_join_replay(spark, sf_dir):
-    """Fourth streaming gate: a REAL stream-stream event-time join —
-    views and clicks staged to two parquet dirs, each streamed with its
-    own maxFilesPerTrigger, joined by the SAME ``interval_join`` operator
-    the batch ``events_interval_join`` gate runs (user equi-key + 1-hour
-    event-time range), append-mode memory sink. The symmetric-hash join
-    state buffers both sides, so every (view, click) pair is emitted
-    exactly once regardless of which micro-batch either side arrives in
-    — the post-termination roll-up hash-matches the batch oracle.
-    Watermark OFF: unordered replay with watermarks would expire state
-    early and silently lose pairs (inner joins need no watermark for
-    correctness — only for state cleanup on live streams)."""
-    import shutil
-    import tempfile
-
-    from apache_cassandra_spark.streaming.joins import interval_join
-
-    ev = load_events(spark, sf_dir).withColumn("ts_micros", F.expr("ts div 1000"))
-    root = tempfile.mkdtemp(prefix="ij_gate_")
-    for side in ("view", "click"):
-        (
-            ev.where(F.col("event_type") == side)
-            .select("user_id", "ts_micros", "event_id")
-            .repartition(4)
-            .write.mode("overwrite")
-            .parquet(f"{root}/{side}")
-        )
-    schema = "user_id long, ts_micros long, event_id long"
-    views = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 2)
-        .parquet(f"{root}/view")
-    )
-    clicks = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(f"{root}/click")
-    )
-    view = "stream_ij_gate"
-    spark.catalog.dropTempView(view)  # returns False if absent
-    try:
-        q = (
-            interval_join(views, clicks, horizon="1 hour", watermark=None)
-            .writeStream.format("memory")
-            .queryName(view)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("streaming interval join replay did not finish")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return (
-        spark.table(view)
-        .groupBy(F.pmod("user_id", F.lit(100)).cast("int").alias("user_bucket"))
-        .agg(F.count(F.lit(1)).alias("n_pairs"))
-    )
-
-
-def q_cluster_inertia(spark, sf_dir):
-    """Per-cluster k-means quality (size + integer-micro inertia) over
-    the oracle-replayable 2-round Lloyd assignment: each round-6 dist is
-    squared and micro-quantized PER ROW before the distributed sum, so
-    the aggregate is partition-order-proof (clustering.cluster_quality).
-    The oracle wraps the same unrolled-CTE Lloyd replay the
-    cluster_kmeans_exact entry uses and aggregates its output."""
-    from apache_cassandra_spark.analytics.clustering import (
-        cluster_quality,
-        kmeans_assign_exact,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return cluster_quality(kmeans_assign_exact(emb, k=4, iters=2))
-
-
-def q_tpch_q10ish(spark, sf_dir):
-    """Returned-item reporting (TPC-H Q10 shape): lost revenue per
-    customer over one quarter of returned lineitems, top-20. Exercises
-    fact-fact join + selective date/flag filters (both pushed to the
-    scans) + broadcast dim + top-k without a global sort
-    (TakeOrderedAndProject)."""
-    li = load_table(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    n = load_table(spark, sf_dir, "nation")
-    rev = F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).cast("decimal(18,4)")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .where((F.col("o_orderdate") >= "1996-07-01") & (F.col("o_orderdate") < "1996-10-01"))
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("c_custkey", "c_name", "n_name")
-        .agg(F.sum(rev).cast("double").alias("revenue"))
-        .orderBy(F.col("revenue").desc(), F.col("c_custkey"))
-        .limit(20)
-    )
-
-
-def q_streaming_windowed_replay(spark, sf_dir):
-    """Third streaming gate: native tumbling-window aggregation under a
-    REAL multi-micro-batch stream — the events table staged to parquet,
-    streamed with maxFilesPerTrigger, through the SAME
-    ``windowed_event_stats`` operator the batch ``events_windowed`` gate
-    runs, complete-mode memory sink. Window state merges across
-    micro-batches (decimal sums are associative), so the result is
-    independent of the nondeterministic file split and hash-matches the
-    batch oracle. Watermark OFF — replaying unordered history with a
-    watermark silently late-drops rows (the r5 sessions pitfall)."""
-    import shutil
-    import tempfile
-
-    from apache_cassandra_spark.streaming.ingest import windowed_event_stats
-
-    ev = load_events(spark, sf_dir).select(
-        F.expr("ts div 1000").alias("ts_micros"), "event_type", "value"
-    )
-    root = tempfile.mkdtemp(prefix="win_gate_")
-    src = f"{root}/src"
-    ev.repartition(6).write.mode("overwrite").parquet(src)
-
-    stream = (
-        spark.readStream.schema("ts_micros long, event_type string, value double")
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src)
-    )
-    view = "stream_windowed_gate"
-    spark.catalog.dropTempView(view)  # returns False if absent
-    try:
-        q = (
-            windowed_event_stats(stream, watermark=None)
-            .writeStream.format("memory")
-            .queryName(view)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("streaming windowed replay did not finish")
-    finally:
-        # memory sink rows live in the driver; the staged source copy is
-        # dead whether the stream finished or raised — never leak it
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.table(view).select("window_start", "event_type", "n", "total")
-
-
-def q_corpus_interleave_joins(spark, sf_dir):
-    """The large-catalog interleave path (``fold_literals=False``): no
-    driver collect, no O(|sources|) per-row expression — per-rank
-    ``row_number`` + a running per-rank offset joined back on the rank
-    key. Same closed-form positions as ``corpus_interleave`` (same
-    oracle), different physical plan — hash-green here proves the two
-    paths agree on driver data, not just in unit tests."""
-    from apache_cassandra_spark.analytics.pipeline import interleave_corpus
-
-    docs = load_table(spark, sf_dir, "documents")
-    return interleave_corpus(docs, fold_literals=False)
-
-
-def q_events_heavy_hitters(spark, sf_dir):
-    """Exact per-event-type heavy hitters: top-5 users by event count
-    (sketches.heavy_hitters). One map-side-combinable aggregate on
-    (type, user) + a WindowGroupLimit top-k — the exchange carries
-    distinct (type, user) rows, the window shuffle carries ~k rows per
-    upstream task. The exact twin of a count-min pipeline."""
-    from apache_cassandra_spark.analytics.sketches import heavy_hitters
-
-    ev = load_events(spark, sf_dir)
-    return heavy_hitters(ev, ["event_type"], "user_id", k=5)
-
-
-def q_events_gap_fill(spark, sf_dir):
-    """Dense per-user daily activity grid with zero-filled gaps
-    (temporal.gap_fill): integer day index = epoch-seconds div 86400, so
-    the grid arithmetic is bit-identical in any engine — including for
-    negative (pre-1970) timestamps: Spark's `div` and DuckDB's BIGINT
-    `//` BOTH truncate toward zero (on duckdb 1.0.0, `//` is integer
-    truncating division ONLY for integer operands — on floats it
-    degrades to plain division, -7.0 // 2 = -3.5; measured and pinned
-    in tests/test_div_parity.py, closing ADVICE r7's divergence flag). Per-key output bounded by that key's
-    own [min, max] day span — no global calendar, no driver literals."""
-    from apache_cassandra_spark.analytics.temporal import gap_fill
-
-    ev = load_events(spark, sf_dir)
-    days = ev.select(
-        "user_id", F.expr("ts div 1000000000 div 86400").alias("day_idx")
-    )
-    return gap_fill(days, "user_id", "day_idx")
-
-
-def q_events_triangles(spark, sf_dir):
-    """Per-page triangle counts over the clickstream transition graph
-    (graph.triangle_counts): degree-ordered orientation bounds the wedge
-    join by the arboricity (no "last reducer" hub blowup), each triangle
-    generated exactly once at its rank-minimal apex. Pure joins +
-    integer counts — the oracle replays the naive a<b<c listing and must
-    agree exactly."""
-    from apache_cassandra_spark.analytics.graph import triangle_counts
-
-    edges = _clickstream_edges(spark, sf_dir)
-    return triangle_counts(edges, "src", "dst").select(
-        F.col("node").alias("page"), "n_triangles"
-    )
-
-
-def q_text_char_entropy(spark, sf_dir):
-    """Per-document Shannon character entropy (text.char_entropy) — the
-    gibberish/base64/fill detector. Per-term micro-quantization before
-    the distributed sum keeps the hash partitioning-proof; the final
-    entropy float is one identical expression in both engines."""
-    from apache_cassandra_spark.analytics.text import char_entropy
-
-    return char_entropy(load_table(spark, sf_dir, "documents"))
-
-
-def q_sim_range_search(spark, sf_dir):
-    """Exact radius search: all corpus vectors with cosine ≥ 0.2 of any
-    of the 5 seed queries (similarity.range_search) — broadcast seeds,
-    map-only scored scan, output = the true match set (the
-    decontamination / seed-expansion contract where top-k is wrong)."""
-    from apache_cassandra_spark.analytics.similarity import range_search
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") < 5)
-    return range_search(emb, q, threshold=0.2)
-
-
-def q_tpch_q18ish(spark, sf_dir):
-    """Large-volume-customer report (TPC-H Q18 shape): orders whose
-    total lineitem quantity exceeds 300, with customer identity, top-100
-    by price. Exercises aggregate-then-semi-join — the quantity roll-up
-    is partial-aggregated before its single shuffle, the tiny qualifying
-    set comes back as an AQE-decided join against orders, and the top-k
-    is TakeOrderedAndProject (no global sort)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum(F.col("l_quantity").cast("decimal(18,4)")).alias("_qty"))
-        .where(F.col("_qty") > 300)
-    )
-    return (
-        o.join(big, o.o_orderkey == big.l_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .select(
-            "c_name",
-            "c_custkey",
-            "o_orderkey",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("o_orderdate"),
-            F.col("o_totalprice").cast("double").alias("o_totalprice"),
-            F.col("_qty").cast("double").alias("total_qty"),
-        )
-        .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
-        .limit(100)
-    )
-
-
-def q_streaming_dedup_replay(spark, sf_dir):
-    """Fifth streaming gate: stateful streaming DEDUP AGGREGATION — the
-    documents table staged to parquet, streamed across multiple
-    micro-batches (maxFilesPerTrigger=2 over 6 files), grouped by the
-    SAME md5 content hash batch ``exact_dedup`` uses, keeping the
-    min-id representative and the duplicate count in complete-mode
-    state. min/count are associative, so the final state is independent
-    of the nondeterministic file split and hash-matches the batch
-    oracle. (dropDuplicates would be first-ARRIVAL-wins — split-
-    dependent — which is exactly why the gate pins the aggregate form.)"""
-    import shutil
-    import tempfile
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    root = tempfile.mkdtemp(prefix="dedup_gate_")
-    src = f"{root}/src"
-    docs.repartition(6).write.mode("overwrite").parquet(src)
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src)
-    )
-    view = "stream_dedup_gate"
-    spark.catalog.dropTempView(view)
-    try:
-        # md5(text) directly — the batch exact_dedup key — NOT
-        # streaming.dedup.content_hash: its concat_ws coalesces NULL text
-        # to md5('') while the oracle's md5(text) keeps NULL, and the two
-        # would group NULL-text rows differently
-        q = (
-            stream.withColumn("content_hash", F.md5("text"))
-            .groupBy("content_hash")
-            .agg(
-                F.min("doc_id").alias("keeper_id"),
-                F.count(F.lit(1)).cast("long").alias("n_copies"),
-            )
-            .writeStream.format("memory")
-            .queryName(view)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("streaming dedup replay did not finish")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.table(view).select("content_hash", "keeper_id", "n_copies")
-
-
-def q_streaming_watermark_replay(spark, sf_dir):
-    """Seventh streaming gate — the first to run a watermark LIVE and
-    hash-match the late-DROP semantics themselves. Events are staged
-    into four single-file micro-batches in a deterministic order
-    (batch b = user_id % 4, strictly increasing mtimes, one file per
-    trigger), then aggregated with ``withWatermark('1 hour')`` in
-    APPEND mode. The oracle replays Spark's exact micro-batch watermark
-    contract, calibrated empirically on this engine and pinned by
-    tests/test_streaming_watermark.py:
-
-    * the late filter of batch b uses the watermark derived from
-      batches 0..b−2 (one full batch of lag: the watermark computed
-      from batch b−1's event-time stats takes effect only in b+1);
-    * a row is dropped iff its WINDOW END <= that watermark (window
-      basis, inclusive boundary — not the row's own event time);
-    * append emission at availableNow drain: windows with
-      end <= cummax(all batches) − delay, also inclusive.
-
-    The lag makes filter and eviction consistent (a window evicted by
-    the end of batch b−1 is exactly one whose rows batch b's filter
-    drops), so every emitted (window, type) key appears once with the
-    aggregate over ALL its kept rows — which is what makes an exact
-    SQL replay possible at all. Unlike the other six gates this result
-    is file-ORDER-dependent by design; the staging pins the order."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from apache_cassandra_spark.streaming.ingest import windowed_event_stats
-
-    ev = load_events(spark, sf_dir).select(
-        F.expr("ts div 1000").alias("ts_micros"),
-        "event_type",
-        "value",
-        # pmod + coalesce, not %: a negative user_id under % lands in
-        # -3..-1 and a NULL user_id yields NULL — either would match no
-        # staged file (row silently lost from the Spark side while the
-        # oracle still counts it in the final-watermark max)
-        F.pmod(F.coalesce(F.col("user_id"), F.lit(0)), F.lit(4)).alias("b"),
-    )
-    root = tempfile.mkdtemp(prefix="wm_gate_")
-    src = f"{root}/src"
-    os.makedirs(src)
-    view = "stream_watermark_gate"
-    spark.catalog.dropTempView(view)
-    try:
-        for b in range(4):
-            tmp = f"{root}/t{b}"
-            ev.where(F.col("b") == b).drop("b").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            part = glob.glob(f"{tmp}/part-*.parquet")[0]
-            dst = f"{src}/batch{b}.parquet"
-            shutil.move(part, dst)
-            # FileStreamSource drains oldest-mtime-first: +100s per file
-            # pins batch order = declared order (ties impossible)
-            os.utime(dst, (1_000_000 + b * 100, 1_000_000 + b * 100))
-        stream = (
-            spark.readStream.schema("ts_micros long, event_type string, value double")
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .parquet(src)
-        )
-        q = (
-            windowed_event_stats(stream, watermark="1 hour")
-            .writeStream.format("memory")
-            .queryName(view)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("streaming watermark replay did not finish")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.table(view).select("window_start", "event_type", "n", "total")
-
-
-# --- pre-built for the round-8 window (declared BELOW position 50 this
-# round; rotated in next round when slots free up) ---
-
-
-def q_dedup_incremental(spark, sf_dir):
-    """Incremental-ingest dedup (dedup.dedup_against_reference): today's
-    batch (all docs + 50 re-labeled copies planted as within-batch dups)
-    against a reference corpus (every 5th doc). Ref-duplicated content is
-    dropped by an anti-join on the content hash (no broadcast — the ref
-    hash set is corpus-cardinality), then the batch dedups itself with
-    the min-id winner rule."""
-    from apache_cassandra_spark.analytics.dedup import dedup_against_reference
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    ref = docs.where(F.col("doc_id") % 5 == 0)
-    batch = docs.unionByName(
-        docs.where(F.col("doc_id") < 50).select(
-            (F.col("doc_id") + 100000).alias("doc_id"), "text"
-        )
-    )
-    return dedup_against_reference(batch, ref).select("doc_id", "content_hash")
-
-
-def q_events_quantiles(spark, sf_dir):
-    """Exact interpolated per-type value percentiles — the events twin of
-    lineitem_quantiles (Spark `percentile` and SQL quantile_cont share
-    the interpolation formula; 4-digit round pins the hash)."""
-    ev = load_events(spark, sf_dir)
-    return ev.groupBy("event_type").agg(
-        F.round(F.expr("percentile(value, 0.5)"), 4).alias("p50"),
-        F.round(F.expr("percentile(value, 0.9)"), 4).alias("p90"),
-        F.round(F.expr("percentile(value, 0.99)"), 4).alias("p99"),
-    )
-
-
-def q_events_quantiles_approx(spark, sf_dir):
-    """approx_percentile twin of events_quantiles — the 100 TB path:
-    Greenwald-Khanna sketches are bounded-size and MERGEABLE, so the
-    aggregation is one map-side-combinable pass instead of the exact
-    percentile's per-group value sort. Rows-only by design (the sketch's
-    picked element is engine-specific); the unit tests pin every
-    percentile within the sketch's rank-error bound of the exact twin,
-    and the accuracy knob (10⁴ ⇒ rank error ≤ n/10⁴) is explicit."""
-    ev = load_events(spark, sf_dir)
-    return ev.groupBy("event_type").agg(
-        F.round(F.expr("approx_percentile(value, 0.5, 10000)"), 4).alias("p50"),
-        F.round(F.expr("approx_percentile(value, 0.9, 10000)"), 4).alias("p90"),
-        F.round(F.expr("approx_percentile(value, 0.99, 10000)"), 4).alias("p99"),
-    )
-
-
-def q_tpch_q14ish(spark, sf_dir):
-    """Promo revenue share (TPC-H Q14 shape): conditional aggregation
-    over a part⋈lineitem fact join with a one-month date filter pushed
-    to the lineitem scan. Integer-exact inner sums (decimal), one final
-    division."""
-    li = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part")
-    rev = F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).cast("decimal(18,4)")
-    j = (
-        li.where((F.col("l_shipdate") >= "1996-03-01") & (F.col("l_shipdate") < "1996-04-01"))
-        .join(p, li.l_partkey == p.p_partkey)
-    )
-    return j.agg(
-        F.sum(F.when(F.col("p_type") == "ECONOMY", rev).otherwise(F.lit(0).cast("decimal(18,4)")))
-        .cast("double")
-        .alias("promo_revenue"),
-        F.sum(rev).cast("double").alias("total_revenue"),
-        F.round(
-            F.sum(F.when(F.col("p_type") == "ECONOMY", rev).otherwise(F.lit(0).cast("decimal(18,4)")))
-            .cast("double")
-            / F.sum(rev).cast("double")
-            * 100,
-            4,
-        ).alias("promo_pct"),
-    )
-
-
-def q_tpch_q12ish(spark, sf_dir):
-    """Shipping-priority audit (TPC-H Q12 shape): one-year lineitem
-    date range pushed to the scan, fact⋈orders equi-join where the
-    orders side is pruned to (key, priority), then conditional integer
-    counts per group — the canonical join + CASE-aggregation report.
-    The group key stands in for l_shipmode (not in this dataset)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    j = (
-        li.where((F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1997-01-01"))
-        .select("l_orderkey", "l_returnflag")
-        .join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-    )
-    return (
-        j.groupBy(F.col("l_returnflag").alias("return_flag"))
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).cast("long").alias("high_line_count"),
-            F.sum(F.when(high, 0).otherwise(1)).cast("long").alias("low_line_count"),
-        )
-        .orderBy("return_flag")
-    )
-
-
-def q_tpch_q13ish(spark, sf_dir):
-    """Customer order-count distribution (TPC-H Q13 shape): left join
-    that must PRESERVE zero-order customers (the order filter lives on
-    the join's right side, not in a post-join WHERE — a customer whose
-    only orders are excluded still lands in the c_count=0 bucket),
-    per-customer count, then the histogram re-aggregation. Two hash
-    aggregates, both partial-combined; no window, no sort until the
-    final tiny histogram."""
-    c = load_table(spark, sf_dir, "customer").select("c_custkey")
-    o = (
-        load_table(spark, sf_dir, "orders")
-        .where(F.col("o_orderpriority") != "5-LOW")
-        .select("o_custkey", "o_orderkey")
-    )
-    per_cust = (
-        c.join(o, F.col("c_custkey") == F.col("o_custkey"), "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return (
-        per_cust.groupBy("c_count")
-        .agg(F.count(F.lit(1)).cast("long").alias("custdist"))
-        .select(F.col("c_count").cast("long").alias("c_count"), "custdist")
-        .orderBy(F.col("custdist").desc(), F.col("c_count").desc())
-    )
-
-
-def q_tpch_q4ish(spark, sf_dir):
-    """Order-priority audit (TPC-H Q4 shape): orders from one quarter
-    that had at least one LATE lineitem (shipped > 60 days after the
-    order date), counted per priority. The EXISTS compiles to a LEFT
-    SEMI hash join on o_orderkey with the date inequality as the join
-    residual — each order emits at most once no matter how many late
-    lines it has, the orders-side date filter is pushed to its scan,
-    and the lineitem side is pruned to (orderkey, shipdate). No
-    correlated per-row subquery execution anywhere."""
-    o = load_table(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1996-04-01")
-    )
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    late = o.join(
-        li,
-        (F.col("o_orderkey") == F.col("l_orderkey"))
-        & (F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")),
-        "left_semi",
-    )
-    return (
-        late.groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).cast("long").alias("order_count"))
-        .orderBy("o_orderpriority")
-    )
-
-
-def q_tpch_q22ish(spark, sf_dir):
-    """Lapsed high-balance customers (TPC-H Q22 shape): per market
-    segment, the count and total balance of customers whose balance
-    exceeds the average POSITIVE balance of the candidate segments and
-    who placed no order since 1999. Float discipline: balances are
-    cents-exact doubles, so everything runs in bigint cents and the
-    avg threshold is the exact rational test ``cents·n > total`` — no
-    distributed float sum, no division at all. Plan shape: a 1-row
-    global aggregate joined back (BroadcastNestedLoop on a single row —
-    the documented bounded cross-join class), then a LEFT ANTI hash
-    join against the pruned (custkey) recent-orders side, then one
-    tiny per-segment aggregate."""
-    segs = ("AUTOMOBILE", "BUILDING", "MACHINERY")
-    c = (
-        load_table(spark, sf_dir, "customer")
-        .where(F.col("c_mktsegment").isin(*segs))
-        .select(
-            "c_custkey",
-            "c_mktsegment",
-            F.round(F.col("c_acctbal") * 100).cast("long").alias("bal_cents"),
-        )
-    )
-    stats = c.where(F.col("bal_cents") > 0).agg(
-        F.sum("bal_cents").alias("_tot"), F.count(F.lit(1)).alias("_n")
-    )
-    recent = (
-        load_table(spark, sf_dir, "orders")
-        .where(F.col("o_orderdate") >= "1999-01-01")
-        .select("o_custkey")
-    )
-    cand = c.crossJoin(stats).where(F.col("bal_cents") * F.col("_n") > F.col("_tot"))
-    lapsed = cand.join(recent, F.col("c_custkey") == F.col("o_custkey"), "left_anti")
-    return (
-        lapsed.groupBy("c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("numcust"),
-            F.sum("bal_cents").cast("long").alias("total_bal_cents"),
-        )
-        .orderBy("c_mktsegment")
-    )
-
-
-def q_tpch_q17ish(spark, sf_dir):
-    """Small-quantity-order revenue (TPC-H Q17 shape): per brand, the
-    revenue from lineitems whose quantity is below 20% of that PART's
-    average quantity. The correlated scalar subquery is decorrelated by
-    hand into a per-part aggregate joined back — and, the part the
-    optimizer can't do alone, the OUTER brand filter is pushed INTO the
-    aggregate's domain (the per-part average only ever needs lineitems
-    of brand-matched parts, because the correlation key is the part),
-    so the stats pass scans the brand-pruned fact, not the whole table.
-    Float discipline: quantities are integral (cast long), the 0.2·avg
-    threshold is the exact rational test ``5·qty·n < sum_qty`` — no
-    division, no float compare; revenue is the round-4 decimal sum the
-    q3/q10/q14 gates already pin. At 100 TB: two shuffles of the
-    brand-pruned fact (one per-part aggregate, one join back), both on
-    the same key; lineitems-per-part is constant in TPC-H, so the
-    bigint product is bounded at ~250·n_part_lines.
-
-    The pruned fact is built once per consumer (stats pass, scoring
-    pass) — measured against caching it at sf0.1: 0.85s recompute vs
-    0.78s cached steady-state, a wash, and recompute keeps the
-    operator stateless (the DSIR cache-vs-recompute discipline). The
-    at-scale rescan cost is covered by Spark's runtime bloom-filter
-    injection: the brand-part side is under the 10 MB creation
-    threshold and the fact scan passes the 10 GB application threshold
-    only in exactly the big-data regime, where both rescans get
-    bloom-pruned to the brand fraction (verified enabled; below
-    threshold at bench SF by design)."""
-    brands = ("Brand#3", "Brand#13", "Brand#23")
-    p = (
-        load_table(spark, sf_dir, "part")
-        .where(F.col("p_brand").isin(*brands))
-        .select("p_partkey", "p_brand")
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey",
-        F.col("l_quantity").cast("long").alias("qty"),
-        "l_extendedprice",
-    )
-    lb = li.join(p, F.col("l_partkey") == F.col("p_partkey"))
-    stats = lb.groupBy("l_partkey").agg(
-        F.sum("qty").alias("_sq"), F.count(F.lit(1)).alias("_n")
-    )
-    small = lb.drop("p_partkey").join(stats, "l_partkey").where(
-        F.col("qty") * 5 * F.col("_n") < F.col("_sq")
-    )
-    return (
-        small.groupBy("p_brand")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_lines"),
-            F.sum(F.round(F.col("l_extendedprice"), 4).cast("decimal(18,4)"))
-            .cast("double")
-            .alias("revenue"),
-        )
-        .orderBy("p_brand")
-    )
-
-
-def q_tpch_q19ish(spark, sf_dir):
-    """Discounted revenue under a disjunctive brand/size/quantity
-    predicate (TPC-H Q19 shape) — written DECLARATIVELY: one join, one
-    cross-table OR, no hand-hoisted envelopes. On classic engines Q19
-    needs the per-side implications factored out by hand; we VERIFIED
-    (rather than assumed) that Spark 4's constraint propagation derives
-    them itself — each scan's PushedFilters carries the per-side
-    ``Or(And(range), ...)`` projection of the disjunction (plan-locked,
-    so an optimizer regression gets caught), which parquet row-group
-    stats evaluate disjunct-by-disjunct. At 100 TB both scans therefore
-    read only the OR-surviving fraction with zero manual plumbing.
-    Quantity bounds compare the raw double column (values are integral,
-    so the bounds are exact) to keep the filter scan-pushable — a cast
-    would block pushdown."""
-    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_quantity", "l_extendedprice", "l_discount"
-    )
-    branch = (
-        ((F.col("p_brand") == "Brand#3") & F.col("p_size").between(1, 10) & F.col("l_quantity").between(1, 15))
-        | ((F.col("p_brand") == "Brand#13") & F.col("p_size").between(1, 25) & F.col("l_quantity").between(10, 30))
-        | ((F.col("p_brand") == "Brand#23") & F.col("p_size").between(1, 40) & F.col("l_quantity").between(20, 45))
-    )
-    rev = F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).cast("decimal(18,4)")
-    return (
-        li.join(p, F.col("l_partkey") == F.col("p_partkey"))
-        .where(branch)
-        .groupBy("p_brand")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_lines"),
-            F.sum(rev).cast("double").alias("revenue"),
-        )
-        .orderBy("p_brand")
-    )
-
-
-def _waiting_suppliers(li, o, s, late_days: int = 90):
-    """Core of the Q21 shape, shared by the gate and the reformulation
-    fuzz test. ``numwait`` counts ORDERS (not lineitem rows) on which
-    the supplier was the SOLE late supplier among ≥2 involved — the
-    EXISTS / NOT-EXISTS pair of the textbook form collapsed into one
-    per-(order, supplier) late flag plus one per-order profile:
-    ``n_supp >= 2 AND n_late = 1`` ⟺ "another supplier exists, no
-    other LATE supplier exists". Lossless vs the triple self-join
-    (tests/test_tpch_shapes.py fuzzes both forms) but does ZERO fact
-    self-joins: after the orderkey equi-join, BOTH aggregates satisfy
-    their distribution from the join's orderkey partitioning (group
-    keys (orderkey, suppkey) ⊇ orderkey), so at scale — where the
-    orders side outgrows broadcast and the join shuffles on orderkey —
-    the whole stack runs on two input exchanges and nothing else."""
-    j = li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-    # explicit 1/0 (not a bool cast): a NULL ship/order date must score
-    # 0 like the oracle's CASE, not NULL-propagate through the max/sum
-    # stack (the heavy_hitters NULL-policy lesson — today's data has no
-    # NULL dates, the dataset contract doesn't promise that forever)
-    late = F.when(
-        F.col("l_shipdate") > F.col("o_orderdate") + F.expr(f"INTERVAL {late_days} DAYS"),
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    per_supp = j.groupBy("l_orderkey", "l_suppkey").agg(F.max(late).alias("late"))
-    per_order = per_supp.groupBy("l_orderkey").agg(
-        F.count(F.lit(1)).alias("_n_supp"),
-        F.sum("late").alias("_n_late"),
-        F.max(F.when(F.col("late") == 1, F.col("l_suppkey"))).alias("_late_supp"),
-    )
-    waits = per_order.where((F.col("_n_supp") >= 2) & (F.col("_n_late") == 1))
-    return (
-        waits.groupBy("_late_supp")
-        .agg(F.count(F.lit(1)).cast("long").alias("numwait"))
-        .join(s, F.col("_late_supp") == F.col("s_suppkey"))
-        .select("s_suppkey", "s_name", "numwait")
-        .orderBy(F.col("numwait").desc(), "s_suppkey")
-        .limit(25)
-    )
-
-
-def q_tpch_q21ish(spark, sf_dir):
-    """Suppliers who kept orders waiting (TPC-H Q21 shape, adapted to
-    this schema: "late" = shipped > 90 days after the order date, the
-    q4ish lateness definition): top-25 suppliers by the number of
-    finished multi-supplier orders where they were the ONLY late
-    supplier. See ``_waiting_suppliers`` for the aggregate
-    reformulation that replaces the textbook EXISTS + NOT-EXISTS fact
-    self-joins with two stacked aggregates over ONE orderkey join."""
-    o = (
-        load_table(spark, sf_dir, "orders")
-        .where(F.col("o_orderstatus") == "F")
-        .select("o_orderkey", "o_orderdate")
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_shipdate"
-    )
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return _waiting_suppliers(li, o, s)
-
-
-def q_corpus_dsir_weights(spark, sf_dir):
-    """DSIR importance log-weights (pipeline.dsir_log_weights): every
-    37th document plays the TARGET domain sample, the rest are the raw
-    corpus to be re-weighted toward it — per-doc ``logw_micro`` is the
-    bigint Σ f_b·λ_b over 512 hashed unigram+bigram buckets, λ the
-    micro-quantized smoothed log-ratio (one fixed-order double
-    expression per bucket). The oracle replays tokenization, the md5
-    bucket hash, both smoothed distributions, and the integer sum."""
-    from apache_cassandra_spark.analytics.pipeline import dsir_log_weights
-
-    docs = load_table(spark, sf_dir, "documents")
-    target = docs.where(F.col("doc_id") % 37 == 0)
-    corpus = docs.where(F.col("doc_id") % 37 != 0)
-    return dsir_log_weights(corpus, target, buckets=512)
-
-
-def q_tpch_q15ish(spark, sf_dir):
-    """Top supplier(s) by quarterly revenue (TPC-H Q15 shape): the
-    view-plus-scalar-max pattern — an aggregate compared against the
-    maximum OF THAT SAME AGGREGATE, returning every supplier tied at
-    the top. Float discipline: revenue is the round-4 decimal sum the
-    q3/q10 gates pin, and the max-equality runs DECIMAL = DECIMAL —
-    exact within each engine and across them (the sums are exactly
-    equal integers in 1e-4 units); only the output column casts to
-    double. Plan shape (verified, plan-locked): Catalyst extracts the
-    crossJoin-then-equality into a BroadcastHashJoin ON the aggregate
-    value itself (``_r = _m``) — no nested loop ANYWHERE in the plan —
-    then an AQE-decided hash join against the supplier dim; the
-    revenue aggregate is partial-combined over the date-pruned fact.
-    At 100 TB the only corpus-sized shuffle is the suppkey aggregate."""
-    li = load_table(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1996-04-01")
-    )
-    rev = (
-        li.groupBy("l_suppkey")
-        .agg(
-            F.sum(
-                F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).cast(
-                    "decimal(18,4)"
-                )
-            ).alias("_r")
-        )
-    )
-    mx = rev.agg(F.max("_r").alias("_m"))
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return (
-        rev.crossJoin(mx)
-        .where(F.col("_r") == F.col("_m"))
-        .join(s, F.col("l_suppkey") == F.col("s_suppkey"))
-        .select("s_suppkey", "s_name", F.col("_r").cast("double").alias("total_rev"))
-        .orderBy("s_suppkey")
-    )
-
-
-def q_events_clustering_coeff(spark, sf_dir):
-    """Local clustering coefficient per page over the clickstream
-    transition graph (graph.clustering_coefficient): cc = 2T/(d(d−1))
-    in integer micro-units on top of the degree-ordered triangle
-    counts — the clique-vs-hub local-density signal. All-integer
-    output; the oracle replays the naive a<b<c triangle listing plus
-    the same bigint division."""
-    from apache_cassandra_spark.analytics.graph import clustering_coefficient
-
-    edges = _clickstream_edges(spark, sf_dir)
-    return clustering_coefficient(edges, "src", "dst").select(
-        F.col("node").alias("page"), "deg", "n_triangles", "cc_micro"
-    )
-
-
-def q_text_readability(spark, sf_dir):
-    """Per-document Flesch reading ease (text.readability): exact
-    integer word / sentence-run / vowel-group counts, one shared float
-    expression for the score — map-only, no shuffle. The prose-vs-
-    catalog quality filter."""
-    from apache_cassandra_spark.analytics.text import readability
-
-    return readability(load_table(spark, sf_dir, "documents"))
-
-
-def q_events_ohlc(spark, sf_dir):
-    """Per-user daily OHLC resample of the event value stream
-    (temporal.resample_ohlc): open/close picked by the total order
-    (ts, event_id) via min_by/max_by, high/low/count alongside — ONE
-    map-side-combinable hash aggregate, no window, no float ever
-    summed (engine-exact without quantization). The oracle replays the
-    same picks with arg_min/arg_max over an equivalent zero-padded
-    (ts, event_id) string key."""
-    from apache_cassandra_spark.analytics.temporal import resample_ohlc
-
-    ev = load_events(spark, sf_dir)
-    out = resample_ohlc(
-        ev,
-        key_cols=["user_id"],
-        ts_col="ts",
-        value_col="value",
-        bucket_size=86_400_000_000_000,
-        tie_col="event_id",
-    )
-    return out.select(
-        "user_id", F.col("bucket").alias("day_idx"),
-        "open", "high", "low", "close", "n_rows",
-    )
-
-
-def q_events_heavy_hitters_cm(spark, sf_dir):
-    """Count-min-sketch heavy hitters (sketches.cm_sketch/cm_estimate):
-    same top-5-users-per-type report as events_heavy_hitters, but read
-    through a fixed 4×256 counter grid per type instead of the exact
-    (group, item) frequency table — the shape for when distinct items
-    explode past the exchange. Every counter is a deterministic md5
-    function of the data, so unlike the HLL entry this sketch is
-    hash-anchored: the oracle rebuilds the identical grid and minima.
-    NULL user ids are excluded on both sides (concat_ws NULL-skip vs
-    SQL NULL-propagation would hash them differently)."""
-    from pyspark.sql import Window
-
-    from apache_cassandra_spark.analytics.sketches import cm_estimate, cm_sketch
-
-    ev = load_events(spark, sf_dir).where(F.col("user_id").isNotNull())
-    sk = cm_sketch(ev, "user_id", ["event_type"], depth=4, width=256)
-    items = ev.select("event_type", "user_id").distinct()
-    est = cm_estimate(sk, items, "user_id", ["event_type"], depth=4, width=256)
-    w = Window.partitionBy("event_type").orderBy(F.col("est").desc(), F.col("user_id"))
-    return (
-        est.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= 5)
-        .select("event_type", "user_id", "est", F.col("rk").cast("int").alias("rk"))
-    )
-
-
-def q_streaming_heavy_hitters_replay(spark, sf_dir):
-    """Sixth streaming gate (round-8 window): per-type user counts as a
-    complete-mode streaming aggregation replayed across micro-batches,
-    then the SAME deterministic top-5 rank applied to the final state —
-    counts merge associatively, so the result is independent of the file
-    split and matches the batch events_heavy_hitters oracle."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window
-
-    # NULL users dropped to match heavy_hitters' policy (Spark ranks
-    # ascending NULLS FIRST, DuckDB NULLS LAST — dropping is the only
-    # engine-exact choice)
-    ev = (
-        load_events(spark, sf_dir)
-        .where(F.col("user_id").isNotNull())
-        .select("event_type", "user_id")
-    )
-    root = tempfile.mkdtemp(prefix="hh_gate_")
-    src = f"{root}/src"
-    ev.repartition(6).write.mode("overwrite").parquet(src)
-
-    stream = (
-        spark.readStream.schema("event_type string, user_id long")
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src)
-    )
-    view = "stream_hh_gate"
-    spark.catalog.dropTempView(view)
-    try:
-        q = (
-            stream.groupBy("event_type", "user_id")
-            .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-            .writeStream.format("memory")
-            .queryName(view)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("streaming heavy-hitters replay did not finish")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    w = Window.partitionBy("event_type").orderBy(F.col("cnt").desc(), F.col("user_id"))
-    return (
-        spark.table(view)
-        .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= 5)
-        .select("event_type", "user_id", "cnt", F.col("rk").cast("int").alias("rk"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# oracle SQL
-# ---------------------------------------------------------------------------
-
-_DOC_SHINGLES = """
-toks AS (SELECT doc_id AS id, list_filter(string_split(lower(text),' '), x -> x <> '') AS t FROM documents),
-sh AS (SELECT id, unnest(list_transform(generate_series(1, greatest(len(t)-2, 0)),
-                                        i -> array_to_string(t[i:i+2], ' '))) AS shingle FROM toks),
-shd AS (SELECT DISTINCT id, shingle FROM sh)
-"""
-
-
-def _jaccard_oracle_sql(threshold: float) -> str:
-    """One body for every Jaccard-pair oracle (naive gate at 0.5,
-    prefix-filter gate at 0.8): parameterizing the threshold keeps the
-    'lossless twin' gates testing the SAME semantics by construction —
-    a fix to the shared shingle/pair/round logic cannot reach one copy
-    and miss the other."""
-    return f"""
-        WITH {_DOC_SHINGLES},
-        sizes AS (SELECT id, count(*) AS n FROM shd GROUP BY id),
-        pairs AS (SELECT a.id AS id_a, b.id AS id_b, count(*) AS c
-                  FROM shd a JOIN shd b ON a.shingle = b.shingle AND a.id < b.id GROUP BY 1, 2)
-        SELECT id_a, id_b, round(c / (sa.n + sb.n - c), 6) AS jaccard
-        FROM pairs JOIN sizes sa ON id_a = sa.id JOIN sizes sb ON id_b = sb.id
-        WHERE round(c / (sa.n + sb.n - c), 6) >= {threshold}
-    """
-
-
-ORACLES: dict[str, str] = {
-    # the exact mutation log q_write_path replays, reduced in SQL by the
-    # comparePriority tuple (ts, tombstone, value) + row-tombstone shadowing
-    "cass_write_path": """
-        WITH muts(key, "column", value, ts, tombstone) AS (VALUES
-          ('w1','ca','v1',100,false), ('w1','ca','v2',200,false),
-          ('w2','ca','a',100,false),  ('w2','ca','b',100,false),
-          ('w3','ca','x',300,false),  ('w3','ca',NULL,300,true),
-          ('w4','ca','x',100,false),  ('w4','ca',NULL,200,true), ('w4','ca','y',300,false),
-          ('w5','ca','g',100,false),  ('w5','cb','h',100,false), ('w5','cb','z',200,false),
-          ('w8','ca','m',500,false),
-          ('w6','ca','p',100,false),  ('w6','cb','q',100,false), ('w6','cc','r',100,false),
-          ('w6','ca',NULL,150,true),  ('w6','cb',NULL,150,true),
-          ('w7','ca','p7',100,false), ('w7','cb','q7',100,false)),
-        rowdel(key, del_ts) AS (VALUES ('w5',150), ('w8',400)),
-        won AS (
-          SELECT key, "column", value, ts, tombstone, row_number() OVER (
-            PARTITION BY key, "column"
-            ORDER BY ts DESC, tombstone DESC, value DESC NULLS LAST) AS rn
-          FROM muts),
-        live AS (SELECT key, "column", value, ts FROM won WHERE rn = 1 AND NOT tombstone)
-        SELECT l.key, l."column", l.value, cast(l.ts as bigint) AS ts
-        FROM live l LEFT JOIN rowdel r ON l.key = r.key
-        WHERE r.del_ts IS NULL OR l.ts > r.del_ts
-    """,
-    "cass_get_slice": _unpivot_sql("orders", "o_orderkey = 32"),
-    "cass_get_slice_names": _unpivot_sql("orders", "o_orderkey = 32", cols=["o_orderstatus", "o_totalprice"]),
-    "cass_get_slice_reversed": _unpivot_sql(
-        "orders", "o_orderkey = 32", cols=["o_orderpriority", "o_orderstatus", "o_totalprice"]
-    ),
-    "cass_get_slice_bounded": _unpivot_sql(
-        "orders", "o_orderkey = 32", cols=["o_orderdate", "o_orderpriority", "o_orderstatus"]
-    ),
-    "cass_multiget_slice": _unpivot_sql(
-        "orders", "o_orderkey IN (1,2,3,4,5,6,7)", cols=["o_custkey", "o_orderdate"]
-    ),
-    "cass_range_slices_keys": (
-        "WITH ks AS (SELECT DISTINCT cast(p_partkey as varchar) AS k FROM part "
-        "WHERE cast(p_partkey as varchar) >= '100' AND cast(p_partkey as varchar) <= '120' "
-        "ORDER BY k LIMIT 10) "
-        "SELECT key, \"column\", value FROM (" + _unpivot_sql("part", cols=["p_brand", "p_name"]) + ") "
-        "JOIN ks ON key = k"
-    ),
-    "cass_range_slices_wrapped": (
-        "SELECT key, \"column\", value FROM (" + _unpivot_sql("supplier", cols=["s_acctbal"]) + ") "
-        "WHERE md5(key) > 'e8' OR md5(key) <= '18'"
-    ),
-    # lineitem has duplicate (orderkey, linenumber) rows: the engine's LWW
-    # reconcile collapses them (equal ts 0, no tombstones -> max value wins),
-    # so the oracle groups to max(value) per cell coordinate.
-    "cass_super_slice": (
-        "WITH scs AS (SELECT DISTINCT cast(l_linenumber as varchar) AS s FROM lineitem "
-        "WHERE l_orderkey = 1 ORDER BY s LIMIT 3) "
-        "SELECT key, sc, \"column\", max(value) AS value FROM ("
-        + _unpivot_sql("lineitem", "l_orderkey = 1", with_sc=True)
-        + ") JOIN scs ON sc = s GROUP BY key, sc, \"column\""
-    ),
-    "cass_super_subcolumn_slice": (
-        "SELECT key, sc, \"column\", max(value) AS value FROM ("
-        + _unpivot_sql(
-            "lineitem",
-            "l_orderkey = 1 AND cast(l_linenumber as varchar) = '7'",
-            cols=["l_discount", "l_extendedprice", "l_linestatus", "l_partkey"],
-            with_sc=True,
-        )
-        + ") GROUP BY key, sc, \"column\""
-    ),
-    "cass_lww_events": """
-        WITH cells AS (
-          SELECT cast(user_id as varchar) AS key, event_type AS "column",
-                 cast(cast(value as decimal(18,4)) as varchar) AS value, epoch_us(ts) AS ts
-          FROM events)
-        SELECT key, "column", value, ts FROM (
-          SELECT *, row_number() OVER (PARTITION BY key, "column" ORDER BY ts DESC, value DESC) AS rn
-          FROM cells) t
-        WHERE rn = 1
-    """,
-    "cass_read_at_ts": """
-        WITH cells AS (
-          SELECT cast(user_id as varchar) AS key, event_type AS "column",
-                 cast(cast(value as decimal(18,4)) as varchar) AS value, epoch_us(ts) AS ts
-          FROM events WHERE epoch_us(ts) <= 1705363200000000)
-        SELECT key, "column", value, ts FROM (
-          SELECT *, row_number() OVER (PARTITION BY key, "column" ORDER BY ts DESC, value DESC) AS rn
-          FROM cells) t
-        WHERE rn = 1
-    """,
-    "cass_lww_row_tombstones": """
-        WITH cells AS (
-          SELECT cast(user_id as varchar) AS key, event_type AS "column",
-                 cast(cast(value as decimal(18,4)) as varchar) AS value, epoch_us(ts) AS ts
-          FROM events WHERE event_type <> 'error'),
-        tombs AS (
-          SELECT cast(user_id as varchar) AS key, max(epoch_us(ts)) AS del_ts
-          FROM events WHERE event_type = 'error' GROUP BY 1),
-        live AS (
-          SELECT c.* FROM cells c LEFT JOIN tombs t USING (key)
-          WHERE t.del_ts IS NULL OR c.ts > t.del_ts)
-        SELECT key, "column", value, ts FROM (
-          SELECT *, row_number() OVER (PARTITION BY key, "column" ORDER BY ts DESC, value DESC) AS rn
-          FROM live) t
-        WHERE rn = 1
-    """,
-    "cass_super_get_count": "SELECT count(DISTINCT l_linenumber) AS count FROM lineitem WHERE l_orderkey = 1",
-    "events_props_json": """
-        SELECT cast(json_extract_string(props, '$.k') as integer) AS k, count(*) AS n
-        FROM events GROUP BY 1
-    """,
-    "cass_long_comparator_slice": """
-        SELECT cast(user_id as varchar) AS key, event_id, event_type AS value
-        FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
-              FROM events WHERE user_id < 3) t
-        WHERE rn <= 3
-    """,
-    "cass_timeuuid_comparator_slice": """
-        SELECT cast(user_id as varchar) AS key, epoch_us(ts) AS event_us, event_id,
-               event_type AS value
-        FROM (SELECT *, row_number() OVER (PARTITION BY user_id
-                                           ORDER BY epoch_us(ts) DESC, event_id DESC) AS rn
-              FROM events WHERE user_id < 3) t
-        WHERE rn <= 3
-    """,
-    "cass_lexicaluuid_comparator_slice": """
-        WITH uu AS (
-          SELECT cast(user_id as varchar) AS key, md5(cast(event_id as varchar)) AS uu,
-                 event_type AS value
-          FROM events WHERE user_id < 3),
-        ranked AS (
-          SELECT *, row_number() OVER (PARTITION BY key ORDER BY
-            -- signed-long DESC over the msb then lsb halves: the positive
-            -- group (hex digit < '8') outranks the negative group, and
-            -- fixed-width hex string order == unsigned order within a group
-            (CASE WHEN substr(uu, 1, 1) >= '8' THEN 0 ELSE 1 END) DESC,
-            substr(uu, 1, 16) DESC,
-            (CASE WHEN substr(uu, 17, 1) >= '8' THEN 0 ELSE 1 END) DESC,
-            substr(uu, 17, 16) DESC) AS rn
-          FROM uu)
-        SELECT key, uu, value FROM ranked WHERE rn <= 3
-    """,
-    "cass_freshtimestamp_comparator_slice": """
-        WITH per_type AS (
-          SELECT cast(user_id as varchar) AS key, event_type AS name,
-                 cast(count(*) as varchar) AS value
-          FROM events WHERE user_id < 3 GROUP BY 1, 2),
-        named AS (
-          SELECT key, name, value, 1 AS ord FROM per_type
-          UNION ALL
-          SELECT DISTINCT key, '' AS name, 'fresh' AS value, 0 AS ord FROM per_type),
-        ranked AS (
-          SELECT *, row_number() OVER (PARTITION BY key
-                                       ORDER BY ord, name DESC) AS rn
-          FROM named)
-        SELECT key, name, value FROM ranked WHERE rn <= 3
-    """,
-    "rows_may_exist": """
-        WITH probes AS (SELECT cast(k as varchar) AS key FROM generate_series(95, 105) t(k))
-        SELECT key, EXISTS (SELECT 1 FROM supplier WHERE cast(s_suppkey as varchar) = key) AS may_exist
-        FROM probes
-    """,
-    "columns_may_exist": """
-        WITH probes(name) AS (VALUES ('o_custkey'), ('o_totalprice'), ('no_such_col'), ('o_orderstatus'))
-        SELECT name, (name <> 'no_such_col' AND EXISTS (SELECT 1 FROM orders WHERE o_orderkey = 32)) AS may_exist
-        FROM probes
-    """,
-    "describe_splits": """
-        WITH toks AS (SELECT DISTINCT md5(cast(s_suppkey as varchar)) AS t FROM supplier),
-        tiled AS (SELECT t, ntile((SELECT greatest(count(*) // 25, 1) FROM toks)) OVER (ORDER BY t) AS tile FROM toks)
-        SELECT cast(tile - 1 as integer) AS split_id, max(t) AS end_token FROM tiled GROUP BY tile
-    """,
-    "pig_group_count": "SELECT o_orderpriority, count(*) AS n_orders FROM orders GROUP BY 1",
-    "wordcount": """
-        SELECT word, count(*) AS cnt FROM (
-          SELECT unnest(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS word FROM documents)
-        GROUP BY word ORDER BY cnt DESC, word LIMIT 100
-    """,
-    "tpch_q1ish": """
-        SELECT l_returnflag, l_linestatus,
-               cast(sum(cast(l_quantity as decimal(18,4))) as double) AS sum_qty,
-               cast(sum(cast(l_extendedprice as decimal(18,4))) as double) AS sum_base_price,
-               cast(sum(cast(round(l_extendedprice * (1 - l_discount), 4) as decimal(18,4))) as double) AS sum_disc_price,
-               count(*) AS count_order
-        FROM lineitem WHERE l_shipdate <= timestamp '1998-09-02 00:00:00'
-        GROUP BY l_returnflag, l_linestatus
-    """,
-    # tumbling-window state merged across micro-batches converges to the
-    # batch aggregate — the oracle string moved here from the retired
-    # events_windowed gate (r12; same implementation, strictly stronger
-    # replay check on top)
-    "streaming_windowed_replay": """
-        SELECT strftime(make_timestamp((epoch_us(ts) // 3600000000) * 3600000000), '%Y-%m-%d %H:%M:%S') AS window_start,
-               event_type, count(*) AS n,
-               cast(sum(cast(value as decimal(18,4))) as double) AS total
-        FROM events GROUP BY 1, 2
-    """,
-    "tpch_q5ish": """
-        SELECT n_name,
-               cast(sum(cast(round(l_extendedprice * (1 - l_discount), 4) as decimal(18,4))) as double) AS revenue
-        FROM lineitem
-        JOIN orders   ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey = c_custkey
-        JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        JOIN nation   ON s_nationkey = n_nationkey
-        JOIN region   ON n_regionkey = r_regionkey
-        WHERE r_name = 'ASIA'
-          AND o_orderdate >= timestamp '1996-01-01 00:00:00'
-          AND o_orderdate <  timestamp '1997-01-01 00:00:00'
-        GROUP BY n_name
-    """,
-    "events_distinct_exact": """
-        SELECT event_type,
-               count(DISTINCT user_id) AS n_user_id,
-               count(DISTINCT strftime(make_timestamp(epoch_us(ts)), '%Y-%m-%d')) AS n_day,
-               count(*) AS n_rows
-        FROM events GROUP BY event_type
-    """,
-    "docs_ngram_novelty": f"""
-        WITH {_DOC_SHINGLES},
-        freq AS (SELECT shingle, count(*) AS df FROM shd GROUP BY shingle),
-        per AS (SELECT id, count(*) AS n_shingles,
-                       cast(sum(CASE WHEN df = 1 THEN 1 ELSE 0 END) as bigint) AS n_unique
-                FROM shd JOIN freq USING (shingle) GROUP BY id)
-        SELECT id AS doc_id, n_shingles, n_unique,
-               (1000000 * n_unique) // n_shingles AS novelty_ppm
-        FROM per
-    """,
-    # per-source rank over the shared md5 draw + the closed-form round-robin
-    # position formula — integer arithmetic end to end
-    "corpus_interleave_joins": """
-        WITH ranked AS (
-          SELECT doc_id, source,
-                 row_number() OVER (PARTITION BY source
-                    ORDER BY ('0x' || substr(md5(cast(doc_id as varchar)), 1, 15))::bigint
-                             % 1152921504606846976, doc_id) AS r
-          FROM documents),
-        counts AS (SELECT source AS s2, count(*) AS n FROM documents GROUP BY 1)
-        SELECT doc_id, source, cast(r as int) AS rank_in_source,
-               cast(sum(least(r - 1, n) + CASE WHEN s2 < source AND n >= r THEN 1 ELSE 0 END) as bigint)
-                   AS global_pos
-        FROM ranked CROSS JOIN counts
-        GROUP BY doc_id, source, r
-    """,
-    # same milli-quantization + integer inequality as anomaly.zscore_outliers:
-    # (n·v − S)² > k²(n·Q − S²) with k=2, evaluated in HUGEINT (exact, like
-    # Spark's decimal(38,0))
-    "events_anomaly": """
-        WITH ev AS (SELECT event_id, user_id,
-                           cast(round(value * 1000, 0) as bigint) AS value_milli
-                    FROM events),
-        st AS (SELECT user_id, count(*) AS n, sum(value_milli) AS s,
-                      sum(value_milli::HUGEINT * value_milli) AS q
-               FROM ev GROUP BY user_id)
-        SELECT event_id, user_id, value_milli
-        FROM ev JOIN st USING (user_id)
-        WHERE n >= 5
-          AND (n::HUGEINT * value_milli - s) * (n::HUGEINT * value_milli - s)
-              > 4 * (n::HUGEINT * q - s::HUGEINT * s)
-    """,
-    # same dirtying arithmetic + same regexp pipeline as normalize_text
-    "text_normalize": """
-        WITH dirty AS (
-          SELECT doc_id,
-                 (CASE WHEN doc_id % 3 = 0 THEN chr(9) ELSE '' END) || text ||
-                 (CASE WHEN doc_id % 2 = 0 THEN '  trailing' || chr(10) ELSE '' END) AS text
-          FROM documents),
-        c AS (SELECT doc_id, text AS orig,
-                     trim(regexp_replace(regexp_replace(text, '[' || chr(0) || '-' || chr(31) || chr(127) || ']', ' ', 'g'),
-                                         ' +', ' ', 'g')) AS text
-              FROM dirty)
-        SELECT doc_id, md5(text) AS text_md5, (text <> orig) AS changed,
-               length(text) AS n_chars
-        FROM c
-    """,
-    # same a-priori pruning arithmetic as frequent_item_pairs
-    "basket_pairs": """
-        WITH items AS (SELECT DISTINCT l_orderkey AS b, l_partkey AS i FROM lineitem),
-        freq AS (SELECT i FROM items GROUP BY i HAVING count(*) >= 2),
-        kept AS (SELECT b, i FROM items WHERE i IN (SELECT i FROM freq)),
-        sized AS (SELECT b FROM kept GROUP BY b HAVING count(*) <= 1000),
-        k2 AS (SELECT b, i FROM kept WHERE b IN (SELECT b FROM sized)),
-        p AS (SELECT a.i AS item_a, c.i AS item_b, count(*) AS support
-              FROM k2 a JOIN k2 c ON a.b = c.b AND a.i < c.i
-              GROUP BY 1, 2 HAVING count(*) >= 1)
-        SELECT item_a, item_b, cast(support as bigint) AS support
-        FROM p ORDER BY support DESC, item_a, item_b LIMIT 25
-    """,
-    # same md5 draw + cumulative intervals as pipeline.split_corpus
-    "corpus_split": """
-        WITH d AS (SELECT doc_id, text,
-                          ('0x' || substr(md5(cast(doc_id as varchar)), 1, 15))::bigint % 1000000 AS u
-                   FROM documents),
-        s AS (SELECT CASE WHEN u < 100000 THEN 'test'
-                          WHEN u < 900000 THEN 'train'
-                          ELSE 'val' END AS split,
-                     len(list_filter(string_split(text, ' '), x -> x <> '')) AS ntok
-              FROM d)
-        SELECT split, count(*) AS n_docs, cast(sum(ntok) as bigint) AS n_tokens
-        FROM s GROUP BY split
-    """,
-    "corpus_blocklist": """
-        SELECT source, count(*) AS n_docs FROM documents
-        WHERE source NOT IN ('src1', 'src3') GROUP BY source
-    """,
-    "events_daily_active": """
-        SELECT strftime(make_timestamp(epoch_us(ts)), '%Y-%m-%d') AS day,
-               count(DISTINCT user_id) AS dau, count(*) AS n_events
-        FROM events GROUP BY 1
-    """,
-    # replay of q_cf_join's two mutation logs: LWW per CF, then the join
-    "cf_join": """
-        WITH ja(key, "column", value, ts) AS (VALUES
-          ('u0','name','n0',100),('u0','age','20',100),
-          ('u1','name','n1',100),('u1','age','21',100),
-          ('u2','name','n2',100),('u2','age','22',100),
-          ('u3','name','n3',100),('u3','age','23',100),
-          ('u4','name','n4',100),('u4','age','24',100),
-          ('u5','name','n5',100),('u5','age','25',100),
-          ('u6','name','n6',100),('u6','age','26',100),
-          ('u7','name','n7',100),('u7','age','27',100),
-          ('u3','name','renamed',200),
-          ('only_a','name','solo',100)),
-        jb(key, "column", value, ts) AS (VALUES
-          ('u0','name','m0',100),('u0','city','c0',100),
-          ('u1','name','m1',100),('u1','city','c1',100),
-          ('u2','name','m2',100),('u2','city','c2',100),
-          ('u3','name','m3',100),('u3','city','c3',100),
-          ('u4','name','m4',100),('u4','city','c4',100)),
-        la AS (SELECT key, "column", value AS value_a, ts AS ts_a FROM (
-                 SELECT *, row_number() OVER (
-                   PARTITION BY key, "column" ORDER BY ts DESC, value DESC) AS rn
-                 FROM ja) WHERE rn = 1),
-        lb AS (SELECT key, "column", value AS value_b, ts AS ts_b FROM (
-                 SELECT *, row_number() OVER (
-                   PARTITION BY key, "column" ORDER BY ts DESC, value DESC) AS rn
-                 FROM jb) WHERE rn = 1)
-        SELECT la.key, la."column", value_a, cast(ts_a as bigint) AS ts_a,
-               value_b, cast(ts_b as bigint) AS ts_b
-        FROM la JOIN lb ON la.key = lb.key AND la."column" = lb."column"
-    """,
-    # sliding windows: each event belongs to the 2 hour-aligned 2h windows covering it
-    "events_sliding": """
-        WITH e AS (SELECT epoch_us(ts) AS us, event_type FROM events),
-        slots AS (SELECT us, event_type,
-                         unnest([ (us // 3600000000) * 3600000000,
-                                  (us // 3600000000) * 3600000000 - 3600000000 ]) AS w_start
-                  FROM e)
-        SELECT strftime(make_timestamp(w_start), '%Y-%m-%d %H:%M:%S') AS window_start,
-               event_type, count(*) AS n
-        FROM slots GROUP BY 1, 2
-    """,
-    "events_pivot": """
-        SELECT strftime(make_timestamp(epoch_us(ts)), '%Y-%m-%d') AS day,
-               cast(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) as bigint) AS n_click,
-               cast(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) as bigint) AS n_purchase,
-               cast(sum(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) as bigint) AS n_signup,
-               cast(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) as bigint) AS n_view,
-               cast(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) as bigint) AS n_error
-        FROM events GROUP BY 1
-    """,
-    # batch twin of the stream-stream interval join
-    "events_interval_join": """
-        WITH e AS (SELECT user_id, epoch_us(ts) AS us, event_type FROM events),
-        v AS (SELECT user_id, us FROM e WHERE event_type = 'view'),
-        c AS (SELECT user_id, us FROM e WHERE event_type = 'click')
-        SELECT cast(v.user_id % 100 as int) AS user_bucket, count(*) AS n_pairs
-        FROM v JOIN c ON v.user_id = c.user_id
-                     AND c.us >= v.us AND c.us <= v.us + 3600000000
-        GROUP BY 1
-    """,
-    # the salted two-phase plan must be result-identical to the plain agg
-    "events_salted_agg": """
-        SELECT event_type, count(*) AS n,
-               cast(sum(cast(value as decimal(18,4))) as double) AS total,
-               cast(max(cast(value as decimal(18,4))) as double) AS max_value
-        FROM events GROUP BY event_type
-    """,
-    # the replicate-salt join must be result-identical to the plain join
-    "events_salted_join": """
-        SELECT event_type, o_orderstatus, count(*) AS n_matches
-        FROM events JOIN orders ON user_id = o_custkey
-        GROUP BY event_type, o_orderstatus
-    """,
-    "latest_order_per_customer": """
-        SELECT o_custkey, o_orderkey AS latest_orderkey,
-               strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS latest_orderdate
-        FROM (SELECT *, row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
-              FROM orders) t
-        WHERE rn = 1
-    """,
-    "status_priority_matrix": """
-        SELECT o_orderstatus, o_orderpriority, count(*) AS n,
-               cast(sum(cast(o_totalprice as decimal(18,4))) as double) / count(*) AS avg_price
-        FROM orders GROUP BY 1, 2
-    """,
-    "dedup_exact": """
-        SELECT md5(text) AS content_hash, min(doc_id) AS keeper_id, count(*) AS n_docs
-        FROM documents GROUP BY 1
-    """,
-    # same planted 3-line corpus as q_dedup_lines (_multiline_corpus);
-    # winner of each distinct line = smallest (doc, pos); short lines
-    # (< 5 chars, e.g. the empty tail of short docs) are kept everywhere
-    "dedup_lines": f"""
-        WITH corpus AS (SELECT doc_id,
-                               substr(text, 1, 80) || chr(10) || '{_BOILER_LINE}'
-                               || chr(10) || substr(text, 81) AS text
-                        FROM documents),
-        parts AS (SELECT doc_id, string_split(text, chr(10)) AS p FROM corpus),
-        lines AS (SELECT doc_id AS id, struct_extract(r, 'pos') AS pos,
-                         struct_extract(r, 'line') AS line
-                  FROM (SELECT doc_id,
-                               unnest(list_transform(generate_series(1, len(p)),
-                                      i -> {{'pos': i, 'line': p[i]}})) AS r
-                        FROM parts)),
-        ranked AS (SELECT id, pos, line,
-                          row_number() OVER (PARTITION BY line ORDER BY id, pos) AS rn,
-                          length(line) >= 5 AS elig
-                   FROM lines),
-        keep AS (SELECT id, pos, line FROM ranked WHERE NOT elig OR rn = 1)
-        SELECT id AS doc_id, string_agg(line, chr(10) ORDER BY pos) AS text
-        FROM keep GROUP BY id
-    """,
-    # exact duplicated-8-gram removal, winner = smallest (doc_id, pos);
-    # windows compared as literal token strings (space-join is injective
-    # over space-split tokens) — mirrors dedup.dedup_spans exactly
-    "dedup_spans": """
-        WITH docs AS (
-            SELECT doc_id, list_filter(string_split(coalesce(text, ''), ' '), t -> t <> '') AS toks
-            FROM documents
-        ),
-        toks AS (
-            SELECT doc_id, i AS pos, toks[i+1] AS tok
-            FROM docs, UNNEST(range(len(toks))) u(i)
-        ),
-        grams AS (
-            SELECT doc_id, i AS pos, array_to_string(toks[i+1:i+8], ' ') AS gram,
-                   doc_id * 2097152 + i AS pk
-            FROM docs, UNNEST(range(len(toks) - 8 + 1)) u(i)
-            WHERE len(toks) >= 8
-        ),
-        winners AS (SELECT gram, min(pk) AS first_pk, count(*) AS occ FROM grams GROUP BY gram),
-        cut AS (
-            SELECT DISTINCT g.doc_id, g.pos + o AS pos
-            FROM grams g JOIN winners w ON g.gram = w.gram, UNNEST(range(8)) uu(o)
-            WHERE w.occ > 1 AND g.pk <> w.first_pk
-        ),
-        kept AS (
-            SELECT t.doc_id, t.pos, t.tok
-            FROM toks t ANTI JOIN cut c ON t.doc_id = c.doc_id AND t.pos = c.pos
-        ),
-        rebuilt AS (
-            SELECT doc_id, string_agg(tok, ' ' ORDER BY pos) AS text, count(*) AS n_kept
-            FROM kept GROUP BY doc_id
-        )
-        SELECT d.doc_id,
-               coalesce(r.text, '') AS text,
-               cast(len(d.toks) as bigint) AS n_tokens,
-               cast(len(d.toks) - coalesce(r.n_kept, 0) as bigint) AS n_removed
-        FROM docs d LEFT JOIN rebuilt r ON d.doc_id = r.doc_id
-    """,
-    "corpus_overlap": """
-        WITH toks AS (SELECT doc_id AS id,
-                             list_filter(string_split(lower(text), ' '), x -> x <> '') AS t
-                      FROM documents),
-        sh AS (SELECT DISTINCT id, unnest(list_transform(generate_series(1, greatest(len(t)-2, 0)),
-                                                i -> array_to_string(t[i:i+2], ' '))) AS shingle
-               FROM toks),
-        ev AS (SELECT DISTINCT shingle FROM sh WHERE id % 50 = 0),
-        g AS (SELECT id, count(*) AS n_ngrams,
-                     sum(CASE WHEN shingle IN (SELECT shingle FROM ev) THEN 1 ELSE 0 END) AS n_hit
-              FROM sh WHERE id % 50 <> 0 GROUP BY id)
-        SELECT d.doc_id,
-               cast(coalesce(g.n_ngrams, 0) as bigint) AS n_ngrams,
-               cast(coalesce(g.n_hit, 0) as bigint) AS n_hit,
-               round(CASE WHEN coalesce(g.n_ngrams, 0) > 0
-                          THEN coalesce(g.n_hit, 0) / g.n_ngrams ELSE 0.0 END, 6) AS overlap_frac
-        FROM documents d LEFT JOIN g ON d.doc_id = g.id
-        WHERE d.doc_id % 50 <> 0
-    """,
-    "dedup_ngram_jaccard": _jaccard_oracle_sql(0.5),
-    # containment semantics (one oracle, one gate since the r11 retirement
-    # of the naive twin): the prefix-filtered plan IS the gated plan; the
-    # naive ngram_containment_pairs stays fuzz-locked equivalent in
-    # tests/test_prefix_jaccard.py
-    "dedup_prefix_containment": f"""
-        WITH {_DOC_SHINGLES},
-        sizes AS (SELECT id, count(*) AS n FROM shd GROUP BY id),
-        pairs AS (SELECT a.id AS id_src, b.id AS id_dst, count(*) AS c
-                  FROM shd a JOIN shd b ON a.shingle = b.shingle AND a.id <> b.id
-                  GROUP BY 1, 2)
-        SELECT id_src, id_dst, round(c / s.n, 6) AS containment
-        FROM pairs JOIN sizes s ON id_src = s.id
-        WHERE round(c / s.n, 6) >= 0.8
-    """,
-    # minhash: one md5 -> 31-bit base, perm p = (h*(2p+1) + p*p+7) mod 2^31-1
-    # (same arithmetic as analytics/dedup._perm_hash); min over the raw
-    # shingle stream (duplicates don't affect min)
-    "dedup_minhash_lsh": f"""
-        WITH {_DOC_SHINGLES},
-        based AS (SELECT id, ('0x' || substr(md5('mh:' || shingle), 1, 15))::bigint % 2147483647 AS h
-                  FROM sh),
-        perms AS (SELECT unnest(generate_series(0, 15)) AS p),
-        hashed AS (SELECT id, p, min((h * (2*p + 1) + p*p + 7) % 2147483647) AS mh
-                   FROM based, perms GROUP BY id, p),
-        banded AS (SELECT id, p // 4 AS band,
-                          md5(string_agg(lpad(cast(p as varchar), 2, '0') || ':' || cast(mh as varchar), ','
-                              ORDER BY lpad(cast(p as varchar), 2, '0') || ':' || cast(mh as varchar))) AS bucket
-                   FROM hashed GROUP BY id, p // 4)
-        SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        FROM banded a JOIN banded b ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id
-    """,
-    "dedup_simhash": """
-        WITH toks AS (SELECT doc_id AS id, unnest(list_filter(string_split(lower(text),' '), x -> x <> '')) AS tok
-                      FROM documents),
-        th AS (SELECT id, ('0x' || substr(md5('simhash:' || tok), 1, 15))::bigint AS h FROM toks),
-        bits AS (SELECT unnest(generate_series(0, 59)) AS bit),
-        votes AS (SELECT id, bit, sum(((h // (1::BIGINT << bit)) % 2) * 2 - 1) AS vote
-                  FROM th, bits GROUP BY id, bit)
-        SELECT id AS doc_id,
-               cast(sum(CASE WHEN vote > 0 THEN (1::BIGINT << bit) ELSE 0 END) as varchar) AS simhash
-        FROM votes GROUP BY id
-    """,
-    "dedup_embedding": """
-        WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        pert AS (
-          SELECT vec_id + 100000 AS vec_id,
-                 list_transform(generate_series(1, 64), i -> v[i] + 0.15 * r[i]) AS v
-          FROM (SELECT vec_id, v, list_concat(v[2:], v[1:1]) AS r FROM base)),
-        corpus AS (SELECT * FROM base UNION ALL SELECT * FROM pert)
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-               round(list_cosine_similarity(a.v, b.v), 6) AS cos
-        FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id
-        WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.95
-    """,
-    "dedup_embedding_exact": """
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-               round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) AS cos
-        FROM embeddings a, embeddings b
-        WHERE a.vec_id < b.vec_id
-          AND round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) >= 0.35
-    """,
-    # fixed centroids = embeddings of vec_id 0..7; argmin over the
-    # 6-rounded euclidean distance, ties -> lower centroid index
-    "cluster_assign": """
-        WITH c AS (SELECT vec_id AS cid, embedding FROM embeddings WHERE vec_id < 8),
-        d AS (SELECT e.vec_id, c.cid,
-                     round(list_distance(e.embedding::DOUBLE[], c.embedding::DOUBLE[]), 6) AS dist
-              FROM embeddings e, c),
-        r AS (SELECT vec_id, cid, dist,
-                     row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-              FROM d)
-        SELECT vec_id, cast(cid as int) AS cluster, dist FROM r WHERE rn = 1
-    """,
-    # identical IEEE-double arithmetic to quantize_embeddings: the scale
-    # is computed once (absmax/127.0), each element half-up rounded
-    "embedding_quantize": """
-        WITH m AS (SELECT vec_id, embedding,
-                          list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS absmax
-                   FROM embeddings),
-        q AS (SELECT vec_id, absmax / 127.0 AS scale,
-                     CASE WHEN absmax = 0 THEN list_transform(embedding, x -> 0)
-                          ELSE list_transform(embedding,
-                                 x -> CAST(floor(CAST(x AS DOUBLE) / (absmax / 127.0) + 0.5) AS INT))
-                     END AS qv
-              FROM m)
-        SELECT vec_id, scale,
-               cast(list_sum(qv) as bigint) AS q_sum,
-               cast(list_min(qv) as int) AS q_min,
-               cast(list_max(qv) as int) AS q_max,
-               cast(list_sum(list_transform(qv, x -> x * x)) as bigint) AS q_l2sq
-        FROM q
-    """,
-    "sim_topk": """
-        SELECT query_id, neighbor_id, cos, cast(rank as integer) AS rank FROM (
-          SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                 round(list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]), 6) AS cos,
-                 row_number() OVER (
-                   PARTITION BY q.vec_id
-                   ORDER BY round(list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]), 6) DESC,
-                            c.vec_id) AS rank
-          FROM embeddings q, embeddings c
-          WHERE q.vec_id < 5 AND c.vec_id <> q.vec_id) t
-        WHERE rank <= 5
-    """,
-    # same fixed-order linear combination as text.quality_score
-    "text_quality_score": """
-        WITH f AS (
-          SELECT doc_id, length(text) AS n_chars,
-                 len(list_filter(string_split(text, ' '), x -> x <> '')) AS n_tokens,
-                 len(regexp_extract_all(text, '[^A-Za-z0-9 ]')) AS n_punct,
-                 len(list_filter(string_split(text, ' '),
-                     x -> lower(x) IN ('the','and','of','to','a','in','is','for','with','that',
-                                       'it','on','as','at','by','an','be','this'))) AS n_stop,
-                 len(regexp_extract_all(text, '[A-Z]')) AS n_upper
-          FROM documents),
-        r AS (
-          SELECT doc_id,
-                 cast(round(round(n_punct / greatest(n_chars, 1), 6) * 1000000.0) as bigint) AS punct6,
-                 cast(round(round(n_stop / greatest(n_tokens, 1), 6) * 1000000.0) as bigint) AS stop6,
-                 cast(round(round(n_upper / greatest(n_chars, 1), 6) * 1000000.0) as bigint) AS upper6,
-                 cast(round(round((n_chars - n_tokens + 1) / greatest(n_tokens, 1), 6) * 1000000.0) as bigint) AS mtl6,
-                 cast(round(round(least(n_tokens, 500) / 500.0, 6) * 1000000.0) as bigint) AS len6
-          FROM f),
-        s AS (
-          SELECT doc_id,
-                 -10000000 + 25 * stop6 - 30 * punct6 - 15 * upper6
-                           + 8 * len6 - 1 * mtl6 AS logit_e7
-          FROM r)
-        SELECT doc_id, logit_e7, (logit_e7 > -5000000) AS keep FROM s
-    """,
-    "text_lang_id": """
-        WITH toks AS (SELECT doc_id, list_filter(string_split(lower(text), ' '), x -> x <> '') AS t FROM documents),
-        scores AS (
-          SELECT doc_id, 'en' AS lang, len(list_filter(t, x -> x IN ('the','and','of','to','a','in','is','for','with','that'))) AS score FROM toks
-          UNION ALL
-          SELECT doc_id, 'de', len(list_filter(t, x -> x IN ('der','die','das','und','ist','nicht','mit','ein','zu','von'))) FROM toks
-          UNION ALL
-          SELECT doc_id, 'fr', len(list_filter(t, x -> x IN ('le','la','les','et','est','pour','que','une','dans','avec'))) FROM toks
-          UNION ALL
-          SELECT doc_id, 'es', len(list_filter(t, x -> x IN ('el','la','los','y','es','para','que','una','en','con'))) FROM toks)
-        SELECT doc_id, lang AS lang_pred, cast(score as integer) AS lang_score FROM (
-          SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, lang DESC) AS rn FROM scores) t
-        WHERE rn = 1
-    """,
-    "text_token_stats": """
-        SELECT doc_id,
-               cast(len(list_filter(string_split(text, ' '), x -> x <> '')) as integer) AS n_tokens,
-               cast(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]')) as integer) AS n_subword
-        FROM documents
-    """,
-    "text_fingerprint": """
-        WITH toks AS (SELECT doc_id, text, list_filter(string_split(lower(text), ' '), x -> x <> '') AS t FROM documents),
-        grams AS (SELECT doc_id, text,
-                         list_transform(generate_series(1, greatest(len(t)-4, 0)),
-                                        i -> md5(array_to_string(t[i:i+4], ' '))) AS g
-                  FROM toks)
-        SELECT doc_id, CASE WHEN len(g) = 0 THEN md5(text) ELSE list_aggregate(g, 'min') END AS fingerprint
-        FROM grams
-    """,
-    "semantic_dedup": """
-        WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        pert AS (
-          SELECT vec_id + 100000 AS vec_id,
-                 list_transform(generate_series(1, 64), i -> v[i] + 0.15 * r[i]) AS v
-          FROM (SELECT vec_id, v, list_concat(v[2:], v[1:1]) AS r FROM base)),
-        corpus AS (SELECT * FROM base UNION ALL SELECT * FROM pert),
-        cents AS (
-          SELECT vec_id AS cent_id, v AS cent
-          FROM corpus ORDER BY md5(cast(vec_id as varchar)), vec_id LIMIT 16),
-        assigned AS (
-          SELECT vec_id, v, cent_id AS cluster FROM (
-            SELECT e.vec_id, e.v, c.cent_id,
-                   row_number() OVER (PARTITION BY e.vec_id
-                     ORDER BY round(list_cosine_similarity(e.v, c.cent), 6) DESC,
-                              c.cent_id) AS r
-            FROM corpus e, cents c) t
-          WHERE r = 1),
-        dropped AS (
-          SELECT DISTINCT a.vec_id
-          FROM assigned a JOIN assigned b ON a.cluster = b.cluster AND b.vec_id < a.vec_id
-          WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.95)
-        SELECT a.vec_id, cast(a.cluster as bigint) AS cluster
-        FROM assigned a
-        WHERE a.vec_id NOT IN (SELECT vec_id FROM dropped)
-    """,
-    "media_decode": """
-        WITH m AS (
-          SELECT doc_id,
-                 8 + doc_id % 9 AS w, 4 + doc_id % 5 AS h,
-                 doc_id % 256 AS r, (7 * doc_id) % 256 AS g, (13 * doc_id) % 256 AS b,
-                 50 + doc_id % 50 AS n, abs(doc_id % 1001 - 500) AS amp
-          FROM documents)
-        SELECT doc_id AS media_id,
-               cast(CASE WHEN doc_id % 2 = 0
-                         THEN 9 + length(cast(w as varchar)) + length(cast(h as varchar)) + 3 * w * h
-                         ELSE 44 + 2 * n END as bigint) AS n_bytes,
-               CASE WHEN doc_id % 2 = 0 THEN 'ppm' ELSE 'wav' END AS format,
-               cast(CASE WHEN doc_id % 2 = 0 THEN w END as integer) AS width,
-               cast(CASE WHEN doc_id % 2 = 0 THEN h END as integer) AS height,
-               cast(CASE WHEN doc_id % 2 = 0 THEN 3 ELSE 1 END as integer) AS channels,
-               cast(CASE WHEN doc_id % 2 = 1 THEN 8000 END as integer) AS sample_rate,
-               cast(CASE WHEN doc_id % 2 = 1 THEN n END as integer) AS n_frames,
-               round(cast(CASE WHEN doc_id % 2 = 0 THEN r END as double), 6) AS mean_r,
-               round(cast(CASE WHEN doc_id % 2 = 0 THEN g END as double), 6) AS mean_g,
-               round(cast(CASE WHEN doc_id % 2 = 0 THEN b END as double), 6) AS mean_b,
-               round(cast(CASE WHEN doc_id % 2 = 1 THEN amp END as double), 6) AS rms
-        FROM m
-    """,
-    # post-resize decode: even ids (ppm) become 4x3 constant-fill P6
-    # (header "P6\\n4 3\\n255\\n" = 11 bytes + 36 pixel bytes); odd ids
-    # (wav) pass through identical to the media_decode oracle
-    "media_resize": """
-        WITH m AS (
-          SELECT doc_id,
-                 doc_id % 256 AS r, (7 * doc_id) % 256 AS g, (13 * doc_id) % 256 AS b,
-                 50 + doc_id % 50 AS n, abs(doc_id % 1001 - 500) AS amp
-          FROM documents)
-        SELECT doc_id AS media_id,
-               cast(CASE WHEN doc_id % 2 = 0 THEN 47 ELSE 44 + 2 * n END as bigint) AS n_bytes,
-               CASE WHEN doc_id % 2 = 0 THEN 'ppm' ELSE 'wav' END AS format,
-               cast(CASE WHEN doc_id % 2 = 0 THEN 4 END as integer) AS width,
-               cast(CASE WHEN doc_id % 2 = 0 THEN 3 END as integer) AS height,
-               cast(CASE WHEN doc_id % 2 = 0 THEN 3 ELSE 1 END as integer) AS channels,
-               cast(CASE WHEN doc_id % 2 = 1 THEN 8000 END as integer) AS sample_rate,
-               cast(CASE WHEN doc_id % 2 = 1 THEN n END as integer) AS n_frames,
-               round(cast(CASE WHEN doc_id % 2 = 0 THEN r END as double), 6) AS mean_r,
-               round(cast(CASE WHEN doc_id % 2 = 0 THEN g END as double), 6) AS mean_g,
-               round(cast(CASE WHEN doc_id % 2 = 0 THEN b END as double), 6) AS mean_b,
-               round(cast(CASE WHEN doc_id % 2 = 1 THEN amp END as double), 6) AS rms
-        FROM m
-    """,
-    "text_tfidf": """
-        WITH toked AS (
-          SELECT doc_id, unnest(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS term
-          FROM documents),
-        tf AS (SELECT doc_id, term, count(*) AS tf FROM toked GROUP BY 1, 2),
-        dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-        scored AS (
-          SELECT tf.doc_id, tf.term, tf.tf, dfreq.df,
-                 round(tf.tf * ln(cast(n.n_docs as double) / dfreq.df), 6) AS tfidf
-          FROM tf JOIN dfreq USING (term) CROSS JOIN n)
-        SELECT doc_id, term, tf, df, tfidf FROM (
-          SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term) AS rk
-          FROM scored)
-        WHERE rk <= 3
-    """,
-    "corpus_sample_stratified": """
-        SELECT doc_id, lang, source
-        FROM documents
-        WHERE ('0x' || substr(md5(cast(doc_id as varchar)), 1, 15))::bigint % 1000000
-              < cast(CASE lang WHEN 'en' THEN 0.25 WHEN 'zh' THEN 0.8 WHEN 'de' THEN 1.0 ELSE 0.5 END
-                     * 1000000 AS bigint)
-    """,
-    # per-token ln(cnt/total) quantized to micro-units BEFORE the doc sum
-    # (integer-exact across engines); zero-token docs drop out
-    "text_unigram_logprob": """
-        WITH toks AS (SELECT doc_id AS id,
-                             unnest(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS tok
-                      FROM documents),
-        vocab AS (SELECT tok, count(*) AS cnt FROM toks GROUP BY tok),
-        tot AS (SELECT sum(cnt) AS total FROM vocab),
-        sv AS (SELECT tok, cast(round(ln(cnt / total) * 1000000) as bigint) AS lq
-               FROM vocab, tot)
-        SELECT id AS doc_id,
-               cast(count(*) as bigint) AS n_tokens,
-               cast(sum(lq) AS bigint) AS logprob_micro,
-               round(sum(lq) / count(*) / 1000000, 6) AS mean_logprob
-        FROM toks JOIN sv USING (tok)
-        GROUP BY id
-    """,
-    # integer-exact PageRank, 3 unrolled iterations: micro-unit ranks,
-    # 85/100 rational damping, bigint floor-div contributions — identical
-    # arithmetic to analytics.graph.pagerank (div == // on non-negatives)
-    "events_pagerank": """
-        WITH stream AS (
-            SELECT user_id, ts, event_id,
-                   cast(json_extract_string(props, '$.k') as integer) AS page
-            FROM events
-            WHERE json_extract_string(props, '$.k') IS NOT NULL
-        ),
-        pairs AS (
-            SELECT page AS src,
-                   lead(page) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-            FROM stream
-        ),
-        e0 AS (SELECT src, dst, count(*) AS w FROM pairs WHERE dst IS NOT NULL GROUP BY 1, 2),
-        outw AS (SELECT src, cast(sum(w) as bigint) AS wout FROM e0 GROUP BY 1),
-        e AS (SELECT e0.src, e0.dst, e0.w, outw.wout FROM e0 JOIN outw USING (src)),
-        nodes AS (SELECT DISTINCT src AS node FROM e0
-                  UNION SELECT DISTINCT dst AS node FROM e0),
-        it0 AS (SELECT node, cast(1000000 as bigint) AS r FROM nodes),
-        it1 AS (SELECT n.node, cast(150000 + (85 * coalesce(s.c, 0)) // 100 as bigint) AS r
-                FROM nodes n LEFT JOIN (
-                    SELECT e.dst AS node, cast(sum((p.r * e.w) // e.wout) as bigint) AS c
-                    FROM e JOIN it0 p ON e.src = p.node GROUP BY e.dst) s USING (node)),
-        it2 AS (SELECT n.node, cast(150000 + (85 * coalesce(s.c, 0)) // 100 as bigint) AS r
-                FROM nodes n LEFT JOIN (
-                    SELECT e.dst AS node, cast(sum((p.r * e.w) // e.wout) as bigint) AS c
-                    FROM e JOIN it1 p ON e.src = p.node GROUP BY e.dst) s USING (node)),
-        it3 AS (SELECT n.node, cast(150000 + (85 * coalesce(s.c, 0)) // 100 as bigint) AS r
-                FROM nodes n LEFT JOIN (
-                    SELECT e.dst AS node, cast(sum((p.r * e.w) // e.wout) as bigint) AS c
-                    FROM e JOIN it2 p ON e.src = p.node GROUP BY e.dst) s USING (node))
-        SELECT node, r AS rank_micro, round(r / 1000000.0, 6) AS "rank" FROM it3
-    """,
-    # PQ: codebook = subvector slices of vec_ids 0..7 (m=4 x 16 dims);
-    # encode argmin on round-6 list_distance, ties -> lower cid — the
-    # identical reduction as similarity.pq_encode
-    "embedding_pq_encode": """
-        WITH cb AS (
-            SELECT t.j, e.vec_id AS cid,
-                   (e.embedding::DOUBLE[])[t.j*16+1 : t.j*16+16] AS cent
-            FROM embeddings e, generate_series(0, 3) t(j)
-            WHERE e.vec_id BETWEEN 0 AND 7
-        ),
-        enc AS (
-            SELECT vec_id, j, cid AS code FROM (
-                SELECT e.vec_id, cb.j, cb.cid,
-                       row_number() OVER (PARTITION BY e.vec_id, cb.j
-                           ORDER BY round(list_distance(
-                               (e.embedding::DOUBLE[])[cb.j*16+1 : cb.j*16+16],
-                               cb.cent), 6), cb.cid) AS rn
-                FROM embeddings e, cb) WHERE rn = 1
-        )
-        SELECT vec_id,
-               cast(max(CASE WHEN j = 0 THEN code END) as int) AS code_0,
-               cast(max(CASE WHEN j = 1 THEN code END) as int) AS code_1,
-               cast(max(CASE WHEN j = 2 THEN code END) as int) AS code_2,
-               cast(max(CASE WHEN j = 3 THEN code END) as int) AS code_3,
-               cast(max(CASE WHEN j = 0 THEN code END) * 512
-                  + max(CASE WHEN j = 1 THEN code END) * 64
-                  + max(CASE WHEN j = 2 THEN code END) * 8
-                  + max(CASE WHEN j = 3 THEN code END) as int) AS codes_packed
-        FROM enc GROUP BY vec_id
-    """,
-    # ADC top-25 for vec_id 0: per-subspace LUT distance in integer
-    # micro-units (round(d * 1e6)), integer sum over m=4 subspaces
-    "sim_pq_topk": """
-        WITH cb AS (
-            SELECT t.j, e.vec_id AS cid,
-                   (e.embedding::DOUBLE[])[t.j*16+1 : t.j*16+16] AS cent
-            FROM embeddings e, generate_series(0, 3) t(j)
-            WHERE e.vec_id BETWEEN 0 AND 7
-        ),
-        enc AS (
-            SELECT vec_id, j, cid AS code FROM (
-                SELECT e.vec_id, cb.j, cb.cid,
-                       row_number() OVER (PARTITION BY e.vec_id, cb.j
-                           ORDER BY round(list_distance(
-                               (e.embedding::DOUBLE[])[cb.j*16+1 : cb.j*16+16],
-                               cb.cent), 6), cb.cid) AS rn
-                FROM embeddings e, cb) WHERE rn = 1
-        ),
-        q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0),
-        lut AS (SELECT cb.j, cb.cid,
-                       cast(round(list_distance((q.qv)[cb.j*16+1 : cb.j*16+16], cb.cent)
-                                  * 1000000) as bigint) AS dm
-                FROM cb, q),
-        dists AS (SELECT e.vec_id, cast(sum(l.dm) as bigint) AS dist_micro
-                  FROM enc e JOIN lut l ON e.j = l.j AND e.code = l.cid
-                  GROUP BY e.vec_id)
-        SELECT vec_id, dist_micro, round(dist_micro / 1000000.0, 6) AS adc_dist
-        FROM dists ORDER BY dist_micro, vec_id LIMIT 25
-    """,
-    # synchronous label propagation, 2 unrolled rounds: vote = sum of
-    # incident undirected weight per neighbor label; winner = max weight,
-    # min label — identical reduction to analytics.graph.label_propagation
-    "events_communities": """
-        WITH stream AS (
-            SELECT user_id, ts, event_id,
-                   cast(json_extract_string(props, '$.k') as integer) AS page
-            FROM events
-            WHERE json_extract_string(props, '$.k') IS NOT NULL
-        ),
-        pairs AS (
-            SELECT page AS src,
-                   lead(page) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-            FROM stream
-        ),
-        d0 AS (SELECT src AS u, dst AS v, count(*) AS w
-               FROM pairs WHERE dst IS NOT NULL GROUP BY 1, 2),
-        und AS (SELECT u, v, cast(sum(w) as bigint) AS w FROM (
-                    SELECT u, v, w FROM d0
-                    UNION ALL SELECT v AS u, u AS v, w FROM d0) GROUP BY u, v),
-        l0 AS (SELECT DISTINCT u AS node, u AS label FROM und),
-        v1 AS (SELECT e.u, l.label, cast(sum(e.w) as bigint) AS ws
-               FROM und e JOIN l0 l ON e.v = l.node GROUP BY e.u, l.label),
-        b1 AS (SELECT u, max(ws) AS best FROM v1 GROUP BY u),
-        l1 AS (SELECT v1.u AS node, min(v1.label) AS label
-               FROM v1 JOIN b1 ON v1.u = b1.u AND v1.ws = b1.best GROUP BY v1.u),
-        v2 AS (SELECT e.u, l.label, cast(sum(e.w) as bigint) AS ws
-               FROM und e JOIN l1 l ON e.v = l.node GROUP BY e.u, l.label),
-        b2 AS (SELECT u, max(ws) AS best FROM v2 GROUP BY u),
-        l2 AS (SELECT v2.u AS node, min(v2.label) AS label
-               FROM v2 JOIN b2 ON v2.u = b2.u AND v2.ws = b2.best GROUP BY v2.u)
-        SELECT node, label AS community FROM l2
-    """,
-    # integer-exact HITS, 2 unrolled iterations: each half-step sums h·w (or
-    # a·w) over edges then max-normalizes by integer division — identical
-    # arithmetic to analytics.graph.hits
-    "events_hits": """
-        WITH stream AS (
-            SELECT user_id, ts, event_id,
-                   cast(json_extract_string(props, '$.k') as integer) AS page
-            FROM events
-            WHERE json_extract_string(props, '$.k') IS NOT NULL
-        ),
-        pairs AS (
-            SELECT page AS src,
-                   lead(page) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-            FROM stream
-        ),
-        e AS (SELECT src, dst, cast(count(*) as bigint) AS w
-              FROM pairs WHERE dst IS NOT NULL GROUP BY 1, 2),
-        nodes AS (SELECT DISTINCT src AS node FROM e
-                  UNION SELECT DISTINCT dst AS node FROM e),
-        h0 AS (SELECT node, cast(1000000 as bigint) AS s FROM nodes),
-        a1r AS (SELECT n.node, cast(coalesce(x.c, 0) as bigint) AS raw
-                FROM nodes n LEFT JOIN (
-                    SELECT e.dst AS node, cast(sum(h.s * e.w) as bigint) AS c
-                    FROM e JOIN h0 h ON e.src = h.node GROUP BY e.dst) x USING (node)),
-        a1 AS (SELECT node, cast(CASE WHEN m.mx > 0 THEN (raw * 1000000) // m.mx ELSE 0 END as bigint) AS s
-               FROM a1r, (SELECT max(raw) AS mx FROM a1r) m),
-        h1r AS (SELECT n.node, cast(coalesce(x.c, 0) as bigint) AS raw
-                FROM nodes n LEFT JOIN (
-                    SELECT e.src AS node, cast(sum(a.s * e.w) as bigint) AS c
-                    FROM e JOIN a1 a ON e.dst = a.node GROUP BY e.src) x USING (node)),
-        h1 AS (SELECT node, cast(CASE WHEN m.mx > 0 THEN (raw * 1000000) // m.mx ELSE 0 END as bigint) AS s
-               FROM h1r, (SELECT max(raw) AS mx FROM h1r) m),
-        a2r AS (SELECT n.node, cast(coalesce(x.c, 0) as bigint) AS raw
-                FROM nodes n LEFT JOIN (
-                    SELECT e.dst AS node, cast(sum(h.s * e.w) as bigint) AS c
-                    FROM e JOIN h1 h ON e.src = h.node GROUP BY e.dst) x USING (node)),
-        a2 AS (SELECT node, cast(CASE WHEN m.mx > 0 THEN (raw * 1000000) // m.mx ELSE 0 END as bigint) AS s
-               FROM a2r, (SELECT max(raw) AS mx FROM a2r) m),
-        h2r AS (SELECT n.node, cast(coalesce(x.c, 0) as bigint) AS raw
-                FROM nodes n LEFT JOIN (
-                    SELECT e.src AS node, cast(sum(a.s * e.w) as bigint) AS c
-                    FROM e JOIN a2 a ON e.dst = a.node GROUP BY e.src) x USING (node)),
-        h2 AS (SELECT node, cast(CASE WHEN m.mx > 0 THEN (raw * 1000000) // m.mx ELSE 0 END as bigint) AS s
-               FROM h2r, (SELECT max(raw) AS mx FROM h2r) m)
-        SELECT n.node, h2.s AS hub_micro, a2.s AS auth_micro,
-               round(h2.s / 1000000.0, 6) AS hub,
-               round(a2.s / 1000000.0, 6) AS authority
-        FROM nodes n JOIN h2 ON n.node = h2.node JOIN a2 ON n.node = a2.node
-    """,
-    # interpolated bigram LM, λ=0.7: per-bigram ln((0.7*cb)/cp + (0.3*cc)/total)
-    # with the SAME association order as the Spark expression, micro-quantized
-    # before the per-doc sum (addition-order-exact)
-    "text_bigram_logprob": """
-        WITH docs AS (SELECT doc_id AS id,
-                             list_filter(string_split(lower(text), ' '), x -> x <> '') AS t
-                      FROM documents),
-        uni AS (SELECT tok, count(*) AS c
-                FROM (SELECT unnest(t) AS tok FROM docs) GROUP BY tok),
-        tot AS (SELECT sum(c) AS total FROM uni),
-        bi AS (SELECT id, t[i+1] AS prev, t[i+2] AS cur
-               FROM docs, UNNEST(range(len(t) - 1)) u(i)
-               WHERE len(t) >= 2),
-        bic AS (SELECT prev, cur, count(*) AS cb FROM bi GROUP BY prev, cur),
-        scored AS (SELECT b.prev, b.cur,
-                          cast(round(ln((0.7::DOUBLE * b.cb) / pu.c + (0.3::DOUBLE * cu.c) / t.total) * 1000000) as bigint) AS lq
-                   FROM bic b
-                   JOIN uni pu ON b.prev = pu.tok
-                   JOIN uni cu ON b.cur = cu.tok, tot t)
-        SELECT id AS doc_id,
-               cast(count(*) as bigint) AS n_bigrams,
-               cast(sum(lq) as bigint) AS logprob_micro,
-               round(sum(lq) / count(*) / 1000000, 6) AS mean_logprob
-        FROM bi JOIN scored USING (prev, cur)
-        GROUP BY id
-    """,
-    # keep-rate_s = min(1, w_s * T_named / T_s) from integer token sums;
-    # unnamed sources dropped and excluded from the total
-    "corpus_mixture": """
-        WITH t AS (SELECT doc_id, source,
-                          len(list_filter(string_split(text, ' '), x -> x <> '')) AS ntok
-                   FROM documents),
-        per_s AS (SELECT source, sum(ntok) AS t_s FROM t
-                  WHERE source IN ('src0', 'src1', 'src2') GROUP BY source),
-        tot AS (SELECT sum(t_s) AS t_all FROM per_s),
-        rates AS (SELECT source,
-                         cast(round(least(
-                           CASE source WHEN 'src0' THEN 0.02
-                                       WHEN 'src1' THEN 0.30
-                                       WHEN 'src2' THEN 0.10 END * t_all / t_s,
-                           1.0) * 1000000) as bigint) AS thresh
-                  FROM per_s, tot)
-        SELECT doc_id, source
-        FROM documents JOIN rates USING (source)
-        WHERE ('0x' || substr(md5(cast(doc_id as varchar)), 1, 15))::bigint % 1000000 < thresh
-    """,
-    # sawtooth sample i = ((doc_id*31 + i*411) % 2048) - 1024 over
-    # 50 + doc_id%50 frames at 8 kHz; zero crossings = sign flips with
-    # zero counted non-negative (lag over sample index)
-    "media_audio_features": """
-        WITH n AS (SELECT doc_id, 50 + doc_id % 50 AS nf FROM documents),
-        s AS (SELECT doc_id, nf, unnest(generate_series(0, nf - 1)) AS i FROM n),
-        v AS (SELECT doc_id, nf, i,
-                     ((doc_id*31 + i*411) % 2048) - 1024 AS samp
-              FROM s),
-        f AS (SELECT doc_id, nf, i, samp,
-                     CASE WHEN (samp >= 0) <> lag(samp >= 0) OVER (PARTITION BY doc_id ORDER BY i)
-                          THEN 1 ELSE 0 END AS zc
-              FROM v)
-        SELECT doc_id AS media_id,
-               cast(8000 as int) AS sample_rate,
-               cast(any_value(nf) as int) AS n_frames,
-               round(any_value(nf) * 1000.0 / 8000, 6) AS duration_ms,
-               round(sqrt(sum(samp * samp) / count(*)), 6) AS rms,
-               cast(max(abs(samp)) as int) AS peak,
-               cast(sum(zc) as int) AS n_zero_cross,
-               round(sum(samp) / count(*), 6) AS mean_amp
-        FROM f GROUP BY doc_id
-    """,
-    # video container: 2 + doc_id%4 frames, dims (8+doc_id%9, 4+doc_id%5),
-    # frame f fill color ((doc_id+17f)%256, (7doc_id+29f)%256, (13doc_id+41f)%256);
-    # constant fill -> channel means == the fill color exactly
-    "media_frame_sample": """
-        WITH n AS (SELECT doc_id, 2 + doc_id % 4 AS nf FROM documents),
-        f AS (SELECT doc_id, nf, unnest(generate_series(0, nf - 1)) AS fno FROM n)
-        SELECT doc_id AS media_id,
-               cast(fno as int) AS frame_no,
-               cast(nf as int) AS n_frames,
-               cast(8 + doc_id % 9 as int) AS width,
-               cast(4 + doc_id % 5 as int) AS height,
-               round(cast((doc_id + 17*fno) % 256 AS double), 6) AS mean_r,
-               round(cast((doc_id*7 + 29*fno) % 256 AS double), 6) AS mean_g,
-               round(cast((doc_id*13 + 41*fno) % 256 AS double), 6) AS mean_b
-        FROM f WHERE fno % 2 = 0
-    """,
-    # within-doc first-occurrence segment filter via the index lambda;
-    # list_position = first 1-based index, i is 1-based in duckdb lambdas
-    "dedup_within_doc": f"""
-        WITH corpus AS (SELECT doc_id,
-                               substr(coalesce(text, ''), 1, 80) || chr(10) || '{_BOILER_LINE}'
-                               || chr(10) || '{_BOILER_LINE}'
-                               || chr(10) || substr(coalesce(text, ''), 81) AS text
-                        FROM documents),
-        parts AS (SELECT doc_id, string_split(text, chr(10)) AS p FROM corpus),
-        dd AS (SELECT doc_id, p,
-                      list_filter(p, (x, i) -> list_position(p, x) = i) AS kept
-               FROM parts)
-        SELECT doc_id,
-               array_to_string(kept, chr(10)) AS text,
-               cast(len(p) as bigint) AS n_segments,
-               cast(len(p) - len(kept) as bigint) AS n_dropped
-        FROM dd
-    """,
-    # keep-prob = stop_hits/16 + min(n_tokens,80)/160, thresholded at the
-    # integer draw resolution (round absorbs last-ulp double noise)
-    "corpus_sample_importance": """
-        WITH t AS (SELECT doc_id, lang, source,
-                          list_filter(string_split(text, ' '), x -> x <> '') AS tk
-                   FROM documents),
-        f AS (SELECT doc_id, lang, source,
-                     cast(
-                       list_contains(list_transform(tk, x -> lower(x)), 'the')::int +
-                       list_contains(list_transform(tk, x -> lower(x)), 'be')::int +
-                       list_contains(list_transform(tk, x -> lower(x)), 'to')::int +
-                       list_contains(list_transform(tk, x -> lower(x)), 'of')::int +
-                       list_contains(list_transform(tk, x -> lower(x)), 'and')::int +
-                       list_contains(list_transform(tk, x -> lower(x)), 'that')::int +
-                       list_contains(list_transform(tk, x -> lower(x)), 'have')::int +
-                       list_contains(list_transform(tk, x -> lower(x)), 'with')::int
-                     as bigint) AS stop_hits,
-                     cast(len(tk) as bigint) AS n_tokens
-              FROM t)
-        SELECT doc_id, lang, source FROM f
-        WHERE ('0x' || substr(md5(cast(doc_id as varchar)), 1, 15))::bigint % 1000000
-              < cast(round(least(stop_hits/16.0 + least(n_tokens, 80)/160.0, 1.0) * 1000000) as bigint)
-    """,
-    # 32-token windows at stride 24; chunk i covers [i*24, i*24+32);
-    # DuckDB list slice toks[s+1 : s+32] == Spark slice(toks, s+1, 32)
-    "corpus_chunk": """
-        WITH t AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS toks
-                   FROM documents),
-        s AS (SELECT doc_id, toks, unnest(range(0, len(toks), 24)) AS start
-              FROM t WHERE len(toks) > 0)
-        SELECT doc_id, (start // 24)::bigint AS chunk_id,
-               array_to_string(toks[start+1 : start+32], ' ') AS chunk,
-               least(len(toks) - start, 32)::bigint AS n_tokens
-        FROM s
-    """,
-    # 30-minute-gap sessionization over epoch-us event times
-    "events_sessionize": """
-        WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
-        flagged AS (SELECT user_id, event_id, us,
-                           CASE WHEN lag(us) OVER w IS NULL
-                                     OR us - lag(us) OVER w > 1800000000 THEN 1 ELSE 0 END AS newf
-                    FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-        sess AS (SELECT user_id, us,
-                        cast(sum(newf) OVER (PARTITION BY user_id ORDER BY us, event_id) AS bigint) AS session_no
-                 FROM flagged)
-        SELECT user_id, session_no, count(*) AS n_events,
-               min(us) AS start_us, max(us) AS end_us,
-               (max(us) - min(us)) / 1000000 AS duration_s
-        FROM sess GROUP BY 1, 2
-    """,
-    # same lag-based session model as events_sessionize, minus the ordinal
-    # (the streaming operator emits per-session aggregates, not ids)
-    "streaming_sessions_replay": """
-        WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
-        flagged AS (SELECT user_id, event_id, us,
-                           CASE WHEN lag(us) OVER w IS NULL
-                                     OR us - lag(us) OVER w > 1800000000 THEN 1 ELSE 0 END AS newf
-                    FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-        sess AS (SELECT user_id, us,
-                        cast(sum(newf) OVER (PARTITION BY user_id ORDER BY us, event_id) AS bigint) AS session_no
-                 FROM flagged)
-        SELECT user_id, cast(count(*) as bigint) AS n_events,
-               min(us) AS start_us, max(us) AS end_us
-        FROM sess GROUP BY user_id, session_no
-    """,
-    "events_rolling": """
-        SELECT user_id, event_id, us,
-               count(*) OVER w AS n_last_hour,
-               cast(sum(cast(value AS decimal(18,4))) OVER w AS double) AS value_last_hour
-        FROM (SELECT user_id, event_id, epoch_us(ts) AS us, value FROM events)
-        WINDOW w AS (PARTITION BY user_id ORDER BY us
-                     RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-    """,
-    "orders_rollup": """
-        SELECT o_orderstatus, o_orderpriority, count(*) AS n_orders,
-               cast(sum(cast(o_totalprice AS decimal(18,4))) AS double) AS total,
-               cast(grouping(o_orderstatus, o_orderpriority) AS bigint) AS gid
-        FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-    """,
-    # as-of: newest click at-or-before each purchase per user
-    "events_asof": """
-        WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS us FROM events),
-        p AS (SELECT user_id, event_id AS purchase_id, us FROM e WHERE event_type = 'purchase'),
-        c AS (SELECT user_id, us AS click_us, max(event_id) AS click_id
-              FROM e WHERE event_type = 'click' GROUP BY 1, 2),
-        m AS (SELECT p.user_id, p.purchase_id, p.us, max(c.click_us) AS click_us
-              FROM p LEFT JOIN c ON p.user_id = c.user_id AND c.click_us <= p.us
-              GROUP BY 1, 2, 3)
-        SELECT m.user_id, m.purchase_id, m.us, m.click_us, c.click_id
-        FROM m LEFT JOIN c ON m.user_id = c.user_id AND m.click_us = c.click_us
-    """,
-    # events inside 30 one-hour noon promo windows
-    "events_range_join": """
-        WITH promos AS (
-          SELECT d AS promo_id,
-                 1704067200000000 + (d * 24 + 12) * 3600000000 AS start_us,
-                 1704067200000000 + (d * 24 + 13) * 3600000000 AS end_us
-          FROM generate_series(0, 29) AS t(d)),
-        e AS (SELECT user_id, epoch_us(ts) AS us FROM events)
-        SELECT promo_id, count(*) AS n_events, count(DISTINCT user_id) AS n_users
-        FROM e JOIN promos ON us >= start_us AND us < end_us
-        GROUP BY 1
-    """,
-    "events_funnel": """
-        WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
-        s1 AS (SELECT user_id, min(us) AS t1 FROM e WHERE event_type = 'signup' GROUP BY 1),
-        s2 AS (SELECT e.user_id, min(us) AS t2 FROM e JOIN s1 USING (user_id)
-               WHERE event_type = 'click' AND us > t1 GROUP BY 1),
-        s3 AS (SELECT e.user_id, min(us) AS t3 FROM e JOIN s2 USING (user_id)
-               WHERE event_type = 'purchase' AND us > t2 GROUP BY 1)
-        SELECT 'x1_signup' AS stage, count(*) AS n_users FROM s1
-        UNION ALL SELECT 'x2_click', count(*) FROM s2
-        UNION ALL SELECT 'x3_purchase', count(*) FROM s3
-    """,
-    "events_retention": """
-        WITH e AS (SELECT DISTINCT user_id, epoch_us(ts) // 604800000000 AS week FROM events),
-        first AS (SELECT user_id, min(week) AS cohort_week FROM e GROUP BY 1)
-        SELECT cohort_week, week - cohort_week AS week_offset,
-               count(DISTINCT user_id) AS n_users
-        FROM e JOIN first USING (user_id) GROUP BY 1, 2
-    """,
-    "corpus_stats": """
-        SELECT source, count(*) AS n_docs,
-               cast(sum(len(list_filter(string_split(text, ' '), x -> x <> ''))) AS bigint) AS n_tokens,
-               min(n_chars) AS min_chars, max(n_chars) AS max_chars,
-               round(sum(n_chars) / count(*), 6) AS avg_chars
-        FROM documents GROUP BY 1
-    """,
-    # token-budget mixing: keep docs (in md5-draw order per source) whose
-    # token span STARTS inside the stratum budget (pipeline.sample_token_budget)
-    "corpus_sample_token_budget": """
-        WITH t AS (SELECT doc_id, source,
-                          ('0x' || substr(md5(cast(doc_id as varchar)), 1, 15))::bigint AS draw,
-                          len(list_filter(string_split(text, ' '), x -> x <> '')) AS ntok
-                   FROM documents WHERE source IN ('src0', 'src1', 'src2')),
-        c AS (SELECT doc_id, source,
-                     sum(ntok) OVER (PARTITION BY source ORDER BY draw, doc_id) - ntok AS tok_start,
-                     CASE source WHEN 'src0' THEN 700 WHEN 'src1' THEN 5000 ELSE 300 END AS budget
-              FROM t)
-        SELECT doc_id, source FROM c WHERE tok_start < budget
-    """,
-    # greedy contiguous packing: seq = floor(prefix-token-offset / budget)
-    # within md5-shard streams ordered by doc_id (pipeline.pack_sequences)
-    "corpus_pack_sequences": """
-        WITH t AS (SELECT doc_id,
-                          ('0x' || substr(md5(cast(doc_id as varchar)), 1, 15))::bigint % 8 AS shard,
-                          len(list_filter(string_split(text, ' '), x -> x <> '')) AS n_tokens
-                   FROM documents),
-        c AS (SELECT doc_id, shard, n_tokens,
-                     sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id) AS cum
-              FROM t)
-        SELECT doc_id, shard, cast((cum - n_tokens) // 512 AS bigint) AS seq_in_shard,
-               cast(cum - n_tokens AS bigint) AS offset, n_tokens,
-               cast(shard * 1099511627776 + (cum - n_tokens) // 512 AS bigint) AS seq_id
-        FROM c
-    """,
-    # the sharded-sink round-trip must reproduce every row plus its
-    # closed-form shard id (sources/corpus.shard_expr arithmetic)
-    "corpus_shard_roundtrip": """
-        SELECT doc_id, text, lang, n_chars,
-               ('0x' || substr(md5(cast(doc_id as varchar)), 1, 15))::bigint % 8 AS shard
-        FROM documents
-    """,
-    "corpus_sample_quota": """
-        SELECT doc_id, lang FROM (
-          SELECT doc_id, lang,
-                 row_number() OVER (
-                   PARTITION BY lang
-                   ORDER BY ('0x' || substr(md5(cast(doc_id as varchar)), 1, 15))::bigint, doc_id
-                 ) AS rk
-          FROM documents)
-        WHERE rk <= 30
-    """,
-    "media_decode_png": """
-        WITH m AS (
-          SELECT doc_id,
-                 8 + doc_id % 9 AS w, 4 + doc_id % 5 AS h,
-                 (3 * doc_id) % 256 AS r, (5 * doc_id) % 256 AS g, (11 * doc_id) % 256 AS b
-          FROM documents)
-        SELECT doc_id AS media_id,
-               cast(68 + h * (1 + 3 * w) as bigint) AS n_bytes,
-               'png' AS format,
-               cast(w as integer) AS width,
-               cast(h as integer) AS height,
-               cast(3 as integer) AS channels,
-               round(cast(r as double), 6) AS mean_r,
-               round(cast(g as double), 6) AS mean_g,
-               round(cast(b as double), 6) AS mean_b
-        FROM m
-    """,
-    # GIF is lossless: the stripe raster means are exact rational
-    # arithmetic — n_even = h*ceil(w/2) columns of c1, n_odd = h*floor(w/2)
-    # of c2; integer sums are exact in double, so mean = sum/n bit-matches
-    "media_decode_gif": """
-        WITH m AS (
-          SELECT doc_id,
-                 6 + doc_id % 9 AS w, 4 + doc_id % 5 AS h,
-                 doc_id % 256 AS r1, (3 * doc_id) % 256 AS g1, (7 * doc_id) % 256 AS b1,
-                 (11 * doc_id) % 256 AS r2, (13 * doc_id) % 256 AS g2, (17 * doc_id) % 256 AS b2
-          FROM documents),
-        c AS (SELECT *, h * ((w + 1) // 2) AS n0, h * (w // 2) AS n1, w * h AS n FROM m)
-        SELECT doc_id AS media_id,
-               'gif' AS format,
-               cast(w as integer) AS width,
-               cast(h as integer) AS height,
-               cast(3 as integer) AS channels,
-               round((n0 * r1 + n1 * r2) / cast(n as double), 6) AS mean_r,
-               round((n0 * g1 + n1 * g2) / cast(n as double), 6) AS mean_g,
-               round((n0 * b1 + n1 * b2) / cast(n as double), 6) AS mean_b
-        FROM c
-    """,
-    "media_decode_jpeg": """
-        -- replays the ONLY lossy step of the all-ones-qtable constant-fill
-        -- encode->decode chain: the JFIF color convert, in the exact
-        -- IEEE-double operand order of analytics.jpeg._rgb_to_ycbcr and
-        -- decode_jpeg_pixels (floor(x+0.5) rounding both sides)
-        WITH m AS (
-          SELECT doc_id, doc_id % 3 AS mode,
-                 8 + doc_id % 9 AS w, 4 + doc_id % 5 AS h,
-                 CAST(doc_id % 256 AS DOUBLE) AS r,
-                 CAST((doc_id * 7) % 256 AS DOUBLE) AS g,
-                 CAST((doc_id * 13) % 256 AS DOUBLE) AS b
-          FROM documents),
-        yc AS (
-          SELECT doc_id, mode, w, h, r,
-            least(255, greatest(0, floor(0.299 * r + 0.587 * g + 0.114 * b + 0.5))) AS y,
-            least(255, greatest(0, floor(128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b + 0.5))) AS cb,
-            least(255, greatest(0, floor(128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b + 0.5))) AS cr
-          FROM m)
-        SELECT doc_id AS media_id,
-               'jpeg' AS format,
-               cast(w as integer) AS width,
-               cast(h as integer) AS height,
-               cast(CASE WHEN mode = 0 THEN 1 ELSE 3 END as integer) AS channels,
-               round(CASE WHEN mode = 0 THEN r
-                     ELSE least(255, greatest(0, floor(y + 1.402 * (cr - 128) + 0.5))) END, 6) AS mean_r,
-               round(CASE WHEN mode = 0 THEN r
-                     ELSE least(255, greatest(0, floor(y - 0.344136 * (cb - 128) - 0.714136 * (cr - 128) + 0.5))) END, 6) AS mean_g,
-               round(CASE WHEN mode = 0 THEN r
-                     ELSE least(255, greatest(0, floor(y + 1.772 * (cb - 128) + 0.5))) END, 6) AS mean_b
-        FROM yc
-    """,
-    "text_repetition": """
-        WITH toks AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS t FROM documents),
-        base AS (
-          SELECT doc_id, cast(len(t) as bigint) AS n_tokens,
-                 round((len(t) - len(list_distinct(t))) / greatest(len(t), 1), 6) AS dup_token_frac
-          FROM toks),
-        tok_counts AS (
-          SELECT doc_id, g, count(*) AS c
-          FROM (SELECT doc_id, unnest(t) AS g FROM toks) GROUP BY doc_id, g),
-        tok_top AS (SELECT doc_id, round(max(c) / sum(c), 6) AS top_token_frac FROM tok_counts GROUP BY doc_id),
-        bigr AS (
-          SELECT doc_id, list_transform(generate_series(1, greatest(len(t) - 1, 0)),
-                                        i -> t[i] || ' ' || t[i + 1]) AS g
-          FROM toks),
-        big_counts AS (
-          SELECT doc_id, g2, count(*) AS c
-          FROM (SELECT doc_id, unnest(g) AS g2 FROM bigr) GROUP BY doc_id, g2),
-        big_top AS (SELECT doc_id, round(max(c) / sum(c), 6) AS top_bigram_frac FROM big_counts GROUP BY doc_id)
-        SELECT b.doc_id, b.n_tokens, b.dup_token_frac,
-               coalesce(tt.top_token_frac, 0) AS top_token_frac,
-               coalesce(bt.top_bigram_frac, 0) AS top_bigram_frac
-        FROM base b LEFT JOIN tok_top tt USING (doc_id) LEFT JOIN big_top bt USING (doc_id)
-    """,
-    "text_gopher": """
-        WITH toks AS (SELECT doc_id, text, list_filter(string_split(text, ' '), x -> x <> '') AS t FROM documents),
-        f AS (
-          SELECT doc_id,
-                 cast(len(t) as bigint) AS n_tokens,
-                 round(list_sum(list_transform(t, x -> len(x))) / greatest(len(t), 1), 6) AS mean_word_len,
-                 round(len(regexp_extract_all(text, '#|\\.\\.\\.|…')) / greatest(len(t), 1), 6) AS symbol_ratio,
-                 round(len(list_filter(t, x -> regexp_matches(x, '[A-Za-z]'))) / greatest(len(t), 1), 6) AS alpha_frac,
-                 cast(
-                   list_contains(list_transform(t, x -> lower(x)), 'the')::int +
-                   list_contains(list_transform(t, x -> lower(x)), 'be')::int +
-                   list_contains(list_transform(t, x -> lower(x)), 'to')::int +
-                   list_contains(list_transform(t, x -> lower(x)), 'of')::int +
-                   list_contains(list_transform(t, x -> lower(x)), 'and')::int +
-                   list_contains(list_transform(t, x -> lower(x)), 'that')::int +
-                   list_contains(list_transform(t, x -> lower(x)), 'have')::int +
-                   list_contains(list_transform(t, x -> lower(x)), 'with')::int
-                 as bigint) AS stop_hits
-          FROM toks)
-        SELECT *,
-               (n_tokens >= 50 AND n_tokens <= 100000
-                AND mean_word_len >= 3 AND mean_word_len <= 10
-                AND symbol_ratio < 0.1 AND alpha_frac > 0.8
-                AND stop_hits >= 2) AS gopher_pass
-        FROM f
-    """,
-    "text_pii_scrub": """
-        WITH injected AS (
-          SELECT doc_id,
-                 text
-                 || CASE WHEN doc_id % 7 = 0
-                         THEN ' contact user' || cast(doc_id as varchar) || '@example.com now'
-                         ELSE '' END
-                 || CASE WHEN doc_id % 11 = 0
-                         THEN ' call 555-' || lpad(cast(doc_id % 1000 as varchar), 3, '0') || '-0199 ok'
-                         ELSE '' END AS text
-          FROM documents)
-        SELECT doc_id,
-               cast(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}')) as bigint) AS n_emails,
-               cast(len(regexp_extract_all(text, '[0-9]{3}-[0-9]{3}-[0-9]{4}')) as bigint) AS n_phones,
-               regexp_replace(
-                 regexp_replace(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-                 '[0-9]{3}-[0-9]{3}-[0-9]{4}', '<PHONE>', 'g') AS scrubbed
-        FROM injected
-    """,
-}
-
-# transitive closure over the minhash candidate pairs (same pairs CTE as
-# dedup_minhash_lsh, then 8 fixed min-label rounds)
-ORACLES["dedup_groups_star"] = "WITH " + _min_label_closure_sql(ORACLES["dedup_minhash_lsh"])
-# prefix filtering is lossless (see q_dedup_prefix_jaccard): the gate runs
-# the PPJoin plan against the naive all-pairs oracle at the operator's
-# home threshold (0.8) and must agree exactly
-ORACLES["dedup_prefix_jaccard"] = _jaccard_oracle_sql(0.8)
-# the directed twin shares dedup_containment's oracle outright (same
-# threshold): losslessness means the two gates must produce the same rows
-ORACLES["tpch_q12ish"] = """
-    SELECT l_returnflag AS return_flag,
-           cast(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) as bigint)
-               AS high_line_count,
-           cast(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 0 ELSE 1 END) as bigint)
-               AS low_line_count
-    FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    WHERE l_shipdate >= timestamp '1996-01-01 00:00:00'
-      AND l_shipdate <  timestamp '1997-01-01 00:00:00'
-    GROUP BY 1 ORDER BY 1
-"""
-# Exact replay of the micro-batch watermark contract (see
-# q_streaming_watermark_replay): batch b = user_id % 4; the late filter
-# of batch b uses cummax(batch max event time over 0..b-2) − 1h (the
-# one-batch lag, NULL for b <= 1 ⇒ no drops); drop iff window END <=
-# that watermark; append-emit iff window end <= global max − 1h. All
-# boundaries inclusive, pinned by tests/test_streaming_watermark.py.
-ORACLES["streaming_watermark_replay"] = """
-    WITH e AS (SELECT epoch_us(ts) AS tsu, event_type, value,
-                      ((coalesce(user_id, 0) % 4) + 4) % 4 AS b
-               FROM events),
-    -- all four staged batch slots, even data-empty ones: an empty file
-    -- still runs as a micro-batch and occupies a slot in the one-batch
-    -- watermark lag, so the ROWS frame below must count batch NUMBERS,
-    -- not just batches that happen to hold rows (max ignores the NULLs)
-    slots AS (SELECT unnest(generate_series(0, 3)) AS b),
-    bm AS (SELECT s.b, max(e.tsu) AS mx
-           FROM slots s LEFT JOIN e ON e.b = s.b GROUP BY s.b),
-    wm AS (SELECT b,
-                  max(mx) OVER (ORDER BY b
-                                ROWS BETWEEN UNBOUNDED PRECEDING AND 2 PRECEDING)
-                      - 3600000000 AS fwm
-           FROM bm),
-    kept AS (SELECT e.tsu, e.event_type, e.value
-             FROM e JOIN wm USING (b)
-             WHERE wm.fwm IS NULL
-                OR ((e.tsu // 3600000000) + 1) * 3600000000 > wm.fwm),
-    fin AS (SELECT max(tsu) - 3600000000 AS w FROM e),
-    agg AS (SELECT (tsu // 3600000000) * 3600000000 AS ws, event_type,
-                   cast(count(*) as bigint) AS n,
-                   cast(sum(cast(value as decimal(18,4))) as double) AS total
-            FROM kept GROUP BY 1, 2)
-    SELECT strftime(make_timestamp(ws), '%Y-%m-%d %H:%M:%S') AS window_start,
-           event_type, n, total
-    FROM agg, fin WHERE ws + 3600000000 <= fin.w
-"""
-# identical md5 counter grid as sketches.cm_sketch (the minhash '0x'||
-# substr(md5...) bigint idiom); min over depth rows per item, then the
-# same deterministic top-5 rank as events_heavy_hitters
-ORACLES["events_heavy_hitters_cm"] = """
-    WITH ev AS (SELECT event_type, user_id FROM events WHERE user_id IS NOT NULL),
-    ds AS (SELECT unnest(generate_series(0, 3)) AS d),
-    hashed AS (SELECT event_type, user_id, d,
-                      ('0x' || substr(md5('cm:' || d || ':' || user_id), 1, 15))::bigint % 256 AS w
-               FROM ev, ds),
-    counters AS (SELECT event_type, d, w, cast(count(*) as bigint) AS c
-                 FROM hashed GROUP BY 1, 2, 3),
-    items AS (SELECT DISTINCT event_type, user_id FROM ev),
-    est AS (SELECT i.event_type, i.user_id, min(c.c) AS est
-            FROM items i
-            JOIN ds ON true
-            JOIN counters c
-              ON c.event_type = i.event_type AND c.d = ds.d
-             AND c.w = ('0x' || substr(md5('cm:' || ds.d || ':' || i.user_id), 1, 15))::bigint % 256
-            GROUP BY 1, 2)
-    SELECT event_type, user_id, est, cast(rk as int) AS rk FROM (
-      SELECT event_type, user_id, est,
-             row_number() OVER (PARTITION BY event_type
-                                ORDER BY est DESC, user_id) AS rk
-      FROM est) t
-    WHERE rk <= 5
-"""
-# order filter on the JOIN side (not post-join WHERE): customers whose
-# only orders are 5-LOW must still appear in the c_count = 0 bucket
-ORACLES["tpch_q13ish"] = """
-    WITH co AS (
-        SELECT c_custkey, count(o_orderkey) AS c_count
-        FROM customer LEFT JOIN orders
-          ON c_custkey = o_custkey AND o_orderpriority <> '5-LOW'
-        GROUP BY c_custkey)
-    SELECT cast(c_count as bigint) AS c_count,
-           cast(count(*) as bigint) AS custdist
-    FROM co GROUP BY c_count
-    ORDER BY custdist DESC, c_count DESC
-"""
-# sim_ann_lsh_exact gate RETIRED round 13 (r12 verdict ENDORSED; funds
-# corpus_prepare_crawl). Its oracle string was byte-identical to
-# ORACLES["sim_topk"]; full-row equality of the planes=0 LSH path to
-# cosine brute force stays pinned corpus-wide by
-# tests/test_analytics.py::test_lsh_exact_gate_pin_equals_cosine_topk.
-ORACLES["prepare_corpus_full"] = _prepare_corpus_full_oracle()
-ORACLES["text_bpe_encode"] = _bpe_encode_oracle()
-ORACLES["text_bpe_train"] = _bpe_train_oracle()
-ORACLES["embedding_project"] = _embedding_project_oracle()
-ORACLES["cluster_kmeans_exact"] = _kmeans_exact_oracle()
-# inertia aggregates the SAME unrolled Lloyd replay: per-row micro-quantized
-# squared distance, then an exact bigint sum per cluster
-ORACLES["cluster_inertia"] = f"""
-    SELECT cast(cluster as int) AS cluster, count(*) AS n_vecs,
-           cast(sum(cast(round(dist * dist * 1000000) as bigint)) as bigint) AS inertia_micro
-    FROM ({_kmeans_exact_oracle()}) GROUP BY cluster
-"""
-ORACLES["tpch_q10ish"] = """
-    SELECT c_custkey, c_name, n_name,
-           cast(sum(cast(round(l_extendedprice * (1 - l_discount), 4) as decimal(18,4))) as double) AS revenue
-    FROM lineitem
-    JOIN orders   ON l_orderkey = o_orderkey
-    JOIN customer ON o_custkey = c_custkey
-    JOIN nation   ON c_nationkey = n_nationkey
-    WHERE l_returnflag = 'R'
-      AND o_orderdate >= timestamp '1996-07-01 00:00:00'
-      AND o_orderdate <  timestamp '1996-10-01 00:00:00'
-    GROUP BY c_custkey, c_name, n_name
-    ORDER BY revenue DESC, c_custkey LIMIT 20
-"""
-# the streaming replay fixpoint IS the batch LWW view — same oracle model
-ORACLES["streaming_lww_replay"] = ORACLES["cass_lww_events"]
-# the symmetric-hash stream-stream join emits each qualifying pair exactly
-# once whatever the micro-batch split — same oracle model as the batch join
-ORACLES["streaming_interval_join_replay"] = ORACLES["events_interval_join"]
-# the join-based interleave computes the SAME closed-form positions as the
-# literal fold — one oracle, two physical paths
-# streaming min/count dedup state converges to the batch hash aggregate
-ORACLES["streaming_dedup_replay"] = """
-    SELECT md5(text) AS content_hash,
-           min(doc_id) AS keeper_id,
-           count(*) AS n_copies
-    FROM documents GROUP BY md5(text)
-"""
-ORACLES["events_heavy_hitters"] = """
-    SELECT event_type, user_id, cnt, cast(rk as int) AS rk FROM (
-      SELECT event_type, user_id, count(*) AS cnt,
-             row_number() OVER (PARTITION BY event_type
-                                ORDER BY count(*) DESC, user_id) AS rk
-      FROM events WHERE user_id IS NOT NULL
-      GROUP BY event_type, user_id) t
-    WHERE rk <= 5
-"""
-ORACLES["events_gap_fill"] = """
-    WITH d AS (SELECT user_id, (epoch_us(ts) // 1000000) // 86400 AS day_idx
-               FROM events),
-    cells AS (SELECT user_id, day_idx, count(*) AS n FROM d GROUP BY 1, 2),
-    span AS (SELECT user_id, min(day_idx) AS lo, max(day_idx) AS hi FROM d GROUP BY 1),
-    grid AS (SELECT user_id, unnest(generate_series(lo, hi)) AS day_idx FROM span)
-    SELECT g.user_id, g.day_idx, cast(coalesce(c.n, 0) as bigint) AS n_events
-    FROM grid g LEFT JOIN cells c USING (user_id, day_idx)
-"""
-# naive a<b<c triangle listing — must agree exactly with the degree-ordered
-# orientation the engine runs (both enumerate each triangle once)
-ORACLES["events_triangles"] = """
-    WITH stream AS (
-        SELECT user_id, ts, event_id,
-               cast(json_extract_string(props, '$.k') as integer) AS page
-        FROM events
-        WHERE json_extract_string(props, '$.k') IS NOT NULL
-    ),
-    pairs AS (
-        SELECT page AS src,
-               lead(page) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-        FROM stream
-    ),
-    ed AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-           FROM pairs WHERE dst IS NOT NULL AND src <> dst),
-    tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
-            FROM ed e1 JOIN ed e2 ON e1.b = e2.a
-                       JOIN ed e3 ON e3.a = e1.a AND e3.b = e2.b),
-    corners AS (SELECT x AS page FROM tri
-                UNION ALL SELECT y FROM tri
-                UNION ALL SELECT z FROM tri),
-    nodes AS (SELECT a AS page FROM ed UNION SELECT b AS page FROM ed)
-    SELECT n.page, cast(coalesce(c.cnt, 0) as bigint) AS n_triangles
-    FROM nodes n LEFT JOIN (SELECT page, count(*) AS cnt FROM corners GROUP BY 1) c
-    USING (page)
-"""
-# same per-term micro-quantization before the sum as the engine:
-# round(c*ln(c)*1e6) per distinct char, bigint-summed (associative).
-# The char class spells out the line-terminator exclusions — a bare '.'
-# differs between Java regex (excludes \\r, U+0085, U+2028, U+2029) and
-# RE2 (excludes only \\n); RE2 reads the backslash escapes below itself
-# (DuckDB standard strings don't process them)
-ORACLES["text_char_entropy"] = """
-    WITH ch AS (SELECT doc_id,
-                       unnest(regexp_extract_all(text, '[^\\n\\r\\x{0085}\\x{2028}\\x{2029}]')) AS ch
-                FROM documents),
-    cnt AS (SELECT doc_id, ch, count(*) AS c FROM ch GROUP BY 1, 2),
-    per AS (SELECT doc_id, cast(sum(c) as bigint) AS n_chars_counted,
-                   cast(sum(cast(round(c * ln(c) * 1000000, 0) as bigint)) as bigint)
-                       AS sum_clnc_micro
-            FROM cnt GROUP BY doc_id)
-    SELECT doc_id, n_chars_counted, sum_clnc_micro,
-           round(ln(n_chars_counted) - sum_clnc_micro / n_chars_counted / 1000000.0, 6)
-               AS entropy
-    FROM per
-"""
-ORACLES["sim_range_search"] = """
-    SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
-           round(list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]), 6) AS cos
-    FROM embeddings q, embeddings c
-    WHERE q.vec_id < 5 AND c.vec_id <> q.vec_id
-      AND round(list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]), 6) >= 0.2
-"""
-# the streaming complete-mode counts converge to the batch frequency
-# table; the same deterministic top-5 rank applies to both
-ORACLES["streaming_heavy_hitters_replay"] = """
-    SELECT event_type, user_id, cnt, cast(rk as int) AS rk FROM (
-      SELECT event_type, user_id, count(*) AS cnt,
-             row_number() OVER (PARTITION BY event_type
-                                ORDER BY count(*) DESC, user_id) AS rk
-      FROM events WHERE user_id IS NOT NULL
-      GROUP BY event_type, user_id) t
-    WHERE rk <= 5
-"""
-ORACLES["dedup_incremental"] = """
-    WITH batch AS (
-        SELECT doc_id, text FROM documents
-        UNION ALL
-        SELECT doc_id + 100000 AS doc_id, text FROM documents WHERE doc_id < 50),
-    ref_hashes AS (SELECT DISTINCT md5(text) AS content_hash
-                   FROM documents WHERE doc_id % 5 = 0),
-    fresh AS (SELECT b.doc_id, md5(b.text) AS content_hash FROM batch b
-              -- NOT EXISTS, not NOT IN: left_anti keeps NULL-keyed rows
-              -- (NULL never equi-matches) while NOT IN would go NULL and
-              -- drop them -- and one NULL reference hash would empty the
-              -- whole batch. NOT EXISTS matches Spark's semantics exactly.
-              WHERE NOT EXISTS (SELECT 1 FROM ref_hashes r
-                                WHERE r.content_hash = md5(b.text))),
-    keep AS (SELECT min(doc_id) AS doc_id FROM fresh GROUP BY content_hash)
-    SELECT f.doc_id, f.content_hash FROM fresh f
-    WHERE f.doc_id IN (SELECT doc_id FROM keep)
-"""
-ORACLES["events_quantiles"] = """
-    SELECT event_type,
-           round(quantile_cont(value, 0.5), 4) AS p50,
-           round(quantile_cont(value, 0.9), 4) AS p90,
-           round(quantile_cont(value, 0.99), 4) AS p99
-    FROM events GROUP BY 1
-"""
-ORACLES["tpch_q14ish"] = """
-    WITH j AS (
-        SELECT p_type,
-               cast(round(l_extendedprice * (1 - l_discount), 4) as decimal(18,4)) AS rev
-        FROM lineitem JOIN part ON l_partkey = p_partkey
-        WHERE l_shipdate >= timestamp '1996-03-01 00:00:00'
-          AND l_shipdate <  timestamp '1996-04-01 00:00:00')
-    SELECT cast(sum(CASE WHEN p_type = 'ECONOMY' THEN rev ELSE cast(0 as decimal(18,4)) END) as double) AS promo_revenue,
-           cast(sum(rev) as double) AS total_revenue,
-           round(cast(sum(CASE WHEN p_type = 'ECONOMY' THEN rev ELSE cast(0 as decimal(18,4)) END) as double)
-                 / cast(sum(rev) as double) * 100, 4) AS promo_pct
-    FROM j
-"""
-ORACLES["tpch_q18ish"] = """
-    WITH big AS (
-        SELECT l_orderkey, sum(cast(l_quantity as decimal(18,4))) AS qty
-        FROM lineitem GROUP BY l_orderkey HAVING qty > 300)
-    SELECT c_name, c_custkey, o_orderkey,
-           strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate,
-           cast(o_totalprice as double) AS o_totalprice,
-           cast(qty as double) AS total_qty
-    FROM orders JOIN big ON o_orderkey = l_orderkey
-                JOIN customer ON o_custkey = c_custkey
-    ORDER BY o_totalprice DESC, o_orderkey LIMIT 100
-"""
-
-
-def _mutual_knn_edges(spark, sf_dir):
-    """Shared gate graph for the k-core / coreness twins: edges connect
-    vectors (fixed 500-vector universe) that are mutually in each
-    other's exact top-8 cosine neighborhoods — the standard
-    density-invariant semantic graph (mutual-kNN density does not drift
-    with corpus size the way an absolute cosine threshold does). The
-    exact brute-force kNN is the small-sf baseline; production edge
-    lists come from the banded/bucketed candidate generators
-    (ann_lsh_topk / ivf buckets) and both graph ops are agnostic to the
-    edge source."""
-    from apache_cassandra_spark.analytics.similarity import cosine_topk
-
-    emb = load_table(spark, sf_dir, "embeddings").where(F.col("vec_id") < 500)
-    # the 500-vector universe arrives as ONE parquet split, which would
-    # run the entire 500x500 brute-force scoring in a single task —
-    # spread restores scan-width parallelism (r14; see cosine_topk)
-    knn = cosine_topk(
-        emb, emb, k=8, spread=spark.sparkContext.defaultParallelism
-    ).select("query_id", "neighbor_id")
-    rev = knn.select(
-        F.col("neighbor_id").alias("query_id"), F.col("query_id").alias("neighbor_id")
-    )
-    return (
-        knn.join(rev, ["query_id", "neighbor_id"], "left_semi")
-        .where(F.col("query_id") < F.col("neighbor_id"))
-        .select(F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst"))
-        # cut lineage here: the symmetrize union downstream would
-        # otherwise re-execute the all-pairs knn scoring per branch
-        .localCheckpoint(eager=True)
-    )
-
-
-def q_docs_kcore(spark, sf_dir):
-    """4-core of the mutual-kNN document-embedding graph
-    (graph.k_core, rounds=6 bounded replay): the 4-core keeps the dense
-    semantic kernels (template families, topic cores) and peels off
-    chain-connected periphery. Bounded rounds=6 replays identically in
-    the unrolled oracle CTE chain; the peel converges in <=4 rounds on
-    this graph, and peel monotonicity makes extra rounds no-ops. Graph
-    build shared with docs_coreness via _mutual_knn_edges."""
-    from apache_cassandra_spark.analytics.graph import k_core
-
-    mutual = _mutual_knn_edges(spark, sf_dir)
-    return k_core(mutual, k=4, rounds=6).select(
-        F.col("node").cast("long").alias("node"), "degree"
-    )
-
-
-def q_docs_coreness(spark, sf_dir):
-    """Full coreness decomposition of the same mutual-kNN graph
-    (graph.coreness, rounds=6 bounded replay): every node's core
-    number via PODC'11 h-index refinement — estimates start at degree,
-    each round become the h-index of the neighbors' estimates, and only
-    ever decrease. Bounded replay is the gate mode because convergence
-    is O(diameter) on the kNN periphery's chains (measured: 14+ rounds
-    at gate sf) while 6 rounds already fix the dense kernels; both
-    engines run the SAME 6 rounds so the gate is exact regardless —
-    the cluster_inertia Lloyd-unroll discipline. Integer-only
-    arithmetic, engine-exact."""
-    from apache_cassandra_spark.analytics.graph import coreness
-
-    mutual = _mutual_knn_edges(spark, sf_dir)
-    return coreness(mutual, rounds=6).select(
-        F.col("node").cast("long").alias("node"), "coreness"
-    )
-
-
-# same knn CTE discipline as sim_topk (round-6 cosine + id tie-break,
-# proven hash-exact); the peel is unrolled to the same 6 bounded rounds
-# the Spark side runs — each round = survivors with degree >= 4, then
-# edges restricted to survivors on both endpoints. Every level is AS
-# MATERIALIZED: DuckDB inlines plain CTEs, and each level references the
-# previous one three times (FROM + the two survivor joins), so an
-# inlined unroll re-expands the all-pairs knn 3^6 times and never
-# finishes — materialization makes the chain linear.
-_KCORE_PEEL = "\n".join(
-    f"""    k{r} AS MATERIALIZED (SELECT a AS node FROM e{r - 1} GROUP BY a HAVING count(*) >= 4),
-    e{r} AS MATERIALIZED (SELECT e.a, e.b FROM e{r - 1} e
-             JOIN k{r} x ON e.a = x.node JOIN k{r} y ON e.b = y.node),"""
-    for r in range(1, 7)
-)
-# shared CTE prefix for the k-core / coreness twins: the exact mutual-kNN
-# edge build, symmetrized as e0 (one row per direction)
-_MUTUAL_KNN_SQL = """
-    WITH u AS MATERIALIZED (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 500),
-    knn AS MATERIALIZED (
-        SELECT q.vec_id AS qa, c.vec_id AS qb,
-               row_number() OVER (
-                 PARTITION BY q.vec_id
-                 ORDER BY round(list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]), 6) DESC,
-                          c.vec_id) AS rk
-        FROM u q, u c WHERE c.vec_id <> q.vec_id),
-    top8 AS MATERIALIZED (SELECT qa, qb FROM knn WHERE rk <= 8),
-    mutual AS MATERIALIZED (SELECT k1.qa AS lo, k1.qb AS hi FROM top8 k1
-               JOIN top8 k2 ON k1.qa = k2.qb AND k1.qb = k2.qa
-               WHERE k1.qa < k1.qb),
-    e0 AS MATERIALIZED (SELECT lo AS a, hi AS b FROM mutual
-           UNION ALL SELECT hi AS a, lo AS b FROM mutual),"""
-
-ORACLES["docs_kcore"] = f"""{_MUTUAL_KNN_SQL}
-{_KCORE_PEEL}
-    fin AS (SELECT * FROM e6)
-    SELECT cast(a as bigint) AS node, cast(count(*) as bigint) AS degree
-    FROM fin GROUP BY a
-"""
-
-# h-index refinement unroll (graph.coreness, rounds=6): c0 = degree;
-# c{{r}}(node) = max over its adjacency, sorted by neighbor estimate
-# descending, of least(position, neighbor estimate) — the h-index.
-# Tie order among equal estimates cannot change the h-index (equal
-# values at swapped positions give the same max), but the unroll still
-# mirrors the engine's (nc DESC, b ASC) order for reviewability. Each
-# level references the previous once; AS MATERIALIZED keeps DuckDB's
-# CTE inlining from re-expanding the kNN build per level.
-_CORENESS_REFINE = "\n".join(
-    f"""    c{r} AS MATERIALIZED (
-        SELECT a AS node, cast(max(least(rn, nc)) as bigint) AS c FROM (
-            SELECT s.a, s.b, p.c AS nc,
-                   row_number() OVER (PARTITION BY s.a ORDER BY p.c DESC, s.b) AS rn
-            FROM e0 s JOIN c{r - 1} p ON s.b = p.node) t
-        GROUP BY a),"""
-    for r in range(1, 7)
-)
-ORACLES["docs_coreness"] = f"""{_MUTUAL_KNN_SQL}
-    c0 AS MATERIALIZED (SELECT a AS node, cast(count(*) as bigint) AS c
-                        FROM e0 GROUP BY a),
-{_CORENESS_REFINE}
-    fin AS (SELECT * FROM c6)
-    SELECT cast(node as bigint) AS node, c AS coreness FROM fin
-"""
-
-# A-ES weighted sampling replay: u = (60-bit id hash + 1) / 2^60, key =
-# round(ln(u)/weight * 1e9) as bigint (monotone-equivalent to u^(1/w)),
-# top-20 per source by key DESC, quantized ties by the raw draw DESC
-# (id-independent — no smallest-id bias), then id. The hash expression is
-# functions/hashing.py:uniform_hash's documented ANSI twin; 2^60 =
-# 1152921504606846976 (the % is an identity guard, 15 hex digits < 2^60,
-# kept to mirror the Spark pmod).
-ORACLES["corpus_sample_weighted"] = """
-    WITH t AS (
-        SELECT doc_id, source,
-               cast(len(list_filter(string_split(text, ' '), x -> x <> '')) as bigint) AS weight
-        FROM documents),
-    keyed AS (
-        SELECT doc_id, source, weight,
-               ('0x' || substr(md5(cast(doc_id as varchar)), 1, 15))::bigint
-                   % 1152921504606846976 AS draw,
-               cast(round(
-                   ln((('0x' || substr(md5(cast(doc_id as varchar)), 1, 15))::bigint
-                        % 1152921504606846976 + 1) / 1152921504606846976.0)
-                   / weight * 1000000000.0) as bigint) AS aes_key_nano
-        FROM t WHERE weight IS NOT NULL AND weight > 0),
-    r AS (SELECT *, row_number() OVER (PARTITION BY source
-                                       ORDER BY aes_key_nano DESC, draw DESC, doc_id) AS rk
-          FROM keyed)
-    SELECT doc_id, source, weight, aes_key_nano FROM r WHERE rk <= 20
-"""
-
-# PMI collocations replay: DuckDB zips parallel unnest()s positionally, so
-# the adjacent-pair stream is unnest(t[1:len-1]) zipped with
-# unnest(t[2:len]). N/M cast to bigint (DuckDB sum(bigint) is DECIMAL —
-# cast keeps the double math identical to Spark's long sum); the pmi
-# expression mirrors the Spark product order term for term.
-ORACLES["text_collocations"] = """
-    WITH toked AS MATERIALIZED (
-        SELECT list_filter(string_split(lower(text), ' '), x -> x <> '') AS t
-        FROM documents),
-    uc AS MATERIALIZED (
-        SELECT tok, count(*) AS c FROM (SELECT unnest(t) AS tok FROM toked)
-        GROUP BY 1),
-    bi AS MATERIALIZED (
-        SELECT unnest(t[1:len(t)-1]) AS w1, unnest(t[2:len(t)]) AS w2
-        FROM toked WHERE len(t) >= 2),
-    bc AS MATERIALIZED (SELECT w1, w2, count(*) AS cab FROM bi GROUP BY 1, 2),
-    n AS (SELECT cast(sum(c) as bigint) AS n FROM uc),
-    m AS (SELECT cast(sum(cab) as bigint) AS m FROM bc),
-    scored AS (
-        SELECT bc.w1, bc.w2, bc.cab AS n_pair,
-               cast(round(ln((bc.cab::DOUBLE * n.n * n.n)
-                             / (m.m::DOUBLE * a.c * b.c)) * 1000000) as bigint)
-                   AS pmi_micro
-        FROM bc
-        JOIN uc a ON bc.w1 = a.tok
-        JOIN uc b ON bc.w2 = b.tok
-        CROSS JOIN n CROSS JOIN m
-        WHERE bc.cab >= 5)
-    SELECT w1, w2, n_pair, pmi_micro FROM scored
-    ORDER BY pmi_micro DESC, w1, w2 LIMIT 50
-"""
-
-ORACLES["tpch_q4ish"] = """
-    SELECT o_orderpriority, cast(count(*) as bigint) AS order_count
-    FROM orders o
-    WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-      AND o_orderdate <  TIMESTAMP '1996-04-01'
-      AND EXISTS (SELECT 1 FROM lineitem l
-                  WHERE l.l_orderkey = o.o_orderkey
-                    AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
-    GROUP BY 1 ORDER BY 1
-"""
-
-# integer-cents replay of the Q22 shape: avg threshold as the exact
-# rational test cents*n > total (no distributed float sum anywhere);
-# round(c_acctbal*100) is the same one double multiply+round in both
-# engines, exact for the cents-valued source data
-ORACLES["tpch_q22ish"] = """
-    WITH c AS (SELECT c_custkey, c_mktsegment,
-                      cast(round(c_acctbal * 100) as bigint) AS bal_cents
-               FROM customer
-               WHERE c_mktsegment IN ('AUTOMOBILE', 'BUILDING', 'MACHINERY')),
-    s AS (SELECT cast(sum(bal_cents) as bigint) AS tot, count(*) AS n
-          FROM c WHERE bal_cents > 0),
-    cand AS (SELECT c.* FROM c CROSS JOIN s WHERE c.bal_cents * s.n > s.tot),
-    lapsed AS (SELECT * FROM cand
-               WHERE NOT EXISTS (SELECT 1 FROM orders o
-                                 WHERE o.o_custkey = cand.c_custkey
-                                   AND o.o_orderdate >= TIMESTAMP '1999-01-01'))
-    SELECT c_mktsegment, cast(count(*) as bigint) AS numcust,
-           cast(sum(bal_cents) as bigint) AS total_bal_cents
-    FROM lapsed GROUP BY 1 ORDER BY 1
-"""
-
-# decorrelated Q17: same brand-pruned aggregate domain, same exact
-# rational threshold 5*qty*n < sum_qty (all bigint, no division), same
-# round-4 decimal revenue sum as the green q3/q10/q14 gates
-ORACLES["tpch_q17ish"] = """
-    WITH pp AS (SELECT p_partkey, p_brand FROM part
-                WHERE p_brand IN ('Brand#3', 'Brand#13', 'Brand#23')),
-    lb AS (SELECT l.l_partkey, pp.p_brand,
-                  cast(l.l_quantity as bigint) AS qty, l.l_extendedprice
-           FROM lineitem l JOIN pp ON l.l_partkey = pp.p_partkey),
-    st AS (SELECT l_partkey, cast(sum(qty) as bigint) AS sq, count(*) AS n
-           FROM lb GROUP BY 1)
-    SELECT lb.p_brand,
-           cast(count(*) as bigint) AS n_lines,
-           cast(sum(round(lb.l_extendedprice, 4)::DECIMAL(18,4)) as double) AS revenue
-    FROM lb JOIN st ON lb.l_partkey = st.l_partkey
-    WHERE lb.qty * 5 * st.n < st.sq
-    GROUP BY 1 ORDER BY 1
-"""
-
-# Q19's OR runs verbatim — the hoisted scan envelopes on the Spark side
-# are implied conjuncts, so they change the plan, not the rows; revenue
-# is the round-4 decimal pattern (one float multiply, identical in both
-# engines)
-ORACLES["tpch_q19ish"] = """
-    SELECT p_brand, cast(count(*) as bigint) AS n_lines,
-           cast(sum(round(l_extendedprice * (1 - l_discount), 4)::DECIMAL(18,4))
-                as double) AS revenue
-    FROM lineitem JOIN part ON l_partkey = p_partkey
-    WHERE (p_brand = 'Brand#3'  AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 1 AND 15)
-       OR (p_brand = 'Brand#13' AND p_size BETWEEN 1 AND 25 AND l_quantity BETWEEN 10 AND 30)
-       OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 40 AND l_quantity BETWEEN 20 AND 45)
-    GROUP BY 1 ORDER BY 1
-"""
-
-# Q21's aggregate reformulation replayed literally: per-(order, supplier)
-# late flag, per-order (n_supp, n_late, the late supplier), qualify at
-# n_supp>=2 AND n_late=1, count orders per supplier; ties at the top-25
-# boundary broken by s_suppkey in both engines
-ORACLES["tpch_q21ish"] = """
-    WITH fo AS (SELECT o_orderkey, o_orderdate FROM orders
-                WHERE o_orderstatus = 'F'),
-    ps AS (SELECT l.l_orderkey, l.l_suppkey,
-                  max(CASE WHEN l.l_shipdate > fo.o_orderdate + INTERVAL 90 DAY
-                           THEN 1 ELSE 0 END) AS late
-           FROM lineitem l JOIN fo ON l.l_orderkey = fo.o_orderkey
-           GROUP BY 1, 2),
-    po AS (SELECT l_orderkey, count(*) AS n_supp, sum(late) AS n_late,
-                  max(CASE WHEN late = 1 THEN l_suppkey END) AS late_supp
-           FROM ps GROUP BY 1)
-    SELECT s.s_suppkey, s.s_name, cast(count(*) as bigint) AS numwait
-    FROM po JOIN supplier s ON po.late_supp = s.s_suppkey
-    WHERE po.n_supp >= 2 AND po.n_late = 1
-    GROUP BY 1, 2
-    ORDER BY numwait DESC, s_suppkey LIMIT 25
-"""
-
-# DSIR replay: same tokenization as text_collocations, same md5 bucket
-# hash as minhash/cm (non-negative, so % == pmod), both smoothed
-# distributions as bigint counts, lambda as the identical cast-first
-# fixed-order double expression, doc weight as the integer sum
-ORACLES["corpus_dsir_weights"] = """
-    WITH toked AS MATERIALIZED (
-        SELECT doc_id, list_filter(string_split(lower(text), ' '), x -> x <> '') AS t
-        FROM documents),
-    feats AS MATERIALIZED (
-        SELECT doc_id, ('0x' || substr(md5('dsir:' || f), 1, 15))::bigint % 512 AS b
-        FROM (
-            SELECT doc_id, unnest(t) AS f FROM toked
-            UNION ALL
-            SELECT doc_id, w1 || ' ' || w2 AS f
-            FROM (SELECT doc_id, unnest(t[1:len(t)-1]) AS w1, unnest(t[2:len(t)]) AS w2
-                  FROM toked WHERE len(t) >= 2)
-        )),
-    raw AS MATERIALIZED (SELECT * FROM feats WHERE doc_id % 37 <> 0),
-    tgt AS (SELECT * FROM feats WHERE doc_id % 37 = 0),
-    rb AS MATERIALIZED (SELECT b, cast(count(*) as bigint) AS cr FROM raw GROUP BY 1),
-    tb AS (SELECT b, cast(count(*) as bigint) AS ct FROM tgt GROUP BY 1),
-    rt AS (SELECT cast(sum(cr) as bigint) AS r FROM rb),
-    tt AS (SELECT cast(coalesce(sum(ct), 0) as bigint) AS t FROM tb),
-    lam AS (SELECT rb.b,
-                   cast(round(ln(((coalesce(tb.ct, 0) + 1)::DOUBLE * (rt.r + 512))
-                                 / ((rb.cr + 1)::DOUBLE * (tt.t + 512))) * 1000000)
-                        as bigint) AS lam
-            FROM rb LEFT JOIN tb ON rb.b = tb.b CROSS JOIN rt CROSS JOIN tt),
-    docb AS (SELECT doc_id, b, cast(count(*) as bigint) AS f FROM raw GROUP BY 1, 2),
-    scored AS (SELECT docb.doc_id,
-                      cast(sum(docb.f * lam.lam) as bigint) AS logw_micro,
-                      cast(sum(docb.f) as bigint) AS n_feats
-               FROM docb JOIN lam ON docb.b = lam.b GROUP BY 1)
-    SELECT d.doc_id,
-           coalesce(s.logw_micro, 0) AS logw_micro,
-           coalesce(s.n_feats, 0) AS n_feats
-    FROM (SELECT doc_id FROM documents WHERE doc_id % 37 <> 0) d
-    LEFT JOIN scored s ON d.doc_id = s.doc_id
-"""
-
-# Q15's view + scalar max replayed: same round-4 decimal revenue sum,
-# max-equality in DECIMAL (exact — the sums are integers in 1e-4
-# units), double only on the output column
-ORACLES["tpch_q15ish"] = """
-    WITH rev AS (
-        SELECT l_suppkey,
-               sum(round(l_extendedprice * (1 - l_discount), 4)::DECIMAL(18,4)) AS r
-        FROM lineitem
-        WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-          AND l_shipdate <  TIMESTAMP '1996-04-01'
-        GROUP BY 1),
-    mx AS (SELECT max(r) AS m FROM rev)
-    SELECT s.s_suppkey, s.s_name, cast(rev.r as double) AS total_rev
-    FROM rev CROSS JOIN mx
-    JOIN supplier s ON rev.l_suppkey = s.s_suppkey
-    WHERE rev.r = mx.m
-    ORDER BY s.s_suppkey
-"""
-
-# the events_triangles naive listing, extended with the simple-graph
-# degree and the same bigint micro-division the engine runs (DuckDB
-# BIGINT // and Spark div both truncate; operands non-negative)
-ORACLES["events_clustering_coeff"] = """
-    WITH stream AS (
-        SELECT user_id, ts, event_id,
-               cast(json_extract_string(props, '$.k') as integer) AS page
-        FROM events
-        WHERE json_extract_string(props, '$.k') IS NOT NULL
-    ),
-    pairs AS (
-        SELECT page AS src,
-               lead(page) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-        FROM stream
-    ),
-    ed AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-           FROM pairs WHERE dst IS NOT NULL AND src <> dst),
-    tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
-            FROM ed e1 JOIN ed e2 ON e1.b = e2.a
-                       JOIN ed e3 ON e3.a = e1.a AND e3.b = e2.b),
-    corners AS (SELECT x AS page FROM tri
-                UNION ALL SELECT y FROM tri
-                UNION ALL SELECT z FROM tri),
-    tc AS (SELECT page, count(*) AS cnt FROM corners GROUP BY 1),
-    deg AS (SELECT page, cast(count(*) as bigint) AS deg
-            FROM (SELECT a AS page FROM ed UNION ALL SELECT b FROM ed)
-            GROUP BY 1)
-    SELECT d.page, d.deg, cast(coalesce(tc.cnt, 0) as bigint) AS n_triangles,
-           cast(CASE WHEN d.deg >= 2
-                     THEN (2 * coalesce(tc.cnt, 0) * 1000000) // (d.deg * (d.deg - 1))
-                     ELSE 0 END as bigint) AS cc_micro
-    FROM deg d LEFT JOIN tc USING (page)
-"""
-
-# same primitive counting rules as the engine (space-split words,
-# [.!?]+ sentence runs floored at 1, [aeiouy]+ vowel groups), then ONE
-# identical float expression — ::DOUBLE literals because bare decimals
-# parse as DECIMAL in DuckDB (the collocations pitfall)
-ORACLES["text_readability"] = """
-    WITH c AS (SELECT doc_id,
-            cast(len(list_filter(string_split(text, ' '), x -> x <> '')) as bigint)
-                AS n_words,
-            cast(greatest(len(regexp_extract_all(text, '[.!?]+')), 1) as bigint)
-                AS n_sentences,
-            cast(len(regexp_extract_all(lower(text), '[aeiouy]+')) as bigint)
-                AS n_syllables
-        FROM documents)
-    SELECT doc_id, n_words, n_sentences, n_syllables,
-           CASE WHEN n_words > 0 THEN
-             round(206.835::DOUBLE
-                   - 1.015::DOUBLE * (n_words::DOUBLE / n_sentences::DOUBLE)
-                   - 84.6::DOUBLE * (n_syllables::DOUBLE / n_words::DOUBLE), 4)
-           END AS flesch
-    FROM c
-"""
-
-# open/close picked by arg_min/arg_max over the SAME ts·10¹⁹ + event_id
-# pack the engine orders by (HUGEINT here, decimal(38,0) there — both
-# exact integer arithmetic, same total order for tie >= 0); no float is
-# summed, so no quantization is needed anywhere
-ORACLES["events_ohlc"] = """
-    WITH k AS (SELECT user_id,
-                      epoch_ns(ts) // 86400000000000 AS day_idx,
-                      value,
-                      epoch_ns(ts)::HUGEINT * 10000000000000000000::HUGEINT
-                        + event_id::HUGEINT AS ok
-               FROM events)
-    SELECT user_id, cast(day_idx as bigint) AS day_idx,
-           arg_min(value, ok) AS open, max(value) AS high, min(value) AS low,
-           arg_max(value, ok) AS close, cast(count(*) as bigint) AS n_rows
-    FROM k GROUP BY 1, 2
-"""
-
-# Deterministic messy-URL synthesis for the domain gate: the testdata
-# documents table has no URL column, so the gate derives one per doc —
-# the SAME SQL expression string runs through Spark's F.expr and the
-# DuckDB oracle, so the input is identical by construction. The five
-# shapes exercise every canonicalization step: uppercase scheme+host, a
-# fragment, AND an all-tracker query that must collapse to no '?' at
-# all (case 0), :443 default port + unsorted params + a utm_ tracker
-# with a surviving real param (1), :80 default port with NO query at
-# all — the no-'?' extraction branch (2), a gclid tracker mixed with a
-# real param (3), and a surviving content-bearing ref param — bare ref
-# is NOT a default tracker since r10 — plus URL collisions for the
-# distinct-count (4). Cases 0 and 3 share a registrable domain through
-# different hosts (www./news.), and case 1 lands on the co.uk
-# multi-label suffix.
-_SYNTH_URL_SQL = """CASE (doc_id % 5)
-  WHEN 0 THEN 'HTTP://WWW.' || upper(source) || cast(doc_id % 7 as string)
-              || '.COM/Article' || cast(doc_id as string)
-              || '?utm_source=feed&gclid=' || cast(doc_id % 13 as string) || '#frag'
-  WHEN 1 THEN 'https://blog.' || source || cast(doc_id % 7 as string)
-              || '.co.uk:443/a/b?b=' || cast(doc_id % 3 as string) || '&a=1&utm_medium=email'
-  WHEN 2 THEN 'http://' || source || cast(doc_id % 7 as string)
-              || '.org:80/p/' || cast(doc_id % 11 as string)
-  WHEN 3 THEN 'https://news.' || source || cast(doc_id % 7 as string)
-              || '.com/x?gclid=zz&q=' || cast(doc_id % 3 as string)
-  ELSE 'http://cdn.' || source || cast(doc_id % 7 as string) || '.net/img?fbclid=1&ref=home'
-END"""
-
-
-def q_corpus_domain_stats(spark, sf_dir):
-    """Per-registrable-domain rollup of a web corpus (analytics/web.py):
-    canonicalize synthesized URLs → eTLD+1 domain → one hash aggregate
-    carrying doc count, distinct canonical URLs, quality-filter keeps and
-    the mean quality logit. The whole pre-aggregate path is one map-only
-    projection (URL keys + quality logit over one scan — no self-join)."""
-    from apache_cassandra_spark.analytics import web
-
-    docs = load_table(spark, sf_dir, "documents")
-    return web.domain_stats(docs.withColumn("url", F.expr(_SYNTH_URL_SQL)))
-
-
-def _url_keys_ctes(passthrough: str, prefix: str = "", src: str = "u0") -> str:
-    """DuckDB CTE chain mirroring web.with_url_keys step by step (anchored
-    regexes — at most one match, so DuckDB's replace-first == Spark's
-    replace-all; list_sort over ASCII params = byte order in both engines;
-    the embedded multi-label suffix subset). Expects a ``src`` CTE in scope
-    (default ``u0``) with ``url`` plus the ``passthrough`` columns; exposes
-    ``{prefix}d`` with ``passthrough, canonical_url, domain``. Shared by the
-    domain_stats and url_revisions oracles so the two canonicalization
-    replicas cannot drift; ``prefix`` renames every internal CTE so ONE
-    query can instantiate the chain twice (web_plan_frontier canonicalizes
-    candidates AND the crawled set) — defaults keep every prior oracle
-    string byte-identical. Full-input mirror (fuzz-locked cross-engine in
-    tests/test_web.py): the input is TRIMMED like F.trim in
-    canonicalize_url/extract_host, and a non-absolute URL (empty
-    scheme) passes through trimmed-but-untouched instead of fabricating
-    '://...' — exactly the Spark branch."""
-    x = prefix
-    return f"""
-    {x}p AS (SELECT {passthrough}, trim(url) AS _raw,
-            lower(regexp_extract(_raw, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-            lower(regexp_extract(_raw, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)) AS hostport,
-            regexp_extract(_raw, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^#]*)', 1) AS rest
-          FROM {src}),
-    {x}h AS (SELECT {passthrough}, _raw, scheme,
-            regexp_replace(CASE WHEN scheme = 'http' THEN regexp_replace(hostport, ':80$', '')
-                                WHEN scheme = 'https' THEN regexp_replace(hostport, ':443$', '')
-                                ELSE hostport END, '^www\\.', '') AS host,
-            CASE WHEN regexp_extract(rest, '^([^?]*)', 1) = '' THEN '/'
-                 ELSE regexp_extract(rest, '^([^?]*)', 1) END AS path,
-            regexp_extract(rest, '^[^?]*\\?(.*)', 1) AS query
-          FROM {x}p),
-    {x}q AS (SELECT *, list_sort(list_filter(string_split(query, '&'),
-            x -> NOT (x = '' OR starts_with(split_part(x, '=', 1), 'utm_')
-                      OR split_part(x, '=', 1) IN
-                         ('gclid','fbclid','msclkid','mc_eid','igshid','ref_src')))) AS kept
-          FROM {x}h),
-    {x}c AS (SELECT {passthrough}, host,
-            CASE WHEN scheme = '' THEN _raw
-                 ELSE scheme || '://' || host || path ||
-                      CASE WHEN len(kept) > 0 THEN '?' || array_to_string(kept, '&') ELSE '' END
-            END AS canonical_url
-          FROM {x}q),
-    {x}lab AS (SELECT *, string_split(host, '.') AS labels FROM {x}c),
-    {x}tk AS (SELECT *, least(CASE WHEN len(labels) >= 3
-                                     AND (labels[len(labels)-1] || '.' || labels[len(labels)]) IN
-                                         ('co.uk','org.uk','ac.uk','gov.uk','co.jp','ne.jp','or.jp',
-                                          'com.au','net.au','org.au','co.in','co.nz','co.za',
-                                          'com.br','com.cn','com.mx')
-                                THEN 3 ELSE 2 END, len(labels)) AS take
-           FROM {x}lab),
-    {x}d AS (SELECT {passthrough}, canonical_url,
-            array_to_string(labels[len(labels)-take+1:len(labels)], '.') AS domain
-          FROM {x}tk)"""
-
-
-# Mirrors web.canonicalize_url / registrable_domain / domain_stats step
-# by step: anchored regexes (at most one match, so DuckDB's
-# replace-first == Spark's replace-all), list_sort over ASCII params
-# (byte order both engines), the embedded multi-label suffix subset,
-# then the text_quality_score integer-e7 logit chain and a single
-# fixed-order double expression for the mean.
-ORACLES["corpus_domain_stats"] = f"""
-    WITH u0 AS (SELECT doc_id, text, {_SYNTH_URL_SQL} AS url FROM documents),
-    {_url_keys_ctes('doc_id, text')},
-    f AS (SELECT doc_id, domain, canonical_url, length(text) AS n_chars,
-                 len(list_filter(string_split(text, ' '), x -> x <> '')) AS n_tokens,
-                 len(regexp_extract_all(text, '[^A-Za-z0-9 ]')) AS n_punct,
-                 len(list_filter(string_split(text, ' '),
-                     x -> lower(x) IN ('the','and','of','to','a','in','is','for','with','that',
-                                       'it','on','as','at','by','an','be','this'))) AS n_stop,
-                 len(regexp_extract_all(text, '[A-Z]')) AS n_upper
-          FROM d),
-    r AS (SELECT doc_id, domain, canonical_url,
-                 cast(round(round(n_punct / greatest(n_chars, 1), 6) * 1000000.0) as bigint) AS punct6,
-                 cast(round(round(n_stop / greatest(n_tokens, 1), 6) * 1000000.0) as bigint) AS stop6,
-                 cast(round(round(n_upper / greatest(n_chars, 1), 6) * 1000000.0) as bigint) AS upper6,
-                 cast(round(round((n_chars - n_tokens + 1) / greatest(n_tokens, 1), 6) * 1000000.0) as bigint) AS mtl6,
-                 cast(round(round(least(n_tokens, 500) / 500.0, 6) * 1000000.0) as bigint) AS len6
-          FROM f),
-    s AS (SELECT doc_id, domain, canonical_url,
-                 -10000000 + 25 * stop6 - 30 * punct6 - 15 * upper6
-                           + 8 * len6 - 1 * mtl6 AS logit_e7
-          FROM r),
-    a AS (SELECT domain,
-                 count(*) AS n_docs,
-                 count(DISTINCT canonical_url) AS n_urls,
-                 cast(sum(CASE WHEN logit_e7 > -5000000 THEN 1 ELSE 0 END) as bigint) AS n_keep,
-                 cast(sum(logit_e7) as bigint) AS sum_logit_e7
-          FROM s GROUP BY 1)
-    SELECT domain, n_docs, n_urls, n_keep, sum_logit_e7,
-           round(cast(sum_logit_e7 as double) / (cast(n_docs as double) * 1e7), 6) AS mean_logit
-    FROM a ORDER BY domain
-"""
-
-
-def q_corpus_url_revisions(spark, sf_dir):
-    """Cross-crawl URL change detection (web.url_revisions): three crawl
-    snapshots are synthesized from the documents table (crawl = doc_id %
-    3; URL derived from doc_id div 3 so the SAME canonical URL recurs
-    across snapshots with differing content), then one hash aggregate on
-    (canonical_url, domain) yields per-URL crawl coverage, distinct
-    content versions, and the latest fingerprint. The re-crawl front door of an
-    incremental ingest pipeline: unchanged URLs short-circuit before any
-    dedup work."""
-    from apache_cassandra_spark.analytics import web
-
-    docs = load_table(spark, sf_dir, "documents")
-    # stage crawl + base-derived URL inputs first: the three docs of a
-    # base (doc_id div 3) share source AND base_id, so the SAME canonical
-    # URL recurs in crawls 0/1/2 with that crawl's document text
-    staged = docs.selectExpr(
-        "doc_id",
-        # every 4th base serves crawl-stable content (changed=false rows);
-        # the rest keep each crawl's own document text (changed=true)
-        "CASE WHEN (doc_id div 3) % 4 = 0"
-        " THEN concat('stable page ', cast(doc_id div 3 AS string))"
-        " ELSE text END AS text",
-        "doc_id % 3 AS crawl",
-        "doc_id div 3 AS base_id",
-        "concat('site', cast((doc_id div 3) % 40 AS string)) AS source",
-    ).select(
-        "doc_id",
-        "text",
-        "crawl",
-        F.expr(_SYNTH_URL_SQL.replace("doc_id", "base_id")).alias("url"),
-    )
-    return web.url_revisions(staged)
-
-
-# same shared canonicalization CTE chain as the domain_stats oracle; the
-# revision aggregate mirrors web.url_revisions: "latest" = max over ONE
-# 128-bit packing ordk*2^60 + fp60 (HUGEINT here, decimal(38,0) in
-# Spark — identical values, identical NULL-skip), fingerprint = 60-bit
-# md5 prefix as bigint, rendered back to 15 hex chars in both engines
-_SYNTH_URL_BASE_SQL = _SYNTH_URL_SQL.replace("doc_id", "base_id")
-ORACLES["corpus_url_revisions"] = f"""
-    WITH u0 AS (SELECT doc_id, text, crawl, {_SYNTH_URL_BASE_SQL} AS url
-                FROM (SELECT doc_id,
-                             CASE WHEN (doc_id // 3) % 4 = 0
-                                  THEN 'stable page ' || cast(doc_id // 3 AS varchar)
-                                  ELSE text END AS text,
-                             doc_id % 3 AS crawl,
-                             doc_id // 3 AS base_id,
-                             'site' || cast((doc_id // 3) % 40 AS varchar) AS source
-                      FROM documents)),
-    {_url_keys_ctes('doc_id, text, crawl')},
-    r AS (SELECT canonical_url, domain, crawl,
-                 crawl * 1099511627776 + doc_id AS ordk,
-                 ('0x' || substr(md5(text), 1, 15))::BIGINT AS fp60
-          FROM d)
-    SELECT canonical_url,
-           domain,
-           count(DISTINCT crawl) AS n_crawls,
-           count(DISTINCT fp60) AS n_versions,
-           (count(DISTINCT fp60) > 1) AS changed,
-           min(crawl) AS first_crawl,
-           max(crawl) AS last_crawl,
-           lpad(lower(to_hex(cast(
-               max(ordk::HUGEINT * 1152921504606846976::HUGEINT + fp60)
-               % 1152921504606846976::HUGEINT AS BIGINT))), 15, '0') AS latest_fp
-    FROM r GROUP BY 1, 2
-"""
-
-
-# Deterministic messy-HTML synthesis for the markup gates (documents has
-# no html column — same trick as _SYNTH_URL_SQL: ONE SQL expression
-# string evaluated by Spark's F.expr AND the DuckDB oracle, so the input
-# is identical by construction; double-quoted attributes only, because a
-# single quote cannot sit inside a portable single-quoted SQL literal).
-# Adversarial content: a <script> carrying a quoted decoy anchor (must
-# NOT count as a link and must vanish from clean_text), a commented-out
-# anchor (likewise), a <style> block, an entity in the <title>, a
-# literal 1 &lt; 2 and a double-escape &amp;nbsp; in the body (decode
-# ordering), then four real anchors — absolute (uppercase scheme/host +
-# default port), protocol-relative (inherits the page scheme),
-# host-relative (always an intra-domain edge → outlink_graph drops it),
-# and path-relative (resolves to NULL by contract). Even doc_ids add a
-# fifth anchor: a second absolute link to the SAME partner domain via a
-# news. subdomain (n_links > n_pages variety on the edge aggregate).
-_SYNTH_HTML_SQL = """CASE WHEN doc_id % 7 = 0 THEN '<html lang="PT-br">' ELSE '<html lang="en">' END
- || '<head><title> Doc ' || cast(doc_id as string) || ' &amp; ' || source || ' </title>'
- || '<style>body { color: red }</style></head><body>'
- || CASE WHEN doc_id % 3 = 0 THEN '<script type="text/javascript">var lt = 1 < 2; document.write("<a href="decoy">evil</a>");</script>' ELSE '' END
- || '<!-- <a href="http://ghost.example/g">ghost</a> -->'
- || '<p>' || text || ' 1 &lt; 2 &amp;nbsp;</p>'
- || '<a href="HTTPS://WWW.Partner' || cast(doc_id % 5 as string) || '.COM:443/p/' || cast(doc_id % 11 as string) || '">ext</a>'
- || '<a href="//cdn.media' || cast(doc_id % 3 as string) || '.co.uk/lib.js">cdn</a>'
- || '<a href="/nav">nav</a>'
- || '<a href="rel/next.html">rel</a>'
- || CASE WHEN doc_id % 2 = 0 THEN '<a href="http://news.partner' || cast(doc_id % 5 as string) || '.com/q">news</a>' ELSE '' END
- || '</body></html>'"""
-
-#: DuckDB mirror of html.strip_noncontent — script/style/comment removal
-#: (the 'g' flag is required: DuckDB regexp_replace is first-match-only
-#: by default where Spark replaces all)
-_SQL_STRIP_NONCONTENT = (
-    "regexp_replace(regexp_replace(regexp_replace(html,"
-    " '(?is)<script\\b[^>]*>.*?</script>', ' ', 'g'),"
-    " '(?is)<style\\b[^>]*>.*?</style>', ' ', 'g'),"
-    " '(?s)<!--.*?-->', ' ', 'g')"
-)
-
-#: DuckDB mirrors of html's quote-aware link extraction: anchor OPEN
-#: tags / whole elements, then a per-element href parse (double-quoted
-#: form wins, then single-quoted, else '' — html._href_of)
-_SQL_A_TAG_RE = "'(?i)<a\\b[^>]*>'"
-_SQL_ANCHOR_ELEM_RE = "'(?is)<a\\b[^>]*[\\s\"'']href\\s*=[^>]*>.*?</a>'"
-_SQL_ANCHOR_BODY_RE = "'(?is)<a\\b[^>]*>(.*)</a>'"
-_SQL_HREF_DQ = "'(?i)[\\s\"'']href\\s*=\\s*\"([^\"]*)\"'"
-_SQL_HREF_SQ = "'(?i)[\\s\"'']href\\s*=\\s*''([^'']*)'''"
-
-
-def _sql_href_of(tag_expr: str) -> str:
-    """CASE mirror of html._href_of over one tag/element string."""
-    return (
-        f"CASE WHEN regexp_matches({tag_expr}, {_SQL_HREF_DQ}) "
-        f"THEN regexp_extract({tag_expr}, {_SQL_HREF_DQ}, 1) "
-        f"WHEN regexp_matches({tag_expr}, {_SQL_HREF_SQ}) "
-        f"THEN regexp_extract({tag_expr}, {_SQL_HREF_SQ}, 1) "
-        f"ELSE '' END"
-    )
-
-
-#: list of href values per document (html.extract_links mirror)
-_SQL_HREF_LIST = (
-    "list_filter(list_transform(regexp_extract_all(content, "
-    + _SQL_A_TAG_RE
-    + "), t -> "
-    + _sql_href_of("t")
-    + "), x -> x <> '')"
-)
-
-
-def _sql_decode_entities(expr: str) -> str:
-    """Nested-replace DuckDB mirror of html.decode_entities (same
-    application order — amp last)."""
-    from apache_cassandra_spark.analytics.html import NAMED_ENTITIES
-
-    for entity, char in NAMED_ENTITIES:
-        expr = f"replace({expr}, '{entity}', '{char.replace(chr(39), chr(39) * 2)}')"
-    return expr
-
-
-def _sql_domain_ctes(prefix: str, src_cte: str, url_expr: str, passthrough: str) -> str:
-    """DuckDB CTE chain mirroring web.extract_host → registrable_domain
-    (strip_www=True), with PREFIXED cte names so the outlink oracle can
-    instantiate it twice (src endpoint, dst endpoint) in one query.
-    Exposes ``{prefix}d`` with ``passthrough, domain``."""
-    suffixes = ", ".join(f"'{s}'" for s in (
-        "co.uk", "org.uk", "ac.uk", "gov.uk", "co.jp", "ne.jp", "or.jp",
-        "com.au", "net.au", "org.au", "co.in", "co.nz", "co.za",
-        "com.br", "com.cn", "com.mx",
-    ))
-    return f"""
-    {prefix}p AS (SELECT {passthrough},
-            lower(regexp_extract({url_expr}, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-            lower(regexp_extract({url_expr}, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)) AS hostport
-          FROM {src_cte}),
-    {prefix}h AS (SELECT {passthrough},
-            regexp_replace(CASE WHEN scheme = 'http' THEN regexp_replace(hostport, ':80$', '')
-                                WHEN scheme = 'https' THEN regexp_replace(hostport, ':443$', '')
-                                ELSE hostport END, '^www\\.', '') AS host
-          FROM {prefix}p),
-    {prefix}l AS (SELECT {passthrough}, string_split(host, '.') AS labels FROM {prefix}h),
-    {prefix}k AS (SELECT {passthrough}, labels,
-            least(CASE WHEN len(labels) >= 3
-                            AND (labels[len(labels)-1] || '.' || labels[len(labels)]) IN ({suffixes})
-                       THEN 3 ELSE 2 END, len(labels)) AS take
-          FROM {prefix}l),
-    {prefix}d AS (SELECT {passthrough},
-            array_to_string(labels[len(labels)-take+1:len(labels)], '.') AS domain
-          FROM {prefix}k)"""
-
-
-def q_corpus_page_text(spark, sf_dir):
-    """HTML → text ingest boundary (analytics/html.py with_page_text):
-    strip script/style/comments → strip tags → decode entities → collapse
-    whitespace, plus first-<title> extraction and the on-page link count.
-    Map-only — one codegen projection per document, no shuffle before
-    the presentation orderBy."""
-    from apache_cassandra_spark.analytics import html as H
-
-    docs = load_table(spark, sf_dir, "documents")
-    out = H.with_page_text(docs.withColumn("html", F.expr(_SYNTH_HTML_SQL)))
-    return out.select(
-        "doc_id",
-        "title",
-        "clean_text",
-        F.col("n_links").cast("long").alias("n_links"),
-        "declared_lang",
-        F.array_join(
-            F.transform(H.anchor_pairs(F.col("html")), lambda p: p.getField("anchor")),
-            "|",
-        ).alias("anchors_joined"),
-    ).orderBy("doc_id")
-
-
-#: anchor-body cleaning lambda (html.clean_fragment mirror)
-_SQL_CLEAN_FRAGMENT_BODY = (
-    "trim(regexp_replace("
-    + _sql_decode_entities("regexp_replace(x, '<[^>]*>', ' ', 'g')")
-    + ", '\\s+', ' ', 'g'))"
-)
-
-#: anchors per document (html.anchor_pairs mirror: whole elements —
-#: open tag materialized ONCE per element via a struct, so the 4-branch
-#: href CASE doesn't re-extract it — quoted-href filter, body rendered
-#: via the clean-fragment chain)
-_SQL_ANCHOR_TEXT_LIST = (
-    "list_transform(list_transform(list_filter(list_transform("
-    f"regexp_extract_all(content, {_SQL_ANCHOR_ELEM_RE}), "
-    f"e -> struct_pack(t := regexp_extract(e, {_SQL_A_TAG_RE}), e := e)), "
-    f"s -> ({_sql_href_of('s.t')}) <> ''), "
-    f"s -> regexp_extract(s.e, {_SQL_ANCHOR_BODY_RE}, 1)), "
-    f"x -> {_SQL_CLEAN_FRAGMENT_BODY})"
-)
-
-ORACLES["corpus_page_text"] = f"""
-    WITH u0 AS (SELECT doc_id, {_SYNTH_HTML_SQL} AS html FROM documents),
-    sc AS (SELECT doc_id, html, {_SQL_STRIP_NONCONTENT} AS content FROM u0),
-    tx AS (SELECT doc_id,
-             trim(regexp_replace({_sql_decode_entities("regexp_replace(content, '<[^>]*>', ' ', 'g')")}, '\\s+', ' ', 'g')) AS clean_text,
-             trim({_sql_decode_entities("regexp_extract(html, '(?is)<title[^>]*>(.*?)</title>', 1)")}) AS title,
-             cast(len({_SQL_HREF_LIST}) AS bigint) AS n_links,
-             lower(coalesce(
-                 nullif(regexp_extract(html, '(?is)<html\\b[^>]*[\\s\"'']lang\\s*=\\s*[\"'']([^\"''>]+)[\"'']', 1), ''),
-                 regexp_extract(html, '(?is)<html\\b[^>]*xml:lang\\s*=\\s*[\"'']([^\"''>]+)[\"'']', 1))) AS declared_lang,
-             -- coalesce: DuckDB array_to_string(empty, sep) is NULL
-             -- where Spark array_join gives '' (fuzz-caught divergence)
-             coalesce(array_to_string({_SQL_ANCHOR_TEXT_LIST}, '|'), '') AS anchors_joined
-           FROM sc)
-    SELECT doc_id, title, clean_text, n_links, declared_lang, anchors_joined
-    FROM tx ORDER BY doc_id
-"""
-
-
-def q_corpus_domain_boilerplate(spark, sf_dir):
-    """Domain-conditioned site-template removal
-    (dedup.remove_domain_boilerplate): documents staged as 3-line pages
-    across 20 synthetic domains (25 pages each) — a per-domain nav line
-    planted on 100% of the domain's pages (must vanish everywhere, no
-    first-occurrence survivor), a banner on ~28% (above min_pages but
-    under the >50% bar — must survive), and the document's own prefix/
-    tail lines. Exact integer threshold, distinct-page counting,
-    ordered reassembly — all hash-gated."""
-    from apache_cassandra_spark.analytics import dedup as D
-
-    docs = load_table(spark, sf_dir, "documents")
-    staged = docs.selectExpr(
-        "doc_id",
-        "concat('site', cast(doc_id % 20 as string)) AS domain",
-        "concat(substring(text, 1, 80), chr(10),"
-        " 'visit site', cast(doc_id % 20 as string), ' navigation menu', chr(10),"
-        " CASE WHEN (doc_id div 20) % 4 = 0"
-        "      THEN concat('sale banner for site', cast(doc_id % 20 as string))"
-        "      ELSE substring(text, 81, 60) END) AS text",
-    )
-    from apache_cassandra_spark.cachectl import adopt
-
-    res = D.remove_domain_boilerplate(staged)
-    # lazy derivation: the ordered result must adopt res's owned cache
-    # or GC at return would unpersist the line frame before the action
-    return adopt(res.orderBy("doc_id"), res)
-
-
-ORACLES["corpus_domain_boilerplate"] = """
-    WITH corpus AS (SELECT doc_id,
-            'site' || cast(doc_id % 20 as string) AS domain,
-            substr(text, 1, 80) || chr(10)
-              || 'visit site' || cast(doc_id % 20 as string) || ' navigation menu' || chr(10)
-              || CASE WHEN (doc_id // 20) % 4 = 0
-                      THEN 'sale banner for site' || cast(doc_id % 20 as string)
-                      ELSE substr(text, 81, 60) END AS text
-          FROM documents),
-    parts AS (SELECT doc_id, domain, string_split(text, chr(10)) AS p FROM corpus),
-    lines AS (SELECT doc_id AS id, domain AS dom,
-                     struct_extract(r, 'pos') AS pos, struct_extract(r, 'line') AS line
-              FROM (SELECT doc_id, domain,
-                           unnest(list_transform(generate_series(1, len(p)),
-                                  i -> {'pos': i, 'line': p[i]})) AS r
-                    FROM parts)),
-    dp AS (SELECT domain AS dom, count(DISTINCT doc_id) AS n_dom FROM corpus GROUP BY 1),
-    bl AS (SELECT dom, line
-           FROM (SELECT dom, line, count(DISTINCT id) AS n_line
-                 FROM lines WHERE length(line) >= 1 GROUP BY 1, 2) b
-           JOIN dp USING (dom)
-           WHERE n_line >= 4 AND n_line * 100 > 50 * n_dom),
-    keep AS (SELECT id, dom, pos, line FROM lines ANTI JOIN bl USING (dom, line))
-    SELECT id AS doc_id, dom AS domain,
-           string_agg(line, chr(10) ORDER BY pos) AS text,
-           count(*) AS n_kept
-    FROM keep GROUP BY 1, 2 ORDER BY doc_id
-"""
-
-
-def q_corpus_wet_roundtrip(spark, sf_dir):
-    """WET interchange round trip (sources/warc.py): documents written
-    as WARC/1.0 ``conversion`` records (distributed text sink, one
-    record per doc, Content-Length = UTF-8 bytes) and re-ingested with
-    the multi-char-lineSep distributed reader. The oracle recomputes
-    every record — URI, date, declared length, framing flag, payload —
-    straight from the source table, so the gate pins the writer's
-    framing arithmetic, the reader's header/payload split, and the
-    byte-length contract at once (the corpus_shard_roundtrip recipe,
-    pointed at the crawl-interchange format)."""
-    import tempfile
-
-    from apache_cassandra_spark.sources import warc
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "source", F.expr(_SYNTH_URL_SQL).alias("url")
-    )
-    out_dir = tempfile.mkdtemp(prefix="corpus_wet_")
-    warc.write_wet(docs, out_dir)
-    return warc.read_wet(spark, out_dir).select(
-        "target_uri", "warc_date", "content_length", "framing_ok", "text"
-    ).orderBy("target_uri", "text")
-
-
-ORACLES["corpus_wet_roundtrip"] = f"""
-    SELECT {_SYNTH_URL_SQL} AS target_uri,
-           '2013-01-01T00:00:00Z' AS warc_date,
-           cast(strlen(text) AS bigint) AS content_length,
-           true AS framing_ok,
-           text
-    FROM documents
-    WHERE text IS NOT NULL
-    ORDER BY target_uri, text
-"""
-
-
-def q_corpus_warc_roundtrip(spark, sf_dir):
-    """Binary WARC interchange round trip (sources/warc.py read_warc):
-    a synthesized page corpus written as ``response`` records with a
-    full HTTP/1.1 envelope (Content-Length twice: WARC record and HTTP
-    body), re-ingested with the executor-side Content-Length WALK (the
-    framing the WET text split cannot do — payloads are opaque bytes),
-    then HTTP-split back into status/media-type/charset/body. The
-    oracle recomputes every column straight from the source table, so
-    the gate pins the writer's double framing arithmetic, the walker's
-    exact payload recovery, the shared header parse, and the HTTP
-    envelope split at once. Reference anchor: the W5 binary bulk-load
-    boundary (``db/BinaryMemtable.java:45``) pointed at ISO 28500."""
-    import tempfile
-
-    from apache_cassandra_spark.sources import warc
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .withColumn("url", F.expr(_SYNTH_URL_SQL))
-        .withColumn("html", F.expr(_SYNTH_HTML_SQL))
-        .select("url", "html")
-    )
-    out_dir = tempfile.mkdtemp(prefix="corpus_warc_")
-    warc.write_warc(docs, out_dir)
-    back = warc.http_response_parts(warc.read_warc(spark, out_dir))
-    return back.select(
-        "target_uri",
-        "warc_date",
-        "record_id",
-        "content_length",
-        "http_status",
-        "http_content_type",
-        "http_charset",
-        "framing_ok",
-        F.col("body_text").alias("html"),
-    ).orderBy("target_uri", "html")
-
-
-#: adversarial page synth for the main-content gate: nav bar, heading,
-#: the document text as the body paragraph (with an inline link every
-#: third doc), a link-list sidebar, and a footer — the classic
-#: boilerplate shapes the density rule must drop while keeping the
-#: paragraph. ONE literal shared by F.expr and DuckDB.
-_SYNTH_PAGE_SQL = """'<html><head><title>Doc ' || cast(doc_id as string) || '</title></head><body>'
- || '<div class="nav"><a href="/">Home</a> <a href="/about">About</a> <a href="/contact">Contact</a></div>'
- || '<h1>Story ' || cast(doc_id % 11 as string) || '</h1>'
- || CASE WHEN doc_id % 3 = 0
-         THEN '<p>' || text || ' See <a href="/more' || cast(doc_id % 7 as string) || '">the full story here</a>.</p>'
-         ELSE '<p>' || text || '</p>' END
- || '<div class="sidebar"><ul><li><a href="/r1">Related one</a></li><li><a href="/r2">Related two</a></li></ul></div>'
- || '<div class="footer">Copyright 2013 ' || source || ' <a href="/terms">Terms</a> <a href="/privacy">Privacy</a></div>'
- || '</body></html>'"""
-
-
-#: per-document sitemap synth (ONE literal, F.expr + DuckDB): a plain
-#: <url> entry with entity-escaped loc, conditional lastmod/changefreq/
-#: priority, every 5th doc a CDATA entry, every 7th a sitemapindex child
-_SYNTH_SITEMAP_SQL = """'<urlset><url><loc>' || replace(url, '&', '&amp;') || '</loc>'
- || CASE WHEN doc_id % 3 = 0 THEN '<lastmod>2013-0' || cast(doc_id % 9 + 1 as string) || '-01</lastmod>' ELSE '' END
- || CASE WHEN doc_id % 4 = 0 THEN '<changefreq>daily</changefreq><priority>0.' || cast(doc_id % 10 as string) || '</priority>' ELSE '' END
- || '</url>'
- || CASE WHEN doc_id % 5 = 0 THEN '<url><loc><![CDATA[' || url || '?cd=1&x=2]]></loc></url>' ELSE '' END
- || CASE WHEN doc_id % 7 = 0 THEN '<sitemap><loc>http://idx.' || source || '.net/s2.xml</loc><lastmod>2013-09-09</lastmod></sitemap>' ELSE '' END
- || '</urlset>'"""
-
-
-def q_corpus_sitemap(spark, sf_dir):
-    """Sitemap discovery (web.parse_sitemap): per-document synthesized
-    sitemap XML — entity-escaped locs, optional lastmod/changefreq/
-    priority, CDATA-wrapped entries, and sitemapindex children — parsed
-    back into one row per entry. The oracle replays the element
-    extraction, the CDATA/entity branches, the field regexes, and the
-    priority cast; the gate pins all of parse_sitemap's grammar."""
-    from apache_cassandra_spark.analytics import web
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .withColumn("url", F.expr(_SYNTH_URL_SQL))
-        .withColumn("sitemap_xml", F.expr(_SYNTH_SITEMAP_SQL))
-    )
-    out = web.parse_sitemap(docs, passthrough=("doc_id",))
-    return out.select(
-        "doc_id", "kind", "loc", "lastmod", "changefreq", "priority"
-    ).orderBy("doc_id", "kind", "loc")
-
-
-ORACLES["corpus_sitemap"] = f"""
-    WITH u0 AS (SELECT doc_id, source, {_SYNTH_URL_SQL} AS url FROM documents),
-    x AS (SELECT doc_id, {_SYNTH_SITEMAP_SQL} AS xml FROM u0),
-    elems AS (
-        SELECT doc_id, 'url' AS kind,
-               unnest(regexp_extract_all(xml, '(?is)<url\\s*>.*?</url\\s*>', 0)) AS e
-        FROM x
-        UNION ALL
-        SELECT doc_id, 'sitemap' AS kind,
-               unnest(regexp_extract_all(xml, '(?is)<sitemap\\s*>.*?</sitemap\\s*>', 0)) AS e
-        FROM x),
-    f AS (SELECT doc_id, kind,
-                 trim(regexp_extract(e, '(?is)<loc\\s*>(.*?)</loc\\s*>', 1)) AS rawloc,
-                 trim(regexp_extract(e, '(?is)<lastmod\\s*>(.*?)</lastmod\\s*>', 1)) AS rawlm,
-                 trim(regexp_extract(e, '(?is)<changefreq\\s*>(.*?)</changefreq\\s*>', 1)) AS rawcf,
-                 trim(regexp_extract(e, '(?is)<priority\\s*>(.*?)</priority\\s*>', 1)) AS rawpr
-          FROM elems),
-    d AS (SELECT doc_id, kind,
-                 CASE WHEN regexp_matches(rawloc, '(?s)^<!\\[CDATA\\[.*\\]\\]>$')
-                      THEN trim(regexp_extract(rawloc, '(?s)^<!\\[CDATA\\[(.*)\\]\\]>$', 1))
-                      ELSE trim({_sql_decode_entities('rawloc')}) END AS loc,
-                 trim({_sql_decode_entities('rawlm')}) AS lastmod,
-                 trim({_sql_decode_entities('rawcf')}) AS changefreq,
-                 try_cast(trim({_sql_decode_entities('rawpr')}) AS double) AS priority
-          FROM f)
-    SELECT doc_id, kind, loc, lastmod, changefreq, priority
-    FROM d WHERE loc <> ''
-    ORDER BY doc_id, kind, loc
-"""
-
-
-#: per-document crawl path exercising every rule family of the synth
-#: robots policies (ONE literal, F.expr + DuckDB)
-_SYNTH_CRAWL_PATH_SQL = """CASE (doc_id % 6)
-  WHEN 0 THEN '/private/p' || cast(doc_id as string)
-  WHEN 1 THEN '/private/ok/p' || cast(doc_id as string)
-  WHEN 2 THEN '/d' || cast(doc_id as string) || '.pdf'
-  WHEN 3 THEN '/d' || cast(doc_id as string) || '.pdf?x=1'
-  WHEN 4 THEN '/tmpfile' || cast(doc_id % 4 as string)
-  ELSE '/page/' || cast(doc_id as string)
-END"""
-
-#: two robots policies split by source parity: variant A (even-length
-#: source name) has only a * group (wildcards, $ anchor, Allow carve-out,
-#: prefix rule); variant B names our agent, whose exact group must
-#: SUPPRESS the * group entirely (the RFC's most-specific-group rule)
-_ROBOTS_A = (
-    "User-agent: specialbot\nDisallow: /page/\n\n"
-    "User-agent: *\nDisallow: /private/\nAllow: /private/ok/\n"
-    "Disallow: /*.pdf$\nDisallow: /tmp\n"
-)
-_ROBOTS_B = (
-    "User-agent: graftbot\nDisallow: /page/\n\n"
-    "User-agent: *\nDisallow: /private/\n"
-)
-
-
-def q_corpus_robots(spark, sf_dir):
-    """robots.txt compliance (robots.parse_robots + match_allowed for
-    agent ``graftbot``): two fixed policies split across the corpus's
-    domains — one where graftbot falls to the ``*`` group (wildcard,
-    ``$`` anchor, longest-match Allow carve-out, prefix rule all
-    exercised), one where graftbot's EXACT group suppresses ``*``. The
-    oracle replays the allow decision and the winning rule from the
-    literal policies, so the gate pins group recovery, group selection,
-    pattern matching, and the longest-match/Allow-wins precedence."""
-    from apache_cassandra_spark.analytics import robots as RB
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        "source",
-        F.concat(
-            F.lit("http://"), F.col("source"), F.lit(".com"), F.expr(_SYNTH_CRAWL_PATH_SQL)
-        ).alias("url"),
-        F.concat(F.col("source"), F.lit(".com")).alias("domain"),
-    )
-    robots_df = (
-        docs.select("domain")
-        .distinct()
-        .withColumn(
-            "robots_txt",
-            F.when(F.length("domain") % 2 == 0, F.lit(_ROBOTS_A)).otherwise(
-                F.lit(_ROBOTS_B)
-            ),
-        )
-    )
-    rules = RB.parse_robots(robots_df, agent="graftbot")
-    out = RB.match_allowed(docs, rules)
-    return out.select("doc_id", "allowed", "matched_rule").orderBy("doc_id")
-
-
-# decision replay from the LITERAL policies: variant A = the * group's
-# four rules under longest-match (the Allow carve-out is the longest
-# match inside /private/ok/; the $ anchor must NOT match when a query
-# string follows .pdf); variant B = graftbot's exact group only
-ORACLES["corpus_robots"] = f"""
-    WITH p AS (SELECT doc_id, source, {_SYNTH_CRAWL_PATH_SQL} AS path FROM documents),
-    v AS (SELECT doc_id, path,
-                 (length(source || '.com') % 2 = 0) AS variant_a
-          FROM p)
-    SELECT doc_id,
-           CASE WHEN variant_a THEN
-                CASE WHEN path LIKE '/private/ok/%' THEN true
-                     WHEN path LIKE '/private/%' THEN false
-                     WHEN regexp_matches(path, '^/.*[.]pdf$') THEN false
-                     WHEN path LIKE '/tmp%' THEN false
-                     ELSE true END
-           ELSE
-                CASE WHEN path LIKE '/page/%' THEN false ELSE true END
-           END AS allowed,
-           CASE WHEN variant_a THEN
-                CASE WHEN path LIKE '/private/ok/%' THEN '/private/ok/'
-                     WHEN path LIKE '/private/%' THEN '/private/'
-                     WHEN regexp_matches(path, '^/.*[.]pdf$') THEN '/*.pdf$'
-                     WHEN path LIKE '/tmp%' THEN '/tmp'
-                     ELSE NULL END
-           ELSE
-                CASE WHEN path LIKE '/page/%' THEN '/page/' ELSE NULL END
-           END AS matched_rule
-    FROM v
-    ORDER BY doc_id
-"""
-
-
-#: crawl front-door policies for the COMPOSED gate: variant A (even-
-#: length registrable domain) blocks the /Article and /img path families
-#: through the * group; variant B names graftbot, whose exact group
-#: (block /p/) must SUPPRESS the total * block. Deliberately simple
-#: prefix rules — the matcher subtleties (wildcards, anchors,
-#: longest-match) carry their own gate (corpus_robots); THIS gate pins
-#: the WIRING: policy keyed by the canonicalizer's registrable domain,
-#: decision applied to the RAW url's path+query, filter placed between
-#: URL keying and the canonical min-id dedup.
-_CRAWL_ROBOTS_A = "User-agent: *\nDisallow: /Article\nDisallow: /img\n"
-_CRAWL_ROBOTS_B = "User-agent: graftbot\nDisallow: /p/\n\nUser-agent: *\nDisallow: /\n"
-
-
-def q_corpus_prepare_crawl(spark, sf_dir):
-    """The crawl front door COMPOSED and hash-gated end to end:
-    pipeline.prepare_crawl(robots_rules=...) over synthesized pages —
-    markup → page text (title/clean_text/lang/links), URL keys
-    (canonical_url/host/domain), robots.txt compliance (policy per
-    registrable domain, graftbot agent), then canonical-URL min-id
-    dedup. The oracle replays every stage in one CTE chain, REUSING the
-    piece gates' exact SQL fragments (_url_keys_ctes, the page-text
-    chain, the literal policy decision), so a drift in any stage OR in
-    the glue between stages (the r11 verdict's gap: robots existed but
-    the composition never exercised it) flips the hash. Funding
-    retirement sim_ann_lsh_exact ENDORSED by the r12 verdict; leads
-    the round-13 driver window."""
-    from apache_cassandra_spark.analytics import robots as RB
-    from apache_cassandra_spark.analytics import web
-    from apache_cassandra_spark.analytics.pipeline import prepare_crawl
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        "source",
-        "text",
-        F.expr(_SYNTH_URL_SQL).alias("url"),
-    )
-    docs = docs.withColumn("html", F.expr(_SYNTH_HTML_SQL)).select(
-        "doc_id", "url", "html"
-    )
-    # robots universe = the corpus's distinct registrable domains,
-    # staged distinct-url -> host -> domain so each giant URL expression
-    # evaluates over a MATERIALIZED attribute (registrable_domain
-    # references its host ~8x; inlining the host tree into the domain
-    # aggregate blows janino's 64KB method limit and drops the whole
-    # stage to interpreted eval — the outlink_graph lesson)
-    # (an intermediate .distinct() is NOT enough — RemoveRedundantAggregates
-    # deletes it and refuses the stages; the repartition is a real
-    # Exchange the optimizer keeps, and it moves only |distinct hosts|
-    # tiny rows)
-    domains = (
-        docs.select("url")
-        .distinct()
-        .select(web.extract_host(F.col("url")).alias("host"))
-        .repartition("host")
-        .select(web.registrable_domain(F.col("host")).alias("domain"))
-        .distinct()
-        # lineage cut: parse_robots' group joins infer isnotnull(domain)
-        # and Catalyst pushes it THROUGH the distincts back onto the raw
-        # scan, re-inlining the whole URL tree as an interpreted Filter
-        # (the pushdown-below-aggregate pitfall); the domains universe is
-        # site-count-sized. Lazy (r14, mirroring web_plan_frontier): the
-        # LogicalRDD barrier exists at plan time either way, but the
-        # eager form ran a separate job at construction — materializing
-        # under the caller's action instead lets the scheduler overlap
-        # it with independent stages (interleaved A/B 4.15 -> 3.69s)
-        .localCheckpoint(eager=False)
-    )
-    robots_df = domains.withColumn(
-        "robots_txt",
-        F.when(F.length("domain") % 2 == 0, F.lit(_CRAWL_ROBOTS_A)).otherwise(
-            F.lit(_CRAWL_ROBOTS_B)
-        ),
-    )
-    rules = RB.parse_robots(robots_df, agent="graftbot")
-    out = prepare_crawl(docs, robots_rules=rules)
-    return out.select(
-        "doc_id",
-        "url",
-        "canonical_url",
-        "host",
-        "domain",
-        "clean_text",
-        "title",
-        "declared_lang",
-        F.col("n_links").cast("long").alias("n_links"),
-    ).orderBy("doc_id")
-
-
-# Composed replay: u0 synthesizes url+html once; the canonicalization
-# chain is the SAME _url_keys_ctes the domain_stats/url_revisions
-# oracles run; the page-text chain is corpus_page_text's (minus the
-# anchors column prepare_crawl doesn't surface); the policy decision is
-# a literal CASE over the raw path+query (the _REST_RE mirror), keyed
-# by the canonicalizer's domain; winners = min(doc_id) per canonical
-# among ALLOWED rows only — a policy-dropped page must neither win nor
-# ghost-suppress a slot.
-_SQL_RAW_PATH = (
-    "CASE WHEN regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^#]*)', 1) = '' "
-    "THEN '/' ELSE regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^#]*)', 1) END"
-)
-
-ORACLES["corpus_prepare_crawl"] = f"""
-    WITH u0 AS (SELECT doc_id, {_SYNTH_URL_SQL} AS url, {_SYNTH_HTML_SQL} AS html
-                FROM documents),
-    {_url_keys_ctes("doc_id")},
-    sc AS (SELECT doc_id, html, {_SQL_STRIP_NONCONTENT} AS content FROM u0),
-    tx AS (SELECT doc_id,
-             trim(regexp_replace({_sql_decode_entities("regexp_replace(content, '<[^>]*>', ' ', 'g')")}, '\\s+', ' ', 'g')) AS clean_text,
-             trim({_sql_decode_entities("regexp_extract(html, '(?is)<title[^>]*>(.*?)</title>', 1)")}) AS title,
-             cast(len({_SQL_HREF_LIST}) AS bigint) AS n_links,
-             lower(coalesce(
-                 nullif(regexp_extract(html, '(?is)<html\\b[^>]*[\\s"'']lang\\s*=\\s*["'']([^"''>]+)["'']', 1), ''),
-                 regexp_extract(html, '(?is)<html\\b[^>]*xml:lang\\s*=\\s*["'']([^"''>]+)["'']', 1))) AS declared_lang
-           FROM sc),
-    pth AS (SELECT doc_id, url, {_SQL_RAW_PATH} AS path FROM u0),
-    dec AS (SELECT p.doc_id, p.url, d.canonical_url, d.domain, k.host,
-                   CASE WHEN length(d.domain) % 2 = 0
-                        THEN NOT (p.path LIKE '/Article%' OR p.path LIKE '/img%')
-                        ELSE NOT (p.path LIKE '/p/%') END AS allowed
-            FROM pth p
-            JOIN d ON p.doc_id = d.doc_id
-            JOIN (SELECT doc_id, host FROM tk) k ON p.doc_id = k.doc_id),
-    kept AS (SELECT * FROM dec WHERE allowed),
-    win AS (SELECT canonical_url, min(doc_id) AS doc_id FROM kept GROUP BY canonical_url)
-    SELECT k.doc_id, k.url, k.canonical_url, k.host, k.domain,
-           tx.clean_text, tx.title, tx.declared_lang, tx.n_links
-    FROM kept k
-    JOIN win ON k.canonical_url = win.canonical_url AND k.doc_id = win.doc_id
-    JOIN tx ON k.doc_id = tx.doc_id
-    ORDER BY k.doc_id
-"""
-
-
-#: frontier-side policies for the composed DISCOVERY gate: variant A
-#: (even-length registrable domain) paces at 2 s and blocks the
-#: /Article and /img families through the * group graftbot falls to;
-#: variant B names graftbot, whose exact group (block /p/, pace 0.5 s)
-#: must SUPPRESS the * group's total block. Crawl-delay rides the SAME
-#: group-selection grammar (robots.crawl_delays shares
-#: _grouped_directives with parse_robots), so the gate pins delay
-#: group selection alongside rule group selection.
-_FRONTIER_ROBOTS_A = "User-agent: *\nDisallow: /Article\nDisallow: /img\nCrawl-delay: 2\n"
-_FRONTIER_ROBOTS_B = (
-    "User-agent: graftbot\nDisallow: /p/\nCrawl-delay: 0.5\n\nUser-agent: *\nDisallow: /\n"
-)
-
-#: second candidate sighting of the same page under DIFFERENT tracker
-#: noise (doc_id % 6 == 0 rows): canonicalizes equal to the base URL,
-#: so the per-canonical winner must pick across raw variants by
-#: (priority, url) — the dedup semantics the gate pins
-_SYNTH_CAND2_URL_SQL = (
-    _SYNTH_URL_SQL.replace("utm_source=feed", "utm_source=rss")
-    .replace("utm_medium=email", "utm_medium=social")
-    .replace("fbclid=1&ref=home", "fbclid=7&ref=home")
-    .replace("gclid=zz", "gclid=aa")
-)
-
-#: already-crawled sightings (doc_id % 4 == 0 rows) under a THIRD
-#: tracker variant: the anti-join must key in canonical space — raw
-#: string matching would re-enqueue every one of these
-_SYNTH_CRAWLED_URL_SQL = (
-    _SYNTH_URL_SQL.replace("utm_source=feed", "utm_source=recrawl")
-    .replace("utm_medium=email", "utm_medium=relink")
-    .replace("fbclid=1&ref=home", "fbclid=2&ref=home")
-    .replace("gclid=zz", "gclid=yy")
-)
-
-
-def q_web_plan_frontier(spark, sf_dir):
-    """The DISCOVERY front door COMPOSED and hash-gated end to end —
-    the fetch-plan twin of corpus_prepare_crawl (r13 verdict item 2's
-    recommended gate): web.plan_frontier over synthesized candidates
-    (base URLs + tracker-noise re-sightings with their own priorities),
-    an already-crawled set under a third tracker variant (the anti-join
-    must match in CANONICAL space), per-domain robots policies with
-    Crawl-delay directives (compliance + pacing from ONE parse), and
-    priority-ordered politeness scheduling. The oracle replays every
-    stage in one CTE chain REUSING the piece gates' fragments — the
-    _url_keys_ctes canonicalization instantiated TWICE (candidates and
-    crawled), the literal policy decision over the raw path (the
-    corpus_robots convention), the winner as min(priority) then
-    min(url) (exactly the row_number (priority, url) contract), and a
-    row_number replay of fetch_schedule — so drift in any stage OR in
-    the glue (the r11 verdict's composition-gap class) flips the hash.
-
-    FUNDING RETIREMENT (proposed, r14 — per the standing rule this
-    executes only on verdict endorsement): retire dedup_ngram_jaccard.
-    Receipts: (1) its oracle is _jaccard_oracle_sql(0.5) — the SAME
-    generator as the windowed dedup_prefix_jaccard gate's
-    _jaccard_oracle_sql(0.8), differing only in the threshold literal;
-    (2) prefix_jaccard_pairs is LOSSLESS vs ngram_jaccard_pairs by the
-    prefix-filter theorem, and tests/test_prefix_jaccard.py pins the
-    equivalence on boundary/duplicate/skew-guard corpora plus a
-    hypothesis fuzz; (3) r14 adds the corpus-wide full-row lock
-    tests/test_prefix_jaccard.py::test_corpus_equivalence_lock_sf0001
-    (both operators, BOTH thresholds 0.5 and 0.8, real sf0.001
-    documents — the sim_ann_lsh_exact precedent's shape), so the plain
-    inverted-index path stays pinned to the gated operator without
-    spending a ledger slot. Implementation, unit pins, and the oracle
-    generator all stay."""
-    from apache_cassandra_spark.analytics import robots as RB
-    from apache_cassandra_spark.analytics import web
-
-    docs = load_table(spark, sf_dir, "documents")
-    base = docs.select(
-        F.expr(_SYNTH_URL_SQL).alias("url"),
-        (F.col("doc_id") % 13).cast("long").alias("priority"),
-    )
-    resight = docs.where((F.col("doc_id") % 6) == 0).select(
-        F.expr(_SYNTH_CAND2_URL_SQL).alias("url"),
-        ((F.col("doc_id") * 3) % 13).cast("long").alias("priority"),
-    )
-    cands = base.unionByName(resight)
-    crawled = docs.where((F.col("doc_id") % 4) == 0).select(
-        F.expr(_SYNTH_CRAWLED_URL_SQL).alias("url")
-    )
-    # robots universe staged exactly like corpus_prepare_crawl's (the
-    # 64KB-codegen + pushdown-below-aggregate discipline; site-count-
-    # sized, so the localCheckpoint lineage cut is honest)
-    domains = (
-        cands.select("url")
-        .distinct()
-        .select(web.extract_host(F.col("url")).alias("host"))
-        .repartition("host")
-        .select(web.registrable_domain(F.col("host")).alias("domain"))
-        .distinct()
-        # lazy (r14): the eager cut ran a ~0.9s job at plan-construction
-        # time; materializing at the caller's action instead lets the
-        # scheduler overlap it with the action's independent stages
-        .localCheckpoint(eager=False)
-    )
-    robots_df = domains.withColumn(
-        "robots_txt",
-        F.when(F.length("domain") % 2 == 0, F.lit(_FRONTIER_ROBOTS_A)).otherwise(
-            F.lit(_FRONTIER_ROBOTS_B)
-        ),
-    )
-    rules = RB.parse_robots(robots_df, agent="graftbot")
-    delays = RB.crawl_delays(robots_df, agent="graftbot")
-    out = web.plan_frontier(
-        cands,
-        crawled=crawled,
-        robots_rules=rules,
-        delays=delays,
-        priority_col="priority",
-    )
-    return out.select(
-        "url",
-        "canonical_url",
-        "host",
-        "domain",
-        F.col("priority").cast("long").alias("priority"),
-        F.col("fetch_seq").cast("long").alias("fetch_seq"),
-        F.col("fetch_at_sec").cast("double").alias("fetch_at_sec"),
-    ).orderBy("canonical_url")
-
-
-# Composed replay. cand manufactures a unique cid (2*doc_id / 2*doc_id+1)
-# so the keying chain joins back losslessly; the winner is min(priority)
-# then min(url) per canonical — identical to the Spark row_number over
-# (priority asc, url asc) because every output column is a function of
-# (canonical_url, priority, url); host/domain are canonical-group
-# constants so ANY group row supplies them. The crawled set runs the
-# SAME canonicalization chain under the 'c' prefix. The policy decision
-# and the delay constant replay the literal policies keyed by
-# length(domain) % 2; the schedule is a row_number window in canonical
-# order per (priority, canonical_url) — ties impossible, canonical_url
-# is the dedup key.
-ORACLES["web_plan_frontier"] = f"""
-    WITH cand AS (
-        SELECT doc_id * 2 AS cid, {_SYNTH_URL_SQL} AS url,
-               cast(doc_id % 13 as bigint) AS priority
-        FROM documents
-        UNION ALL
-        SELECT doc_id * 2 + 1 AS cid, {_SYNTH_CAND2_URL_SQL} AS url,
-               cast((doc_id * 3) % 13 as bigint) AS priority
-        FROM documents WHERE doc_id % 6 = 0),
-    u0 AS (SELECT cid, url, priority FROM cand),
-    {_url_keys_ctes("cid")},
-    j AS (SELECT u0.cid, u0.url, u0.priority, d.canonical_url, d.domain, k.host
-          FROM u0
-          JOIN d ON u0.cid = d.cid
-          JOIN (SELECT cid, host FROM tk) k ON u0.cid = k.cid),
-    w1 AS (SELECT canonical_url, min(priority) AS priority FROM j GROUP BY 1),
-    w2 AS (SELECT j.canonical_url, j.priority, min(j.url) AS url
-           FROM j JOIN w1 USING (canonical_url, priority) GROUP BY 1, 2),
-    w3 AS (SELECT DISTINCT w2.canonical_url, w2.priority, w2.url, j.host, j.domain
-           FROM w2 JOIN j USING (canonical_url)),
-    cr0 AS (SELECT doc_id AS cid, {_SYNTH_CRAWLED_URL_SQL} AS url
-            FROM documents WHERE doc_id % 4 = 0),
-    {_url_keys_ctes("cid", prefix="c", src="cr0")},
-    seen AS (SELECT DISTINCT canonical_url FROM cd),
-    fresh AS (SELECT * FROM w3
-              WHERE NOT EXISTS (SELECT 1 FROM seen s
-                                WHERE s.canonical_url = w3.canonical_url)),
-    dec AS (SELECT *, {_SQL_RAW_PATH} AS path FROM fresh),
-    alw AS (SELECT * FROM dec
-            WHERE CASE WHEN length(domain) % 2 = 0
-                       THEN NOT (path LIKE '/Article%' OR path LIKE '/img%')
-                       ELSE NOT (path LIKE '/p/%') END),
-    sched AS (SELECT *, row_number() OVER
-                  (PARTITION BY domain ORDER BY priority, canonical_url) - 1 AS seq
-              FROM alw)
-    SELECT url, canonical_url, host, domain, priority,
-           cast(seq as bigint) AS fetch_seq,
-           cast(seq * (CASE WHEN length(domain) % 2 = 0
-                            THEN cast(2.0 as double)
-                            ELSE cast(0.5 as double) END) as double) AS fetch_at_sec
-    FROM sched ORDER BY canonical_url
-"""
-
-
-def q_corpus_main_content(spark, sf_dir):
-    """Main-content extraction (html.with_main_content): the WSDM 2010
-    densitometric block classifier — split at block-tag boundaries,
-    per-block word count + link-body word count computed IN-ARRAY, keep
-    blocks with >= 8 words and link density <= 1/3 (exact integer
-    inequality 3*link_words <= words). The staged corpus plants a nav
-    bar, a heading, a link-list sidebar and a footer around the real
-    paragraph; the oracle replays the whole chain block by block, so
-    the gate pins the split, both word counts, the threshold boundary,
-    and the document-order reassembly."""
-    from apache_cassandra_spark.analytics import html as H
-
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("text").isNotNull())
-        .withColumn("html", F.expr(_SYNTH_PAGE_SQL))
-    )
-    out = H.with_main_content(docs)
-    return out.select(
-        "doc_id",
-        F.coalesce(F.col("main_text"), F.lit("")).alias("main_text"),
-        F.col("n_blocks").cast("long").alias("n_blocks"),
-        F.col("n_content_blocks").cast("long").alias("n_content_blocks"),
-    ).orderBy("doc_id")
-
-
-def _sql_clean_fragment(expr: str) -> str:
-    """DuckDB mirror of html.clean_fragment over an arbitrary
-    expression (tag strip -> entity decode -> whitespace collapse ->
-    trim — the 'g' flags because DuckDB replaces first-match-only by
-    default where Spark replaces all)."""
-    return (
-        "trim(regexp_replace("
-        + _sql_decode_entities(f"regexp_replace({expr}, '<[^>]*>', ' ', 'g')")
-        + ", '\\s+', ' ', 'g'))"
-    )
-
-
-_SQL_BLOCK_SPLIT_RE = (
-    "'(?i)</?(?:p|div|li|ul|ol|h1|h2|h3|h4|h5|h6|table|thead|tbody|tr|td|th"
-    "|section|article|header|footer|nav|aside|blockquote|pre|form|dl|dt|dd|br|hr)\\b[^>]*>'"
-)
-_SQL_BLOCK_TEXT = _sql_clean_fragment("blocks[i]")
-# coalesce: DuckDB's array_to_string([]) is NULL where Spark's
-# array_join([]) is '' — an anchor-free block must count 0 link words,
-# not NULL-poison its density test
-_SQL_BLOCK_LINK_TEXT = _sql_clean_fragment(
-    "coalesce(array_to_string(regexp_extract_all(blocks[i],"
-    " '(?is)<a\\b[^>]*>(.*?)</a>', 1), ' '), '')"
-)
-
-ORACLES["corpus_main_content"] = f"""
-    WITH p AS (SELECT doc_id, {_SYNTH_PAGE_SQL} AS html
-               FROM documents WHERE text IS NOT NULL),
-    b0 AS (SELECT doc_id,
-                  regexp_split_to_array({_SQL_STRIP_NONCONTENT}, {_SQL_BLOCK_SPLIT_RE}) AS blocks
-           FROM p),
-    bl AS (SELECT doc_id, unnest(generate_series(1, len(blocks))) AS i, blocks FROM b0),
-    f1 AS (SELECT doc_id, i,
-                  {_SQL_BLOCK_TEXT} AS t,
-                  {_SQL_BLOCK_LINK_TEXT} AS lt
-           FROM bl),
-    f2 AS (SELECT doc_id, i, t,
-                  CASE WHEN t = '' THEN 0 ELSE len(string_split(t, ' ')) END AS w,
-                  CASE WHEN lt = '' THEN 0 ELSE len(string_split(lt, ' ')) END AS lw
-           FROM f1 WHERE t <> '')
-    SELECT doc_id,
-           coalesce(string_agg(CASE WHEN w >= 8 AND 3*lw <= w THEN t END, ' ' ORDER BY i), '') AS main_text,
-           cast(count(*) as bigint) AS n_blocks,
-           cast(sum(CASE WHEN w >= 8 AND 3*lw <= w THEN 1 ELSE 0 END) as bigint) AS n_content_blocks
-    FROM f2 GROUP BY doc_id
-    ORDER BY doc_id
-"""
-
-
-# the HTTP envelope replayed as ONE literal concat (chr(13)||chr(10) for
-# CRLF — no backslash escapes, the shared-literal convention): the WARC
-# Content-Length is the envelope's byte length, itself embedding the
-# body's byte length
-ORACLES["corpus_warc_roundtrip"] = f"""
-    WITH u0 AS (SELECT doc_id, text, source, {_SYNTH_URL_SQL} AS url FROM documents
-                WHERE text IS NOT NULL),
-    h AS (SELECT url, {_SYNTH_HTML_SQL} AS html FROM u0),
-    env AS (SELECT url, html,
-                   'HTTP/1.1 200 OK' || chr(13) || chr(10)
-                   || 'Content-Type: text/html; charset=utf-8' || chr(13) || chr(10)
-                   || 'Content-Length: ' || cast(strlen(html) as varchar)
-                   || chr(13) || chr(10) || chr(13) || chr(10) || html AS payload
-            FROM h)
-    SELECT url AS target_uri,
-           '2013-01-01T00:00:00Z' AS warc_date,
-           '<urn:md5:' || md5(url) || '>' AS record_id,
-           cast(strlen(payload) AS bigint) AS content_length,
-           200 AS http_status,
-           'text/html' AS http_content_type,
-           'utf-8' AS http_charset,
-           true AS framing_ok,
-           html
-    FROM env
-    ORDER BY target_uri, html
-"""
-
-
-
-
-def q_corpus_bm25_topk(spark, sf_dir):
-    """BM25 retrieval (text.bm25_topk): top-10 documents per lexical
-    query — the retrieval-based-decontamination / data-selection
-    primitive. One corpus explode into a cached (doc, term) aggregate;
-    query terms broadcast (request-bounded), so only their postings
-    flow; df/dl joins AQE-decided; per-term contribution = ONE shared
-    SQL scalar (micro-quantized bigint) summed exactly; WindowGroupLimit
-    top-k."""
-    docs = load_table(spark, sf_dir, "documents")
-    qdf = spark.createDataFrame(list(text.BM25_BENCH_QUERIES), "query_id long, query string")
-    from apache_cassandra_spark.cachectl import adopt
-
-    res = text.bm25_topk(docs, qdf, k=10)
-    # lazy derivation: adopt res's owned (doc,term) cache past the sort
-    return adopt(res.orderBy("query_id", "doc_id"), res)
-
-
-def _bm25_oracle() -> str:
-    from apache_cassandra_spark.analytics.text import _bm25_term_expr
-
-    values = ", ".join(f"({i}, '{q}')" for i, q in text.BM25_BENCH_QUERIES)
-    return f"""
-    WITH q(query_id, query) AS (VALUES {values}),
-    toked AS (SELECT doc_id, unnest(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS term
-              FROM documents),
-    tf AS (SELECT doc_id, term, count(*) AS tf FROM toked GROUP BY 1, 2),
-    dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-    dl AS (SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY 1),
-    tot AS (SELECT (SELECT count(DISTINCT doc_id) FROM documents) AS n_docs,
-                   sum(tf) AS total_dl FROM tf),
-    qt AS (SELECT DISTINCT query_id, term
-           FROM (SELECT query_id, unnest(list_filter(string_split(lower(query), ' '), x -> x <> '')) AS term
-                 FROM q)),
-    sc AS (SELECT qt.query_id, tf.doc_id, {_bm25_term_expr(1.2, 0.75)} AS s
-           FROM tf JOIN qt USING (term) JOIN dfreq USING (term)
-                JOIN dl USING (doc_id) CROSS JOIN tot),
-    agg AS (SELECT query_id, doc_id, count(*) AS n_terms,
-                   cast(sum(s) AS bigint) AS bm25_micro
-            FROM sc GROUP BY 1, 2)
-    SELECT query_id, doc_id, n_terms, bm25_micro FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY bm25_micro DESC, doc_id) AS rk
-      FROM agg)
-    WHERE rk <= 10 ORDER BY query_id, doc_id
-"""
-
-
-ORACLES["corpus_bm25_topk"] = _bm25_oracle()
-
-
-def q_corpus_outlink_graph(spark, sf_dir):
-    """Domain-level crawl link graph (analytics/html.py outlink_graph):
-    harvest anchors from non-content-stripped markup, resolve each href
-    against its page URL (absolute / protocol-relative / host-relative;
-    path-relative → NULL), map both endpoints to registrable domains,
-    drop intra-domain edges, aggregate (n_links, distinct n_pages) per
-    edge. Explode → two-phase distinct hash aggregate; no joins."""
-    from apache_cassandra_spark.analytics import html as H
-
-    docs = load_table(spark, sf_dir, "documents")
-    staged = docs.select(
-        "doc_id",
-        F.expr(_SYNTH_URL_SQL).alias("url"),
-        F.expr(_SYNTH_HTML_SQL).alias("html"),
-    )
-    return H.outlink_graph(staged).orderBy("src_domain", "dst_domain")
-
-
-ORACLES["corpus_outlink_graph"] = f"""
-    WITH u0 AS (SELECT doc_id, text, source, {_SYNTH_URL_SQL} AS url FROM documents),
-    u1 AS (SELECT doc_id, url, {_SYNTH_HTML_SQL} AS html FROM u0),
-    sc AS (SELECT doc_id, url, {_SQL_STRIP_NONCONTENT} AS content FROM u1),
-    lx AS (SELECT doc_id, url,
-             unnest({_SQL_HREF_LIST}) AS href
-           FROM sc),
-    bs AS (SELECT doc_id, url, href,
-             lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS bscheme,
-             CASE WHEN lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) = 'http'
-                  THEN regexp_replace(lower(regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)), ':80$', '')
-                  WHEN lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) = 'https'
-                  THEN regexp_replace(lower(regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)), ':443$', '')
-                  ELSE lower(regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)) END AS bhost
-           FROM lx),
-    rs AS (SELECT doc_id, url,
-             CASE WHEN regexp_matches(href, '^[A-Za-z][A-Za-z0-9+.-]*://') THEN href
-                  WHEN bscheme <> '' AND starts_with(href, '//') THEN bscheme || ':' || href
-                  WHEN bscheme <> '' AND starts_with(href, '/') THEN bscheme || '://' || bhost || href
-                  ELSE NULL END AS target
-           FROM bs),
-    rs2 AS (SELECT doc_id, url, target FROM rs WHERE target IS NOT NULL),
-    {_sql_domain_ctes('s', 'rs2', 'url', 'doc_id, target')},
-    se AS (SELECT doc_id, target, domain AS src_domain FROM sd WHERE domain <> ''),
-    {_sql_domain_ctes('t', 'se', 'target', 'doc_id, src_domain')}
-    SELECT src_domain, domain AS dst_domain,
-           count(*) AS n_links, count(DISTINCT doc_id) AS n_pages
-    FROM td WHERE src_domain <> domain
-    GROUP BY 1, 2 ORDER BY 1, 2
-"""
-
+from apache_cassandra_spark.gates import cass, corpus, dedup, events, media, streaming, text, tpch, vectors
 
 # Declaration order matters: the correctness driver verifies the FIRST 50
 # entries per round. Rotation policy: never-gated entries and entries whose
@@ -6617,56 +49,56 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # stragglers (the ledger's oldest green rows, rolled from the r13
     # window exactly as prescribed) lead, then the 48-member round-11
     # cohort in cohort order. ---
-    "status_priority_matrix": q_status_priority_matrix,
-    "tpch_q14ish": q_tpch_q14ish,
-    "corpus_url_revisions": q_corpus_url_revisions,
-    "corpus_page_text": q_corpus_page_text,
-    "corpus_outlink_graph": q_corpus_outlink_graph,
-    "corpus_wet_roundtrip": q_corpus_wet_roundtrip,
-    "corpus_bm25_topk": q_corpus_bm25_topk,
-    "corpus_domain_boilerplate": q_corpus_domain_boilerplate,
-    "dedup_prefix_containment": q_dedup_prefix_containment,
-    "text_collocations": q_text_collocations,
-    "cass_write_path": q_write_path,
-    "cass_lww_events": q_lww_events,
-    "cass_get_slice": q_get_slice,
-    "cass_range_slices_keys": q_range_slices_keys,
-    "cass_get_slice_bounded": q_get_slice_bounded,
-    "cass_get_slice_names": q_get_slice_names,
-    "cass_get_slice_reversed": q_get_slice_reversed,
-    "cass_lww_row_tombstones": q_lww_row_tombstones,
-    "cf_join": q_cf_join,
-    "cluster_assign": q_cluster_assign,
-    "corpus_chunk": q_corpus_chunk,
-    "corpus_interleave_joins": q_corpus_interleave_joins,
-    "corpus_mixture": q_corpus_mixture,
-    "corpus_pack_sequences": q_corpus_pack_sequences,
-    "corpus_sample_importance": q_corpus_sample_importance,
-    "corpus_sample_quota": q_corpus_sample_quota,
-    "corpus_sample_stratified": q_corpus_sample_stratified,
-    "corpus_sample_token_budget": q_corpus_sample_token_budget,
-    "corpus_shard_roundtrip": q_corpus_shard_roundtrip,
-    "corpus_stats": q_corpus_stats,
-    "dedup_groups_star": q_dedup_groups_star,
-    "dedup_within_doc": q_dedup_within_doc,
-    "embedding_quantize": q_embedding_quantize,
-    "events_anomaly": q_events_anomaly,
-    "events_gap_fill": q_events_gap_fill,
-    "events_sessionize": q_events_sessionize,
-    "events_triangles": q_events_triangles,
-    "media_audio_features": q_media_audio_features,
-    "media_frame_sample": q_media_frame_sample,
-    "prepare_corpus_full": q_prepare_corpus_full,
-    "sim_range_search": q_sim_range_search,
-    "streaming_dedup_replay": q_streaming_dedup_replay,
-    "text_bpe_encode": q_text_bpe_encode,
-    "text_char_entropy": q_text_char_entropy,
-    "text_gopher": q_text_gopher,
-    "text_pii_scrub": q_text_pii_scrub,
-    "text_quality_score": q_text_quality_score,
-    "text_repetition": q_text_repetition,
-    "text_unigram_logprob": q_text_unigram_logprob,
-    "tpch_q18ish": q_tpch_q18ish,
+    "status_priority_matrix": tpch.q_status_priority_matrix,
+    "tpch_q14ish": tpch.q_tpch_q14ish,
+    "corpus_url_revisions": corpus.q_corpus_url_revisions,
+    "corpus_page_text": corpus.q_corpus_page_text,
+    "corpus_outlink_graph": corpus.q_corpus_outlink_graph,
+    "corpus_wet_roundtrip": corpus.q_corpus_wet_roundtrip,
+    "corpus_bm25_topk": corpus.q_corpus_bm25_topk,
+    "corpus_domain_boilerplate": corpus.q_corpus_domain_boilerplate,
+    "dedup_prefix_containment": dedup.q_dedup_prefix_containment,
+    "text_collocations": text.q_text_collocations,
+    "cass_write_path": cass.q_write_path,
+    "cass_lww_events": cass.q_lww_events,
+    "cass_get_slice": cass.q_get_slice,
+    "cass_range_slices_keys": cass.q_range_slices_keys,
+    "cass_get_slice_bounded": cass.q_get_slice_bounded,
+    "cass_get_slice_names": cass.q_get_slice_names,
+    "cass_get_slice_reversed": cass.q_get_slice_reversed,
+    "cass_lww_row_tombstones": cass.q_lww_row_tombstones,
+    "cf_join": cass.q_cf_join,
+    "cluster_assign": vectors.q_cluster_assign,
+    "corpus_chunk": corpus.q_corpus_chunk,
+    "corpus_interleave_joins": corpus.q_corpus_interleave_joins,
+    "corpus_mixture": corpus.q_corpus_mixture,
+    "corpus_pack_sequences": corpus.q_corpus_pack_sequences,
+    "corpus_sample_importance": corpus.q_corpus_sample_importance,
+    "corpus_sample_quota": corpus.q_corpus_sample_quota,
+    "corpus_sample_stratified": corpus.q_corpus_sample_stratified,
+    "corpus_sample_token_budget": corpus.q_corpus_sample_token_budget,
+    "corpus_shard_roundtrip": corpus.q_corpus_shard_roundtrip,
+    "corpus_stats": corpus.q_corpus_stats,
+    "dedup_groups_star": dedup.q_dedup_groups_star,
+    "dedup_within_doc": dedup.q_dedup_within_doc,
+    "embedding_quantize": vectors.q_embedding_quantize,
+    "events_anomaly": events.q_events_anomaly,
+    "events_gap_fill": events.q_events_gap_fill,
+    "events_sessionize": events.q_events_sessionize,
+    "events_triangles": events.q_events_triangles,
+    "media_audio_features": media.q_media_audio_features,
+    "media_frame_sample": media.q_media_frame_sample,
+    "prepare_corpus_full": corpus.q_prepare_corpus_full,
+    "sim_range_search": vectors.q_sim_range_search,
+    "streaming_dedup_replay": streaming.q_streaming_dedup_replay,
+    "text_bpe_encode": text.q_text_bpe_encode,
+    "text_char_entropy": text.q_text_char_entropy,
+    "text_gopher": text.q_text_gopher,
+    "text_pii_scrub": text.q_text_pii_scrub,
+    "text_quality_score": text.q_text_quality_score,
+    "text_repetition": text.q_text_repetition,
+    "text_unigram_logprob": text.q_text_unigram_logprob,
+    "tpch_q18ish": tpch.q_tpch_q18ish,
     # --- below the window: the ONE gate registered this round (r13
     # verdict item 2) — the composed discovery front door, the
     # fetch-plan twin of corpus_prepare_crawl. Funding retirement
@@ -6675,121 +107,133 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # rule it executes only on endorsement, so the oracle ledger reads
     # 151 until then (the same transient r12 carried for
     # corpus_prepare_crawl). Leads the r15 window. ---
-    "web_plan_frontier": q_web_plan_frontier,
+    "web_plan_frontier": corpus.q_web_plan_frontier,
     # --- the round-12 cohort (50, gated green in r12) — freshness-safe
     # through r15; forms the r15 window with the new gate leading. ---
-    "corpus_warc_roundtrip": q_corpus_warc_roundtrip,
-    "corpus_main_content": q_corpus_main_content,
-    "corpus_robots": q_corpus_robots,
-    "corpus_sitemap": q_corpus_sitemap,
-    "corpus_sample_weighted": q_corpus_sample_weighted,
-    "tpch_q22ish": q_tpch_q22ish,
-    "events_clustering_coeff": q_events_clustering_coeff,
-    "text_readability": q_text_readability,
-    "events_ohlc": q_events_ohlc,
-    "tpch_q17ish": q_tpch_q17ish,
-    "tpch_q19ish": q_tpch_q19ish,
-    "tpch_q21ish": q_tpch_q21ish,
-    "cass_freshtimestamp_comparator_slice": q_freshtimestamp_comparator_slice,
-    "cass_lexicaluuid_comparator_slice": q_lexicaluuid_comparator_slice,
-    "basket_pairs": q_basket_pairs,
-    "cluster_inertia": q_cluster_inertia,
-    "columns_may_exist": q_columns_may_exist,
-    "corpus_domain_stats": q_corpus_domain_stats,
-    "corpus_dsir_weights": q_corpus_dsir_weights,
-    "corpus_overlap": q_corpus_overlap,
-    "corpus_split": q_corpus_split,
-    "dedup_lines": q_dedup_lines,
-    "dedup_ngram_jaccard": q_dedup_jaccard,
-    "dedup_prefix_jaccard": q_dedup_prefix_jaccard,
-    "describe_splits": q_describe_splits,
-    "docs_ngram_novelty": q_docs_ngram_novelty,
-    "embedding_pq_encode": q_embedding_pq_encode,
-    "events_asof": q_events_asof,
-    "events_daily_active": q_events_daily_active,
-    "events_distinct_exact": q_events_distinct_exact,
-    "events_funnel": q_events_funnel,
-    "events_heavy_hitters_cm": q_events_heavy_hitters_cm,
-    "events_interval_join": q_events_interval_join,
-    "events_pivot": q_events_pivot,
-    "events_range_join": q_events_range_join,
-    "events_retention": q_events_retention,
-    "events_rolling": q_events_rolling,
-    "events_sliding": q_events_sliding,
-    "media_decode_jpeg": q_media_decode_jpeg,
-    "orders_rollup": q_orders_rollup,
-    "pig_group_count": q_pig_parity,
-    "rows_may_exist": q_rows_may_exist,
-    "semantic_dedup": q_semantic_dedup,
-    "streaming_interval_join_replay": q_streaming_interval_join_replay,
-    "streaming_watermark_replay": q_streaming_watermark_replay,
-    "streaming_windowed_replay": q_streaming_windowed_replay,
-    "text_bpe_train": q_text_bpe_train,
-    "text_normalize": q_text_normalize,
-    "tpch_q15ish": q_tpch_q15ish,
-    "wordcount": q_wordcount,
+    "corpus_warc_roundtrip": corpus.q_corpus_warc_roundtrip,
+    "corpus_main_content": corpus.q_corpus_main_content,
+    "corpus_robots": corpus.q_corpus_robots,
+    "corpus_sitemap": corpus.q_corpus_sitemap,
+    "corpus_sample_weighted": corpus.q_corpus_sample_weighted,
+    "tpch_q22ish": tpch.q_tpch_q22ish,
+    "events_clustering_coeff": events.q_events_clustering_coeff,
+    "text_readability": text.q_text_readability,
+    "events_ohlc": events.q_events_ohlc,
+    "tpch_q17ish": tpch.q_tpch_q17ish,
+    "tpch_q19ish": tpch.q_tpch_q19ish,
+    "tpch_q21ish": tpch.q_tpch_q21ish,
+    "cass_freshtimestamp_comparator_slice": cass.q_freshtimestamp_comparator_slice,
+    "cass_lexicaluuid_comparator_slice": cass.q_lexicaluuid_comparator_slice,
+    "basket_pairs": tpch.q_basket_pairs,
+    "cluster_inertia": vectors.q_cluster_inertia,
+    "columns_may_exist": cass.q_columns_may_exist,
+    "corpus_domain_stats": corpus.q_corpus_domain_stats,
+    "corpus_dsir_weights": corpus.q_corpus_dsir_weights,
+    "corpus_overlap": corpus.q_corpus_overlap,
+    "corpus_split": corpus.q_corpus_split,
+    "dedup_lines": dedup.q_dedup_lines,
+    "dedup_ngram_jaccard": dedup.q_dedup_jaccard,
+    "dedup_prefix_jaccard": dedup.q_dedup_prefix_jaccard,
+    "describe_splits": cass.q_describe_splits,
+    "docs_ngram_novelty": dedup.q_docs_ngram_novelty,
+    "embedding_pq_encode": vectors.q_embedding_pq_encode,
+    "events_asof": events.q_events_asof,
+    "events_daily_active": events.q_events_daily_active,
+    "events_distinct_exact": events.q_events_distinct_exact,
+    "events_funnel": events.q_events_funnel,
+    "events_heavy_hitters_cm": events.q_events_heavy_hitters_cm,
+    "events_interval_join": events.q_events_interval_join,
+    "events_pivot": events.q_events_pivot,
+    "events_range_join": events.q_events_range_join,
+    "events_retention": events.q_events_retention,
+    "events_rolling": events.q_events_rolling,
+    "events_sliding": events.q_events_sliding,
+    "media_decode_jpeg": media.q_media_decode_jpeg,
+    "orders_rollup": tpch.q_orders_rollup,
+    "pig_group_count": tpch.q_pig_parity,
+    "rows_may_exist": cass.q_rows_may_exist,
+    "semantic_dedup": dedup.q_semantic_dedup,
+    "streaming_interval_join_replay": streaming.q_streaming_interval_join_replay,
+    "streaming_watermark_replay": streaming.q_streaming_watermark_replay,
+    "streaming_windowed_replay": streaming.q_streaming_windowed_replay,
+    "text_bpe_train": text.q_text_bpe_train,
+    "text_normalize": text.q_text_normalize,
+    "tpch_q15ish": tpch.q_tpch_q15ish,
+    "wordcount": tpch.q_wordcount,
     # --- the round-13 cohort (50 = corpus_prepare_crawl + the six r10
     # tpch leftovers + 43 r9 rows, all gated green in r13) —
     # freshness-safe through r16. ---
-    "corpus_prepare_crawl": q_corpus_prepare_crawl,
-    "tpch_q1ish": q_tpch_q1ish,
-    "tpch_q4ish": q_tpch_q4ish,
-    "tpch_q5ish": q_tpch_q5ish,
-    "tpch_q10ish": q_tpch_q10ish,
-    "tpch_q12ish": q_tpch_q12ish,
-    "tpch_q13ish": q_tpch_q13ish,
-    "cass_long_comparator_slice": q_long_comparator_slice,
-    "cass_multiget_slice": q_multiget_slice,
-    "cass_range_slices_wrapped": q_range_slices_wrapped,
-    "cass_read_at_ts": q_read_at_ts,
-    "cass_super_get_count": q_super_get_count,
-    "cass_super_slice": q_super_slice,
-    "cass_super_subcolumn_slice": q_super_subcolumn_slice,
-    "cass_timeuuid_comparator_slice": q_timeuuid_comparator_slice,
-    "cluster_kmeans_exact": q_cluster_kmeans_exact,
-    "corpus_blocklist": q_corpus_blocklist,
-    "dedup_embedding": q_dedup_embedding,
-    "dedup_embedding_exact": q_dedup_embedding_exact,
-    "dedup_exact": q_dedup_exact,
-    "dedup_incremental": q_dedup_incremental,
-    "dedup_minhash_lsh": q_dedup_minhash,
-    "dedup_simhash": q_dedup_simhash,
-    "dedup_spans": q_dedup_spans,
-    "docs_coreness": q_docs_coreness,
-    "docs_kcore": q_docs_kcore,
-    "embedding_project": q_embedding_project,
-    "events_communities": q_events_communities,
-    "events_heavy_hitters": q_events_heavy_hitters,
-    "events_hits": q_events_hits,
-    "events_pagerank": q_events_pagerank,
-    "events_props_json": q_events_props_json,
-    "events_quantiles": q_events_quantiles,
-    "events_salted_agg": q_events_salted_agg,
-    "events_salted_join": q_events_salted_join,
-    "latest_order_per_customer": q_latest_order_per_customer,
-    "media_decode": q_media_decode,
-    "media_decode_gif": q_media_decode_gif,
-    "media_decode_png": q_media_decode_png,
-    "media_resize": q_media_resize,
-    "sim_pq_topk": q_sim_pq_topk,
-    "sim_topk": q_sim_topk,
-    "streaming_heavy_hitters_replay": q_streaming_heavy_hitters_replay,
-    "streaming_lww_replay": q_streaming_lww_replay,
-    "streaming_sessions_replay": q_streaming_sessions_replay,
-    "text_bigram_logprob": q_text_bigram_logprob,
-    "text_fingerprint": q_text_fingerprint,
-    "text_lang_id": q_text_lang_id,
-    "text_tfidf": q_text_tfidf,
-    "text_token_stats": q_text_token_stats,
+    "corpus_prepare_crawl": corpus.q_corpus_prepare_crawl,
+    "tpch_q1ish": tpch.q_tpch_q1ish,
+    "tpch_q4ish": tpch.q_tpch_q4ish,
+    "tpch_q5ish": tpch.q_tpch_q5ish,
+    "tpch_q10ish": tpch.q_tpch_q10ish,
+    "tpch_q12ish": tpch.q_tpch_q12ish,
+    "tpch_q13ish": tpch.q_tpch_q13ish,
+    "cass_long_comparator_slice": cass.q_long_comparator_slice,
+    "cass_multiget_slice": cass.q_multiget_slice,
+    "cass_range_slices_wrapped": cass.q_range_slices_wrapped,
+    "cass_read_at_ts": cass.q_read_at_ts,
+    "cass_super_get_count": cass.q_super_get_count,
+    "cass_super_slice": cass.q_super_slice,
+    "cass_super_subcolumn_slice": cass.q_super_subcolumn_slice,
+    "cass_timeuuid_comparator_slice": cass.q_timeuuid_comparator_slice,
+    "cluster_kmeans_exact": vectors.q_cluster_kmeans_exact,
+    "corpus_blocklist": corpus.q_corpus_blocklist,
+    "dedup_embedding": dedup.q_dedup_embedding,
+    "dedup_embedding_exact": dedup.q_dedup_embedding_exact,
+    "dedup_exact": dedup.q_dedup_exact,
+    "dedup_incremental": dedup.q_dedup_incremental,
+    "dedup_minhash_lsh": dedup.q_dedup_minhash,
+    "dedup_simhash": dedup.q_dedup_simhash,
+    "dedup_spans": dedup.q_dedup_spans,
+    "docs_coreness": dedup.q_docs_coreness,
+    "docs_kcore": dedup.q_docs_kcore,
+    "embedding_project": vectors.q_embedding_project,
+    "events_communities": events.q_events_communities,
+    "events_heavy_hitters": events.q_events_heavy_hitters,
+    "events_hits": events.q_events_hits,
+    "events_pagerank": events.q_events_pagerank,
+    "events_props_json": events.q_events_props_json,
+    "events_quantiles": events.q_events_quantiles,
+    "events_salted_agg": events.q_events_salted_agg,
+    "events_salted_join": events.q_events_salted_join,
+    "latest_order_per_customer": tpch.q_latest_order_per_customer,
+    "media_decode": media.q_media_decode,
+    "media_decode_gif": media.q_media_decode_gif,
+    "media_decode_png": media.q_media_decode_png,
+    "media_resize": media.q_media_resize,
+    "sim_pq_topk": vectors.q_sim_pq_topk,
+    "sim_topk": vectors.q_sim_topk,
+    "streaming_heavy_hitters_replay": streaming.q_streaming_heavy_hitters_replay,
+    "streaming_lww_replay": streaming.q_streaming_lww_replay,
+    "streaming_sessions_replay": streaming.q_streaming_sessions_replay,
+    "text_bigram_logprob": text.q_text_bigram_logprob,
+    "text_fingerprint": text.q_text_fingerprint,
+    "text_lang_id": text.q_text_lang_id,
+    "text_tfidf": text.q_text_tfidf,
+    "text_token_stats": text.q_text_token_stats,
     # --- by-design approximates: rows-only, never hash-green; exact
     # twins windowed (events_distinct_exact r12; sim_ann_ivf_exact
     # retired r10 and sim_ann_lsh_exact retired r13 — equality of both
     # degenerate-exact ANN paths to cosine_topk pinned in tests;
     # cluster_kmeans_exact / events_quantiles gated green r13) ---
-    "events_distinct_hll": q_events_distinct_hll,
-    "sim_ann_lsh": q_sim_ann_lsh,
-    "sim_ann_ivf": q_sim_ann_ivf,
-    "cluster_kmeans": q_cluster_kmeans,
-    "events_quantiles_approx": q_events_quantiles_approx,
+    "events_distinct_hll": events.q_events_distinct_hll,
+    "sim_ann_lsh": vectors.q_sim_ann_lsh,
+    "sim_ann_ivf": vectors.q_sim_ann_ivf,
+    "cluster_kmeans": vectors.q_cluster_kmeans,
+    "events_quantiles_approx": events.q_events_quantiles_approx,
 }
 
+
+ORACLES: dict[str, str] = {
+    **cass.ORACLES,
+    **tpch.ORACLES,
+    **events.ORACLES,
+    **corpus.ORACLES,
+    **text.ORACLES,
+    **dedup.ORACLES,
+    **media.ORACLES,
+    **vectors.ORACLES,
+    **streaming.ORACLES,
+}

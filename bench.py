@@ -23,7 +23,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from apache_cassandra_spark.catalog import Catalog
 from apache_cassandra_spark.model import ColumnPath, KeyRange, SlicePredicate, SliceRange
 from apache_cassandra_spark.operators import read as R
-from apache_cassandra_spark.queries import QUERIES, TABLES, load_table
+from apache_cassandra_spark.gates.cass import TABLES
+from apache_cassandra_spark.gates.common import load_table
+from apache_cassandra_spark.queries import QUERIES
 from apache_cassandra_spark.session import get_spark
 from apache_cassandra_spark.sources.cellstore import CellStore
 from apache_cassandra_spark.sources.ingest import cells_from_table

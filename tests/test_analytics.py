@@ -181,7 +181,7 @@ def test_token_counts(spark):
 def test_embedding_dup_lsh_matches_brute_on_planted_dups(spark):
     """The shipped LSH path must find exactly the brute-force pair set at
     the dedup threshold (recall 1.0) on a corpus with planted near-dups."""
-    from apache_cassandra_spark.queries import _planted_dup_corpus
+    from apache_cassandra_spark.gates.dedup import _planted_dup_corpus
 
     corpus = _planted_dup_corpus(spark, "/root/testdata/sf0.001")
     lsh = {
@@ -1057,7 +1057,7 @@ def test_filter_blocklist_list_and_frame_paths_agree(spark):
 def test_approx_distinct_within_5pct_of_exact(spark):
     """The HLL++ scale path for events_daily_active: approx DAU must land
     within 5% of the exact distinct count on the real events table."""
-    from apache_cassandra_spark.queries import load_events
+    from apache_cassandra_spark.gates.common import load_events
 
     ev = load_events(spark, "/root/testdata/sf0.001")
     day = F.date_format(F.timestamp_micros(F.expr("ts div 1000")), "yyyy-MM-dd")
@@ -1082,7 +1082,8 @@ def test_clickstream_props_regex_lock(spark):
     parse, never to change a page id; if the events generator widens the
     props grammar, this lock is the tripwire. (c) pins the accepted
     divergence on rows outside that grammar."""
-    from apache_cassandra_spark.queries import _props_k_int, load_events
+    from apache_cassandra_spark.gates.common import load_events
+    from apache_cassandra_spark.gates.events import _props_k_int
 
     ev = load_events(spark, "/root/testdata/sf0.001")
     twin = F.get_json_object("props", "$.k").cast("int")

@@ -88,8 +88,8 @@ ALLOWLIST: dict[tuple[str, str], tuple[int, str]] = {
         "flag-gated (broadcast_model): bigram model table, caller owns bound",
     ),
     ("operators/read.py", "keys"): (1, "multiget request key list"),
-    ("queries.py", "n"): (2, "TPC-H nation dim: 25 rows"),
-    ("queries.py", "r"): (1, "TPC-H region dim: 5 rows"),
+    ("gates/tpch.py", "n"): (2, "TPC-H nation dim: 25 rows"),
+    ("gates/tpch.py", "r"): (1, "TPC-H region dim: 5 rows"),
 }
 
 

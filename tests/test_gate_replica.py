@@ -66,22 +66,115 @@ def test_declared_gate_queries_have_scalar_schemas(spark, tmp_path):
     assert not bad, f"gate queries with non-scalar output columns: {bad}"
 
 
+def _gate_modules():
+    """Every module under ``apache_cassandra_spark.gates``."""
+    import importlib
+    import pkgutil
+
+    from apache_cassandra_spark import gates
+
+    return [
+        importlib.import_module(f"{gates.__name__}.{m.name}")
+        for m in pkgutil.iter_modules(gates.__path__)
+    ]
+
+
 def test_every_query_builder_and_oracle_is_registered():
-    """Spark-free registry guard: a ``q_*`` builder that no QUERIES entry
-    names, or an ORACLES entry for an undeclared query, is a retired gate
-    left behind — delete it instead of keeping a second, unchecked copy."""
+    """Spark-free registry guard over every gate family module: a ``q_*``
+    builder that no QUERIES entry names, or an ORACLES entry for an
+    undeclared query, is a retired gate left behind — delete it instead of
+    keeping a second, unchecked copy. Each oracle lives in its builder's
+    module."""
     import inspect
 
     from apache_cassandra_spark import queries as Q
 
     builders = {
-        name
-        for name, fn in vars(Q).items()
-        if name.startswith("q_") and inspect.isfunction(fn) and fn.__module__ == Q.__name__
+        fn
+        for mod in _gate_modules()
+        for name, fn in vars(mod).items()
+        if name.startswith("q_") and inspect.isfunction(fn) and fn.__module__ == mod.__name__
     }
-    registered = {fn.__name__ for fn in Q.QUERIES.values()}
-    assert builders <= registered, f"unregistered builders: {sorted(builders - registered)}"
+    registered = set(Q.QUERIES.values())
+    assert builders == registered, (
+        f"unregistered builders: {sorted(f.__name__ for f in builders - registered)}; "
+        f"registered outside the gate modules: {sorted(f.__name__ for f in registered - builders)}"
+    )
     assert set(Q.ORACLES) <= set(Q.QUERIES), f"stray oracles: {sorted(set(Q.ORACLES) - set(Q.QUERIES))}"
+    away = sorted(
+        name for name in Q.ORACLES
+        if name not in sys.modules[Q.QUERIES[name].__module__].ORACLES
+    )
+    assert not away, f"oracles outside their builder's module: {away}"
+
+
+def test_each_query_and_oracle_is_defined_by_one_family_module():
+    """The registry merges the family modules' dicts, and a merge keeps the
+    last of two equal keys without a word. So every ORACLES name must come
+    from exactly one family module, and the QUERIES literal must name each
+    query once."""
+    import ast
+    import collections
+    import inspect
+
+    from apache_cassandra_spark import queries as Q
+
+    owners = collections.Counter(name for mod in _gate_modules() for name in getattr(mod, "ORACLES", {}))
+    assert sorted(n for n, c in owners.items() if c > 1) == []
+    assert set(owners) == set(Q.ORACLES)
+    literal = next(
+        node.value for node in ast.parse(inspect.getsource(Q)).body
+        if isinstance(node, ast.AnnAssign) and node.target.id == "QUERIES"
+    )
+    names = collections.Counter(key.value for key in literal.keys)
+    assert sorted(n for n, c in names.items() if c > 1) == []
+
+
+def test_no_session_keyed_memo_and_no_session_conf_side_effect():
+    """Spark-free guard for two package-wide hazards. A module-level dict
+    keyed by ``id(...)`` outlives the object the id named: ``id`` reuse
+    after ``spark.stop()`` can hand back a frame bound to a dead session.
+    And a loader that calls ``.conf.set(...)`` changes the caller's session
+    for every later read. Both must stay out of the package."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "apache_cassandra_spark"
+    paths = sorted(pkg.rglob("*.py"))
+    assert len(paths) > 50, f"package not found under {pkg}"
+    hits = []
+    for path in paths:
+        src = path.read_text()
+        rel = path.relative_to(pkg)
+        tree = ast.parse(src)
+        dicts = {}
+        for node in tree.body:
+            if isinstance(node, (ast.Assign, ast.AnnAssign)) and (
+                isinstance(node.value, ast.Dict)
+                or (isinstance(node.value, ast.Call) and getattr(node.value.func, "id", None) == "dict")
+            ):
+                for tgt in node.targets if isinstance(node, ast.Assign) else [node.target]:
+                    if isinstance(tgt, ast.Name):
+                        dicts[tgt.id] = node.lineno
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                continue
+            names = {n.id for n in ast.walk(fn) if isinstance(n, ast.Name)}
+            calls_id = any(
+                isinstance(n, ast.Call) and getattr(n.func, "id", None) == "id" for n in ast.walk(fn)
+            )
+            if calls_id:
+                hits += [f"{rel}:{dicts[d]} dict keyed by id()" for d in sorted(names & set(dicts))]
+        hits += [
+            f"{rel}:{n.lineno} conf.set"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "set"
+            and isinstance(n.func.value, ast.Attribute)
+            and n.func.value.attr == "conf"
+        ]
+    assert not sorted(set(hits)), f"session-keyed memos or session conf writes: {sorted(set(hits))}"
 
 
 def test_row_cache_is_kept_only_by_the_cell_store():

@@ -709,7 +709,7 @@ def test_html_chain_matches_duckdb_mirror_on_random_markup(spark):
     lazy spans, \\b, char classes) fails here, not in a driver round."""
     import duckdb
 
-    from apache_cassandra_spark.queries import (
+    from apache_cassandra_spark.gates.corpus import (
         _SQL_ANCHOR_TEXT_LIST,
         _SQL_HREF_LIST,
         _SQL_STRIP_NONCONTENT,

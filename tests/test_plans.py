@@ -670,7 +670,7 @@ def test_tpch_q5ish_broadcasts_dims_and_pushes_date_filter(spark):
     (region/nation) and push the order-date range into the orders scan —
     at 100 TB the date filter is the difference between scanning one
     year and scanning the table."""
-    from apache_cassandra_spark.queries import q_tpch_q5ish
+    from apache_cassandra_spark.gates.tpch import q_tpch_q5ish
 
     df = q_tpch_q5ish(spark, "/root/testdata/sf0.001")
     plan = plan_of(df)
@@ -752,7 +752,7 @@ def test_tpch_q10ish_pushes_flag_filter_and_takeordered(spark):
     """The returnflag filter must reach the lineitem scan and the top-20
     must be TakeOrderedAndProject (partial per-partition top-k), never a
     global Sort."""
-    from apache_cassandra_spark.queries import q_tpch_q10ish
+    from apache_cassandra_spark.gates.tpch import q_tpch_q10ish
 
     df = q_tpch_q10ish(spark, "/root/testdata/sf0.001")
     plan = plan_of(df)
@@ -793,7 +793,7 @@ def test_novelty_topk_uses_window_group_limit(spark):
     from pyspark.sql import Window
 
     from apache_cassandra_spark.analytics.dedup import ngram_novelty
-    from apache_cassandra_spark.queries import load_table
+    from apache_cassandra_spark.gates.common import load_table
 
     def q_docs_novelty_topk(spark, sf_dir):
         """Curation top-k: the 5 most novel documents per source (novelty
@@ -851,7 +851,7 @@ def test_gap_fill_no_global_calendar(spark):
 def test_tpch_q18ish_topk_and_partial_agg(spark):
     """The quantity roll-up must partial-aggregate before its shuffle
     and the top-100 must be TakeOrderedAndProject, not a global sort."""
-    from apache_cassandra_spark.queries import q_tpch_q18ish
+    from apache_cassandra_spark.gates.tpch import q_tpch_q18ish
 
     plan = plan_of(q_tpch_q18ish(spark, "/root/testdata/sf0.001"))
     assert "TakeOrderedAndProject" in plan
@@ -893,7 +893,7 @@ def test_dedup_incremental_no_forced_broadcast_and_anti_join(spark):
 
 
 def test_tpch_q14ish_pushes_date_filter(spark):
-    from apache_cassandra_spark.queries import q_tpch_q14ish
+    from apache_cassandra_spark.gates.tpch import q_tpch_q14ish
 
     plan = plan_of(q_tpch_q14ish(spark, "/root/testdata/sf0.001"))
     assert "GreaterThanOrEqual(l_shipdate" in plan and "LessThan(l_shipdate" in plan
@@ -901,7 +901,7 @@ def test_tpch_q14ish_pushes_date_filter(spark):
 
 
 def test_tpch_q12ish_pushes_date_filter_and_prunes_orders(spark):
-    from apache_cassandra_spark.queries import q_tpch_q12ish
+    from apache_cassandra_spark.gates.tpch import q_tpch_q12ish
 
     df = q_tpch_q12ish(spark, "/root/testdata/sf0.001")
     plan = plan_of(df)
@@ -916,7 +916,7 @@ def test_tpch_q12ish_pushes_date_filter_and_prunes_orders(spark):
 
 
 def test_tpch_q13ish_preserves_zero_order_customers(spark):
-    from apache_cassandra_spark.queries import q_tpch_q13ish
+    from apache_cassandra_spark.gates.tpch import q_tpch_q13ish
 
     df = q_tpch_q13ish(spark, "/root/testdata/sf0.001")
     plan = plan_of(df)
@@ -930,7 +930,7 @@ def test_tpch_q13ish_preserves_zero_order_customers(spark):
 
 
 def test_cm_heavy_hitters_plan(spark):
-    from apache_cassandra_spark.queries import q_events_heavy_hitters_cm
+    from apache_cassandra_spark.gates.events import q_events_heavy_hitters_cm
 
     df = q_events_heavy_hitters_cm(spark, "/root/testdata/sf0.001")
     plan = plan_of(df)
@@ -1004,7 +1004,7 @@ def test_tpch_q4ish_is_semi_join_with_pushed_dates(spark):
     emits at most once regardless of late-line count) with the quarter
     filter pushed to the orders scan — never a correlated loop or a
     nested-loop fallback."""
-    from apache_cassandra_spark.queries import q_tpch_q4ish
+    from apache_cassandra_spark.gates.tpch import q_tpch_q4ish
 
     plan = plan_of(q_tpch_q4ish(spark, "/root/testdata/sf0.001"))
     assert "LeftSemi" in plan
@@ -1017,7 +1017,7 @@ def test_tpch_q22ish_anti_join_and_single_row_threshold(spark):
     """Lapsed-customer exclusion is a LeftAnti HASH join on custkey;
     the only nested-loop in the plan is the 1-row global-stats
     threshold join (the documented bounded cross-join class)."""
-    from apache_cassandra_spark.queries import q_tpch_q22ish
+    from apache_cassandra_spark.gates.tpch import q_tpch_q22ish
 
     plan = plan_of(q_tpch_q22ish(spark, "/root/testdata/sf0.001"))
     assert "LeftAnti" in plan
@@ -1073,7 +1073,7 @@ def test_tpch_q17ish_brand_prunes_stats_pass_and_exact_threshold(spark):
     the stats join must be an equi hash/merge join with the rational
     threshold as residual — never a correlated loop or cartesian —
     and the threshold itself must be all-bigint (no float division)."""
-    from apache_cassandra_spark.queries import q_tpch_q17ish
+    from apache_cassandra_spark.gates.tpch import q_tpch_q17ish
 
     plan = plan_of(q_tpch_q17ish(spark, "/root/testdata/sf0.001"))
     assert "In(p_brand" in plan  # outer filter pushed into the agg domain's scan
@@ -1089,7 +1089,7 @@ def test_tpch_q19ish_or_projections_pushed_to_both_scans(spark):
     disjunctive projections and push them into BOTH parquet scans as
     Or(...) PushedFilters (the hand-hoist classic engines need). A
     regression here silently reverts Q19 to full-fact reads at scale."""
-    from apache_cassandra_spark.queries import q_tpch_q19ish
+    from apache_cassandra_spark.gates.tpch import q_tpch_q19ish
 
     plan = plan_of(q_tpch_q19ish(spark, "/root/testdata/sf0.001"))
     li_scan = [s for s in plan.split("FileScan parquet")[1:] if "lineitem" in s[:400]]
@@ -1107,7 +1107,7 @@ def test_tpch_q21ish_no_fact_self_joins_exchange_frugal_aggs(spark):
     (orderkey, suppkey) -> orderkey aggregate stack must add exactly
     one exchange between the two grouping levels (the coarser key is a
     prefix, so under an at-scale shuffled join even that disappears)."""
-    from apache_cassandra_spark.queries import q_tpch_q21ish
+    from apache_cassandra_spark.gates.tpch import q_tpch_q21ish
 
     plan = plan_of(q_tpch_q21ish(spark, "/root/testdata/sf0.001"))
     assert plan.count("lineitem.parquet") == 1  # the fact is scanned ONCE
@@ -1143,7 +1143,7 @@ def test_tpch_q15ish_max_equality_compiles_to_hash_join(spark):
     crossJoin-then-equality into a HASH join on the aggregate value —
     NO nested loop anywhere — with the date range pushed to the fact
     scan and the revenue aggregate map-side combined."""
-    from apache_cassandra_spark.queries import q_tpch_q15ish
+    from apache_cassandra_spark.gates.tpch import q_tpch_q15ish
 
     plan = plan_of(q_tpch_q15ish(spark, "/root/testdata/sf0.001"))
     assert "GreaterThanOrEqual(l_shipdate" in plan  # date range pushed
@@ -1174,7 +1174,7 @@ def test_widened_scan_keeps_pushdown(spark):
     round-robin exchange added after a narrow scan must not block
     predicate pushdown — the filter still lands in the parquet scan's
     PushedFilters below the exchange."""
-    from apache_cassandra_spark.queries import load_table
+    from apache_cassandra_spark.gates.common import load_table
 
     df = load_table(spark, "/root/testdata/sf0.1", "orders", wide=True).where(
         F.col("o_orderkey") == 42

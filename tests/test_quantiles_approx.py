@@ -6,7 +6,8 @@ can be far apart). Same exact-twin discipline as the HLL entry."""
 
 from pyspark.sql import functions as F
 
-from apache_cassandra_spark.queries import load_events, q_events_quantiles_approx
+from apache_cassandra_spark.gates.common import load_events
+from apache_cassandra_spark.gates.events import q_events_quantiles_approx
 
 SF = "/root/testdata/sf0.001"
 ACCURACY = 10_000  # must match q_events_quantiles_approx

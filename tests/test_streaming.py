@@ -271,7 +271,8 @@ def test_session_window_matches_lag_based_sessionize(spark):
     """Native session_window membership == the batch lag+running-sum
     sessionization: same (user, session start, end, count) sets on the
     sf0.001 events fixture — the two formulations can't drift."""
-    from apache_cassandra_spark.queries import QUERIES, load_events
+    from apache_cassandra_spark.gates.common import load_events
+    from apache_cassandra_spark.queries import QUERIES
     from apache_cassandra_spark.streaming.sessions import sessionized_stats
 
     sf = "/root/testdata/sf0.001"

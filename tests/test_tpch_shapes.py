@@ -2,7 +2,7 @@
 EXISTS / NOT-EXISTS triple-join semantics: a supplier waits on an order
 iff (a) it shipped a late line on it, (b) another supplier has a line on
 the same order, and (c) no OTHER supplier shipped late on it. The gate
-runs the two-aggregate form (queries._waiting_suppliers); here a brute
+runs the two-aggregate form (gates.tpch._waiting_suppliers); here a brute
 per-order Python model replays the quantified form over randomized
 multi-supplier data — including the edge rows the reformulation has to
 get right (single-supplier orders with a late line, all-late orders,
@@ -14,7 +14,7 @@ from collections import defaultdict
 
 from pyspark.sql import functions as F
 
-from apache_cassandra_spark.queries import _waiting_suppliers
+from apache_cassandra_spark.gates.tpch import _waiting_suppliers
 
 BASE = dt.datetime(1995, 1, 1)
 

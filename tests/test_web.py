@@ -410,7 +410,7 @@ def test_url_revisions_fuzz_vs_pandas_model(spark):
 
 def test_url_keys_match_duckdb_oracle_chain_on_random_urls(spark):
     """Cross-engine fuzz of the SHARED oracle CTE chain
-    (queries._url_keys_ctes) against web.with_url_keys over randomized
+    (gates.corpus._url_keys_ctes) against web.with_url_keys over randomized
     messy URLs — including the branches the synthetic gates never
     exercise: non-absolute inputs (passthrough), surrounding
     whitespace (trim), uppercase scheme/host, default and non-default
@@ -419,7 +419,7 @@ def test_url_keys_match_duckdb_oracle_chain_on_random_urls(spark):
 
     import duckdb
 
-    from apache_cassandra_spark.queries import _url_keys_ctes
+    from apache_cassandra_spark.gates.corpus import _url_keys_ctes
 
     rng = random.Random(0x0C0FFEE)
     schemes = ["http", "HTTP", "https", "HTTPS", "ftp"]

@@ -7,6 +7,8 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import hashlib
+import json
 import math
 import sys
 
@@ -74,6 +76,12 @@ def main():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     qs, os_ = queries(), oracle_sql()
+    # one line to compare across commits: the ordered names and the
+    # name-to-SQL mapping (key-sorted, so the merge order of the family
+    # modules' dicts does not matter)
+    names = hashlib.sha256(json.dumps(list(qs)).encode()).hexdigest()
+    oracles = hashlib.sha256(json.dumps(os_, sort_keys=True).encode()).hexdigest()
+    print(f"registry: {len(qs)} queries, names sha256 {names}, oracles sha256 {oracles}")
     failures = []
     for name, fn in qs.items():
         if only and name not in only:

@@ -996,8 +996,8 @@ def _q21_op(docs: DataFrame) -> int:
     order, 997 suppliers, ~55% late lines — ORDERS grow with k (each
     replica's doc_ids mint new orderkeys), lines-per-order stays fixed,
     which is how a fact table actually grows. Probes the zero-self-join
-    aggregate stack of queries._waiting_suppliers."""
-    from apache_cassandra_spark.queries import _waiting_suppliers
+    aggregate stack of gates.tpch._waiting_suppliers."""
+    from apache_cassandra_spark.gates.tpch import _waiting_suppliers
 
     base = F.to_timestamp(F.lit("1995-01-01"))
     li = docs.select(
