@@ -17,7 +17,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from apache_cassandra_spark import __version__
-from apache_cassandra_spark.catalog import Catalog
+from apache_cassandra_spark.catalog import Catalog, CFDef
+from apache_cassandra_spark.functions.reconcile import live_rows
 from apache_cassandra_spark.functions.tokens import Partitioner, RandomPartitioner, get_partitioner
 from apache_cassandra_spark.model import CF, ColumnPath, KeyRange, SlicePredicate
 from apache_cassandra_spark.operators import exists as X
@@ -232,38 +233,48 @@ class Engine:
 
     # -- handles ------------------------------------------------------------
     def cf(self, keyspace: str, cf_name: str) -> CF:
-        self._check_login_done()  # every data-plane read binds through here
+        self._check_login_done()  # every Spark read binds through here
         return self.store.cf(keyspace, cf_name)
+
+    def _live_rows(self, ks: str, cf_name: str, keys: list[str]) -> tuple[CFDef, list[tuple]]:
+        """The live cells of ``keys``, read and merged on the driver: the
+        reference's collated read (``ColumnFamilyStore.getTopLevelColumns``)
+        with no Spark plan and no job. Every key-pinned read goes through
+        here; range reads, scans and joins bind ``cf()``."""
+        self._check_login_done()
+        cfdef = self.catalog.keyspace(ks).cf(cf_name)
+        cells, tombs = self.store.key_cells(ks, cf_name, keys)
+        return cfdef, live_rows(cells, tombs, with_sc_level=cfdef.is_super)
 
     # -- reads (§2.1) -------------------------------------------------------
     def get(self, ks: str, key: str, path: ColumnPath) -> DataFrame:
         V.validate_key(key)
         V.validate_column_path(self.catalog, ks, path)
-        return R.get(self.cf(ks, path.column_family), key, path)
+        return R.rows_frame(self.spark, R.path_rows(*self._live_rows(ks, path.column_family, [key]), path))
 
     def get_slice(self, ks: str, key: str, cf_name: str, predicate: SlicePredicate, super_column=None) -> DataFrame:
         V.validate_key(key)
         cfdef = V.validate_column_parent(self.catalog, ks, cf_name, super_column)
         V.validate_slice_range(cfdef, predicate, super_column)
-        return R.get_slice(self.cf(ks, cf_name), key, predicate, super_column)
+        return R.rows_frame(self.spark, R.slice_rows(*self._live_rows(ks, cf_name, [key]), predicate, super_column))
 
     def multiget(self, ks: str, keys: list[str], path: ColumnPath) -> DataFrame:
         for key in keys:
             V.validate_key(key)
         V.validate_column_path(self.catalog, ks, path)
-        return R.multiget(self.cf(ks, path.column_family), keys, path)
+        return R.rows_frame(self.spark, R.path_rows(*self._live_rows(ks, path.column_family, keys), path, keys))
 
     def multiget_slice(self, ks: str, keys, cf_name: str, predicate, super_column=None) -> DataFrame:
         for key in keys:
             V.validate_key(key)
         cfdef = V.validate_column_parent(self.catalog, ks, cf_name, super_column)
         V.validate_slice_range(cfdef, predicate, super_column)
-        return R.multiget_slice(self.cf(ks, cf_name), keys, predicate, super_column)
+        return R.rows_frame(self.spark, R.slice_rows(*self._live_rows(ks, cf_name, keys), predicate, super_column))
 
     def get_count(self, ks: str, key: str, cf_name: str, super_column=None) -> int:
         V.validate_key(key)
         V.validate_column_parent(self.catalog, ks, cf_name, super_column)
-        return R.get_count(self.cf(ks, cf_name), key, super_column).collect()[0]["count"]
+        return R.count_rows(*self._live_rows(ks, cf_name, [key]), super_column)
 
     def get_range_slices(
         self,

@@ -140,6 +140,30 @@ def live_view(
     )
 
 
+def live_rows(cells: list[tuple], container_tombstones: list[tuple], with_sc_level: bool = True) -> list[tuple]:
+    """``live_view`` on the driver over a key-pinned read's rows
+    (``CellStore.key_cells``), like ``QueryFilter.collectCollatedColumns``:
+    ``(key, sc, column, value, ts)`` per live coordinate, unordered. The
+    ``priority`` rule, a null value below every byte string."""
+    best: dict[tuple, tuple] = {}
+    for key, sc, column, value, ts, tombstone in cells:
+        pri = (ts, tombstone, value is not None, value or b"")
+        cur = best.get((key, sc, column))
+        if cur is None or pri > cur[0]:
+            best[(key, sc, column)] = (pri, value)
+    marks: dict[tuple, int] = {}
+    for key, sc, ts in container_tombstones:
+        if sc is None or with_sc_level:
+            marks[(key, sc)] = max(ts, marks.get((key, sc), ts))
+    return [
+        (key, sc, column, value, ts)
+        for (key, sc, column), ((ts, dead, _, _), value) in best.items()
+        if not dead
+        and ts > marks.get((key, None), ts - 1)
+        and (sc is None or ts > marks.get((key, sc), ts - 1))
+    ]
+
+
 def gc_view(
     cells: DataFrame,
     container_tombstones: DataFrame | None,

@@ -18,9 +18,11 @@ Result frames use the live-cell schema ``(key, sc, column, value, ts)``.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from apache_cassandra_spark.catalog import CFDef
 from apache_cassandra_spark.functions.comparators import AbstractComparator, and_all
 from apache_cassandra_spark.functions.reconcile import live_view
 from apache_cassandra_spark.model import CF, ColumnPath, KeyRange, SlicePredicate, SliceRange
@@ -33,7 +35,7 @@ RESULT_COLS = ["key", "sc", "column", "value", "ts"]
 # ---------------------------------------------------------------------------
 
 
-def _level(cf: CF, super_column: bytes | None) -> tuple[str, AbstractComparator]:
+def _level(cfdef: CFDef, super_column: bytes | None) -> tuple[str, AbstractComparator]:
     """Which name column the predicate addresses, and its comparator.
 
     Standard CF -> ("column", comparator). Super CF with a super_column
@@ -42,11 +44,11 @@ def _level(cf: CF, super_column: bytes | None) -> tuple[str, AbstractComparator]
     semantics of ``SliceQueryFilter.filterSuperColumn``
     (``db/filter/SliceQueryFilter.java:66-96``).
     """
-    if cf.is_super and super_column is None:
-        return "sc", cf.cfdef.comparator
-    if cf.is_super:
-        return "column", cf.cfdef.subcomparator
-    return "column", cf.cfdef.comparator
+    if cfdef.is_super and super_column is None:
+        return "sc", cfdef.comparator
+    if cfdef.is_super:
+        return "column", cfdef.subcomparator
+    return "column", cfdef.comparator
 
 
 def _slice_cell_preds(
@@ -82,7 +84,7 @@ def _apply_count(
     At the supercolumn level the unit counted is the supercolumn (all its
     subcolumns flow through) — hence dense_rank on the sc sort key.
     """
-    target, comparator = _level(cf, super_column)
+    target, comparator = _level(cf.cfdef, super_column)
     order = comparator.order_exprs(F.col(target), reverse=sr.reversed)
     if cf.is_super and super_column is None:
         # rank whole supercolumns: order by sc only, so every subcolumn of
@@ -94,6 +96,79 @@ def _apply_count(
         w = Window.partitionBy(*part).orderBy(*order)
         ranked = live.withColumn("_rk", F.row_number().over(w))
     return ranked.where(F.col("_rk") <= sr.count).drop("_rk")
+
+
+# The Engine's key reads run on the driver (``CellStore.key_cells``, then
+# ``reconcile.live_rows``); these functions slice the merged rows as
+# ``_sliced`` and ``_apply_count`` do, ordering by each ``py_key``.
+
+_ALL = SlicePredicate(slice_range=SliceRange(count=2**31 - 1))
+_ROWS_ARROW = pa.schema([("key", pa.string()), *[(c, pa.binary()) for c in ("sc", "column", "value")], ("ts", pa.int64())])
+
+
+def slice_rows(cfdef: CFDef, live: list[tuple], predicate: SlicePredicate, super_column: bytes | None) -> list[tuple]:
+    """``get_slice`` / ``multiget_slice`` over ``live_rows`` output, as
+    ``_sliced`` computes them: the name filter, key order then
+    comparator order (descending when reversed; a supercolumn's subcolumns
+    ascend), then the first ``count`` entries per key — whole supercolumns
+    at the parent level."""
+    target, comparator = _level(cfdef, super_column)
+    at = 1 if target == "sc" else 2
+    rows = [r for r in live if super_column is None or r[1] == super_column]
+    sr = predicate.slice_range
+    if sr is None:
+        names = set(map(bytes, predicate.column_names))
+        rows = [r for r in rows if r[at] in names]
+    else:
+        lo, hi = (sr.finish, sr.start) if sr.reversed else (sr.start, sr.finish)
+        if lo:
+            lo = comparator.py_key(lo)
+            rows = [r for r in rows if not comparator.py_key(r[at]) < lo]
+        if hi:
+            hi = comparator.py_key(hi)
+            rows = [r for r in rows if not hi < comparator.py_key(r[at])]
+    if at == 1:
+        rows.sort(key=lambda r: cfdef.subcomparator.py_key(r[2]))
+    rows.sort(key=lambda r: comparator.py_key(r[at]), reverse=sr is not None and sr.reversed)
+    rows.sort(key=lambda r: r[0])
+    if sr is None:
+        return rows
+    out, units = [], {}
+    for r in rows:
+        seen = units.setdefault(r[0], set())
+        unit = r[1] if at == 1 else r
+        if unit in seen or len(seen) < sr.count:
+            seen.add(unit)
+            out.append(r)
+    return out
+
+
+def path_rows(cfdef: CFDef, live: list[tuple], path: ColumnPath, keys: list[str] | None = None) -> list[tuple]:
+    """``get`` (no ``keys``) or ``multiget`` over ``live_rows`` output; a
+    multiget gives one entry per distinct key, NULL column and value for a
+    key with no hit."""
+    if keys is None and path.column is None and path.super_column is None:
+        raise ValueError("get() needs a column or super_column coordinate")
+    pred = _ALL if path.column is None else SlicePredicate(column_names=(path.column,))
+    rows = slice_rows(cfdef, live, pred, path.super_column)
+    if keys is None:
+        return rows
+    missing = set(keys) - {r[0] for r in rows}
+    return sorted(rows + [(k, None, None, None, None) for k in missing], key=lambda r: r[0])
+
+
+def count_rows(cfdef: CFDef, live: list[tuple], super_column: bytes | None) -> int:
+    """``get_count`` over ``live_rows`` output."""
+    at = 1 if _level(cfdef, super_column)[0] == "sc" else 2
+    return len({r[at] for r in slice_rows(cfdef, live, _ALL, super_column)})
+
+
+def rows_frame(spark: SparkSession, rows: list[tuple]) -> DataFrame:
+    """``rows`` as a DataFrame of ``RESULT_COLS`` with the Spark path's
+    all-nullable schema: a driver-built LocalRelation, whose collect runs
+    no Spark job."""
+    cols = list(zip(*rows)) or [()] * len(RESULT_COLS)
+    return spark.createDataFrame(pa.table([pa.array(c, f.type) for c, f in zip(cols, _ROWS_ARROW)], schema=_ROWS_ARROW))
 
 
 def _domain_pred(cf: CF, keys: list[str]) -> Column | None:
@@ -148,7 +223,7 @@ def _sliced(
     per_key_count: bool = True,
     keys: list[str] | None = None,
 ) -> DataFrame:
-    target, comparator = _level(cf, super_column)
+    target, comparator = _level(cf.cfdef, super_column)
     preds = _slice_cell_preds(F.col(target), comparator, predicate)
     if cf.is_super and super_column is not None:
         preds.append(F.col("sc") == F.lit(bytearray(super_column)))
@@ -196,11 +271,11 @@ def multiget_slice(
 
 def multiget(cf: CF, keys: list[str], path: ColumnPath) -> DataFrame:
     """R3 ``multiget`` (deprecated in the reference) — R1 fanned over N
-    keys; the reference always returns an entry per key
-    (``CassandraServer.java:276-319``), so absent keys appear with NULL
-    column/value (left join against the key list)."""
+    keys; the reference returns a map with an entry per key
+    (``CassandraServer.java:276-319``), so each distinct key appears once,
+    absent keys with NULL column/value (left join against the key list)."""
     spark = cf.cells.sparkSession
-    want = spark.createDataFrame([(k,) for k in keys], "key string")
+    want = spark.createDataFrame([(k,) for k in dict.fromkeys(keys)], "key string")
     if path.column is not None:
         pred = SlicePredicate(column_names=(path.column,))
         hits = _sliced(cf, F.col("key").isin(list(keys)), pred, path.super_column, keys=list(keys))
@@ -348,7 +423,7 @@ def get_range_slices(
         .select("key")
     )
 
-    target, comparator = _level(cf, super_column)
+    target, comparator = _level(cf.cfdef, super_column)
     cell_preds = _slice_cell_preds(F.col(target), comparator, predicate)
     if cf.is_super and super_column is not None:
         cell_preds.append(F.col("sc") == F.lit(bytearray(super_column)))

@@ -13,6 +13,10 @@ row-major SSTables (``io/SSTableWriter.java``) — with:
 * **memtable analog**: an in-session row buffer, unioned into every read
   until flushed (reads always see their own writes, like the reference's
   memtable+SSTable collation);
+* **key-pinned reads**: ``key_cells`` reads one request's keys from the
+  same sources as ``cf()`` on the driver, with pyarrow, opening only the
+  keys' bucket files (``_dom=`` directories for domain-split CFs) — the
+  coordinator's collated read, no Spark plan;
 * **one freshness check**: each ``cf()`` bind compares the CF's state
   (compacted generation, delta file names, memtable rows) with the state
   this store last bound; on a change it drops the primed row cache and
@@ -44,10 +48,13 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import re
 import shutil
 import uuid
 
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -85,6 +92,47 @@ CONTAINER_TOMBSTONE_SCHEMA = T.StructType(
 # (ExternalCatalogUtils.escapePathName), so a committed file lands in the
 # same ``_dom=`` directory as bulk_load's and reads back the same domain
 _PATH_ESCAPED = frozenset(map(chr, range(1, 32))) | frozenset("\"#%'*/:=?\\\x7f{[]^")
+
+
+# Spark's bucket-file name, ``part-…_00003.c000.zstd.parquet``
+# (``BucketingUtils.getBucketId``)
+_BUCKET_FILE = re.compile(r".*_(\d+)(?:\..*)?$")
+
+# the columns a key-pinned read needs: cells up to ``tombstone``,
+# container tombstones up to ``ts``; nullable, as Spark reads every file
+_KEY_READ_CELLS = pa.schema([f.with_nullable(True) for f in to_arrow_schema(CELL_SCHEMA)][:6])
+_KEY_READ_TOMBS = pa.schema([f.with_nullable(True) for f in to_arrow_schema(CONTAINER_TOMBSTONE_SCHEMA)][:3])
+
+
+def spark_bucket(key: str, buckets: int) -> int:
+    """The bucket ``bucketBy(buckets, "key")`` writes ``key`` to:
+    ``pmod(murmur3(key, seed 42), buckets)``. Spark's murmur3 of a string
+    (``Murmur3_x86_32.hashUnsafeBytes``) mixes the UTF-8 bytes as
+    little-endian 4-byte words, then each tail byte alone, sign-extended."""
+    data = key.encode()
+    m = 0xFFFFFFFF
+    n4 = len(data) - len(data) % 4
+    words = [int.from_bytes(data[i : i + 4], "little") for i in range(0, n4, 4)]
+    h = 42
+    for k in words + [(b - 256 if b > 127 else b) & m for b in data[n4:]]:
+        k = (k * 0xCC9E2D51) & m
+        k = ((k << 15) | (k >> 17)) * 0x1B873593 & m
+        h ^= k
+        h = (((h << 13) | (h >> 19)) * 5 + 0xE6546B64) & m
+    h ^= len(data)
+    h = (h ^ h >> 16) * 0x85EBCA6B & m
+    h = (h ^ h >> 13) * 0xC2B2AE35 & m
+    h ^= h >> 16
+    return (h - (1 << 32) if h >> 31 else h) % buckets
+
+
+def _scan(paths: list[str], schema: pa.Schema, keys: set) -> list[tuple]:
+    """The rows of ``keys`` in the Parquet files ``paths``, as tuples of
+    ``schema``'s columns."""
+    if not paths or not keys:
+        return []
+    t = ds.dataset(paths, schema=schema, format="parquet").to_table(filter=pc.field("key").isin(list(keys)))
+    return list(zip(*(t.column(n).to_pylist() for n in schema.names)))
 
 
 def _dom_dir(key: str) -> str:
@@ -512,6 +560,45 @@ class CellStore:
         writer.mode("append").parquet(self._cells_dir(ks, cf))
 
     # -- read path -----------------------------------------------------------
+    def _sources(self, ks: str, cf_name: str) -> tuple:
+        """What a read of the CF sees: the live generation's pointer, the
+        delta cell and container-tombstone files, and the pending memtable
+        rows. A compaction cut short after its flip is finished first."""
+        meta = self.compacted_meta(ks, cf_name)
+        if meta is not None and "retire" in meta:
+            self._retire(ks, cf_name, meta)
+        cell_files = self._files(ks, cf_name, "cells")
+        tomb_files = self._files(ks, cf_name, "ctombs")
+        return meta, cell_files, tomb_files, self._pending.get((ks, cf_name))
+
+    def key_cells(self, ks: str, cf_name: str, keys) -> tuple[list[tuple], list[tuple]]:
+        """Every stored version of ``keys``' cells ``(key, sc, column,
+        value, ts, tombstone)`` and container tombstones ``(key, sc, ts)``,
+        read on the driver from ``cf()``'s sources with no Spark job. In the
+        generation only the keys' bucket files are opened, the bucket id
+        standing in for the reference's index summary
+        (``io/IndexSummary.java:32-68``); a domain-split CF opens only the
+        keys' ``_dom=`` directories, of the generation and of the deltas."""
+        meta, cell_files, tomb_files, pend = self._sources(ks, cf_name)
+        keys = set(keys)
+        doms = {_dom_dir(k) for k in keys} if self.catalog.keyspace(ks).cf(cf_name).domain_split else None
+        files = list(cell_files)
+        if meta is not None:
+            gen = self._files(ks, cf_name, meta["path"])
+            if meta["table"] is not None:
+                ids = {spark_bucket(k, meta["buckets"]) for k in keys}
+                gen = [f for f in gen if (b := _BUCKET_FILE.match(os.path.basename(f))) is None or int(b[1]) in ids]
+            files += gen
+        if doms is not None:
+            files = [f for f in files if os.path.basename(os.path.dirname(f)) in doms]
+        base = self._cf_dir(ks, cf_name)
+        cells = _scan([os.path.join(base, f) for f in files], _KEY_READ_CELLS, keys)
+        tombs = _scan([os.path.join(base, f) for f in tomb_files], _KEY_READ_TOMBS, keys)
+        if pend is not None:
+            cells += [c[:6] for c in pend.cells if c[0] in keys]
+            tombs += [t[:3] for t in pend.container_tombstones if t[0] in keys]
+        return cells, tombs
+
     def cf(self, ks: str, cf_name: str) -> CF:
         """Bind a CF handle: compacted generation ∪ delta cells ∪ pending memtable.
 
@@ -524,12 +611,7 @@ class CellStore:
         cell_schema = CELL_SCHEMA
         if domain:
             cell_schema = T.StructType(list(CELL_SCHEMA.fields) + [T.StructField("_dom", T.StringType(), True)])
-        meta = self.compacted_meta(ks, cf_name)
-        if meta is not None and "retire" in meta:  # a compaction cut short after its flip
-            self._retire(ks, cf_name, meta)
-        cell_files = self._files(ks, cf_name, "cells")
-        tomb_files = self._files(ks, cf_name, "ctombs")
-        pend = self._pending.get((ks, cf_name))
+        meta, cell_files, tomb_files, pend = self._sources(ks, cf_name)
         # what this bind reads (file names are unique). On any change since
         # this store's last bind, refresh as Spark's writer does a path it
         # wrote, and drop the primed rows

@@ -75,6 +75,19 @@ def test_multiget_returns_entry_per_key(engine):
     assert bytes(got["k1"]) == b"v" and got["missing"] is None
 
 
+def test_multiget_returns_each_repeated_key_once(engine):
+    """Thrift's ``multiget`` answers a map keyed by row key: a key named
+    twice in the request still gives one entry, on the Engine and on the
+    Spark operator."""
+    path = ColumnPath("Standard1", column=b"c")
+    engine.insert("Keyspace1", "a", path, b"va", 1)
+    engine.insert("Keyspace1", "b", path, b"vb", 1)
+    keys = ["a", "a", "b", "missing", "missing"]
+    for df in (engine.multiget("Keyspace1", keys, path), read.multiget(engine.cf("Keyspace1", "Standard1"), keys, path)):
+        got = sorted((r["key"], r["value"] and bytes(r["value"])) for r in df.collect())
+        assert got == [("a", b"va"), ("b", b"vb"), ("missing", None)]
+
+
 def test_read_limit_breaker(engine):
     for i in range(5):
         engine.insert("Keyspace1", "k1", ColumnPath("Standard1", column=f"c{i}".encode()), b"v", 1)
@@ -164,8 +177,16 @@ def test_logout_clears_login_requirement_state(spark, tmp_path):
     eng.insert("Keyspace1", "k", ColumnPath("Standard1", column=b"c"), b"v", 1)
     assert eng.get_count("Keyspace1", "k", "Standard1") == 1
     eng.logout()
-    with pytest.raises(ValueError, match="login required"):
-        eng.get_count("Keyspace1", "k", "Standard1")
+    path, pred = ColumnPath("Standard1", column=b"c"), SlicePredicate(slice_range=SliceRange(count=10))
+    for read_op in (
+        lambda: eng.get("Keyspace1", "k", path),
+        lambda: eng.get_slice("Keyspace1", "k", "Standard1", pred),
+        lambda: eng.multiget("Keyspace1", ["k"], path),
+        lambda: eng.multiget_slice("Keyspace1", ["k"], "Standard1", pred),
+        lambda: eng.get_count("Keyspace1", "k", "Standard1"),
+    ):
+        with pytest.raises(ValueError, match="login required"):
+            read_op()
     # re-login restores access (the flag is session state, nothing else)
     eng.login("Keyspace1", {"username": "alice", "password": "sekrit"})
     assert eng.get_count("Keyspace1", "k", "Standard1") == 1

@@ -48,8 +48,11 @@ def test_arrow_scalar_output_accepted():
 
 
 def test_declared_gate_queries_have_scalar_schemas(spark, tmp_path):
-    """Every declared queries() entry must produce a scalar-only schema —
-    schema inference only, no execution (the full value gate is
+    """Every declared queries() entry must produce a scalar-only schema.
+    The check reads each result's schema and runs no action on it, but it
+    calls every builder, and a builder that checkpoints, collects or runs a
+    streaming query runs those jobs while it builds: 38 builders run 299
+    jobs at sf0.001, most of this test's time (the full value gate is
     tools/check_oracle.py)."""
     from __spark_entry__ import queries
 

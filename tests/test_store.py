@@ -7,6 +7,7 @@ import os
 import pytest
 
 from apache_cassandra_spark.catalog import Catalog
+from apache_cassandra_spark.engine import Engine
 from apache_cassandra_spark.model import ColumnPath, Deletion, Mutation, SlicePredicate, SliceRange
 from apache_cassandra_spark.operators import exists, maintenance, read, write
 from apache_cassandra_spark.sources.cellstore import CellStore
@@ -314,10 +315,17 @@ def test_compaction_crash_leaves_pre_or_post_state(store, spark, monkeypatch, cf
         with pytest.raises(Crash):
             maintenance.compact(store, ks, cfn, gc_grace_seconds=0)
 
+    # the first read is an Engine key read, which binds no CF: it finishes
+    # a cut-short retirement itself and never reads a consumed delta
+    # beside the new generation (no b"late")
+    engine = Engine(spark, store.root, store.catalog)
+    everything = SlicePredicate(slice_range=SliceRange(count=10))
+    rows = engine.multiget_slice(ks, ["k", "gone", "young", "live"], cfn, everything).collect()
+    assert [(r["key"], bytes(r["column"]), bytes(r["value"])) for r in rows] == model
+    assert "retire" not in engine.store.compacted_meta(ks, cfn)
     reopened = CellStore(spark, store.root, store.catalog)
     assert _live(reopened, ks, cfn) == model
-    # the bind finished a cut-short retirement; before the flip the
-    # pointer still names compaction 1's generation
+    # before the flip the pointer still names compaction 1's generation
     meta = reopened.compacted_meta(ks, cfn)
     assert "retire" not in meta and meta["gen"] == (1 if crash == "before_flip" else 2)
 
@@ -498,8 +506,6 @@ def test_commit_crash_leaves_pre_or_cells_only_state(store, spark, monkeypatch, 
 def test_commit_runs_no_spark_job(store, spark):
     """Durable batch_mutate, a whole-row remove and the flush of a buffered
     batch are driver-side file commits: not one Spark job."""
-    from apache_cassandra_spark.engine import Engine
-
     engine = Engine(spark, store.root, store.catalog)
     ks, sc, group = "Keyspace1", spark.sparkContext, "commit-runs-no-job"
     muts = [Mutation(column_name=b"c", value=b"v", timestamp=1), Mutation(deletion=Deletion(timestamp=2))]
