@@ -239,8 +239,8 @@ class Engine:
     def _live_rows(self, ks: str, cf_name: str, keys: list[str]) -> tuple[CFDef, list[tuple]]:
         """The live cells of ``keys``, read and merged on the driver: the
         reference's collated read (``ColumnFamilyStore.getTopLevelColumns``)
-        with no Spark plan and no job. Every key-pinned read goes through
-        here; range reads, scans and joins bind ``cf()``."""
+        with no Spark plan and no job. Every key-pinned and range read goes
+        through here; scans, probes and joins bind ``cf()``."""
         self._check_login_done()
         cfdef = self.catalog.keyspace(ks).cf(cf_name)
         cells, tombs = self.store.key_cells(ks, cf_name, keys)
@@ -288,17 +288,18 @@ class Engine:
         """``include_empty_rows=True`` is the reference's wire shape: ghost
         rows (tombstoned or matching no requested column) come back as a
         ``column IS NULL`` row per key, like an empty-columns KeySlice
-        (test_server.py:774-789)."""
+        (test_server.py:774-789). Served on the driver like a key read,
+        after ``CellStore.range_keys`` picks the first ``count`` keys in
+        ring order: no Spark job, but every stored key is read once on
+        this process (the Spark operator ``R.get_range_slices`` spreads
+        that O(rows) key scan over executors)."""
         cfdef = V.validate_column_parent(self.catalog, ks, cf_name, super_column)
         V.validate_slice_range(cfdef, predicate, super_column)
         V.validate_key_range(key_range)
-        return R.get_range_slices(
-            self.cf(ks, cf_name),
-            predicate,
-            key_range,
-            super_column,
-            include_empty_rows=include_empty_rows,
-        )
+        self._check_login_done()
+        keys = self.store.range_keys(ks, cf_name, key_range)
+        rows = R.range_rows(*self._live_rows(ks, cf_name, keys), keys, predicate, super_column, include_empty_rows)
+        return R.rows_frame(self.spark, rows)
 
     def rows_may_exist(self, ks: str, cf_name: str, keys: list[str]) -> DataFrame:
         for key in keys:

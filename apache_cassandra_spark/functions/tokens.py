@@ -16,6 +16,10 @@ scan paging) while staying a built-in JVM expression replicable in ANSI SQL
 
 from __future__ import annotations
 
+import functools
+import operator
+from dataclasses import dataclass
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -107,6 +111,50 @@ class OdklDomainPartitioner(Partitioner):
         if len(key) < 2:
             return key.rjust(2, "0")
         return key[-2:].lower()
+
+
+@dataclass(frozen=True)
+class TokenWindow:
+    """The ring window a ``KeyRange`` addresses, in token space
+    (``cassandra.thrift:233-246``, ``StorageProxy.java:805-864``). A
+    token is a Column (the Spark plan) or a str (the driver): both take
+    the same comparisons, so these rules exist once."""
+
+    start: str | None = None
+    end: str | None = None
+    start_inclusive: bool = False
+    #: the window runs (start, max] then (min, end]: ring order from start
+    wraps: bool = False
+
+    def contains(self, t):
+        """``t`` lies in the window; None when every token does."""
+        if self.wraps:
+            return None if self.start == self.end else (t > self.start) | (t <= self.end)
+        preds = []
+        if self.start is not None:
+            preds.append(t >= self.start if self.start_inclusive else t > self.start)
+        if self.end is not None:
+            preds.append(t <= self.end)
+        return functools.reduce(operator.and_, preds) if preds else None
+
+    def past_wrap(self, t):
+        """The ring-order flag: true once the walk from ``start`` has
+        wrapped (``t <= start``), so those tokens come last; None when the
+        window does not wrap."""
+        return t <= self.start if self.wraps else None
+
+
+def token_window(partitioner: Partitioner, key_range) -> TokenWindow:
+    """``key_range`` as a ``TokenWindow``: key bounds are inclusive
+    (``Bounds``) and compared as tokens; a token start is exclusive and a
+    token end inclusive (``Range``); an empty bound is open; a token start
+    at or past the end wraps the ring, and equal tokens are the whole ring
+    starting just past them."""
+    if key_range.start_key is not None or key_range.end_key is not None:
+        lo, hi = (partitioner.token_of(k) if k else None for k in (key_range.start_key, key_range.end_key))
+        return TokenWindow(lo, hi, start_inclusive=True)
+    lo, hi = key_range.start_token or None, key_range.end_token or None
+    return TokenWindow(lo, hi, wraps=lo is not None and hi is not None and lo >= hi)
 
 
 _PARTITIONERS = {

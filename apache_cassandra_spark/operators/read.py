@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from apache_cassandra_spark.catalog import CFDef
 from apache_cassandra_spark.functions.comparators import AbstractComparator, and_all
 from apache_cassandra_spark.functions.reconcile import live_view
+from apache_cassandra_spark.functions.tokens import token_window
 from apache_cassandra_spark.model import CF, ColumnPath, KeyRange, SlicePredicate, SliceRange
 
 RESULT_COLS = ["key", "sc", "column", "value", "ts"]
@@ -98,8 +99,8 @@ def _apply_count(
     return ranked.where(F.col("_rk") <= sr.count).drop("_rk")
 
 
-# The Engine's key reads run on the driver (``CellStore.key_cells``, then
-# ``reconcile.live_rows``); these functions slice the merged rows as
+# The Engine's key and range reads run on the driver (``CellStore.key_cells``,
+# then ``reconcile.live_rows``); these functions slice the merged rows as
 # ``_sliced`` and ``_apply_count`` do, ordering by each ``py_key``.
 
 _ALL = SlicePredicate(slice_range=SliceRange(count=2**31 - 1))
@@ -161,6 +162,26 @@ def count_rows(cfdef: CFDef, live: list[tuple], super_column: bytes | None) -> i
     """``get_count`` over ``live_rows`` output."""
     at = 1 if _level(cfdef, super_column)[0] == "sc" else 2
     return len({r[at] for r in slice_rows(cfdef, live, _ALL, super_column)})
+
+
+def range_rows(
+    cfdef: CFDef,
+    live: list[tuple],
+    keys: list[str],
+    predicate: SlicePredicate,
+    super_column: bytes | None,
+    include_empty_rows: bool,
+) -> list[tuple]:
+    """``get_range_slices`` over ``live_rows`` output of the candidate
+    ``keys`` (``CellStore.range_keys``, in ring order): ``slice_rows`` per
+    key, rows in ring order, then comparator order. A key with no live hit
+    is one NULL-column row with ``include_empty_rows``; without it the key
+    is absent, though it used one of the range's ``count`` slots."""
+    rows = slice_rows(cfdef, live, predicate, super_column)
+    if include_empty_rows:
+        rows += [(k, None, None, None, None) for k in set(keys) - {r[0] for r in rows}]
+    ring = {k: i for i, k in enumerate(keys)}
+    return sorted(rows, key=lambda r: ring[r[0]])
 
 
 def rows_frame(spark: SparkSession, rows: list[tuple]) -> DataFrame:
@@ -354,7 +375,8 @@ def get_range_slices(
     Semantics matched to the reference's golden tests
     (``test_server.py:882-957``):
 
-    * key-addressed bounds inclusive; token-addressed start-exclusive
+    * the window is ``tokens.token_window``'s: key-addressed bounds
+      inclusive; token-addressed start-exclusive
       (``cassandra.thrift:233-239``); equal start/end token == full ring.
     * wrap-around ranges return rows in RING order from the start token
       (tokens > start first, then the wrapped tail) — the ``count`` cap
@@ -373,31 +395,8 @@ def get_range_slices(
     rows' cells are reconciled.
     """
     token = cf.partitioner.token(F.col("key"))
-    key_pred: Column | None = None
-    preds: list[Column] = []
-    wrap_start: str | None = None
-    if key_range.start_key is not None or key_range.end_key is not None:
-        # key-addressed Bounds: inclusive both ends, compared in token space
-        if key_range.start_key:
-            preds.append(token >= cf.partitioner.token_of(key_range.start_key))
-        if key_range.end_key:
-            preds.append(token <= cf.partitioner.token_of(key_range.end_key))
-    else:
-        start_t = key_range.start_token or ""
-        end_t = key_range.end_token or ""
-        if start_t and end_t and start_t >= end_t:
-            # wrap-around ring range (start, max] ∪ (min, end]; equal
-            # tokens = the full ring starting just past start_t
-            wrap_start = start_t
-            if start_t > end_t:
-                preds.append((token > start_t) | (token <= end_t))
-        else:
-            if start_t:
-                preds.append(token > start_t)
-            if end_t:
-                preds.append(token <= end_t)
-    if preds:
-        key_pred = and_all(preds)
+    window = token_window(cf.partitioner, key_range)
+    key_pred = window.contains(token)
 
     # candidate rows: raw existence in range (reference: getKeyRange over
     # memtable+sstable keys, db/ColumnFamilyStore.java:1125-1239). A row
@@ -411,9 +410,8 @@ def get_range_slices(
         if key_pred is not None:
             tomb_keys = tomb_keys.where(key_pred)
         raw_keys = raw_keys.unionByName(tomb_keys.select("key"))
-    ring_pos: list[Column] = []
-    if wrap_start is not None:
-        ring_pos.append(F.when(F.col("_t") > wrap_start, 0).otherwise(1))
+    wrapped = window.past_wrap(F.col("_t"))
+    ring_pos = [] if wrapped is None else [wrapped]
     keys = (
         raw_keys.select(F.col("key"), token.alias("_t"))
         .groupBy("key")

@@ -16,7 +16,9 @@ row-major SSTables (``io/SSTableWriter.java``) — with:
 * **key-pinned reads**: ``key_cells`` reads one request's keys from the
   same sources as ``cf()`` on the driver, with pyarrow, opening only the
   keys' bucket files (``_dom=`` directories for domain-split CFs) — the
-  coordinator's collated read, no Spark plan;
+  coordinator's collated read, no Spark plan; ``range_keys`` walks the
+  sources' key column in batches for a range read's first keys in ring
+  order;
 * **one freshness check**: each ``cf()`` bind compares the CF's state
   (compacted generation, delta file names, memtable rows) with the state
   this store last bound; on a change it drops the primed row cache and
@@ -45,7 +47,9 @@ column) *before* the reconcile shuffle.
 
 from __future__ import annotations
 
+import bisect
 import hashlib
+import itertools
 import json
 import os
 import re
@@ -63,8 +67,8 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import _make_type_verifier
 
 from apache_cassandra_spark.catalog import Catalog, CFDef
-from apache_cassandra_spark.functions.tokens import OdklDomainPartitioner, Partitioner, RandomPartitioner
-from apache_cassandra_spark.model import CF
+from apache_cassandra_spark.functions.tokens import OdklDomainPartitioner, Partitioner, RandomPartitioner, token_window
+from apache_cassandra_spark.model import CF, KeyRange
 from apache_cassandra_spark.operators.write import MutationBatch
 
 CELL_SCHEMA = T.StructType(
@@ -99,9 +103,11 @@ _PATH_ESCAPED = frozenset(map(chr, range(1, 32))) | frozenset("\"#%'*/:=?\\\x7f{
 _BUCKET_FILE = re.compile(r".*_(\d+)(?:\..*)?$")
 
 # the columns a key-pinned read needs: cells up to ``tombstone``,
-# container tombstones up to ``ts``; nullable, as Spark reads every file
+# container tombstones up to ``ts``; a range read's key candidates need
+# only ``key``. Nullable, as Spark reads every file
 _KEY_READ_CELLS = pa.schema([f.with_nullable(True) for f in to_arrow_schema(CELL_SCHEMA)][:6])
 _KEY_READ_TOMBS = pa.schema([f.with_nullable(True) for f in to_arrow_schema(CONTAINER_TOMBSTONE_SCHEMA)][:3])
+_KEY_READ_KEYS = pa.schema([_KEY_READ_TOMBS.field("key")])
 
 
 def spark_bucket(key: str, buckets: int) -> int:
@@ -397,7 +403,10 @@ class CellStore:
         else:
             writer.saveAsTable(table)
         if kept_tombs is not None and not kept_tombs.isEmpty():
-            kept_tombs.coalesce(1).write.mode("append").parquet(self._ctombs_dir(ks, cf))
+            # sorted, so the same tombstones make the same file whatever
+            # order the uuid-named ``ctombs/`` inputs were listed in
+            kept = kept_tombs.coalesce(1).sortWithinPartitions("key", "sc", "ts", "ldt")
+            kept.write.mode("append").parquet(self._ctombs_dir(ks, cf))
         if old is not None:
             retire.append(os.path.relpath(os.path.join(base, old["path"]), base))
         meta = {"gen": gen, "table": table, "path": os.path.basename(path), "buckets": buckets}
@@ -598,6 +607,46 @@ class CellStore:
             cells += [c[:6] for c in pend.cells if c[0] in keys]
             tombs += [t[:3] for t in pend.container_tombstones if t[0] in keys]
         return cells, tombs
+
+    def range_keys(self, ks: str, cf_name: str, key_range: KeyRange) -> list[str]:
+        """The first ``key_range.count`` keys of the range in ring order,
+        ``(past the wrap, token, key)`` as ``read.get_range_slices`` sorts
+        them, found on the driver with no Spark job: the reference's
+        ``getKeyRange`` over memtable and SSTable keys
+        (``db/ColumnFamilyStore.java:1125-1239``). A key is a candidate if
+        ``cf()``'s sources hold any cell version or container tombstone of
+        it: the key column of the generation, the delta ``cells/`` and the
+        ``ctombs/`` files, read one record batch at a time, and the pending
+        memtable keys. Each distinct key of a batch is tokenized with
+        ``partitioner.token_of``; only the best ``count`` are held, so
+        memory is O(count + batch). Each call reads every stored key once
+        on this one process: the same O(rows) key scan as the Spark plan,
+        which spreads it over executors."""
+        meta, cell_files, tomb_files, pend = self._sources(ks, cf_name)
+        files = cell_files + tomb_files + (self._files(ks, cf_name, meta["path"]) if meta is not None else [])
+        paths = [os.path.join(self._cf_dir(ks, cf_name), f) for f in files]
+        batches = ds.dataset(paths, schema=_KEY_READ_KEYS, format="parquet").to_batches(columns=["key"])
+        keys = (pc.unique(b.column(0)).to_pylist() for b in batches)
+        if pend is not None:
+            keys = itertools.chain(keys, [{c[0] for c in pend.cells} | {t[0] for t in pend.container_tombstones}])
+        window, token_of, count = token_window(self.partitioner, key_range), self.partitioner.token_of, key_range.count
+        best: list[tuple] = []  # ascending, at most ``count`` entries
+        held: set[str] = set()
+        for batch in keys:
+            for key in batch:
+                if key in held:
+                    continue
+                t = token_of(key)
+                if window.contains(t) is False:
+                    continue
+                entry = (bool(window.past_wrap(t)), t, key)
+                if len(best) == count and entry >= best[-1]:
+                    continue  # so is a key evicted earlier: the cut only tightens
+                bisect.insort(best, entry)
+                held.add(key)
+                if len(best) > count:
+                    held.discard(best.pop()[2])
+        return [key for _, _, key in best]
 
     def cf(self, ks: str, cf_name: str) -> CF:
         """Bind a CF handle: compacted generation ∪ delta cells ∪ pending memtable.

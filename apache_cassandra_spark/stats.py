@@ -11,11 +11,11 @@ stats as a DataFrame mirroring the ``CassandraClientOperation`` row shape,
 ready to append to any warehouse table.
 
 Durations are microseconds of the engine call itself: for writes,
-compactions and key reads (which read and merge on the driver) that is the
-full operation; for reads that return a *lazy* DataFrame (range slices,
-probes) it is the declaration cost only (execution happens in Spark jobs
-whose metrics live in the Spark UI/event log — the engine does not force
-materialization just to time it).
+compactions, key reads and range slices (which read and merge on the
+driver) that is the full operation; for reads that return a *lazy*
+DataFrame (probes, joins) it is the declaration cost only (execution
+happens in Spark jobs whose metrics live in the Spark UI/event log — the
+engine does not force materialization just to time it).
 """
 
 from __future__ import annotations

@@ -6,7 +6,7 @@ import pytest
 from apache_cassandra_spark.catalog import Catalog
 from apache_cassandra_spark.cli import execute
 from apache_cassandra_spark.engine import Engine
-from apache_cassandra_spark.model import ColumnPath, SlicePredicate, SliceRange
+from apache_cassandra_spark.model import ColumnPath, KeyRange, SlicePredicate, SliceRange
 from apache_cassandra_spark.operators import read
 from apache_cassandra_spark.operators.maintenance import submit_minor_if_needed
 from apache_cassandra_spark.operators.read import ReadLimitExceeded, check_read_limit
@@ -184,6 +184,7 @@ def test_logout_clears_login_requirement_state(spark, tmp_path):
         lambda: eng.multiget("Keyspace1", ["k"], path),
         lambda: eng.multiget_slice("Keyspace1", ["k"], "Standard1", pred),
         lambda: eng.get_count("Keyspace1", "k", "Standard1"),
+        lambda: eng.get_range_slices("Keyspace1", "Standard1", pred, KeyRange(start_key="", end_key="", count=10)),
     ):
         with pytest.raises(ValueError, match="login required"):
             read_op()

@@ -1,9 +1,11 @@
 """Key-pinned Engine reads (get, get_slice, multiget, multiget_slice,
-get_count) run on the driver: ``CellStore.key_cells`` reads the keys' rows
-with pyarrow, ``reconcile.live_rows`` merges them, and the result is a
-driver-built DataFrame. These tests pin the path to the Spark operators
-over a bound ``CF`` (differentially, over random stores), to Spark's
-bucket hash, and to zero Spark jobs."""
+get_count) and range reads (get_range_slices) run on the driver:
+``CellStore.key_cells`` reads the keys' rows with pyarrow (for a range,
+after ``CellStore.range_keys`` picks its keys in ring order),
+``reconcile.live_rows`` merges them, and the result is a driver-built
+DataFrame. These tests pin the path to the Spark operators over a bound
+``CF`` (differentially, over random stores), to Spark's bucket hash and
+token expressions, and to zero Spark jobs."""
 
 import collections
 import functools
@@ -16,7 +18,13 @@ from pyspark.sql import functions as F
 
 from apache_cassandra_spark.catalog import Catalog
 from apache_cassandra_spark.engine import Engine
-from apache_cassandra_spark.model import ColumnPath, SlicePredicate, SliceRange
+from apache_cassandra_spark.functions.tokens import (
+    CollatingOrderPreservingPartitioner,
+    OdklDomainPartitioner,
+    OrderPreservingPartitioner,
+    RandomPartitioner,
+)
+from apache_cassandra_spark.model import ColumnPath, KeyRange, SlicePredicate, SliceRange
 from apache_cassandra_spark.operators import read as R
 from apache_cassandra_spark.sources import cellstore
 from apache_cassandra_spark.sources.cellstore import spark_bucket
@@ -69,6 +77,27 @@ def test_spark_bucket_matches_spark_hash(spark):
         assert [r[f"b{n}"] for n in mods] == [spark_bucket(r["key"], n) for n in mods], r["key"]
 
 
+def test_token_of_matches_token_column(spark):
+    """Every partitioner's driver ``token_of`` equals its Spark ``token``
+    expression, which orders ``R.get_range_slices``: keys of 0–2
+    characters, non-ASCII and punctuation included, in one Spark job."""
+    keys = []
+
+    @settings(max_examples=300, database=None, deadline=None)
+    @given(st.text(max_size=2))
+    def draw(key):
+        keys.append(key)
+
+    draw()
+    keys += ["", "a", "A", "-a", "a-", ".", "a.b", "a b", "0", "_Z", "é", "İ", "ßΣ", "AΣ", "日本", "\U0001f600x", "\x00"]
+    parts = [RandomPartitioner(), OrderPreservingPartitioner(), CollatingOrderPreservingPartitioner(), OdklDomainPartitioner()]
+    df = spark.createDataFrame([(k,) for k in keys], "key string")
+    got = df.select("key", *[p.token(F.col("key")).alias(p.name) for p in parts]).collect()
+    assert len(got) == len(keys)
+    for r in got:
+        assert [r[p.name] for p in parts] == [p.token_of(r["key"]) for p in parts], r["key"]
+
+
 def _engine(spark, root) -> Engine:
     return Engine(spark, str(root), Catalog.from_dict(CATALOG))
 
@@ -82,10 +111,11 @@ def _fill(engine, cf, keys, ts=1, durable=True):
 
 
 def test_key_reads_run_no_spark_job(spark, tmp_path, monkeypatch):
-    """Each of the five key reads, collected, runs 0 jobs on a compacted
-    CF, then with delta cells, with container tombstones and with pending
-    rows; on a domain-split CF and on a Super CF. On the compacted CF a
-    point read opens one of the generation's four bucket files."""
+    """Each of the five key reads and a range read, collected, runs 0 jobs
+    on a compacted CF, then with delta cells, with container tombstones and
+    with pending rows; on a domain-split CF and on a Super CF. On the
+    compacted CF a point read opens one of the generation's four bucket
+    files."""
     engine = _engine(spark, tmp_path)
     keys = ["k_ab", "k_cd", "x"]
     for cf in ("Dom", "Sup"):
@@ -101,6 +131,7 @@ def test_key_reads_run_no_spark_job(spark, tmp_path, monkeypatch):
             engine.get_slice(KS, "k_ab", cf, ALL).collect(),
             engine.multiget(KS, keys + ["none"], col[cf]).collect(),
             engine.multiget_slice(KS, keys, cf, ALL).collect(),
+            engine.get_range_slices(KS, cf, ALL, KeyRange(start_token="", end_token="", count=5)).collect(),
         ]
         return out, engine.get_count(KS, "k_cd", cf)
 
@@ -135,6 +166,7 @@ def test_key_reads_run_no_spark_job(spark, tmp_path, monkeypatch):
             assert [os.path.basename(p).split(".")[0][-6:] for p in opened] == [f"_{spark_bucket('k7', 4):05d}"]
     out, count = reads("Std")
     assert count == 3 and len(out[3]) == 9  # the pending rows resurrect k_cd
+    assert len({r["key"] for r in out[4]}) == 5
     assert engine.multiget(KS, [], col["Std"]).collect() == []
 
 
@@ -184,15 +216,44 @@ def _slice(draw, names, py_key):
     return SlicePredicate(slice_range=SliceRange(start=start, finish=finish, reversed=rev, count=count))
 
 
+# the tokens of the keys, of a key never written, and one between them
+TOKENS = sorted({RandomPartitioner().token_of(k) for k in KEYS + ["none"]} | {"8" * 32})
+
+
+@st.composite
+def _range(draw):
+    """``(KeyRange, include_empty_rows)``: key bounds (empty is open, "none"
+    is no stored key), token bounds, a wrapped token range or equal tokens
+    (the whole ring); a ``count`` of 1–5, so caps fall on ghosts."""
+    count = draw(st.integers(min_value=1, max_value=5))
+    how = draw(st.sampled_from(["keys", "tokens", "wrap", "ring"]))
+    if how == "keys":
+        bound = st.sampled_from(["", *KEYS, "none"])
+        kr = KeyRange(start_key=draw(bound), end_key=draw(bound), count=count)
+    elif how == "tokens":
+        bound = st.sampled_from(["", *TOKENS])
+        kr = KeyRange(start_token=draw(bound), end_token=draw(bound), count=count)
+    else:
+        lo, hi = sorted(draw(st.lists(st.sampled_from(TOKENS), min_size=2, max_size=2, unique=True)))
+        lo, hi = (hi, lo) if how == "wrap" else (lo, lo)
+        kr = KeyRange(start_token=lo, end_token=hi, count=count)
+    return kr, draw(st.booleans())
+
+
 @st.composite
 def _queries(draw):
-    """``(cf, op, keys or key, path or predicate, super_column)`` per Spark
-    read: on the Standard CF both multi-key ops and a count, on the
-    domain-split CF a slice, on the Super CF slices and counts at both
-    levels and gets of a subcolumn and of a whole supercolumn."""
+    """``(cf, op, keys or key or range, path or predicate, super_column)``
+    per Spark read: on the Standard CF both multi-key ops, a count and a
+    range, on the domain-split CF a slice and a range, on the Super CF
+    slices, ranges and counts at both levels and gets of a subcolumn and
+    of a whole supercolumn."""
     key, keys = st.sampled_from(KEYS), st.lists(st.sampled_from(KEYS + ["none"]), min_size=1, max_size=5)
     sc = draw(st.sampled_from(NAMES["Sup"]))
     return [
+        ("Std", "range", draw(_range()), draw(_slice(NAMES["Std"], bytes)), None),
+        ("Dom", "range", draw(_range()), draw(_slice(NAMES["Dom"], bytes)), None),
+        ("Sup", "range", draw(_range()), draw(_slice(NAMES["Sup"], bytes)), None),
+        ("Sup", "range", draw(_range()), draw(_slice(SUBS, _long)), sc),
         ("Std", "multiget_slice", draw(keys), draw(_slice(NAMES["Std"], bytes)), None),
         ("Std", "multiget", draw(keys), ColumnPath("Std", column=draw(st.sampled_from(NAMES["Std"]))), None),
         ("Std", "get_count", draw(key), None, None),
@@ -212,6 +273,12 @@ def _long(name: bytes) -> int:
 
 def _both(engine, handle, cf, op, target, arg, sc):
     """The read through the Engine and through the Spark operator."""
+    if op == "range":
+        kr, empty = target
+        return (
+            engine.get_range_slices(KS, cf, arg, kr, sc, include_empty_rows=empty),
+            R.get_range_slices(handle, arg, kr, sc, include_empty_rows=empty),
+        )
     if op == "multiget":
         return engine.multiget(KS, target, arg), R.multiget(handle, target, arg)
     if op == "get_count":
@@ -230,24 +297,38 @@ def _tuple(row) -> tuple:
     return tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v for v in row)
 
 
-def _expected_order(rows, cf, arg, sc):
-    """Key order, then the addressed names in comparator order (descending
-    when reversed), subcolumns ascending inside a supercolumn."""
+def _ring(kr: KeyRange):
+    """A key's place in ring order: by token, from just past a wrapped
+    range's start token."""
+    start = kr.start_token
+    wraps = bool(start and kr.end_token and start >= kr.end_token)
+
+    def place(key):
+        t = RandomPartitioner().token_of(key)
+        return wraps and t <= start, t, key
+
+    return place
+
+
+def _expected_order(rows, cf, arg, sc, key_order=lambda k: k):
+    """Key order (``key_order``), then the addressed names in comparator
+    order (descending when reversed), subcolumns ascending inside a
+    supercolumn."""
     sub = cf == "Sup" and (sc is not None or isinstance(arg, ColumnPath))
     parent = cf == "Sup" and not sub
     name_key, at = (_long, 2) if sub else (bytes, 1 if parent else 2)
     rev = isinstance(arg, SlicePredicate) and arg.slice_range is not None and arg.slice_range.reversed
     rows = sorted(rows, key=lambda r: (0,) if not parent or r[2] is None else (1, _long(r[2])))
     rows.sort(key=lambda r: (0,) if r[at] is None else (1, name_key(r[at])), reverse=rev)
-    return sorted(rows, key=lambda r: r[0])
+    return sorted(rows, key=lambda r: key_order(r[0]))
 
 
 def _check(engines, queries):
     """Each read on each engine, both ways: the same schema and rows, the
-    driver's rows in order. Every Spark read runs in one collect (a count
-    rides in ``ts``). Each key of a multi-key read is also read alone
-    through the Engine (``get`` / ``get_slice``), which must give that
-    key's rows."""
+    driver's rows in order (a range's in ring order). Every Spark read runs
+    in one collect (a count rides in ``ts``). Each key of a multi-key read
+    is also read alone through the Engine (``get`` / ``get_slice``), which
+    must give that key's rows."""
     nulls = [F.lit(None).cast(t).alias(c) for c, t in zip(R.RESULT_COLS, ["string", "binary", "binary", "binary"])]
     reads = [(engine, q) for engine in engines for q in queries]
     handles = {(id(engine), cf): engine.cf(KS, cf) for engine in engines for cf in CATALOG[KS]}
@@ -261,16 +342,17 @@ def _check(engines, queries):
         assert d.schema == s.schema, reads[i]
         driver.append([_tuple(r) for r in d.collect()])
         frames.append(s.select(F.lit(i).alias("q"), *R.RESULT_COLS))
-        for key in set(target):
+        for key in set(target) if op != "range" else ():
             one = _single(engine, cf, op, key, arg, sc)
             assert one.schema == s.schema, (reads[i], key)
             assert [_tuple(r) for r in one.collect()] == [r for r in driver[i] if r[0] == key and r[4] is not None]
     got = collections.defaultdict(list)
     for row in functools.reduce(lambda a, b: a.union(b), frames).collect():
         got[row["q"]].append(_tuple(row)[1:])
-    for i, (_, (cf, op, _, arg, sc)) in enumerate(reads):
+    for i, (_, (cf, op, target, arg, sc)) in enumerate(reads):
         assert collections.Counter(driver[i]) == collections.Counter(got[i]), reads[i]
-        assert op == "get_count" or driver[i] == _expected_order(driver[i], cf, arg, sc), reads[i]
+        order = _ring(target[0]) if op == "range" else (lambda k: k)
+        assert op == "get_count" or driver[i] == _expected_order(driver[i], cf, arg, sc, order), reads[i]
 
 
 @settings(max_examples=1, deadline=None, database=None, suppress_health_check=list(HealthCheck))
@@ -278,7 +360,7 @@ def _check(engines, queries):
 def test_driver_reads_equal_spark_operators(spark, tmp_path_factory, before, after, purge, queries):
     """Random stores built through Engine writes (durable and pending,
     cell, row and supercolumn tombstones, equal-ts ties, null values) over
-    a Standard, a domain-split and a Super CF; every key read, compared on
+    a Standard, a domain-split and a Super CF; every key and range read, compared on
     a store holding the ``before`` writes and on one that also ran a major
     compaction, then the ``after`` writes. One example per run — each Spark
     read costs about half a second — so every run draws a new store."""
@@ -289,3 +371,33 @@ def test_driver_reads_equal_spark_operators(spark, tmp_path_factory, before, aft
         stores[1].compact(KS, cf, **({"gc_grace_seconds": 0, "now": 1000} if purge else {}))
     _apply(stores[1], after)
     _check(stores, queries)
+
+
+def test_range_count_cap_lands_on_ghosts(spark, tmp_path):
+    """A range spends its ``count`` in ring order on ghost keys too (a row
+    stored only as a row tombstone; a row with no live cell of the asked
+    name): over the whole
+    ring, a wrapped token range and inclusive key bounds, each capped on
+    the ghost, the Engine matches the Spark operator, and the ghost shows
+    only with ``include_empty_rows``."""
+    engine = _engine(spark, tmp_path)
+    tok = RandomPartitioner().token_of
+    ring = sorted((f"r{i}" for i in range(8)), key=tok)
+    _fill(engine, "Std", ring[:2] + ring[3:])
+    engine.remove(KS, ring[2], ColumnPath("Std"), 2)  # known only by this tombstone
+    engine.remove(KS, ring[6], ColumnPath("Std", column=b"a"), 2, durable=False)
+    cases = [
+        (KeyRange(start_token=tok(ring[7]), end_token=tok(ring[7]), count=3), ring[:3]),
+        (KeyRange(start_token=tok(ring[4]), end_token=tok(ring[2]), count=6), ring[5:] + ring[:3]),
+        (KeyRange(start_key=ring[0], end_key=ring[2], count=3), ring[:3]),
+    ]
+    names = SlicePredicate(column_names=(b"a",))
+    queries = []
+    for kr, want in cases:
+        for pred, ghosts in ((ALL, {ring[2]}), (names, {ring[2], ring[6]})):
+            for empty in (False, True):
+                queries.append(("Std", "range", (kr, empty), pred, None))
+                rows = engine.get_range_slices(KS, "Std", pred, kr, include_empty_rows=empty).collect()
+                assert list(dict.fromkeys(r["key"] for r in rows)) == [k for k in want if empty or k not in ghosts]
+                assert all(r["column"] is None for r in rows if r["key"] in ghosts)
+    _check([engine], queries)

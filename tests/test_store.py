@@ -118,6 +118,32 @@ def test_compaction_keeps_young_tombstones(store):
     assert cf.cells.collect()[0]["tombstone"] is True
 
 
+def test_compaction_kept_tombstones_are_sorted_and_repeatable(spark, tmp_path):
+    """A major compaction writes the container tombstones it keeps sorted
+    by (key, sc, ts, ldt): two stores given the same writes, whose
+    uuid-named ``ctombs/`` inputs list in different orders, write
+    byte-identical files."""
+    import pyarrow.parquet as pq
+
+    ks, cfn = "Keyspace1", "Standard1"
+    catalog = Catalog.from_dict({ks: {cfn: {"compare_with": "BytesType"}}})
+    kept = []
+    for name in ("a", "b"):
+        s = CellStore(spark, str(tmp_path / name), catalog)
+        for i in range(8):
+            key = f"k{i * 3 % 5}"
+            s.apply(ks, cfn, write.insert(key, ColumnPath(cfn, column=b"c"), b"v", i))
+            s.apply(ks, cfn, write.remove(key, ColumnPath(cfn), i + 1, local_deletion_time=100 + i))
+        maintenance.compact(s, ks, cfn, gc_grace_seconds=0, now=50)  # keeps every tombstone
+        [rel] = s._files(ks, cfn, "ctombs")
+        path = os.path.join(s._cf_dir(ks, cfn), rel)
+        rows = [(r["key"], r["sc"], r["ts"], r["ldt"]) for r in pq.read_table(path).to_pylist()]
+        assert len(rows) == 8 and rows == sorted(rows)
+        with open(path, "rb") as fh:
+            kept.append(fh.read())
+    assert kept[0] == kept[1]
+
+
 def test_row_processor_chain_from_catalog(store):
     ks, cfn = "Keyspace1", "Proc1"
     store.apply(ks, cfn, write.insert("k1", ColumnPath(cfn, column=b"c1"), b"v1", 1))
