@@ -140,24 +140,33 @@ def live_view(
     )
 
 
-def live_rows(cells: list[tuple], container_tombstones: list[tuple], with_sc_level: bool = True) -> list[tuple]:
-    """``live_view`` on the driver over a key-pinned read's rows
-    (``CellStore.key_cells``), like ``QueryFilter.collectCollatedColumns``:
-    ``(key, sc, column, value, ts)`` per live coordinate, unordered. The
-    ``priority`` rule, a null value below every byte string."""
+def winners(rows) -> list[tuple]:
+    """``reconcile`` on the driver, like ``QueryFilter.collectCollatedColumns``:
+    the row of highest ``priority`` per ``(key, sc, column)``, a null value
+    below every byte string, unordered. Rows start with ``CELL_COLS[:6]``;
+    the whole row is kept, so ``ldt`` and any trailing field survive."""
     best: dict[tuple, tuple] = {}
-    for key, sc, column, value, ts, tombstone in cells:
+    for row in rows:
+        key, sc, column, value, ts, tombstone = row[:6]
         pri = (ts, tombstone, value is not None, value or b"")
         cur = best.get((key, sc, column))
         if cur is None or pri > cur[0]:
-            best[(key, sc, column)] = (pri, value)
+            best[(key, sc, column)] = (pri, row)
+    return [row for _, row in best.values()]
+
+
+def live_rows(cells: list[tuple], container_tombstones: list[tuple], with_sc_level: bool = True) -> list[tuple]:
+    """``live_view`` on the driver over a key-pinned read's rows
+    (``CellStore.key_cells``): the ``winners`` that are neither cell
+    tombstones nor shadowed by a row or supercolumn watermark, as
+    ``(key, sc, column, value, ts)``, unordered."""
     marks: dict[tuple, int] = {}
     for key, sc, ts in container_tombstones:
         if sc is None or with_sc_level:
             marks[(key, sc)] = max(ts, marks.get((key, sc), ts))
     return [
         (key, sc, column, value, ts)
-        for (key, sc, column), ((ts, dead, _, _), value) in best.items()
+        for key, sc, column, value, ts, dead, *_ in winners(cells)
         if not dead
         and ts > marks.get((key, None), ts - 1)
         and (sc is None or ts > marks.get((key, sc), ts - 1))

@@ -3,9 +3,12 @@ cleanup, snapshot/export (SURVEY.md §2.5).
 
 The reference's size-tiered compaction (``db/CompactionManager.java:87-131,
 282-375``) k-way-merges SSTables, reconciles rows, and purges GC-able
-tombstones. Ours is one declarative rewrite: reconciled ``gc_view`` ->
-sorted, bucketed Parquet. There is no bucketing *scheduler* to port —
-bounded file count is the invariant, and a single rewrite restores it.
+tombstones. Major compaction is one declarative rewrite: reconciled
+``gc_view`` -> sorted, bucketed Parquet. There is no bucketing *scheduler*
+to port — bounded file count is the invariant, and a single rewrite
+restores it. Minor compaction merges one size tier of delta files on the
+driver with pyarrow, with no Spark job, holding at most
+``memtable_threshold`` rows (``submit_minor_if_needed``).
 
 ``IRowProcessor`` (fork UDF hook, ``db/proc/IRowProcessor.java:36-76``,
 invoked at flush/compaction ``db/Memtable.java:165-187``,
@@ -16,16 +19,18 @@ whole-row groups — the one place Python-side code belongs, Arrow-batched.
 from __future__ import annotations
 
 import os
-import shutil
 import time
 from collections.abc import Callable
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from apache_cassandra_spark.functions.reconcile import gc_view
-from apache_cassandra_spark.sources.cellstore import CELL_SCHEMA, CellStore, _fsync
+from apache_cassandra_spark.functions.reconcile import CELL_COLS, gc_view, winners
+from apache_cassandra_spark.sources.cellstore import CELL_SCHEMA, CELLS_READ, CellStore, _publish
 
 #: IRowProcessor analog: pandas frame of one row's cells -> transformed
 #: frame (empty frame == drop the row, mirroring "return null")
@@ -99,6 +104,22 @@ def submit_minor_if_needed(
     (each file within ``bucket_ratio`` of the bucket average); merge any
     bucket with >= ``min_threshold`` files into one reconciled file.
 
+    The merge runs on the driver with no Spark job, like the reference's
+    one-node k-way merge (``io/CompactionIterator.java:106-160``): pyarrow
+    reads the bucket's files, ``reconcile.winners`` keeps one row per
+    ``(key, sc, column)``, sorted by it (a null ``sc`` first), and
+    ``cellstore._publish`` commits it as one file before the inputs are
+    removed. A crash before the publish's rename leaves the inputs (and a
+    hidden temp file no reader lists); after it, the merged file beside
+    its inputs, which LWW collapses back to the same winners.
+
+    The driver holds the merged rows, so a bucket is bounded the way the
+    memtable is: it is trimmed, like ``max_threshold`` trims it, to the
+    files whose Parquet-footer row counts sum to at most
+    ``store.memtable_threshold``. If that leaves fewer than
+    ``min_threshold`` files, nothing merges and the files wait for major
+    compaction.
+
     LWW reconcile is associative, so merging a *subset* of files is always
     correct — but tombstones are NOT purged here (a purge is only safe when
     no older version can exist elsewhere, i.e. major compaction; the
@@ -113,18 +134,14 @@ def submit_minor_if_needed(
     for rel in store._files(ks, cf_name, "cells"):
         path = os.path.join(base, rel)
         pools.setdefault(os.path.dirname(path), []).append((os.path.getsize(path), path))
-    # every pool stages its output in one hidden directory of the CF,
-    # outside every directory a read lists: a crash leaves nothing that
-    # partition discovery would see
-    tmp = os.path.join(base, ".minor_tmp")
     ran = False
     for pool in sorted(pools):
-        ran = _minor_in_pool(store, sorted(pools[pool]), tmp, min_threshold, max_threshold, bucket_ratio) or ran
+        ran = _minor_in_pool(store, pool, sorted(pools[pool]), min_threshold, max_threshold, bucket_ratio) or ran
     return ran
 
 
 def _minor_in_pool(
-    store: CellStore, files: list, tmp: str, min_threshold: int, max_threshold: int, bucket_ratio: float
+    store: CellStore, pool: str, files: list, min_threshold: int, max_threshold: int, bucket_ratio: float
 ) -> bool:
     # greedy size-tiered bucketing over the pool's sorted (size, path) list
     buckets: list[list[tuple[int, str]]] = []
@@ -136,26 +153,21 @@ def _minor_in_pool(
     target = next((b for b in buckets if len(b) >= min_threshold), None)
     if target is None:
         return False
-    target = target[:max_threshold]
-    paths = [path for _, path in target]
-    merged = store.spark.read.schema(CELL_SCHEMA).parquet(*paths)
-    from apache_cassandra_spark.functions.reconcile import reconcile
-
-    out = reconcile(merged).sortWithinPartitions("key", "sc", "column")
-    out.coalesce(max(1, len(target) // 4)).write.mode("overwrite").parquet(tmp)
-    # swap order: link the merged output IN and fsync it (Spark does not),
-    # then remove the inputs. A crash in between leaves duplicates (merged
-    # ∪ inputs), which LWW reconcile collapses back to the same winners —
-    # never lost rows.
-    pool = os.path.dirname(paths[0])
-    for f in os.listdir(tmp):
-        if f.endswith(".parquet"):
-            os.rename(os.path.join(tmp, f), os.path.join(pool, "minor_" + f))
-            _fsync(os.path.join(pool, "minor_" + f))
-    _fsync(pool)
+    paths, rows = [], 0
+    for _, path in target[:max_threshold]:
+        rows += pq.read_metadata(path).num_rows
+        if rows > store.memtable_threshold:
+            break
+        paths.append(path)
+    if len(paths) < min_threshold:
+        return False
+    table = ds.dataset(paths, schema=CELLS_READ, format="parquet").to_table()
+    cols = [table.column(c).to_pylist() for c in CELL_COLS[:6]]
+    merged = winners(zip(*cols, range(table.num_rows)))
+    merged.sort(key=lambda r: (r[0], r[1] is not None, r[1] or b"", r[2]))
+    _publish(table.take(pa.array([r[-1] for r in merged], pa.int64())), pool)
     for p in paths:
         os.remove(p)
-    shutil.rmtree(tmp, ignore_errors=True)
     return True
 
 

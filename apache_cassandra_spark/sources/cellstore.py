@@ -102,10 +102,12 @@ _PATH_ESCAPED = frozenset(map(chr, range(1, 32))) | frozenset("\"#%'*/:=?\\\x7f{
 # (``BucketingUtils.getBucketId``)
 _BUCKET_FILE = re.compile(r".*_(\d+)(?:\..*)?$")
 
-# the columns a key-pinned read needs: cells up to ``tombstone``,
-# container tombstones up to ``ts``; a range read's key candidates need
-# only ``key``. Nullable, as Spark reads every file
-_KEY_READ_CELLS = pa.schema([f.with_nullable(True) for f in to_arrow_schema(CELL_SCHEMA)][:6])
+# every cell column, nullable, as Spark reads every file (a minor
+# compaction reads and writes its tier with it); a key-pinned read needs
+# the cells up to ``tombstone`` and container tombstones up to ``ts``; a
+# range read's key candidates need only ``key``
+CELLS_READ = pa.schema([f.with_nullable(True) for f in to_arrow_schema(CELL_SCHEMA)])
+_KEY_READ_CELLS = pa.schema(list(CELLS_READ)[:6])
 _KEY_READ_TOMBS = pa.schema([f.with_nullable(True) for f in to_arrow_schema(CONTAINER_TOMBSTONE_SCHEMA)][:3])
 _KEY_READ_KEYS = pa.schema([_KEY_READ_TOMBS.field("key")])
 

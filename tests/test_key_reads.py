@@ -12,12 +12,14 @@ import functools
 import os
 import struct
 
+import pyarrow.parquet as pq
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from apache_cassandra_spark.catalog import Catalog
 from apache_cassandra_spark.engine import Engine
+from apache_cassandra_spark.functions.reconcile import reconcile
 from apache_cassandra_spark.functions.tokens import (
     CollatingOrderPreservingPartitioner,
     OdklDomainPartitioner,
@@ -25,9 +27,11 @@ from apache_cassandra_spark.functions.tokens import (
     RandomPartitioner,
 )
 from apache_cassandra_spark.model import ColumnPath, KeyRange, SlicePredicate, SliceRange
+from apache_cassandra_spark.operators import maintenance as M
 from apache_cassandra_spark.operators import read as R
+from apache_cassandra_spark.operators.write import MutationBatch
 from apache_cassandra_spark.sources import cellstore
-from apache_cassandra_spark.sources.cellstore import spark_bucket
+from apache_cassandra_spark.sources.cellstore import CELL_SCHEMA, spark_bucket
 
 KS = "KS"
 CATALOG = {
@@ -115,7 +119,7 @@ def test_key_reads_run_no_spark_job(spark, tmp_path, monkeypatch):
     on a compacted CF, then with delta cells, with container tombstones and
     with pending rows; on a domain-split CF and on a Super CF. On the
     compacted CF a point read opens one of the generation's four bucket
-    files."""
+    files. A minor compaction of each CF's delta files runs 0 jobs too."""
     engine = _engine(spark, tmp_path)
     keys = ["k_ab", "k_cd", "x"]
     for cf in ("Dom", "Sup"):
@@ -168,6 +172,15 @@ def test_key_reads_run_no_spark_job(spark, tmp_path, monkeypatch):
     assert count == 3 and len(out[3]) == 9  # the pending rows resurrect k_cd
     assert len({r["key"] for r in out[4]}) == 5
     assert engine.multiget(KS, [], col["Std"]).collect() == []
+    # each CF holds three similar delta files: a minor compaction merges them
+    before, ran = {cf: reads(cf) for cf in CATALOG[KS]}, []
+
+    def minors():
+        ran.extend(M.submit_minor_if_needed(engine.store, KS, cf, min_threshold=2) for cf in CATALOG[KS])
+
+    assert _jobs(spark, minors) == 0
+    assert ran == [True, True, True]
+    assert {cf: reads(cf) for cf in CATALOG[KS]} == before
 
 
 # -- differential: driver path vs the Spark operators ------------------------
@@ -356,21 +369,96 @@ def _check(engines, queries):
 
 
 @settings(max_examples=1, deadline=None, database=None, suppress_health_check=list(HealthCheck))
-@given(st.lists(_op(), min_size=8, max_size=24), st.lists(_op(), min_size=1, max_size=10), st.booleans(), _queries())
-def test_driver_reads_equal_spark_operators(spark, tmp_path_factory, before, after, purge, queries):
+@given(
+    st.lists(_op(), min_size=8, max_size=24),
+    st.lists(_op(), min_size=1, max_size=10),
+    st.booleans(),
+    st.booleans(),
+    _queries(),
+)
+def test_driver_reads_equal_spark_operators(spark, tmp_path_factory, before, after, purge, minor, queries):
     """Random stores built through Engine writes (durable and pending,
     cell, row and supercolumn tombstones, equal-ts ties, null values) over
     a Standard, a domain-split and a Super CF; every key and range read, compared on
     a store holding the ``before`` writes and on one that also ran a major
-    compaction, then the ``after`` writes. One example per run — each Spark
-    read costs about half a second — so every run draws a new store."""
+    compaction, then the ``after`` writes. With ``minor`` drawn, both
+    stores then run a minor compaction of each CF's delta files. One
+    example per run — each Spark read costs about half a second — so every
+    run draws a new store."""
     stores = [_engine(spark, tmp_path_factory.mktemp("diff")) for _ in range(2)]
     for engine in stores:
         _apply(engine, before)
     for cf in CATALOG[KS]:
         stores[1].compact(KS, cf, **({"gc_grace_seconds": 0, "now": 1000} if purge else {}))
     _apply(stores[1], after)
+    for engine in stores if minor else ():
+        for cf in CATALOG[KS]:
+            engine.compact_minor_if_needed(KS, cf, min_threshold=2)
     _check(stores, queries)
+
+
+@st.composite
+def _tier(draw):
+    """``(cf, files)``: 2–5 delta files of 1–5 cell rows each, on one CF.
+    Two keys share the domain-split CF's ``_dom=ab`` pool; names are
+    narrow, so coordinates repeat; equal-ts ties, null values and cell
+    tombstones whose ``ldt`` is drawn apart from their ``ts``. The Super
+    CF's rows may also have a null ``sc``, so the merge's sort meets both."""
+    cf = draw(st.sampled_from(list(CATALOG[KS])))
+    files = []
+    for _ in range(draw(st.integers(min_value=2, max_value=5))):
+        rows = []
+        for _ in range(draw(st.integers(min_value=1, max_value=5))):
+            key = draw(st.sampled_from(KEYS[:3]))
+            sc = draw(st.sampled_from([None, *NAMES["Sup"][:2]])) if cf == "Sup" else None
+            col = draw(st.sampled_from(SUBS[:2] if cf == "Sup" else NAMES[cf][:2]))
+            if draw(st.booleans()):
+                rows.append((key, sc, col, None, draw(TS), True, draw(st.sampled_from([100, 200]))))
+            else:
+                rows.append((key, sc, col, draw(st.sampled_from(VALUES)), draw(TS), False, None))
+        files.append(rows)
+    return cf, files
+
+
+def _cell(row) -> tuple:
+    return tuple(bytes(v) if isinstance(v, bytearray) else v for v in row)
+
+
+@settings(max_examples=8, deadline=None, database=None, suppress_health_check=list(HealthCheck))
+@given(_tier())
+def test_driver_minor_equals_spark_reconcile(spark, tmp_path_factory, tier):
+    """A minor compaction's merged file holds Spark ``reconcile()`` over
+    the same input files, one row per ``(key, sc, column)`` sorted by it
+    (a null ``sc`` first). Two tombstones of one ``ts`` tie on the whole
+    priority; either may win (the reference's ``Column.reconcile``: "it
+    doesn't matter which one we use"), so the winner's ``ldt`` must be one
+    of the tied rows'."""
+    cf, files = tier
+    store = _engine(spark, tmp_path_factory.mktemp("minor")).store
+    for cells in files:
+        store.apply(KS, cf, MutationBatch(cells=cells))
+    base = store._cf_dir(KS, cf)
+    pools = collections.defaultdict(list)
+    for rel in store._files(KS, cf, "cells"):
+        pools[os.path.dirname(rel)].append(rel)
+    inputs = [os.path.join(base, f) for fs in pools.values() if len(fs) >= 2 for f in fs]
+    want = [_cell(r) for r in reconcile(spark.read.schema(CELL_SCHEMA).parquet(*inputs)).collect()] if inputs else []
+    ran = M.submit_minor_if_needed(store, KS, cf, min_threshold=2, bucket_ratio=float("inf"))
+    assert ran == bool(inputs)
+    merged = sorted(set(store._files(KS, cf, "cells")) - {f for fs in pools.values() for f in fs})
+    assert len(merged) == sum(len(fs) >= 2 for fs in pools.values())
+    got = []
+    for f in merged:
+        rows = [tuple(r.values()) for r in pq.ParquetFile(os.path.join(base, f)).read().to_pylist()]
+        order = [(r[0], r[1] is not None, r[1] or b"", r[2]) for r in rows]
+        assert order == sorted(set(order)), f  # sorted, one row per coordinate
+        got += rows
+    assert collections.Counter(r[:6] for r in got) == collections.Counter(r[:6] for r in want)
+    ldts = collections.defaultdict(set)
+    for row in (r for cells in files for r in cells):
+        ldts[row[:6]].add(row[6])
+    assert all(r[6] in ldts[r[:6]] for r in got)
+    assert all(r[6] == w[6] for r in got for w in want if r[:6] == w[:6] and len(ldts[r[:6]]) == 1)
 
 
 def test_range_count_cap_lands_on_ghosts(spark, tmp_path):

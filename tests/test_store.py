@@ -3,6 +3,7 @@ existence probes — mirrors db/CompactionsPurgeTest.java,
 db/CompactionRowProcTest.java:39, db/ColumnFamilyStoreTest.java:147,172."""
 
 import os
+from collections import Counter
 
 import pytest
 
@@ -10,7 +11,7 @@ from apache_cassandra_spark.catalog import Catalog
 from apache_cassandra_spark.engine import Engine
 from apache_cassandra_spark.model import ColumnPath, Deletion, Mutation, SlicePredicate, SliceRange
 from apache_cassandra_spark.operators import exists, maintenance, read, write
-from apache_cassandra_spark.sources.cellstore import CellStore
+from apache_cassandra_spark.sources.cellstore import CELL_SCHEMA, CellStore
 
 
 @pytest.fixture()
@@ -277,6 +278,12 @@ class Crash(Exception):
     pass
 
 
+def _torn_write(table, where, **kwargs):
+    """``pq.write_table`` cut short by a crash after its first bytes."""
+    where.write(b"PAR1 torn")
+    raise Crash
+
+
 def _live(store, ks, cfn):
     return sorted(
         (r["key"], bytes(r["column"]), bytes(r["value"])) for r in store.cf(ks, cfn).live().collect()
@@ -374,10 +381,10 @@ def test_minor_compaction_merges_each_domain_in_its_own_directory(store):
     other = [f for f in files if "_dom=cd" in f]
     assert len(files) == 4 and len(other) == 1
     assert maintenance.submit_minor_if_needed(store, ks, cfn, min_threshold=2)
-    merged = [f for f in _store_files(store, ks, cfn) if f not in other]
-    assert len(merged) == 1 and merged[0].startswith(os.path.join("cells", "_dom=ab", "minor_"))
-    assert _store_files(store, ks, cfn) == sorted(merged + other)
-    assert not os.path.exists(os.path.join(store._cf_dir(ks, cfn), ".minor_tmp"))
+    after = _store_files(store, ks, cfn)
+    merged = [f for f in after if f not in files]
+    assert len(merged) == 1 and merged[0].startswith(os.path.join("cells", "_dom=ab", ""))
+    assert after == sorted(merged + other) and all(f.endswith(".parquet") for f in after)
     assert points() == before == {"k1_ab": [b"v2"], "k2_ab": [b"v3"], "k3_cd": [b"v4"]}
 
 
@@ -388,16 +395,18 @@ def test_compaction_outputs_are_fsynced_before_inputs_are_removed(store, monkeyp
     """Spark does not fsync the files it writes. Before a compaction
     removes its first input, each output file and the directories holding
     it are fsynced, and so are a major compaction's pointer and the CF
-    directory it is renamed in."""
+    directory it is renamed in. A file fsynced under a temp name and then
+    renamed counts as fsynced under its new name."""
     ks = "Keyspace1"
     c = ColumnPath(cfn, column=b"c")
     store.apply(ks, cfn, write.insert("k1_ab", c, b"v1", 1))
     store.apply(ks, cfn, write.insert("k2_ab", c, b"v2", 1))
     store.apply(ks, cfn, write.remove("k3_ab", ColumnPath(cfn), 3, local_deletion_time=2**31 - 10))
     base = os.path.realpath(store._cf_dir(ks, cfn))
+    cells_before = set(store._files(ks, cfn, "cells"))
     tombs_before = set(store._files(ks, cfn, "ctombs"))
     events = []
-    real_fsync, real_remove = os.fsync, os.remove
+    real_fsync, real_remove, real_replace = os.fsync, os.remove, os.replace
 
     def fsync(fd):
         events.append(("fsync", os.readlink(f"/proc/self/fd/{fd}")))
@@ -407,15 +416,22 @@ def test_compaction_outputs_are_fsynced_before_inputs_are_removed(store, monkeyp
         events.append(("remove", os.path.realpath(path)))
         real_remove(path)
 
+    def replace(src, dst):
+        events.append(("replace", (os.path.realpath(src), os.path.realpath(dst))))
+        real_replace(src, dst)
+
     with monkeypatch.context() as m:
         m.setattr(os, "fsync", fsync)
         m.setattr(os, "remove", remove)
+        m.setattr(os, "replace", replace)
         if kind == "minor":
             assert maintenance.submit_minor_if_needed(store, ks, cfn, min_threshold=2)
         else:
             maintenance.compact(store, ks, cfn)
     if kind == "minor":
-        outputs = [f for f in store._files(ks, cfn, "cells") if os.path.basename(f).startswith("minor_")]
+        outputs = sorted(set(store._files(ks, cfn, "cells")) - cells_before)
+        assert len(outputs) == 1
+        assert all(f.endswith(".parquet") for f in _store_files(store, ks, cfn))
         required = outputs + [os.path.dirname(outputs[0])]
     else:
         gen = store.compacted_meta(ks, cfn)["path"]
@@ -423,9 +439,85 @@ def test_compaction_outputs_are_fsynced_before_inputs_are_removed(store, monkeyp
         required = outputs + [os.path.dirname(f) for f in outputs] + [gen, "COMPACTED.json.tmp", "."]
     assert outputs
     first_remove = next(i for i, (op, path) in enumerate(events) if op == "remove" and path.startswith(base))
-    synced = {os.path.realpath(path) for op, path in events[:first_remove] if op == "fsync"}
+    synced = set()
+    for op, path in events[:first_remove]:
+        if op == "fsync":
+            synced.add(os.path.realpath(path))
+        elif op == "replace" and path[0] in synced:
+            synced.add(path[1])
     missing = sorted(p for p in required if os.path.realpath(os.path.join(base, p)) not in synced)
     assert not missing, f"not fsynced before the first input was removed: {missing}"
+
+
+@pytest.mark.parametrize("crash", ["temp_write", "before_replace"])
+def test_minor_crash_leaves_pre_state(store, spark, monkeypatch, crash):
+    """Minor compaction commits its merged file as a durable commit does:
+    a crash while it is written or before its rename leaves every input
+    and one hidden temp file. A reopened store reads the pre-state; no
+    reader -- the bind, a key read, snapshot, major compaction -- takes the
+    temp file for data, and the next minor compaction merges."""
+    import pyarrow.parquet as pq
+
+    ks, cfn = "Keyspace1", "Standard1"
+    c = ColumnPath(cfn, column=b"c")
+    store.apply(ks, cfn, write.insert("k", c, b"v1", 1))
+    store.apply(ks, cfn, write.insert("k", c, b"v2", 2))
+    store.apply(ks, cfn, write.insert("other", c, b"v", 1))
+    store.apply(ks, cfn, write.remove("other", c, 3, local_deletion_time=2**31 - 10))
+    pre, inputs = _live(store, ks, cfn), _store_files(store, ks, cfn)
+    pre_cells = Counter(store.key_cells(ks, cfn, ["k", "other"])[0])
+
+    def fail_replace(src, dst):
+        raise Crash
+
+    with monkeypatch.context() as m:
+        if crash == "temp_write":
+            m.setattr(pq, "write_table", _torn_write)
+        else:
+            m.setattr(os, "replace", fail_replace)
+        with pytest.raises(Crash):
+            maintenance.submit_minor_if_needed(store, ks, cfn, min_threshold=2)
+    files = _store_files(store, ks, cfn)
+    temps = [f for f in files if not f.endswith(".parquet")]
+    assert len(temps) == 1 and os.path.basename(temps[0]).startswith(".")
+    assert [f for f in files if f.endswith(".parquet")] == inputs
+
+    reopened = CellStore(spark, store.root, store.catalog)
+    assert _live(reopened, ks, cfn) == pre
+    assert Counter(reopened.key_cells(ks, cfn, ["k", "other"])[0]) == pre_cells
+    snap = maintenance.snapshot(reopened, ks, cfn, "after_crash")
+    assert all(f.endswith(".parquet") for _, _, fs in os.walk(snap) for f in fs)
+    assert maintenance.submit_minor_if_needed(reopened, ks, cfn, min_threshold=2)
+    assert _live(reopened, ks, cfn) == pre
+    maintenance.compact(reopened, ks, cfn)
+    assert _live(CellStore(spark, store.root, store.catalog), ks, cfn) == pre
+
+
+def test_minor_merges_at_most_memtable_threshold_rows(store, spark):
+    """The driver holds a minor merge's rows, so a size tier is trimmed to
+    ``memtable_threshold`` rows by its files' footers: two bulk-loaded
+    files of 8 rows stay apart under a threshold of 10 and merge under the
+    default."""
+    ks, cfn = "Keyspace1", "Standard1"
+    for ts in (1, 2):
+        rows = [(f"k{i}", None, b"c", f"v{ts}".encode(), ts, False, None) for i in range(8)]
+        store.bulk_load(ks, cfn, spark.createDataFrame(rows, CELL_SCHEMA).coalesce(1))
+
+    def stats():
+        paths = [os.path.join(store._cf_dir(ks, cfn), f) for f in store._files(ks, cfn, "cells")]
+        return {p: (os.stat(p).st_size, os.stat(p).st_mtime_ns) for p in paths}
+
+    files = stats()
+    assert len(files) == 2
+    small = CellStore(spark, store.root, store.catalog, memtable_threshold=10)
+    before = _live(small, ks, cfn)
+    assert before == [(f"k{i}", b"c", b"v2") for i in range(8)]
+    assert maintenance.submit_minor_if_needed(small, ks, cfn, min_threshold=2) is False
+    assert stats() == files
+    assert _live(small, ks, cfn) == before
+    assert maintenance.submit_minor_if_needed(store, ks, cfn, min_threshold=2)
+    assert len(stats()) == 1
+    assert _live(store, ks, cfn) == before
 
 
 def _store_files(store, ks, cfn):
@@ -496,10 +588,6 @@ def test_commit_crash_leaves_pre_or_cells_only_state(store, spark, monkeypatch, 
 
     real_replace, replaced = os.replace, []
 
-    def torn_write(table, where, **kwargs):
-        where.write(b"PAR1 torn")
-        raise Crash
-
     def fail_replace(src, dst):
         replaced.append(dst)
         if len(replaced) == (2 if crash == "between_kinds" else 1):
@@ -508,7 +596,7 @@ def test_commit_crash_leaves_pre_or_cells_only_state(store, spark, monkeypatch, 
 
     with monkeypatch.context() as m:
         if crash == "temp_write":
-            m.setattr(pq, "write_table", torn_write)
+            m.setattr(pq, "write_table", _torn_write)
         else:
             m.setattr(os, "replace", fail_replace)
         with pytest.raises(Crash):
@@ -644,8 +732,6 @@ def _crash_on_remove(store, monkeypatch):
 
 
 def _bulk_load_new(store, spark):
-    from apache_cassandra_spark.sources.cellstore import CELL_SCHEMA
-
     cells = spark.createDataFrame([("hot", None, b"c", b"new", 2, False, None)], CELL_SCHEMA)
     store.bulk_load("Keyspace1", "Standard1", cells)
 
