@@ -113,14 +113,6 @@ class CF:
     #: the read path skips the LWW aggregate and inherits the bucketed
     #: scan's HashPartitioning(key) — exchange-free reads
     pre_reconciled: bool = False
-    #: warm row cache primed by the store from its saved-caches file
-    #: (``db/ColumnFamilyStore.java:213-311`` initRowCache analog): the
-    #: persisted reconciled live view of the saved hot keys. Point reads
-    #: whose keys are all in ``row_cache_keys`` serve from it without a
-    #: manual ``cached_rows()`` call; a bind that finds the CF changed
-    #: since the store's last bind drops it and primes a fresh one.
-    row_cache: DataFrame | None = None
-    row_cache_keys: frozenset = frozenset()
 
     @property
     def is_super(self) -> bool:
@@ -146,15 +138,12 @@ class CF:
         """Row-cache analog (``db/ColumnFamilyStore.java:975-986``,
         ``cache/InstrumentedCache.java``): the reconciled live view pinned
         with MEMORY_AND_DISK so repeated point reads skip the merge. The
-        caller owns the lifetime (``.unpersist()``). The frame stays
-        current across writes: a fresh ``store.cf()`` bind that finds the
-        CF changed refreshes every cached plan over its directory, so a
-        held frame re-reads current storage when next used.
-
-        Deliberately INDEPENDENT of the store-primed warm cache
-        (``row_cache``): that one is store-owned and a contract-following
-        caller unpersisting this frame must not silently strip the warm
-        cache's persistence out from under ``_filtered_live``."""
+        caller owns the lifetime (``.unpersist()``); the store primes no
+        cache of its own, and Engine key reads run on the driver without
+        one. The frame stays current across writes: a fresh ``store.cf()``
+        bind that finds the CF changed refreshes every cached plan over
+        its delta directories, so a held frame re-reads current storage
+        when next used."""
         from pyspark import StorageLevel
 
         return self.live().persist(StorageLevel.MEMORY_AND_DISK)

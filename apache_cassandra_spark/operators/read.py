@@ -207,18 +207,6 @@ def _domain_pred(cf: CF, keys: list[str]) -> Column | None:
 def _filtered_live(
     cf: CF, key_pred: Column | None, extra_preds: list[Column], keys: list[str] | None = None
 ) -> DataFrame:
-    if keys is not None and cf.row_cache is not None and set(keys) <= cf.row_cache_keys:
-        # warm row-cache hit (saved-caches analog, ColumnFamilyStore.java:
-        # 213-311): the cache IS the reconciled live view of the hot keys,
-        # and every predicate here is a (key, sc, column) coordinate
-        # predicate — coordinate filters commute with the per-coordinate
-        # LWW reconcile, so applying them post-reconcile is equivalent
-        live = cf.row_cache
-        if key_pred is not None:
-            live = live.where(key_pred)
-        if extra_preds:
-            live = live.where(and_all(extra_preds))
-        return live
     cells = cf.cells
     tombs = cf.container_tombstones
     if keys is not None:

@@ -21,9 +21,10 @@ row-major SSTables (``io/SSTableWriter.java``) — with:
   order;
 * **one freshness check**: each ``cf()`` bind compares the CF's state
   (compacted generation, delta file names, memtable rows) with the state
-  this store last bound; on a change it drops the primed row cache and
-  refreshes Spark's cached plans over the CF directory. Writes,
-  compactions and other stores on the root invalidate nothing themselves;
+  this store last bound; on a change it refreshes Spark's cached plans
+  over the CF's delta directories, so a caller's ``CF.cached_rows()`` frame
+  re-reads current storage. Writes, compactions and other stores on the root
+  invalidate nothing themselves;
 * **compaction** (``operators/maintenance.py``) periodically rewrites the
   reconciled view sorted by (key, sc, column) so the file count stays
   bounded and scans read one version per cell.
@@ -54,6 +55,7 @@ import json
 import os
 import re
 import shutil
+import time
 import uuid
 
 import pyarrow as pa
@@ -101,6 +103,13 @@ _PATH_ESCAPED = frozenset(map(chr, range(1, 32))) | frozenset("\"#%'*/:=?\\\x7f{
 # Spark's bucket-file name, ``part-…_00003.c000.zstd.parquet``
 # (``BucketingUtils.getBucketId``)
 _BUCKET_FILE = re.compile(r".*_(\d+)(?:\..*)?$")
+
+# ``_publish``'s hidden temp name
+_TEMP_FILE = re.compile(r"\.part-[0-9a-f-]{36}\.zstd\.parquet\.tmp")
+
+# a temp file last written before this import belongs to no ``_publish`` of
+# this process: a crashed commit or minor compaction left it behind
+_IMPORTED = time.time()
 
 # every cell column, nullable, as Spark reads every file (a minor
 # compaction reads and writes its tier with it); a key-pinned read needs
@@ -227,9 +236,6 @@ class CellStore:
         self.memtable_threshold = memtable_threshold
         # memtable analog: pending rows per (ks, cf)
         self._pending: dict[tuple[str, str], MutationBatch] = {}
-        # warm row caches primed from saved-caches files:
-        # (ks, cf) -> (hot key set, persisted reconciled live view)
-        self._row_caches: dict[tuple[str, str], tuple[frozenset, DataFrame]] = {}
         # (ks, cf) -> the CF state this store last bound (see cf())
         self._bound: dict[tuple[str, str], tuple] = {}
 
@@ -243,96 +249,50 @@ class CellStore:
     def _ctombs_dir(self, ks: str, cf: str) -> str:
         return os.path.join(self.root, ks, cf, "ctombs")
 
-    def _files(self, ks: str, cf: str, sub: str) -> list[str]:
-        """CF-relative paths of the Parquet files under ``sub``, ``_dom=``
-        partition directories included (Spark's ``_temporary`` is not, nor
-        is a commit's hidden temp file)."""
+    def _files(self, ks: str, cf: str, sub: str, pick=lambda f: f.endswith(".parquet")) -> list[str]:
+        """CF-relative paths of the files ``pick`` selects by name under
+        ``sub``, ``_dom=`` partition directories included (Spark's
+        ``_temporary`` is not). By default the Parquet files, which leaves
+        out a commit's hidden temp file."""
         base = self._cf_dir(ks, cf)
         out = []
         for dirpath, dirnames, filenames in os.walk(os.path.join(base, sub)):
             dirnames[:] = [d for d in dirnames if d.startswith("_dom=")]
-            out += [os.path.relpath(os.path.join(dirpath, f), base) for f in filenames if f.endswith(".parquet")]
+            out += [os.path.relpath(os.path.join(dirpath, f), base) for f in filenames if pick(f)]
         return out
 
     def _delta_files(self, ks: str, cf: str) -> list[str]:
         """Every delta file a compaction consumes: ``cells/`` and ``ctombs/``."""
         return self._files(ks, cf, "cells") + self._files(ks, cf, "ctombs")
 
-    def _saved_cache_path(self, ks: str, cf: str) -> str:
-        return os.path.join(self.root, ks, cf, "SAVED_CACHES.json")
+    def _abandoned_temps(self, ks: str, cf: str) -> list[str]:
+        """The hidden ``_publish`` temp files in ``cells/`` and ``ctombs/``
+        last written before this module was imported: a crashed commit or
+        minor compaction left them, and no reader lists them."""
+        base = self._cf_dir(ks, cf)
 
-    # -- saved caches (warm start) -------------------------------------------
+        def stale(rel: str) -> bool:
+            try:
+                return os.path.getmtime(os.path.join(base, rel)) < _IMPORTED
+            except FileNotFoundError:  # renamed into place meanwhile
+                return False
+
+        return [f for sub in ("cells", "ctombs") for f in self._files(ks, cf, sub, _TEMP_FILE.fullmatch) if stale(f)]
+
+    # -- saved caches --------------------------------------------------------
     #
-    # ``db/ColumnFamilyStore.java:213-311``: the reference persists the row
-    # cache's hot KEY LIST (not the data) and on startup initRowCache()
-    # re-reads it and re-caches each key against the freshly loaded
-    # SSTables. Same contract here: the JSON file carries only keys; a
-    # fresh store binding re-reconciles those keys from current storage and
-    # pins the result, so the warm cache is never stale data — staleness of
-    # the KEY LIST just means warming a slightly old hot set.
-    #
-    # Writers never touch the primed cache: a CF's files also change from
-    # other stores on the root, so the ``cf()`` bind alone decides when to
-    # drop it (see the module docstring).
+    # The reference persists its row cache's hot-key list and re-primes it on
+    # startup (``db/ColumnFamilyStore.java:213-311``). Every Engine key read
+    # and range read runs on the driver and binds no Spark frame, so nothing
+    # here is primed; the two calls stay for callers written against them.
 
     def save_row_cache(self, ks: str, cf_name: str, keys) -> None:
-        """Persist the hot-key list (``submitRowCacheWrite`` /
-        ``readSavedCache`` analog — sorted on write, the price the
-        reference pays on read); the next ``cf()`` bind primes it."""
-        keys = sorted(set(keys))
-        path = self._saved_cache_path(ks, cf_name)
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(keys, fh)
-        os.replace(tmp, path)
-        # a new key set replaces the primed cache
-        if keys != sorted(self._row_caches.get((ks, cf_name), ((),))[0]):
-            self.invalidate_row_cache(ks, cf_name)
+        """No-op: there is no store-primed row cache to warm. Kept so a
+        caller that saves its hot-key list keeps working; it writes nothing."""
 
     def invalidate_row_cache(self, ks: str, cf_name: str) -> None:
-        """Drop the primed cache. The saved key list stays — the next
-        ``cf()`` bind re-reconciles those keys from current storage."""
-        ent = self._row_caches.pop((ks, cf_name), None)
-        if ent is not None:
-            ent[1].unpersist()
-
-    def _primed_row_cache(self, ks: str, cf_name: str, handle: CF):
-        ent = self._row_caches.get((ks, cf_name))
-        if ent is not None:
-            return ent
-        path = self._saved_cache_path(ks, cf_name)
-        if not os.path.isfile(path):
-            return None
-        with open(path) as fh:
-            keys = json.load(fh)
-        if not keys:
-            return None
-        from pyspark import StorageLevel
-
-        from apache_cassandra_spark.functions.reconcile import live_view
-
-        if len(keys) <= 1000:
-            key_pred = F.col("key").isin(keys)
-            cells = handle.cells.where(key_pred)
-            tombs = handle.container_tombstones
-            if tombs is not None:
-                tombs = tombs.where(key_pred)
-        else:
-            # large hot sets: a literal In() of 10^5 keys bloats the plan —
-            # semi-join against a broadcast key frame instead (the list is
-            # driver-bounded by construction: these keys WERE cached rows)
-            key_df = F.broadcast(self.spark.createDataFrame([(k,) for k in keys], "key string"))
-            cells = handle.cells.join(key_df, "key", "semi")
-            tombs = handle.container_tombstones
-            if tombs is not None:
-                tombs = tombs.join(key_df, "key", "semi")
-        lv = live_view(
-            cells, tombs, with_sc_level=handle.is_super, pre_reconciled=handle.pre_reconciled
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        ent = (frozenset(keys), lv)
-        self._row_caches[(ks, cf_name)] = ent
-        return ent
+        """No-op: there is no store-primed row cache to drop. ``cf()``'s bind
+        keeps a caller-owned ``CF.cached_rows()`` frame current."""
 
     # -- compacted generations (the intended 100 TB read layout) ------------
     #
@@ -370,15 +330,15 @@ class CellStore:
         (container tombstones inside grace) to ``ctombs/`` — a duplicate
         watermark is harmless, only the max per container counts; (3) flip
         ``COMPACTED.json`` to the generation, listing what it retires: the
-        delta files listed before (1) and the previous generation, once
-        the outputs of (1) and (2) are fsynced; (4)
-        ``_retire`` them. A crash before (3) leaves the old pointer over
+        delta files listed before (1), the temp files crashed commits
+        abandoned (``_abandoned_temps``) and the previous generation, once
+        the outputs of (1) and (2) are fsynced; (4) ``_retire`` them. A crash before (3) leaves the old pointer over
         every input; the next ``cf()`` bind finishes a crash after it. So
         no reader sees a consumed delta beside a generation that purged
         the tombstones shadowing it."""
         cfdef = self.catalog.keyspace(ks).cf(cf)
         base = self._cf_dir(ks, cf)
-        retire = self._delta_files(ks, cf)
+        retire = self._delta_files(ks, cf) + self._abandoned_temps(ks, cf)
         old = self.compacted_meta(ks, cf)
         gen = old["gen"] + 1 if old else 1
         path = os.path.join(base, f"compacted_g{gen}")
@@ -665,7 +625,9 @@ class CellStore:
         meta, cell_files, tomb_files, pend = self._sources(ks, cf_name)
         # what this bind reads (file names are unique). On any change since
         # this store's last bind, refresh as Spark's writer does a path it
-        # wrote, and drop the primed rows
+        # wrote: each delta directory apart, since one call refreshes only
+        # the first relation under its path in a cached plan (a generation
+        # is written once, under a new name)
         state = (
             meta and meta["gen"],
             sorted(cell_files),
@@ -674,8 +636,8 @@ class CellStore:
         )
         if self._bound.get((ks, cf_name)) != state:
             self._bound[(ks, cf_name)] = state
-            self.invalidate_row_cache(ks, cf_name)
-            self.spark.catalog.refreshByPath(self._cf_dir(ks, cf_name))
+            for path in (self._cells_dir(ks, cf_name), self._ctombs_dir(ks, cf_name)):
+                self.spark.catalog.refreshByPath(path)
         parts: list[DataFrame] = []
         if meta is not None:
             parts.append(self._compacted_df(ks, cf_name, meta, cell_schema))
@@ -704,7 +666,7 @@ class CellStore:
             cells = parts[0]
             for p in parts[1:]:
                 cells = cells.unionByName(p)
-        handle = CF(
+        return CF(
             cfdef=cfdef,
             cells=cells,
             container_tombstones=tombs,
@@ -713,7 +675,3 @@ class CellStore:
             domain_col="_dom" if domain else None,
             pre_reconciled=meta is not None and len(parts) == 1,
         )
-        warm = self._primed_row_cache(ks, cf_name, handle)
-        if warm is not None:
-            handle.row_cache_keys, handle.row_cache = warm[0], warm[1]
-        return handle

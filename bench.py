@@ -21,6 +21,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from apache_cassandra_spark.catalog import Catalog
+from apache_cassandra_spark.engine import Engine
 from apache_cassandra_spark.model import ColumnPath, KeyRange, SlicePredicate, SliceRange
 from apache_cassandra_spark.operators import read as R
 from apache_cassandra_spark.gates.cass import TABLES
@@ -230,18 +231,15 @@ def main() -> None:
             lambda: R.get_range_slices(cf, pred, kr).count(), warmup=True
         )
 
-        # warm point get: the saved-caches row cache (r10) — persist a
-        # 100-key hot set, re-bind (re-primes the reconciled live view),
-        # then point-read through the warm path. The reference's row
-        # cache exists for exactly this ratio vs stress_point_get.
-        store.save_row_cache("Bench", "Orders", keys)
-        cf_warm = store.cf("Bench", "Orders")
-        assert cf_warm.row_cache is not None
+        # hot point get: the Engine's driver key read over the same store
+        # root -- pyarrow reads the key's bucket file, Python reconciles,
+        # no Spark job. It is what serves a hot key, against
+        # stress_point_get's Spark operator read.
+        engine = Engine(spark, store.root, store.catalog)
         results["stress_point_get_warm"] = timed_median(
-            lambda: R.get(cf_warm, "42", ColumnPath("Orders", column=b"o_totalprice")).count(),
+            lambda: engine.get("Bench", "42", ColumnPath("Orders", column=b"o_totalprice")).count(),
             warmup=True,
         )
-        store.invalidate_row_cache("Bench", "Orders")
         results["_stress_n_keys"] = float(n_keys)
     finally:
         for root in roots:

@@ -61,12 +61,6 @@ ALLOWLIST: dict[tuple[str, str], tuple[int, str]] = {
         "flag-gated (broadcast): blocklist ~10s of MB by contract; "
         "False -> AQE-decided anti-join",
     ),
-    ("sources/cellstore.py", 'self.spark.createDataFrame([(k,) for k in keys], "key string")'): (
-        1,
-        "saved-caches hot-key frame: driver-bounded by construction (the "
-        "keys were rows the driver cached in memory, re-read from one "
-        "JSON file) — used only past the 1000-key isin threshold",
-    ),
     ("analytics/text.py", "n_docs"): (1, "1-row corpus count"),
     ("analytics/text.py", "total"): (2, "1-row token total"),
     ("analytics/text.py", "qt"): (

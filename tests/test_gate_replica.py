@@ -182,22 +182,52 @@ def test_no_session_keyed_memo_and_no_session_conf_side_effect():
 
 def test_row_cache_is_kept_only_by_the_cell_store():
     """Spark-free owner guard: ``CellStore.cf()``'s bind-time freshness
-    check is the one place that drops the primed row cache. A writer or an
-    operator that invalidates or re-saves it by hand is a second owner
-    that can miss a case -- delete the call instead."""
+    check is the one place that refreshes Spark's cached plans over a CF
+    directory, which keeps a caller's ``cached_rows()`` frame current. A
+    writer or an operator that refreshes by hand is a second owner that
+    can miss a case -- delete the call instead."""
+    import ast
     import pathlib
-    import re
 
     pkg = pathlib.Path(__file__).resolve().parent.parent / "apache_cassandra_spark"
-    call = re.compile(r"\b(invalidate_row_cache|save_row_cache)\(")
-    hits = [
-        f"{path.relative_to(pkg)}:{n}"
-        for path in sorted(pkg.rglob("*.py"))
-        if path != pkg / "sources" / "cellstore.py"
-        for n, line in enumerate(path.read_text().splitlines(), 1)
-        if call.search(line)
-    ]
-    assert not hits, f"row-cache calls outside sources/cellstore.py: {hits}"
+    callers = set()
+    for path in sorted(pkg.rglob("*.py")):
+        rel = str(path.relative_to(pkg))
+
+        def visit(node, scope):
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute) and node.func.attr == "refreshByPath":
+                callers.add(f"{rel}:{'.'.join(scope)}")
+            if isinstance(node, (ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)):
+                scope = scope + [node.name]
+            for child in ast.iter_child_nodes(node):
+                visit(child, scope)
+
+        visit(ast.parse(path.read_text()), [])
+    assert callers == {"sources/cellstore.py:CellStore.cf"}
+
+
+def test_perfbench_tracer_wraps_names_the_package_has(tmp_path):
+    """Spark-free guard: the benchmark's tracer wraps package functions and
+    ``Engine``/``CellStore`` methods by name, so a rename would surface only
+    as a failed benchmark run. Install and uninstall it over an Engine
+    bound to no session; every name must resolve, and uninstall must put
+    every original back."""
+    import importlib
+
+    from apache_cassandra_spark.catalog import Catalog
+    from apache_cassandra_spark.engine import Engine
+    from apache_cassandra_spark.operators import maintenance, read, write
+    from perfbench.spans import Tracer
+
+    engine = Engine(None, str(tmp_path), Catalog.from_dict({"Keyspace1": {"Standard1": {}}}))
+    reconcile = importlib.import_module("apache_cassandra_spark.functions.reconcile")
+    owners = (engine, engine.store, read, write, reconcile, maintenance)
+    before = [dict(vars(o)) for o in owners]
+    tracer = Tracer()
+    tracer.install_store_layers(engine)
+    assert tracer._undo
+    tracer.uninstall()
+    assert [dict(vars(o)) for o in owners] == before
 
 
 def test_bench_queries_are_unique_and_declared():

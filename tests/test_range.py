@@ -25,6 +25,10 @@ def test_key_range_inclusive_bounds(spark):
     pred = SlicePredicate(slice_range=SliceRange(count=10))
     kr = KeyRange(start_key="key05", end_key="key08", count=100)
     assert keys_of(read.get_range_slices(cf, pred, kr)) == ["key05", "key06", "key07", "key08"]
+    # R6, the pre-0.6 key-addressed signature, forwards to R7
+    assert keys_of(read.get_range_slice(cf, pred, "key05", "key08", 100)) == ["key05", "key06", "key07", "key08"]
+    # an empty finish key leaves the end open
+    assert keys_of(read.get_range_slice(cf, pred, "key27", "", 100)) == ["key27", "key28", "key29"]
 
 
 def test_key_range_row_count_cap(spark):
