@@ -49,6 +49,7 @@ column) *before* the reconcile shuffle.
 from __future__ import annotations
 
 import bisect
+import errno
 import hashlib
 import itertools
 import json
@@ -384,20 +385,30 @@ class CellStore:
 
     def _retire(self, ks: str, cf: str, meta: dict) -> None:
         """Step 4 of ``publish_compaction``: delete what the pointer
-        ``meta`` retires, and any ``_dom=`` directory left without data,
+        ``meta`` retires, with the ``.crc`` sidecar Spark's writer leaves
+        beside each file, and any ``_dom=`` directory that leaves empty,
         drop the old table, then rewrite the pointer without the list.
-        Missing entries are skipped, so a run cut short is finished by
-        running it again."""
+        Only listed files are deleted by name: a directory that still
+        holds a file (a running commit's temp file) stays. Missing entries
+        are skipped, so a run cut short is finished by running it again."""
         base = self._cf_dir(ks, cf)
         retire = meta.pop("retire")
         for p in (os.path.join(base, rel) for rel in retire):
             if os.path.isdir(p):
-                shutil.rmtree(p)
-            elif os.path.exists(p):
-                os.remove(p)
+                shutil.rmtree(p)  # the previous generation, which its compaction owns whole
+                continue
+            d, name = os.path.split(p)
+            for f in (p, os.path.join(d, f".{name}.crc")):
+                try:
+                    os.remove(f)
+                except FileNotFoundError:  # a pyarrow-written file has no sidecar
+                    pass
         for d in {os.path.join(base, os.path.dirname(rel)) for rel in retire if "_dom=" in rel}:
-            if os.path.isdir(d) and not any(f.endswith(".parquet") for f in os.listdir(d)):
-                shutil.rmtree(d)  # with the .crc sidecars Spark left beside the data
+            try:
+                os.rmdir(d)
+            except OSError as e:
+                if e.errno not in (errno.ENOTEMPTY, errno.ENOENT):  # a file left in it stays
+                    raise
         table = meta.pop("retire_table")
         if table:
             self.spark.sql(f"DROP TABLE IF EXISTS {table}")

@@ -529,6 +529,44 @@ def test_major_compaction_removes_temp_files_that_crashed_commits_left(store, sp
     assert Counter(reopened.key_cells(ks, cfn, ["k", "gone"])[0]) == pre_cells
 
 
+def test_major_compaction_keeps_a_running_commits_temp_file_in_a_retired_domain(store, spark):
+    """Retiring a ``_dom=`` directory's data files deletes them by name and
+    removes the directory only once that leaves it empty: a fresh temp file
+    there belongs to a commit still running, so it and its directory stay."""
+    ks, cfn = "Keyspace1", "Dom1"
+    store.apply(ks, cfn, write.insert("k", ColumnPath(cfn, column=b"c"), b"v", 1))
+    data_dir = os.path.join(store._cf_dir(ks, cfn), os.path.dirname(store._files(ks, cfn, "cells")[0]))
+    assert "_dom=" in data_dir
+    running = os.path.join(data_dir, f".part-{uuid.uuid4()}.zstd.parquet.tmp")
+    with open(running, "wb") as fh:
+        fh.write(b"PAR1 torn")
+    pre = _live(store, ks, cfn)
+
+    maintenance.compact(store, ks, cfn)
+    assert store._files(ks, cfn, "cells") == []
+    assert os.listdir(data_dir) == [os.path.basename(running)]
+    assert _live(CellStore(spark, store.root, store.catalog), ks, cfn) == pre
+
+
+@pytest.mark.parametrize("cfn", ["Standard1", "Dom1"])
+def test_major_compaction_retires_the_checksum_sidecars_of_what_it_retires(store, spark, cfn):
+    """Spark's writer leaves a ``.{name}.crc`` beside each file it writes
+    (``bulk_load`` cells, a compaction's kept tombstones); a compaction that
+    retires the file retires its sidecar too."""
+    ks = "Keyspace1"
+    rows = [(f"k{i}", None, b"c", b"v", 1, False, None) for i in range(4)]
+    store.bulk_load(ks, cfn, spark.createDataFrame(rows, CELL_SCHEMA))
+    store.apply(ks, cfn, write.remove("k0", ColumnPath(cfn), 2, local_deletion_time=2**31 - 10))
+    maintenance.compact(store, ks, cfn)
+    maintenance.compact(store, ks, cfn)
+
+    base = store._cf_dir(ks, cfn)
+    crcs = [f for f in _store_files(store, ks, cfn) if f.endswith(".crc")]
+    assert any(f.startswith("ctombs") for f in crcs)  # the kept tombstones' sidecar
+    orphans = [f for f in crcs if not os.path.exists(os.path.join(base, os.path.dirname(f), os.path.basename(f)[1:-4]))]
+    assert orphans == []
+
+
 def test_minor_merges_at_most_memtable_threshold_rows(store, spark):
     """The driver holds a minor merge's rows, so a size tier is trimmed to
     ``memtable_threshold`` rows by its files' footers: two bulk-loaded

@@ -10,9 +10,10 @@ from __future__ import annotations
 import hashlib
 import json
 import math
+import os
 import sys
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 import pyarrow.types as pat
