@@ -135,7 +135,7 @@ class Engine:
         # explicit re-save is two independent atomic swaps, so a crash
         # between them can pair new cluster metadata with the old schema
         # until save_schema() runs again — metadata nicety, not a
-        # data-plane risk (cells/ctombs never ride in these files)
+        # data-plane risk (cells never ride in these files)
         cl_path = os.path.join(self._root, "cluster.json")
         with open(cl_path + ".tmp", "w") as fh:
             _json.dump(

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from apache_cassandra_spark.catalog import CFDef
 from apache_cassandra_spark.functions.tokens import OrderPreservingPartitioner, RandomPartitioner
-from apache_cassandra_spark.gates.common import _events_norm, load_events, load_events_raw, load_table
+from apache_cassandra_spark.gates.common import _events_norm, load_events, load_events_raw, load_table, scratch_dir
 from apache_cassandra_spark.model import CF, KeyRange, SlicePredicate, SliceRange
 from apache_cassandra_spark.operators import read as R
 from apache_cassandra_spark.sources.ingest import cf_from_table
@@ -356,7 +356,6 @@ def q_cf_join(spark, sf_dir):
     tables, joined on (key, column) via `read.join_cf` — exchange-free
     post-compaction (plan-locked in test_plans); the oracle replays the
     mutation logs and the join in SQL."""
-    import tempfile
 
     from apache_cassandra_spark.catalog import Catalog
     from apache_cassandra_spark.engine import Engine
@@ -365,7 +364,7 @@ def q_cf_join(spark, sf_dir):
     from apache_cassandra_spark.operators import read as R2
 
     ks = "Gate"
-    root = tempfile.mkdtemp(prefix="cfjoin_gate_")
+    root = scratch_dir("cfjoin_gate_")
     eng = Engine(
         spark, root,
         Catalog.from_dict({ks: {"JA": {"compare_with": "UTF8Type"},
@@ -469,7 +468,6 @@ def q_write_path(spark, sf_dir):
     The returned DataFrame reads the *compacted bucketed table* — the gate
     therefore also pins the pre-reconciled exchange-free read regime.
     """
-    import tempfile
 
     from apache_cassandra_spark.catalog import Catalog
     from apache_cassandra_spark.engine import Engine
@@ -478,7 +476,7 @@ def q_write_path(spark, sf_dir):
     from apache_cassandra_spark.sources.cellstore import CELL_SCHEMA
 
     ks, cfn = "Gate", "WP"
-    root = tempfile.mkdtemp(prefix="write_gate_")  # left for the lazy read
+    root = scratch_dir("write_gate_")  # left for the lazy read
     eng = Engine(spark, root, Catalog.from_dict({ks: {cfn: {"compare_with": "UTF8Type"}}}))
     cp = lambda c: ColumnPath(cfn, column=c)  # noqa: E731
 

@@ -8,13 +8,26 @@ assumes each table is one Parquet file on local disk.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
+
+
+def scratch_dir(prefix: str) -> str:
+    """A new temporary directory for a gate's intermediate files, removed
+    when the interpreter exits. Not earlier: the gate's result is a lazy
+    DataFrame that reads it."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
+
 
 #: files below this size stay narrow: their pipelines are trivial and the
 #: round-robin exchange would be pure overhead (tiny dims broadcast anyway)

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from apache_cassandra_spark.analytics import text
-from apache_cassandra_spark.gates.common import load_table
+from apache_cassandra_spark.gates.common import load_table, scratch_dir
 from apache_cassandra_spark.gates.dedup import _closure_ctes
 
 
@@ -238,12 +238,11 @@ def q_corpus_shard_roundtrip(spark, sf_dir):
     recomputes every row INCLUDING its shard id from the original table —
     so the gate pins the sink's layout arithmetic, the JSON value
     round-trip, and the reader's partition-column handling at once."""
-    import tempfile
 
     from apache_cassandra_spark.sources import corpus as corpus_io
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang", "n_chars")
-    out_dir = tempfile.mkdtemp(prefix="corpus_shards_")
+    out_dir = scratch_dir("corpus_shards_")
     corpus_io.write_sharded(docs, out_dir, key_col="doc_id", n_shards=8, rows_per_file=200, fmt="json")
     back = corpus_io.read_corpus(
         spark, out_dir, fmt="json", schema="doc_id long, text string, lang string, n_chars long"
@@ -686,14 +685,13 @@ def q_corpus_wet_roundtrip(spark, sf_dir):
     framing arithmetic, the reader's header/payload split, and the
     byte-length contract at once (the corpus_shard_roundtrip recipe,
     pointed at the crawl-interchange format)."""
-    import tempfile
 
     from apache_cassandra_spark.sources import warc
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source", F.expr(_SYNTH_URL_SQL).alias("url")
     )
-    out_dir = tempfile.mkdtemp(prefix="corpus_wet_")
+    out_dir = scratch_dir("corpus_wet_")
     warc.write_wet(docs, out_dir)
     return warc.read_wet(spark, out_dir).select(
         "target_uri", "warc_date", "content_length", "framing_ok", "text"
@@ -712,7 +710,6 @@ def q_corpus_warc_roundtrip(spark, sf_dir):
     exact payload recovery, the shared header parse, and the HTTP
     envelope split at once. Reference anchor: the W5 binary bulk-load
     boundary (``db/BinaryMemtable.java:45``) pointed at ISO 28500."""
-    import tempfile
 
     from apache_cassandra_spark.sources import warc
 
@@ -722,7 +719,7 @@ def q_corpus_warc_roundtrip(spark, sf_dir):
         .withColumn("html", F.expr(_SYNTH_HTML_SQL))
         .select("url", "html")
     )
-    out_dir = tempfile.mkdtemp(prefix="corpus_warc_")
+    out_dir = scratch_dir("corpus_warc_")
     warc.write_warc(docs, out_dir)
     back = warc.http_response_parts(warc.read_warc(spark, out_dir))
     return back.select(

@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from apache_cassandra_spark.gates import cass, events
 from apache_cassandra_spark.gates.cass import _event_cells, _strings
-from apache_cassandra_spark.gates.common import load_events, load_table
+from apache_cassandra_spark.gates.common import load_events, load_table, scratch_dir
 
 
 def q_streaming_sessions_replay(spark, sf_dir):
@@ -21,7 +21,6 @@ def q_streaming_sessions_replay(spark, sf_dir):
     state merges across micro-batches, so the result is independent of
     the nondeterministic file split."""
     import shutil
-    import tempfile
 
     from apache_cassandra_spark.streaming.sessions import sessionized_stats
 
@@ -32,7 +31,7 @@ def q_streaming_sessions_replay(spark, sf_dir):
     # result rows in the driver — the source copy is dead once the query
     # terminates, so clean it up instead of leaking a full events copy
     # per invocation
-    root = tempfile.mkdtemp(prefix="sess_gate_")
+    root = scratch_dir("sess_gate_")
     src = f"{root}/src"
     ev.repartition(6).write.mode("overwrite").parquet(src)
 
@@ -80,14 +79,13 @@ def q_streaming_lww_replay(spark, sf_dir):
     idempotent), so the nondeterministic file split is safe; what the
     gate pins is that losers emit nothing, winners overwrite state, and
     the final state equals the one-shot reconcile."""
-    import tempfile
 
     from pyspark.sql import Window
 
     from apache_cassandra_spark.streaming.stateful import lww_updates
 
     cells = _event_cells(spark, sf_dir).drop("ldt")
-    root = tempfile.mkdtemp(prefix="stream_gate_")  # left for the lazy read
+    root = scratch_dir("stream_gate_")  # left for the lazy read
     src, staging, ckpt = f"{root}/src", f"{root}/updates", f"{root}/ckpt"
     cells.repartition(8).write.mode("overwrite").parquet(src)
 
@@ -130,12 +128,11 @@ def q_streaming_interval_join_replay(spark, sf_dir):
     early and silently lose pairs (inner joins need no watermark for
     correctness — only for state cleanup on live streams)."""
     import shutil
-    import tempfile
 
     from apache_cassandra_spark.streaming.joins import interval_join
 
     ev = load_events(spark, sf_dir).withColumn("ts_micros", F.expr("ts div 1000"))
-    root = tempfile.mkdtemp(prefix="ij_gate_")
+    root = scratch_dir("ij_gate_")
     for side in ("view", "click"):
         (
             ev.where(F.col("event_type") == side)
@@ -187,14 +184,13 @@ def q_streaming_windowed_replay(spark, sf_dir):
     batch oracle. Watermark OFF — replaying unordered history with a
     watermark silently late-drops rows (the r5 sessions pitfall)."""
     import shutil
-    import tempfile
 
     from apache_cassandra_spark.streaming.ingest import windowed_event_stats
 
     ev = load_events(spark, sf_dir).select(
         F.expr("ts div 1000").alias("ts_micros"), "event_type", "value"
     )
-    root = tempfile.mkdtemp(prefix="win_gate_")
+    root = scratch_dir("win_gate_")
     src = f"{root}/src"
     ev.repartition(6).write.mode("overwrite").parquet(src)
 
@@ -235,10 +231,9 @@ def q_streaming_dedup_replay(spark, sf_dir):
     oracle. (dropDuplicates would be first-ARRIVAL-wins — split-
     dependent — which is exactly why the gate pins the aggregate form.)"""
     import shutil
-    import tempfile
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    root = tempfile.mkdtemp(prefix="dedup_gate_")
+    root = scratch_dir("dedup_gate_")
     src = f"{root}/src"
     docs.repartition(6).write.mode("overwrite").parquet(src)
 
@@ -302,7 +297,6 @@ def q_streaming_watermark_replay(spark, sf_dir):
     import glob
     import os
     import shutil
-    import tempfile
 
     from apache_cassandra_spark.streaming.ingest import windowed_event_stats
 
@@ -316,7 +310,7 @@ def q_streaming_watermark_replay(spark, sf_dir):
         # oracle still counts it in the final-watermark max)
         F.pmod(F.coalesce(F.col("user_id"), F.lit(0)), F.lit(4)).alias("b"),
     )
-    root = tempfile.mkdtemp(prefix="wm_gate_")
+    root = scratch_dir("wm_gate_")
     src = f"{root}/src"
     os.makedirs(src)
     view = "stream_watermark_gate"
@@ -362,7 +356,6 @@ def q_streaming_heavy_hitters_replay(spark, sf_dir):
     counts merge associatively, so the result is independent of the file
     split and matches the batch events_heavy_hitters oracle."""
     import shutil
-    import tempfile
 
     from pyspark.sql import Window
 
@@ -374,7 +367,7 @@ def q_streaming_heavy_hitters_replay(spark, sf_dir):
         .where(F.col("user_id").isNotNull())
         .select("event_type", "user_id")
     )
-    root = tempfile.mkdtemp(prefix="hh_gate_")
+    root = scratch_dir("hh_gate_")
     src = f"{root}/src"
     ev.repartition(6).write.mode("overwrite").parquet(src)
 

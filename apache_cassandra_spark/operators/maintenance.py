@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from apache_cassandra_spark.functions.reconcile import CELL_COLS, gc_view, winners
-from apache_cassandra_spark.sources.cellstore import CELL_SCHEMA, CELLS_READ, CellStore, _publish
+from apache_cassandra_spark.sources.cellstore import CELL_SCHEMA, CELLS_READ, MARKER, CellStore, _publish
 
 #: IRowProcessor analog: pandas frame of one row's cells -> transformed
 #: frame (empty frame == drop the row, mirroring "return null")
@@ -86,7 +86,7 @@ def compact(
 
     n_buckets = buckets or max(1, out.sparkSession.sparkContext.defaultParallelism)
     # container tombstones past grace are purged (every cell they shadowed
-    # is gone from the rewrite); younger watermarks are kept
+    # is gone from the rewrite); younger ones stay, as generation markers
     kept = None if tombs is None else tombs.where(F.col("ldt") >= F.lit(gc_before))
     store.publish_compaction(ks, cf_name, out, kept, n_buckets)
 
@@ -106,8 +106,9 @@ def submit_minor_if_needed(
 
     The merge runs on the driver with no Spark job, like the reference's
     one-node k-way merge (``io/CompactionIterator.java:106-160``): pyarrow
-    reads the bucket's files, ``reconcile.winners`` keeps one row per
-    ``(key, sc, column)``, sorted by it (a null ``sc`` first), and
+    reads the bucket's files, ``reconcile.winners`` keeps one cell per
+    ``(key, sc, column)`` and passes the container-tombstone markers through
+    (each keeps its ``ldt``), sorted by it (a null ``sc`` first), and
     ``cellstore._publish`` commits it as one file before the inputs are
     removed. A crash before the publish's rename leaves the inputs (and a
     hidden temp file no reader lists); after it, the merged file beside
@@ -162,8 +163,8 @@ def _minor_in_pool(
     if len(paths) < min_threshold:
         return False
     table = ds.dataset(paths, schema=CELLS_READ, format="parquet").to_table()
-    cols = [table.column(c).to_pylist() for c in CELL_COLS[:6]]
-    merged = winners(zip(*cols, range(table.num_rows)))
+    rows = list(zip(*[table.column(c).to_pylist() for c in CELL_COLS[:6]], range(table.num_rows)))
+    merged = winners(r for r in rows if r[2] != MARKER) + [r for r in rows if r[2] == MARKER]
     merged.sort(key=lambda r: (r[0], r[1] is not None, r[1] or b"", r[2]))
     _publish(table.take(pa.array([r[-1] for r in merged], pa.int64())), pool)
     for p in paths:
@@ -337,14 +338,13 @@ def import_json(spark, path: str) -> DataFrame:
 
 def snapshot(store: CellStore, ks: str, cf_name: str, tag: str) -> str:
     """Hardlink snapshot (``db/ColumnFamilyStore.java:1283``) of every file
-    a ``cf()`` bind reads: the delta cells at the snapshot root (``_dom=XX/``
-    partitions kept), and ``ctombs/``, the compacted generation and
+    a ``cf()`` bind reads: the delta cells and markers at the snapshot root
+    (``_dom=XX/`` partitions kept), and the compacted generation and
     ``COMPACTED.json`` at their paths under the CF directory."""
     base = store._cf_dir(ks, cf_name)
     dst = os.path.join(base, "snapshots", tag)
     os.makedirs(dst, exist_ok=True)
-    files = store._delta_files(ks, cf_name)
-    meta = store.compacted_meta(ks, cf_name)
+    meta, files, _ = store._sources(ks, cf_name)
     if meta is not None:
         files += store._files(ks, cf_name, meta["path"]) + ["COMPACTED.json"]
     for rel in files:

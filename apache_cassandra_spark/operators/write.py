@@ -9,7 +9,8 @@ tombstone rows; ``sources/cellstore.py`` persists them.
 
 A ``MutationBatch`` for one CF == the reference's per-CF slice of a
 ``batch_mutate`` call (``db/RowMutation.java:270``): committed as one
-atomic Parquet file per kind (cells, then container tombstones),
+atomic Parquet file (one per key domain for domain-split CFs), its
+container tombstones stored as marker cells beside its cells, and
 LWW-resolved against everything else by timestamp.
 """
 
@@ -87,9 +88,8 @@ def batch_mutate(
 ) -> dict[str, MutationBatch]:
     """W3 ``batch_mutate`` — per-row-atomic batch of upserts and deletes
     (``CassandraServer.java:384-425``). Returns one MutationBatch per CF
-    name; caller commits each (each kind's file of the per-CF commit is
-    atomic; a crash between the cells and the container tombstones leaves
-    the cells without the delete).
+    name; caller commits each, cells and deletes together in one atomic
+    file (one per key domain for a domain-split CF).
 
     ``super_cfs`` names the Super CFs in the batch: a name-predicate
     deletion without ``super_column`` on one of those deletes whole

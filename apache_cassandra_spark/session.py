@@ -14,6 +14,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half the machine's physical memory, capped at 16g: two sessions (a
+    test suite and a checker) then fit on one machine side by side."""
+    half_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2 >> 20
+    return f"{min(half_mb, 16 << 10)}m"
+
+
 def get_spark(
     app_name: str = "apache_cassandra_spark",
     master: str | None = None,
@@ -22,7 +29,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the session.
 
-    ``SPARK_GRAFT_CPUS`` controls local parallelism (default: all cores).
+    ``SPARK_GRAFT_CPUS`` controls local parallelism (default: all cores);
+    ``SPARK_GRAFT_DRIVER_MEM`` the driver heap (default: half the
+    physical memory, at most 16g).
     On a real cluster, pass ``master=None`` with spark-submit-provided master.
     """
     # Python workers import this package by name inside pandas-UDF /
@@ -50,7 +59,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # zstd parquet for everything the engine writes (store flushes,

@@ -5,11 +5,11 @@ Replaces the reference's storage stack — commitlog
 row-major SSTables (``io/SSTableWriter.java``) — with:
 
 * **delta commits**: each applied MutationBatch becomes one Parquet file
-  per kind (cells, then container tombstones; one cells file per ``_dom=``
-  directory for domain-split CFs), written on the driver under a hidden
-  temp name, fsynced and renamed into place — no Spark job. The commit is
-  the WAL: recovery is the files simply being there, and a crash leaves at
-  most a hidden temp file that no reader lists;
+  (one per ``_dom=`` directory for domain-split CFs), its row and
+  supercolumn deletes in it as ``MARKER`` cells, written on the driver
+  under a hidden temp name, fsynced and renamed into place — no Spark job.
+  The commit is the WAL: recovery is the files simply being there, and a
+  crash leaves at most a hidden temp file that no reader lists;
 * **memtable analog**: an in-session row buffer, unioned into every read
   until flushed (reads always see their own writes, like the reference's
   memtable+SSTable collation);
@@ -22,7 +22,7 @@ row-major SSTables (``io/SSTableWriter.java``) — with:
 * **one freshness check**: each ``cf()`` bind compares the CF's state
   (compacted generation, delta file names, memtable rows) with the state
   this store last bound; on a change it refreshes Spark's cached plans
-  over the CF's delta directories, so a caller's ``CF.cached_rows()`` frame
+  over the CF's delta directory, so a caller's ``CF.cached_rows()`` frame
   re-reads current storage. Writes, compactions and other stores on the root
   invalidate nothing themselves;
 * **compaction** (``operators/maintenance.py``) periodically rewrites the
@@ -31,25 +31,26 @@ row-major SSTables (``io/SSTableWriter.java``) — with:
 
 Layout on disk, under ``{root}/{keyspace}/{cf}/``:
 
-    cells/            multi-version delta cell files (the changelog),
-                      under ``_dom=XX/`` for domain-split CFs
-    ctombs/           container (row/sc) tombstones
+    cells/            multi-version delta cells and container-tombstone
+                      markers (the changelog), under ``_dom=XX/`` for
+                      domain-split CFs
     compacted_g{N}/   compaction generation N: a bucketed catalog table,
-                      or ``_dom=XX/`` Parquet for domain-split CFs
+                      or ``_dom=XX/`` Parquet for domain-split CFs; it
+                      holds the markers still inside gc grace
     COMPACTED.json    pointer to the live generation; from a compaction's
                       flip until its cleanup it also lists the files and
                       generation it retires (``publish_compaction``)
 
-Scale note: at 100 TB the cells directory would be written partitioned by
-a token-derived bucket (see ``compact(zorder_keys=...)``); local tests keep
-the flat layout. All reads go through ``CF`` and prune on (key, sc,
-column) *before* the reconcile shuffle.
+A ``ctombs/`` directory of ``(key, sc, ts, ldt)`` files, which stores kept
+container tombstones in before they became markers, is folded into
+``cells/`` by the first read (``_sources``).
 """
 
 from __future__ import annotations
 
 import bisect
 import errno
+import functools
 import hashlib
 import itertools
 import json
@@ -95,6 +96,11 @@ CONTAINER_TOMBSTONE_SCHEMA = T.StructType(
     ]
 )
 
+#: a row or supercolumn delete ``(key, sc, ts, ldt)`` is stored as the cell
+#: ``(key, sc, MARKER, NULL, ts, true, ldt)``; Thrift validation and
+#: ``bulk_load`` reject an empty column name, so no real cell reads as one
+MARKER = b""
+
 # the characters Spark escapes as %XX in a partition directory name
 # (ExternalCatalogUtils.escapePathName), so a committed file lands in the
 # same ``_dom=`` directory as bulk_load's and reads back the same domain
@@ -114,12 +120,9 @@ _IMPORTED = time.time()
 
 # every cell column, nullable, as Spark reads every file (a minor
 # compaction reads and writes its tier with it); a key-pinned read needs
-# the cells up to ``tombstone`` and container tombstones up to ``ts``; a
-# range read's key candidates need only ``key``
+# the cells up to ``tombstone``, a range read's key candidates ``key``
 CELLS_READ = pa.schema([f.with_nullable(True) for f in to_arrow_schema(CELL_SCHEMA)])
 _KEY_READ_CELLS = pa.schema(list(CELLS_READ)[:6])
-_KEY_READ_TOMBS = pa.schema([f.with_nullable(True) for f in to_arrow_schema(CONTAINER_TOMBSTONE_SCHEMA)][:3])
-_KEY_READ_KEYS = pa.schema([_KEY_READ_TOMBS.field("key")])
 
 
 def spark_bucket(key: str, buckets: int) -> int:
@@ -169,6 +172,27 @@ def _arrow_table(rows: list, schema: T.StructType) -> pa.Table:
         verify(row)
     arrow = to_arrow_schema(schema)
     return pa.Table.from_arrays([pa.array(col, f.type) for col, f in zip(zip(*rows), arrow)], schema=arrow)
+
+
+def _markers(tombs: list) -> list:
+    """Container tombstones ``(key, sc, ts, ldt)`` as ``MARKER`` cells, each
+    checked first against ``CONTAINER_TOMBSTONE_SCHEMA``, which needs an ``ldt``."""
+    verify = _make_type_verifier(CONTAINER_TOMBSTONE_SCHEMA)
+    for tomb in tombs:
+        verify(tomb)
+    return [(key, sc, MARKER, None, ts, True, ldt) for key, sc, ts, ldt in tombs]
+
+
+def _may_hold_markers(base: str, files: list[str]) -> bool:
+    """Whether a Parquet file of ``files`` (relative to ``base``) may hold a
+    ``MARKER`` cell: a row group's footer min of ``column`` is the marker
+    (the least binary value), or the footer has no statistics for it."""
+    for md in (pq.read_metadata(os.path.join(base, f)) for f in files):
+        col = md.schema.names.index("column")
+        stats = (md.row_group(g).column(col).statistics for g in range(md.num_row_groups))
+        if any(s is None or not s.has_min_max or s.min == MARKER for s in stats):
+            return True
+    return False
 
 
 def _fsync(path: str) -> None:
@@ -247,9 +271,6 @@ class CellStore:
     def _cells_dir(self, ks: str, cf: str) -> str:
         return os.path.join(self.root, ks, cf, "cells")
 
-    def _ctombs_dir(self, ks: str, cf: str) -> str:
-        return os.path.join(self.root, ks, cf, "ctombs")
-
     def _files(self, ks: str, cf: str, sub: str, pick=lambda f: f.endswith(".parquet")) -> list[str]:
         """CF-relative paths of the files ``pick`` selects by name under
         ``sub``, ``_dom=`` partition directories included (Spark's
@@ -262,14 +283,10 @@ class CellStore:
             out += [os.path.relpath(os.path.join(dirpath, f), base) for f in filenames if pick(f)]
         return out
 
-    def _delta_files(self, ks: str, cf: str) -> list[str]:
-        """Every delta file a compaction consumes: ``cells/`` and ``ctombs/``."""
-        return self._files(ks, cf, "cells") + self._files(ks, cf, "ctombs")
-
     def _abandoned_temps(self, ks: str, cf: str) -> list[str]:
-        """The hidden ``_publish`` temp files in ``cells/`` and ``ctombs/``
-        last written before this module was imported: a crashed commit or
-        minor compaction left them, and no reader lists them."""
+        """The hidden ``_publish`` temp files in ``cells/`` last written
+        before this module was imported: a crashed commit or minor
+        compaction left them, and no reader lists them."""
         base = self._cf_dir(ks, cf)
 
         def stale(rel: str) -> bool:
@@ -278,7 +295,7 @@ class CellStore:
             except FileNotFoundError:  # renamed into place meanwhile
                 return False
 
-        return [f for sub in ("cells", "ctombs") for f in self._files(ks, cf, sub, _TEMP_FILE.fullmatch) if stale(f)]
+        return [f for f in self._files(ks, cf, "cells", _TEMP_FILE.fullmatch) if stale(f)]
 
     # -- saved caches --------------------------------------------------------
     #
@@ -327,23 +344,26 @@ class CellStore:
         self, ks: str, cf: str, out: DataFrame, kept_tombs: DataFrame | None, buckets: int
     ) -> None:
         """The one commit of a major compaction, for every CF: (1) write
-        ``out`` as generation ``compacted_g{N}``; (2) append ``kept_tombs``
-        (container tombstones inside grace) to ``ctombs/`` — a duplicate
-        watermark is harmless, only the max per container counts; (3) flip
+        ``out`` with ``kept_tombs`` (container tombstones inside grace) as
+        ``MARKER`` cells as generation ``compacted_g{N}``, each marker in
+        its key's bucket file or ``_dom=`` directory; (2) flip
         ``COMPACTED.json`` to the generation, listing what it retires: the
         delta files listed before (1), the temp files crashed commits
         abandoned (``_abandoned_temps``) and the previous generation, once
-        the outputs of (1) and (2) are fsynced; (4) ``_retire`` them. A crash before (3) leaves the old pointer over
-        every input; the next ``cf()`` bind finishes a crash after it. So
-        no reader sees a consumed delta beside a generation that purged
-        the tombstones shadowing it."""
+        the output of (1) is fsynced; (3) ``_retire`` them. A crash before
+        (2) leaves the old pointer over every input; the next read
+        finishes a crash after it. So no reader sees a consumed delta
+        beside a generation that purged the tombstones shadowing it."""
         cfdef = self.catalog.keyspace(ks).cf(cf)
         base = self._cf_dir(ks, cf)
-        retire = self._delta_files(ks, cf) + self._abandoned_temps(ks, cf)
+        retire = self._files(ks, cf, "cells") + self._abandoned_temps(ks, cf)
         old = self.compacted_meta(ks, cf)
         gen = old["gen"] + 1 if old else 1
         path = os.path.join(base, f"compacted_g{gen}")
         shutil.rmtree(path, ignore_errors=True)  # orphan of a run cut short before its flip
+        if kept_tombs is not None:
+            marker = [F.lit(MARKER).alias("column"), F.lit(None).cast("binary").alias("value")]
+            out = out.unionByName(kept_tombs.select("key", "sc", *marker, "ts", F.lit(True).alias("tombstone"), "ldt"))
         # repartition on the bucket key aligns tasks with buckets -> exactly
         # one file per bucket (per domain, for domain-split CFs)
         out = out.repartition(buckets, "key")
@@ -365,19 +385,13 @@ class CellStore:
             writer.parquet(path)
         else:
             writer.saveAsTable(table)
-        if kept_tombs is not None and not kept_tombs.isEmpty():
-            # sorted, so the same tombstones make the same file whatever
-            # order the uuid-named ``ctombs/`` inputs were listed in
-            kept = kept_tombs.coalesce(1).sortWithinPartitions("key", "sc", "ts", "ldt")
-            kept.write.mode("append").parquet(self._ctombs_dir(ks, cf))
         if old is not None:
             retire.append(os.path.relpath(os.path.join(base, old["path"]), base))
         meta = {"gen": gen, "table": table, "path": os.path.basename(path), "buckets": buckets}
         meta.update(retire=retire, retire_table=old["table"] if old else None)
-        # Spark does not fsync what it writes: make the generation and the
-        # kept tombstones durable before the flip lets _retire delete inputs
-        retired = set(retire)
-        outputs = [f for f in self._files(ks, cf, meta["path"]) + self._files(ks, cf, "ctombs") if f not in retired]
+        # Spark does not fsync what it writes: make the generation durable
+        # before the flip lets _retire delete inputs
+        outputs = self._files(ks, cf, meta["path"])
         for rel in outputs + sorted({os.path.dirname(f) for f in outputs} | {meta["path"]}):
             _fsync(os.path.join(base, rel))
         self.write_compacted_meta(ks, cf, meta)
@@ -455,26 +469,24 @@ class CellStore:
             self._commit(k[0], k[1], self._pending.pop(k))
 
     def _commit(self, ks: str, cf: str, batch: MutationBatch) -> None:
-        cells = batch.cells
-        if cells:
-            cells = self._apply_flush_processors(ks, cf, cells)
-        # check and convert both kinds before either becomes visible
-        files: list[tuple[str, pa.Table]] = []
-        if cells:
-            table = _arrow_table(cells, CELL_SCHEMA)
-            cells_dir = self._cells_dir(ks, cf)
-            if self.catalog.keyspace(ks).cf(cf).domain_split:
-                doms: dict[str, list[int]] = {}
-                for i, key in enumerate(table.column("key").to_pylist()):
-                    doms.setdefault(_dom_dir(key), []).append(i)
-                files += [(os.path.join(cells_dir, d), table.take(rows)) for d, rows in doms.items()]
-            else:
-                files.append((cells_dir, table))
-        if batch.container_tombstones:
-            tombs = _arrow_table(batch.container_tombstones, CONTAINER_TOMBSTONE_SCHEMA)
-            files.append((self._ctombs_dir(ks, cf), tombs))
-        for dirpath, table in files:
-            _publish(table, dirpath)
+        """Commit ``batch`` as one file: its cells after the flush chain, then
+        its container tombstones as ``MARKER`` cells, all checked first."""
+        rows = self._apply_flush_processors(ks, cf, batch.cells) + _markers(batch.container_tombstones)
+        if rows:
+            self._publish_cells(ks, cf, _arrow_table(rows, CELL_SCHEMA))
+
+    def _publish_cells(self, ks: str, cf: str, table: pa.Table) -> None:
+        """``_publish`` ``table`` into ``cells/``: one file, or one per
+        ``_dom=`` directory of a domain-split CF, so each row commits whole."""
+        cells_dir = self._cells_dir(ks, cf)
+        if not self.catalog.keyspace(ks).cf(cf).domain_split:
+            _publish(table, cells_dir)
+            return
+        doms: dict[str, list[int]] = {}
+        for i, key in enumerate(table.column("key").to_pylist()):
+            doms.setdefault(_dom_dir(key), []).append(i)
+        for d, rows in doms.items():
+            _publish(table.take(rows), os.path.join(cells_dir, d))
 
     def _apply_flush_processors(self, ks: str, cf: str, cells: list) -> list:
         """Run the CF's flush-capable row-processor chain over the cells
@@ -496,10 +508,7 @@ class CellStore:
         unprocessed here too."""
         from apache_cassandra_spark.operators import maintenance
 
-        cfdef = self.catalog.keyspace(ks).cf(cf)
-        if not cfdef.row_processors:
-            return cells
-        chain = maintenance.flush_chain(cfdef)
+        chain = maintenance.flush_chain(self.catalog.keyspace(ks).cf(cf))
         if chain is None:
             return cells
         import pandas as pd
@@ -531,8 +540,12 @@ class CellStore:
 
     def bulk_load(self, ks: str, cf: str, cells: DataFrame) -> None:
         """W5 binary/bulk load (``db/BinaryMemtable.java:45``): pre-shaped
-        cell DataFrame straight to storage, bypassing the memtable path."""
-        shaped = cells.select([F.col(f.name).cast(f.dataType) for f in CELL_SCHEMA.fields])
+        cell DataFrame straight to storage, bypassing the memtable path. A
+        cell with an empty ``column`` (a ``MARKER``) fails the load's job."""
+        cast = {f.name: F.col(f.name).cast(f.dataType) for f in CELL_SCHEMA.fields}
+        empty = F.raise_error(F.lit("bulk_load: a cell's column name may not be empty"))
+        cast["column"] = F.when(cast["column"] == F.lit(MARKER), empty).otherwise(cast["column"]).alias("column")
+        shaped = cells.select(list(cast.values()))
         writer = shaped.write
         if self.catalog.keyspace(ks).cf(cf).domain_split:
             # fork domain-split CFs (CFMetaData.java:49-53): physically
@@ -544,38 +557,60 @@ class CellStore:
     # -- read path -----------------------------------------------------------
     def _sources(self, ks: str, cf_name: str) -> tuple:
         """What a read of the CF sees: the live generation's pointer, the
-        delta cell and container-tombstone files, and the pending memtable
-        rows. A compaction cut short after its flip is finished first."""
+        delta cell files and the pending memtable rows. A compaction cut
+        short after its flip is finished first, then a legacy ``ctombs/``
+        is folded into ``cells/``."""
         meta = self.compacted_meta(ks, cf_name)
         if meta is not None and "retire" in meta:
             self._retire(ks, cf_name, meta)
-        cell_files = self._files(ks, cf_name, "cells")
-        tomb_files = self._files(ks, cf_name, "ctombs")
-        return meta, cell_files, tomb_files, self._pending.get((ks, cf_name))
+        self._fold_ctombs(ks, cf_name)
+        return meta, self._files(ks, cf_name, "cells"), self._pending.get((ks, cf_name))
+
+    def _fold_ctombs(self, ks: str, cf_name: str) -> None:
+        """Stores kept container tombstones ``(key, sc, ts, ldt)`` in a
+        ``ctombs/`` directory before they became ``MARKER`` cells:
+        republish each of its files as markers through ``_publish_cells``,
+        then delete the file and its ``.crc``, then the directory. A crash
+        between the two steps leaves duplicate markers, which change
+        nothing: only the highest watermark per container counts."""
+        legacy = os.path.join(self._cf_dir(ks, cf_name), "ctombs")
+        if not os.path.isdir(legacy):
+            return
+        for name in sorted(f for f in os.listdir(legacy) if f.endswith(".parquet")):
+            names = CONTAINER_TOMBSTONE_SCHEMA.fieldNames()
+            t = pq.read_table(os.path.join(legacy, name), columns=names)
+            tombs = list(zip(*(t.column(n).to_pylist() for n in names)))
+            if tombs:
+                self._publish_cells(ks, cf_name, _arrow_table(_markers(tombs), CELL_SCHEMA))
+            for f in (name, f".{name}.crc"):
+                if os.path.exists(os.path.join(legacy, f)):
+                    os.remove(os.path.join(legacy, f))
+        shutil.rmtree(legacy)
 
     def key_cells(self, ks: str, cf_name: str, keys) -> tuple[list[tuple], list[tuple]]:
         """Every stored version of ``keys``' cells ``(key, sc, column,
         value, ts, tombstone)`` and container tombstones ``(key, sc, ts)``,
-        read on the driver from ``cf()``'s sources with no Spark job. In the
+        read on the driver from ``cf()``'s sources with no Spark job; the
+        stored ``MARKER`` cells are the container tombstones. In the
         generation only the keys' bucket files are opened, the bucket id
         standing in for the reference's index summary
         (``io/IndexSummary.java:32-68``); a domain-split CF opens only the
         keys' ``_dom=`` directories, of the generation and of the deltas."""
-        meta, cell_files, tomb_files, pend = self._sources(ks, cf_name)
+        meta, files, pend = self._sources(ks, cf_name)
         keys = set(keys)
         doms = {_dom_dir(k) for k in keys} if self.catalog.keyspace(ks).cf(cf_name).domain_split else None
-        files = list(cell_files)
         if meta is not None:
             gen = self._files(ks, cf_name, meta["path"])
             if meta["table"] is not None:
                 ids = {spark_bucket(k, meta["buckets"]) for k in keys}
                 gen = [f for f in gen if (b := _BUCKET_FILE.match(os.path.basename(f))) is None or int(b[1]) in ids]
-            files += gen
+            files = files + gen
         if doms is not None:
             files = [f for f in files if os.path.basename(os.path.dirname(f)) in doms]
         base = self._cf_dir(ks, cf_name)
-        cells = _scan([os.path.join(base, f) for f in files], _KEY_READ_CELLS, keys)
-        tombs = _scan([os.path.join(base, f) for f in tomb_files], _KEY_READ_TOMBS, keys)
+        rows = _scan([os.path.join(base, f) for f in files], _KEY_READ_CELLS, keys)
+        cells = [r for r in rows if r[2] != MARKER]
+        tombs = [(r[0], r[1], r[4]) for r in rows if r[2] == MARKER]
         if pend is not None:
             cells += [c[:6] for c in pend.cells if c[0] in keys]
             tombs += [t[:3] for t in pend.container_tombstones if t[0] in keys]
@@ -588,17 +623,17 @@ class CellStore:
         ``getKeyRange`` over memtable and SSTable keys
         (``db/ColumnFamilyStore.java:1125-1239``). A key is a candidate if
         ``cf()``'s sources hold any cell version or container tombstone of
-        it: the key column of the generation, the delta ``cells/`` and the
-        ``ctombs/`` files, read one record batch at a time, and the pending
-        memtable keys. Each distinct key of a batch is tokenized with
+        it: the key column of the generation and of the delta ``cells/``
+        files, read one record batch at a time, and the pending memtable
+        keys. Each distinct key of a batch is tokenized with
         ``partitioner.token_of``; only the best ``count`` are held, so
         memory is O(count + batch). Each call reads every stored key once
         on this one process: the same O(rows) key scan as the Spark plan,
         which spreads it over executors."""
-        meta, cell_files, tomb_files, pend = self._sources(ks, cf_name)
-        files = cell_files + tomb_files + (self._files(ks, cf_name, meta["path"]) if meta is not None else [])
+        meta, files, pend = self._sources(ks, cf_name)
+        files = files + (self._files(ks, cf_name, meta["path"]) if meta is not None else [])
         paths = [os.path.join(self._cf_dir(ks, cf_name), f) for f in files]
-        batches = ds.dataset(paths, schema=_KEY_READ_KEYS, format="parquet").to_batches(columns=["key"])
+        batches = ds.dataset(paths, schema=CELLS_READ, format="parquet").to_batches(columns=["key"])
         keys = (pc.unique(b.column(0)).to_pylist() for b in batches)
         if pend is not None:
             keys = itertools.chain(keys, [{c[0] for c in pend.cells} | {t[0] for t in pend.container_tombstones}])
@@ -633,54 +668,47 @@ class CellStore:
         cell_schema = CELL_SCHEMA
         if domain:
             cell_schema = T.StructType(list(CELL_SCHEMA.fields) + [T.StructField("_dom", T.StringType(), True)])
-        meta, cell_files, tomb_files, pend = self._sources(ks, cf_name)
+        meta, cell_files, pend = self._sources(ks, cf_name)
         # what this bind reads (file names are unique). On any change since
         # this store's last bind, refresh as Spark's writer does a path it
-        # wrote: each delta directory apart, since one call refreshes only
-        # the first relation under its path in a cached plan (a generation
-        # is written once, under a new name)
-        state = (
-            meta and meta["gen"],
-            sorted(cell_files),
-            sorted(tomb_files),
-            pend and (tuple(pend.cells), tuple(pend.container_tombstones)),
-        )
+        # wrote (a generation is written once, under a new name)
+        pending = pend and (tuple(pend.cells), tuple(pend.container_tombstones))
+        state = (meta and meta["gen"], sorted(cell_files), pending)
         if self._bound.get((ks, cf_name)) != state:
             self._bound[(ks, cf_name)] = state
-            for path in (self._cells_dir(ks, cf_name), self._ctombs_dir(ks, cf_name)):
-                self.spark.catalog.refreshByPath(path)
-        parts: list[DataFrame] = []
+            self.spark.catalog.refreshByPath(self._cells_dir(ks, cf_name))
+        base = self._cf_dir(ks, cf_name)
+        parts = []  # (frame, whether its files may hold MARKER cells)
         if meta is not None:
-            parts.append(self._compacted_df(ks, cf_name, meta, cell_schema))
+            gen = self._compacted_df(ks, cf_name, meta, cell_schema)
+            parts.append((gen, _may_hold_markers(base, self._files(ks, cf_name, meta["path"]))))
         if cell_files:
-            parts.append(self.spark.read.schema(cell_schema).parquet(self._cells_dir(ks, cf_name)))
-        # container tombstones: bind None (not an empty frame) when no row/sc
-        # deletes exist, so the read path skips the watermark joins entirely —
-        # a CF with no container deletes pays nothing for the feature
-        tombs: DataFrame | None = None
-        if tomb_files:
-            tombs = self.spark.read.schema(CONTAINER_TOMBSTONE_SCHEMA).parquet(self._ctombs_dir(ks, cf_name))
-        if pend is not None:
-            if pend.cells:
-                pend_cells = self.spark.createDataFrame(pend.cells, CELL_SCHEMA)
-                if domain:
-                    pend_cells = pend_cells.withColumn("_dom", OdklDomainPartitioner().domain(F.col("key")))
-                parts.append(pend_cells)
-            if pend.container_tombstones:
-                pend_tombs = self.spark.createDataFrame(
-                    pend.container_tombstones, CONTAINER_TOMBSTONE_SCHEMA
-                )
-                tombs = pend_tombs if tombs is None else tombs.unionByName(pend_tombs)
-        if not parts:
-            cells = self.spark.createDataFrame([], cell_schema)
-        else:
-            cells = parts[0]
-            for p in parts[1:]:
-                cells = cells.unionByName(p)
+            frame = self.spark.read.schema(cell_schema).parquet(self._cells_dir(ks, cf_name))
+            parts.append((frame, _may_hold_markers(base, cell_files)))
+        if pend is not None and pend.cells:
+            frame = self.spark.createDataFrame(pend.cells, CELL_SCHEMA)
+            if domain:
+                frame = frame.withColumn("_dom", OdklDomainPartitioner().domain(F.col("key")))
+            parts.append((frame, False))
+        # container tombstones: bind None (not an empty frame) when no source
+        # may hold a row/sc delete, so the read path skips the watermark
+        # joins and the marker filter: a CF with no container deletes pays
+        # nothing for the feature
+        cell_parts, tomb_parts = [], []
+        for frame, marked in parts:
+            if marked:
+                is_marker = F.col("column") == F.lit(MARKER)
+                tomb_parts.append(frame.where(is_marker).select(*CONTAINER_TOMBSTONE_SCHEMA.fieldNames()))
+                frame = frame.where(~is_marker)
+            cell_parts.append(frame)
+        if pend is not None and pend.container_tombstones:
+            tomb_parts.append(self.spark.createDataFrame(pend.container_tombstones, CONTAINER_TOMBSTONE_SCHEMA))
+        if not cell_parts:
+            cell_parts.append(self.spark.createDataFrame([], cell_schema))
         return CF(
             cfdef=cfdef,
-            cells=cells,
-            container_tombstones=tombs,
+            cells=functools.reduce(DataFrame.unionByName, cell_parts),
+            container_tombstones=functools.reduce(DataFrame.unionByName, tomb_parts) if tomb_parts else None,
             partitioner=self.partitioner,
             keyspace=ks,
             domain_col="_dom" if domain else None,

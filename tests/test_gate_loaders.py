@@ -1,9 +1,12 @@
 """The gate loaders type every driver table from its Parquet footer: the
 read runs no schema-inference job and leaves the caller's session conf
-as it found it, whatever the file's timestamp unit."""
+as it found it, whatever the file's timestamp unit. A gate's scratch
+directory lasts until its interpreter exits."""
 
 import glob
 import os
+import subprocess
+import sys
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -41,3 +44,22 @@ def test_footer_schema_equals_spark_inference_on_driver_tables(spark):
     assert len(paths) == 10
     for p in paths:
         assert _read(spark, p).schema == spark.read.parquet(p).schema, os.path.basename(p)
+
+
+def test_scratch_dir_is_removed_when_the_interpreter_exits(tmp_path):
+    """Spark-free: a child interpreter makes a scratch directory, writes a
+    file into it and exits; the directory is gone after the exit and not
+    before it."""
+    child = (
+        "import os, sys\n"
+        "from apache_cassandra_spark.gates.common import scratch_dir\n"
+        "path = scratch_dir('gate_scratch_test_')\n"
+        "open(os.path.join(path, 'part'), 'w').close()\n"
+        "print(path, os.path.isdir(path))\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, TMPDIR=str(tmp_path), PYTHONPATH=repo)
+    out = subprocess.run([sys.executable, "-c", child], env=env, capture_output=True, text=True, check=True).stdout
+    path, existed = out.split()
+    assert existed == "True" and path.startswith(str(tmp_path))
+    assert not os.path.exists(path)

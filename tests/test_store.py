@@ -11,9 +11,10 @@ import pytest
 
 from apache_cassandra_spark.catalog import Catalog
 from apache_cassandra_spark.engine import Engine
-from apache_cassandra_spark.model import ColumnPath, Deletion, Mutation, SlicePredicate, SliceRange
+from apache_cassandra_spark.model import ColumnPath, Deletion, KeyRange, Mutation, SlicePredicate, SliceRange
 from apache_cassandra_spark.operators import exists, maintenance, read, write
-from apache_cassandra_spark.sources.cellstore import CELL_SCHEMA, CellStore
+from apache_cassandra_spark.sources import cellstore
+from apache_cassandra_spark.sources.cellstore import CELL_SCHEMA, CONTAINER_TOMBSTONE_SCHEMA, MARKER, CellStore
 
 
 @pytest.fixture()
@@ -25,6 +26,7 @@ def store(spark, tmp_path):
                 "Proc1": {"compare_with": "BytesType", "row_processors": ["RemoveDeleted"]},
                 "FlushProc1": {"compare_with": "BytesType", "row_processors": ["DropMarked", "RemoveDeleted"]},
                 "Dom1": {"compare_with": "BytesType", "domain_split": True},
+                "Super1": {"column_type": "Super", "compare_with": "BytesType", "compare_subcolumns_with": "BytesType"},
             }
         }
     )
@@ -122,11 +124,14 @@ def test_compaction_keeps_young_tombstones(store):
 
 
 def test_compaction_kept_tombstones_are_sorted_and_repeatable(spark, tmp_path):
-    """A major compaction writes the container tombstones it keeps sorted
-    by (key, sc, ts, ldt): two stores given the same writes, whose
-    uuid-named ``ctombs/`` inputs list in different orders, write
-    byte-identical files."""
+    """A major compaction writes the container tombstones it keeps into the
+    generation as marker cells: each in its key's bucket file, sorted there
+    by (key, sc, column) with the cells. Two stores given the same writes,
+    whose uuid-named delta inputs list in different orders, write the same
+    rows to each bucket file."""
     import pyarrow.parquet as pq
+
+    from apache_cassandra_spark.sources.cellstore import spark_bucket
 
     ks, cfn = "Keyspace1", "Standard1"
     catalog = Catalog.from_dict({ks: {cfn: {"compare_with": "BytesType"}}})
@@ -137,13 +142,17 @@ def test_compaction_kept_tombstones_are_sorted_and_repeatable(spark, tmp_path):
             key = f"k{i * 3 % 5}"
             s.apply(ks, cfn, write.insert(key, ColumnPath(cfn, column=b"c"), b"v", i))
             s.apply(ks, cfn, write.remove(key, ColumnPath(cfn), i + 1, local_deletion_time=100 + i))
-        maintenance.compact(s, ks, cfn, gc_grace_seconds=0, now=50)  # keeps every tombstone
-        [rel] = s._files(ks, cfn, "ctombs")
-        path = os.path.join(s._cf_dir(ks, cfn), rel)
-        rows = [(r["key"], r["sc"], r["ts"], r["ldt"]) for r in pq.read_table(path).to_pylist()]
-        assert len(rows) == 8 and rows == sorted(rows)
-        with open(path, "rb") as fh:
-            kept.append(fh.read())
+        maintenance.compact(s, ks, cfn, gc_grace_seconds=0, now=50, buckets=4)  # keeps every tombstone
+        gen, files = s.compacted_meta(ks, cfn)["path"], {}
+        for rel in s._files(ks, cfn, gen):
+            table = pq.read_table(os.path.join(s._cf_dir(ks, cfn), rel))
+            rows = [(r["key"], r["column"], r["ts"], r["ldt"]) for r in table.to_pylist()]
+            assert [r[:2] for r in rows] == sorted(r[:2] for r in rows)
+            assert {spark_bucket(r[0], 4) for r in rows} == {int(rel.split("_")[-1].split(".")[0])}
+            files[rel.split("_")[-1]] = Counter(rows)
+        rows = [r for bucket in files.values() for r in bucket.elements()]
+        assert len(rows) == 8 and all(r[1] == MARKER for r in rows)  # every cell was shadowed
+        kept.append(files)
     assert kept[0] == kept[1]
 
 
@@ -261,19 +270,21 @@ def test_snapshot_hardlinks(store, spark):
     store.apply(ks, cfn, write.insert("k1", ColumnPath(cfn, column=b"c1"), b"v1", 1))
     dst = maintenance.snapshot(store, ks, cfn, "tag1")
     assert any(f.endswith(".parquet") for f in os.listdir(dst))
-    # a row delete lives in ctombs/: a snapshot without it would bring the
-    # deleted row back on restore
+    # a row delete is a marker cell in cells/: a snapshot without it would
+    # bring the deleted row back on restore
     store.apply(ks, cfn, write.remove("k1", ColumnPath(cfn), 2))
     dst = maintenance.snapshot(store, ks, cfn, "tag2")
-    assert [r["key"] for r in spark.read.parquet(os.path.join(dst, "ctombs")).collect()] == ["k1"]
-    # after a compaction the snapshot links the generation and its pointer
+    cells = sorted((r["key"], bytes(r["column"])) for r in spark.read.parquet(dst).collect())
+    assert cells == [("k1", b""), ("k1", b"c1")]
+    # after a compaction the snapshot links the generation, which keeps the
+    # row delete inside grace, and its pointer
     store.apply(ks, cfn, write.insert("k2", ColumnPath(cfn, column=b"c1"), b"v2", 1))
     maintenance.compact(store, ks, cfn)
     dst = maintenance.snapshot(store, ks, cfn, "tag3")
     with open(os.path.join(dst, "COMPACTED.json")) as fh:
         gen = os.path.join(dst, json.load(fh)["path"])
-    assert [r["key"] for r in spark.read.parquet(gen).collect()] == ["k2"]
-    assert [r["key"] for r in spark.read.parquet(os.path.join(dst, "ctombs")).collect()] == ["k1"]
+    cells = sorted((r["key"], bytes(r["column"])) for r in spark.read.parquet(gen).collect())
+    assert cells == [("k1", b""), ("k2", b"c1")]
 
 
 class Crash(Exception):
@@ -406,7 +417,6 @@ def test_compaction_outputs_are_fsynced_before_inputs_are_removed(store, monkeyp
     store.apply(ks, cfn, write.remove("k3_ab", ColumnPath(cfn), 3, local_deletion_time=2**31 - 10))
     base = os.path.realpath(store._cf_dir(ks, cfn))
     cells_before = set(store._files(ks, cfn, "cells"))
-    tombs_before = set(store._files(ks, cfn, "ctombs"))
     events = []
     real_fsync, real_remove, real_replace = os.fsync, os.remove, os.replace
 
@@ -437,7 +447,7 @@ def test_compaction_outputs_are_fsynced_before_inputs_are_removed(store, monkeyp
         required = outputs + [os.path.dirname(outputs[0])]
     else:
         gen = store.compacted_meta(ks, cfn)["path"]
-        outputs = store._files(ks, cfn, gen) + sorted(set(store._files(ks, cfn, "ctombs")) - tombs_before)
+        outputs = store._files(ks, cfn, gen)
         required = outputs + [os.path.dirname(f) for f in outputs] + [gen, "COMPACTED.json.tmp", "."]
     assert outputs
     first_remove = next(i for i, (op, path) in enumerate(events) if op == "remove" and path.startswith(base))
@@ -498,7 +508,7 @@ def test_minor_crash_leaves_pre_state(store, spark, monkeypatch, crash):
 @pytest.mark.parametrize("cfn", ["Standard1", "Dom1"])
 def test_major_compaction_removes_temp_files_that_crashed_commits_left(store, spark, cfn):
     """A crashed commit or minor compaction leaves a hidden temp file in
-    ``cells/`` or ``ctombs/`` (under ``_dom=`` too) that no reader lists.
+    ``cells/`` (under ``_dom=`` too) that no reader lists.
     Major compaction removes those last written before the store module
     was imported (backdated here); a fresh one may belong to a commit that
     is still running, so it stays. Reads are unchanged."""
@@ -514,10 +524,10 @@ def test_major_compaction_removes_temp_files_that_crashed_commits_left(store, sp
             fh.write(b"PAR1 torn")
         return path
 
-    stale = [temp(data_dir), temp("ctombs")]
+    stale = [temp(data_dir), temp("cells")]
     for path in stale:
         os.utime(path, (time.time() - 86400,) * 2)
-    fresh = [temp("cells"), temp("ctombs")]
+    fresh = [temp("cells"), temp(data_dir)]
     pre = _live(store, ks, cfn)
     pre_cells = Counter(store.key_cells(ks, cfn, ["k", "gone"])[0])
 
@@ -551,18 +561,18 @@ def test_major_compaction_keeps_a_running_commits_temp_file_in_a_retired_domain(
 @pytest.mark.parametrize("cfn", ["Standard1", "Dom1"])
 def test_major_compaction_retires_the_checksum_sidecars_of_what_it_retires(store, spark, cfn):
     """Spark's writer leaves a ``.{name}.crc`` beside each file it writes
-    (``bulk_load`` cells, a compaction's kept tombstones); a compaction that
-    retires the file retires its sidecar too."""
+    (``bulk_load`` cells); a compaction that retires the file retires its
+    sidecar too."""
     ks = "Keyspace1"
     rows = [(f"k{i}", None, b"c", b"v", 1, False, None) for i in range(4)]
     store.bulk_load(ks, cfn, spark.createDataFrame(rows, CELL_SCHEMA))
     store.apply(ks, cfn, write.remove("k0", ColumnPath(cfn), 2, local_deletion_time=2**31 - 10))
-    maintenance.compact(store, ks, cfn)
-    maintenance.compact(store, ks, cfn)
-
     base = store._cf_dir(ks, cfn)
+    crcs = [f for f in _store_files(store, ks, cfn) if f.endswith(".parquet.crc")]
+    assert crcs  # bulk_load's sidecars
+    maintenance.compact(store, ks, cfn)
+    assert [f for f in crcs if os.path.exists(os.path.join(base, f))] == []
     crcs = [f for f in _store_files(store, ks, cfn) if f.endswith(".crc")]
-    assert any(f.startswith("ctombs") for f in crcs)  # the kept tombstones' sidecar
     orphans = [f for f in crcs if not os.path.exists(os.path.join(base, os.path.dirname(f), os.path.basename(f)[1:-4]))]
     assert orphans == []
 
@@ -600,8 +610,7 @@ def _store_files(store, ks, cfn):
     base = store._cf_dir(ks, cfn)
     return sorted(
         os.path.relpath(os.path.join(d, f), base)
-        for sub in ("cells", "ctombs")
-        for d, _, fs in os.walk(os.path.join(base, sub))
+        for d, _, fs in os.walk(os.path.join(base, "cells"))
         for f in fs
     )
 
@@ -640,15 +649,14 @@ def test_commit_checks_both_kinds_before_publishing_either(store):
     assert _store_files(store, "Keyspace1", "Standard1") == []
 
 
-@pytest.mark.parametrize("crash", ["temp_write", "before_replace", "between_kinds"])
-def test_commit_crash_leaves_pre_or_cells_only_state(store, spark, monkeypatch, crash):
-    """A durable commit publishes one file per kind, cells first. A crash
-    while a file is written or before its rename leaves the pre-state and a
-    hidden temp file; a crash between the kinds leaves the batch's cells
-    without its row delete, as if the insert had been committed before a
-    separate row remove. No reader -- the bind, minor compaction, snapshot,
-    major compaction -- takes the temp file for data, and the next commit
-    works."""
+@pytest.mark.parametrize("crash", ["temp_write", "before_replace", "after_replace"])
+def test_commit_crash_leaves_pre_or_post_state(store, spark, monkeypatch, crash):
+    """A durable commit publishes one file: a batch's cells and its row
+    delete become visible together or not at all. A crash while the file
+    is written or before its rename leaves the pre-state and a hidden temp
+    file; a crash after the rename, the post-state. No reader -- the bind,
+    minor compaction, snapshot, major compaction -- takes the temp file for
+    data, and the next commit works."""
     import os
 
     import pyarrow.parquet as pq
@@ -660,24 +668,23 @@ def test_commit_crash_leaves_pre_or_cells_only_state(store, spark, monkeypatch, 
     batch = write.remove("k", ColumnPath(cfn), 5, local_deletion_time=2**31 - 10)
     batch.extend(write.insert("k", ColumnPath(cfn, column=b"new"), b"v2", 6))
 
-    real_replace, replaced = os.replace, []
+    real_replace = os.replace
 
-    def fail_replace(src, dst):
-        replaced.append(dst)
-        if len(replaced) == (2 if crash == "between_kinds" else 1):
-            raise Crash
-        real_replace(src, dst)
+    def crash_replace(src, dst):
+        if crash == "after_replace":
+            real_replace(src, dst)
+        raise Crash
 
     with monkeypatch.context() as m:
         if crash == "temp_write":
             m.setattr(pq, "write_table", _torn_write)
         else:
-            m.setattr(os, "replace", fail_replace)
+            m.setattr(os, "replace", crash_replace)
         with pytest.raises(Crash):
             store.apply(ks, cfn, batch)
-    expected = pre if crash != "between_kinds" else sorted(pre + [("k", b"new", b"v2")])
+    expected = pre if crash != "after_replace" else [("k", b"new", b"v2"), ("other", b"old", b"v")]
     temps = [f for f in _store_files(store, ks, cfn) if not f.endswith(".parquet")]
-    assert len(temps) == 1 and os.path.basename(temps[0]).startswith(".")
+    assert len(temps) == (crash != "after_replace") and all(os.path.basename(f).startswith(".") for f in temps)
 
     reopened = CellStore(spark, store.root, store.catalog)
     assert _live(reopened, ks, cfn) == expected
@@ -706,7 +713,243 @@ def test_commit_runs_no_spark_job(store, spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
-    assert len(_store_files(store, ks, "Standard1")) == 4  # 2 cells + 2 ctombs files
+    # one file per batch: the insert, the row remove, the flushed cell and row delete
+    assert len(_store_files(store, ks, "Standard1")) == 3
+
+
+_ALL = SlicePredicate(slice_range=SliceRange(count=100))
+
+
+def _cells(r) -> tuple:
+    return tuple(bytes(v) if isinstance(v, bytearray) else v for v in (r["key"], r["sc"], r["column"], r["value"]))
+
+
+def _no_ctombs(store) -> bool:
+    return not any("ctombs" in dirs for _, dirs, _ in os.walk(store.root))
+
+
+@pytest.mark.parametrize("durable", [True, False], ids=["durable", "buffered"])
+@pytest.mark.parametrize("cfn", ["Standard1", "Dom1", "Super1"])
+def test_container_tombstones_commit_with_their_batch(store, spark, monkeypatch, cfn, durable):
+    """A batch's cell, row and supercolumn removes commit in one file with
+    its cells, the container tombstones as ``MARKER`` cells in ``cells/``:
+    one ``_publish`` per batch, or per ``_dom=`` directory the batch
+    touches. No code path creates ``ctombs/``, and the Engine's key reads
+    and the Spark live view read the expected cells before and after a
+    minor and a major compaction inside grace."""
+    ks, a, b = "Keyspace1", "k1_ab", "k2_cd"
+    sc1, sc2 = (b"s1", b"s2") if cfn == "Super1" else (None, None)
+    engine = Engine(spark, store.root, store.catalog)
+    for key in (a, b):
+        for sc, col in ((sc1, b"c1"), (sc1, b"c2"), (sc2, b"c2")):
+            engine.insert(ks, key, ColumnPath(cfn, super_column=sc, column=col), b"v", 1)
+    c1 = SlicePredicate(column_names=(b"c1",))
+    b_deletes = [Mutation(deletion=Deletion(timestamp=2, super_column=sc1, predicate=c1))]
+    if sc2 is not None:
+        b_deletes.append(Mutation(deletion=Deletion(timestamp=2, super_column=sc2)))  # a supercolumn delete
+    batch = {
+        a: {cfn: [Mutation(deletion=Deletion(timestamp=2)), Mutation(b"c3", b"v3", 3, super_column=sc1)]},
+        b: {cfn: b_deletes},
+    }
+    base, published, publish = store._cf_dir(ks, cfn), [], cellstore._publish
+
+    def counting_publish(table, dirpath):
+        rows = zip(table.column("key").to_pylist(), table.column("column").to_pylist())
+        published.append((os.path.relpath(dirpath, base), sorted(rows)))
+        publish(table, dirpath)
+
+    with monkeypatch.context() as m:
+        m.setattr(cellstore, "_publish", counting_publish)
+        engine.batch_mutate(ks, batch, durable=durable)
+        assert published == [] or durable
+        engine.flush(ks, cfn)
+    a_rows, b_rows = [(a, MARKER), (a, b"c3")], [(b, MARKER)] * (sc2 is not None) + [(b, b"c1")]
+    if cfn == "Dom1":
+        assert published == [(os.path.join("cells", "_dom=ab"), a_rows), (os.path.join("cells", "_dom=cd"), b_rows)]
+    else:
+        assert published == [("cells", sorted(a_rows + b_rows))]
+    want = {(a, sc1, b"c3", b"v3"), (b, sc1, b"c2", b"v")}
+
+    def check():
+        assert {_cells(r) for r in engine.multiget_slice(ks, [a, b], cfn, _ALL).collect()} == want
+        assert {_cells(r) for r in engine.cf(ks, cfn).live().collect()} == want
+        assert _no_ctombs(store)
+
+    check()
+    assert engine.compact_minor_if_needed(ks, cfn, min_threshold=2)
+    check()
+    engine.compact(ks, cfn)
+    assert store.key_cells(ks, cfn, [a])[1] == [(a, None, 2)]  # the row delete, kept in the generation
+    check()
+
+
+@pytest.mark.parametrize("cfn", ["Standard1", "Dom1"])
+def test_cf_binds_no_tombstones_while_no_file_may_hold_a_marker(store, spark, cfn):
+    """``cf()`` reads each source's Parquet footers: while no file's min
+    ``column`` is the marker it binds no container tombstones and filters
+    nothing, over Spark-written (bulk load, compaction) and pyarrow-written
+    (commit) files alike. A row delete binds them until a compaction past
+    grace purges it."""
+    ks, c = "Keyspace1", ColumnPath(cfn, column=b"c")
+
+    def tombs():
+        cf = store.cf(ks, cfn)
+        plan = cf.cells._jdf.queryExecution().optimizedPlan().toString()
+        return None if cf.container_tombstones is None else cf.container_tombstones.count(), "Filter" in plan
+
+    store.bulk_load(ks, cfn, spark.createDataFrame([("k1_ab", None, b"c", b"v", 1, False, None)], CELL_SCHEMA))
+    store.apply(ks, cfn, write.insert("k2_cd", c, b"v", 1))
+    assert tombs() == (None, False)
+    maintenance.compact(store, ks, cfn)
+    store.apply(ks, cfn, write.insert("k2_cd", c, b"v2", 2))
+    assert tombs() == (None, False)
+    store.apply(ks, cfn, write.remove("k1_ab", ColumnPath(cfn), 3, local_deletion_time=100))
+    assert tombs() == (1, True)
+    maintenance.compact(store, ks, cfn, gc_grace_seconds=0, now=50)  # keeps it
+    assert tombs() == (1, True)
+    maintenance.compact(store, ks, cfn, gc_grace_seconds=0, now=1000)  # purges it
+    assert tombs() == (None, False)
+    assert _live(store, ks, cfn) == [("k2_cd", b"c", b"v2")]
+
+
+@pytest.mark.parametrize("cfn", ["Standard1", "Dom1"])
+def test_compaction_keeps_in_grace_markers_in_its_one_spark_write(store, spark, monkeypatch, cfn):
+    """A major compaction writes the container tombstones it keeps into
+    the generation: the generation's write is its only Spark write, with no
+    ``isEmpty`` job before it. A row delete inside grace still shadows its
+    row's cells; one past grace is purged."""
+    from pyspark.sql import DataFrame
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    ks, c = "Keyspace1", ColumnPath(cfn, column=b"c")
+    for key in ("k1_ab", "k2_cd", "k3_ab"):
+        store.apply(ks, cfn, write.insert(key, c, b"v", 1))
+    store.apply(ks, cfn, write.remove("k1_ab", ColumnPath(cfn), 2, local_deletion_time=2**31 - 10))
+    store.apply(ks, cfn, write.remove("k2_cd", ColumnPath(cfn), 2, local_deletion_time=100))
+    calls = []
+
+    def spy(owner, name):
+        real = getattr(owner, name)
+
+        def wrapper(self, *args, **kwargs):
+            calls.append(name)
+            return real(self, *args, **kwargs)
+
+        monkeypatch.setattr(owner, name, wrapper)
+
+    for owner, name in ((DataFrameWriter, "parquet"), (DataFrameWriter, "saveAsTable"), (DataFrame, "isEmpty")):
+        spy(owner, name)
+    maintenance.compact(store, ks, cfn, gc_grace_seconds=0, now=1000)
+    monkeypatch.undo()
+    assert calls == (["parquet"] if cfn == "Dom1" else ["saveAsTable"])
+    assert store.key_cells(ks, cfn, ["k1_ab", "k2_cd"])[1] == [("k1_ab", None, 2)]
+    assert _live(store, ks, cfn) == [("k3_ab", b"c", b"v")]
+    assert _no_ctombs(store)
+
+
+@pytest.mark.parametrize("cfn", ["Standard1", "Dom1"])
+def test_legacy_ctombs_is_read_then_folded_into_cells(store, spark, cfn):
+    """A store written when container tombstones lived in ``ctombs/``: one
+    file a commit wrote with pyarrow, one a compaction appended with
+    Spark's writer (with its ``.crc`` and ``_SUCCESS``). The first read
+    republishes them as markers in ``cells/``, each in its key's ``_dom=``
+    directory, and removes ``ctombs/``. Key, range and Spark reads see the
+    deletes, before and after a major compaction."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ks = "Keyspace1"
+    engine = Engine(spark, store.root, store.catalog)
+    for key in ("k1_ab", "k2_cd", "k3_ab"):
+        engine.insert(ks, key, ColumnPath(cfn, column=b"c"), b"v", 1)
+    legacy = os.path.join(store._cf_dir(ks, cfn), "ctombs")
+    os.makedirs(legacy)
+    row = {"key": ["k1_ab"], "sc": pa.array([None], pa.binary()), "ts": [2], "ldt": pa.array([2**31 - 10], pa.int32())}
+    pq.write_table(pa.table(row), os.path.join(legacy, f"part-{uuid.uuid4()}.zstd.parquet"))
+    kept = spark.createDataFrame([("k2_cd", None, 2, 2**31 - 10)], CONTAINER_TOMBSTONE_SCHEMA)
+    kept.coalesce(1).write.mode("append").parquet(legacy)
+    assert any(f.endswith(".parquet.crc") for f in os.listdir(legacy))
+    want = [("k3_ab", b"c", b"v")]
+
+    def check(engine):
+        rows = engine.multiget_slice(ks, ["k1_ab", "k2_cd", "k3_ab"], cfn, _ALL).collect()
+        assert [(r["key"], bytes(r["column"]), bytes(r["value"])) for r in rows] == want
+        ring = KeyRange(start_token="", end_token="", count=10)
+        rows = engine.get_range_slices(ks, cfn, _ALL, ring).collect()
+        assert [(r["key"], bytes(r["column"]), bytes(r["value"])) for r in rows] == want
+        assert _live(engine.store, ks, cfn) == want
+
+    check(engine)
+    assert not os.path.exists(legacy)
+    base = store._cf_dir(ks, cfn)
+    markers = sorted(
+        (os.path.dirname(rel), r["key"])
+        for rel in store._files(ks, cfn, "cells")
+        for r in pq.read_table(os.path.join(base, rel)).to_pylist()
+        if r["column"] == MARKER
+    )
+    if cfn == "Dom1":
+        assert markers == [(os.path.join("cells", "_dom=ab"), "k1_ab"), (os.path.join("cells", "_dom=cd"), "k2_cd")]
+    else:
+        assert markers == [("cells", "k1_ab"), ("cells", "k2_cd")]
+    engine.compact(ks, cfn)
+    check(Engine(spark, store.root, store.catalog))
+    assert _no_ctombs(store)
+
+
+def test_bulk_load_rejects_an_empty_column_name(store, spark):
+    """A bulk-loaded cell with an empty column name would read as a
+    container tombstone: the load fails, and the CF reads as before."""
+    ks, cfn = "Keyspace1", "Standard1"
+    store.bulk_load(ks, cfn, spark.createDataFrame([("k", None, b"c", b"v", 1, False, None)], CELL_SCHEMA))
+    pre, files = _live(store, ks, cfn), _store_files(store, ks, cfn)
+    bad = [("k2", None, b"c", b"v", 1, False, None), ("k", None, b"", None, 5, True, 100)]
+    with pytest.raises(Exception, match="column name may not be empty"):
+        store.bulk_load(ks, cfn, spark.createDataFrame(bad, CELL_SCHEMA))
+    assert _store_files(store, ks, cfn) == files
+    assert _live(CellStore(spark, store.root, store.catalog), ks, cfn) == pre
+
+
+def test_only_the_store_tells_markers_from_cells():
+    """Spark-free guard: a container tombstone is stored as a cell whose
+    ``column`` is ``cellstore.MARKER``. Only the store and minor
+    compaction's pass-through tell the two apart; every other reader gets
+    them split into ``CF.cells`` and ``CF.container_tombstones``. So no
+    other package module names ``MARKER``, and none compares a column
+    with ``b""``."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(cellstore.__file__).resolve().parents[1]
+
+    def marker(node) -> bool:
+        return (
+            isinstance(node, ast.Name) and node.id == "MARKER"
+            or isinstance(node, ast.Attribute) and node.attr == "MARKER"
+            or isinstance(node, ast.alias) and node.name == "MARKER"
+        )
+
+    def mentions(side, test) -> bool:
+        return any(test(n) for n in ast.walk(side))
+
+    def empty(node) -> bool:
+        return isinstance(node, ast.Constant) and node.value == b""
+
+    def column(node) -> bool:
+        return (
+            isinstance(node, ast.Name) and node.id == "column"
+            or isinstance(node, ast.Attribute) and node.attr == "column"
+            or isinstance(node, ast.Constant) and node.value == "column"
+        )
+
+    found = set()
+    for path in pkg.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            sides = [node.left, *node.comparators] if isinstance(node, ast.Compare) else []
+            by_value = any(mentions(s, empty) for s in sides) and any(mentions(s, column) for s in sides)
+            if marker(node) or by_value:
+                found.add(path.relative_to(pkg).as_posix())
+    assert found == {"sources/cellstore.py", "operators/maintenance.py"}
 
 
 def test_rows_may_exist_probe(store):
@@ -854,8 +1097,9 @@ def test_held_cached_frame_does_not_serve_a_replaced_value(store, spark, monkeyp
     cfn, prepare, change, expected = _STATE_CHANGES[case]
     ks = "Keyspace1"
     _put(store, cfn, b"old", 1)
-    # a container tombstone already on disk, so the held frame's plan reads
-    # ctombs/ too and a later row remove changes only its files
+    # a container tombstone already on disk, so the held frame's plan
+    # already splits the markers from the cells when a later row remove
+    # adds another
     store.apply(ks, cfn, write.remove("other", ColumnPath(cfn), 1))
     if prepare is not None:
         prepare(store)
