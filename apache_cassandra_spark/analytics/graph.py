@@ -183,14 +183,22 @@ def label_propagation(
     with fixed ``iters`` the output is still exact — oscillation is a
     property of the algorithm, not a reproducibility hazard.)
 
-    Scale shape per round: the undirected edge view joins the label
-    table on the neighbor endpoint (equality join), then two
-    hash-aggregates — ``(node, label) → Σw`` and the argmax reduction
-    ``(node) → (max Σw, min label)``; the argmax is two aggregates
-    instead of one window so a celebrity node's votes stay map-side
-    combinable and never sort in one task. Label tables are
-    node-count-sized and eagerly checkpointed per round (lineage cut,
-    as :func:`hits`).
+    Plan shape: one lazy plan; the builder runs no job and nothing is
+    checkpointed. The undirected edge table ``und`` is hash-partitioned
+    by ``u`` once, and every aggregate after it groups by ``u`` first, so
+    no other edge-sized exchange follows as long as the label table is
+    broadcast. Round 1's votes are ``und`` itself (labels start as the
+    node id, and ``und`` has one row per ``(u, v)``). Each round's label
+    is ONE argmax aggregate, ``min(struct(~Σw, label))`` grouped by ``u``
+    (``~x = -x-1`` orders by the largest weight sum, then the smallest
+    label, and cannot overflow): a SortAggregate whose partial and final
+    steps run in one stage, since ``und``'s partitioning by ``u``
+    already satisfies it, so no window sorts a celebrity node's votes. A
+    vote whose weight sum is NULL never wins. Later rounds join the
+    node-sized label table on ``v`` (AQE broadcasts it when small) and
+    sum the votes by ``(u, label)``; both aggregates reuse ``und``'s
+    partitioning. The plan grows by one join and two aggregates per
+    round; no caller uses more than 3 rounds.
     """
     if iters < 1:
         raise ValueError("iters must be >= 1")
@@ -198,51 +206,27 @@ def label_propagation(
     directed = edges.where(
         F.col(src_col).isNotNull() & F.col(dst_col).isNotNull()
     ).select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"), w.cast("long").alias("w"))
-    # LAZY lineage cut (r15): round 1's label checkpoint below is the
-    # first action and reads every partition of `und` (its aggregate is
-    # exhaustive), so the cut materializes inside that job — the eager
-    # form paid a separate job launch for the same blocks. Later rounds
-    # read the persisted blocks; the per-round jobs are strictly
-    # sequential, so there is no cold-cache consumer race here.
     und = (
         directed.unionByName(
             directed.select(F.col("v").alias("u"), F.col("u").alias("v"), "w")
         )
+        .repartition("u")
         .groupBy("u", "v")
         .agg(F.sum("w").alias("w"))
-        .localCheckpoint(eager=False)
     )
-    labels = None
+    votes = und.select("u", F.col("v").alias("label"), F.col("w").alias("_wsum"))
     for it in range(iters):
-        if it == 0:
-            # round-1 shortcut (guide §2.4/§8): labels start as the node
-            # id itself, and every neighbor endpoint v IS a node (und is
-            # symmetric, so distinct(u) covers all endpoints) — the
-            # first und⋈labels join maps each row to label = v. Emitting
-            # that directly skips one full edge-table shuffle AND the
-            # initial |V|-row label checkpoint job. Bit-identical: the
-            # inner join matched each und row exactly once with
-            # label == v.
-            votes = (
-                und.select(F.col("u"), F.col("v").alias("label"), F.col("w"))
-                .groupBy("u", "label")
-                .agg(F.sum("w").alias("_wsum"))
-            )
-        else:
+        if it:
             votes = (
                 und.join(labels, und["v"] == labels["node"])
-                .select(F.col("u"), F.col("label"), F.col("w"))
                 .groupBy("u", "label")
                 .agg(F.sum("w").alias("_wsum"))
             )
-        best_w = votes.groupBy("u").agg(F.max("_wsum").alias("_best"))
         labels = (
-            votes.join(best_w, "u")
-            .where(F.col("_wsum") == F.col("_best"))
+            votes.where(F.col("_wsum").isNotNull())
             .groupBy("u")
-            .agg(F.min("label").alias("label"))
-            .select(F.col("u").alias("node"), "label")
-            .localCheckpoint(eager=True)
+            .agg(F.min(F.struct(F.bitwise_not("_wsum"), "label")).alias("_best"))
+            .select(F.col("u").alias("node"), F.col("_best.label").alias("label"))
         )
     return labels.select("node", F.col("label").alias("community"))
 

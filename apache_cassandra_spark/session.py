@@ -83,6 +83,25 @@ def get_spark(
         # instead of reshuffling, which for this engine's key-bucketed
         # tables is exactly the intent.
         .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
+        # Keep every generated class across queries. The default cache
+        # holds 100 classes over four Guava segments, so each pass of
+        # the registry recompiled ~2,600 classes with Janino (and the JIT
+        # compiled them again). One pass of the 156 queries at sf0.001
+        # generates about 1,400 distinct classes; 4,096 holds them with
+        # room for the segment split, and a second pass then compiles 14
+        # (SCALE.md).
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # Leave the whole-stage id out of generated class names. AQE can
+        # number a query's stages differently from run to run, and the
+        # id in the name made an identical pipeline a new class:
+        # corpus_bm25_topk recompiled 8-12 classes on every run.
+        .config("spark.sql.codegen.useIdInClassName", "false")
+        # Do not record the Python call site of every Column and DataFrame
+        # call for error messages: each record costs about ten py4j round
+        # trips, and a query builder makes hundreds of such calls.
+        # Building analytics_mix's three queries took 1,211 ms with it and
+        # 836 ms without. Errors still name the failing expression.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -137,33 +137,64 @@ def test_dedup_spans_packing_bounds_raise(spark):
         dedup_spans(df, k=4).collect()
 
 
+def _sql_sum(acc, w):
+    """SQL ``sum`` step: NULLs are skipped; a sum of only NULLs is NULL."""
+    return acc if w is None else w if acc is None else acc + w
+
+
 def lpa_model(edges, iters=2):
-    und = defaultdict(int)
-    for s, d in edges:
-        und[(s, d)] += 1
-        und[(d, s)] += 1
-    nodes = {n for e in und for n in e}
-    lab = {n: n for n in nodes}
+    """``edges``: ``(src, dst)`` pairs of weight 1, or ``(src, dst, w)``
+    triples whose ``w`` may be None. A node whose every vote sums to
+    NULL gets no label, and its neighbors' later votes for it are lost,
+    as the inner join drops them."""
+    und = {}
+    for s, d, *w in edges:
+        w = w[0] if w else 1
+        for uv in ((s, d), (d, s)):
+            und[uv] = _sql_sum(und.get(uv), w)
+    lab = {n: n for n, _ in und}
     for _ in range(iters):
-        votes = defaultdict(lambda: defaultdict(int))
+        votes = defaultdict(dict)
         for (u, v), w in und.items():
-            votes[u][lab[v]] += w
-        lab = {
-            u: min(l for l, ws in vs.items() if ws == max(vs.values()))
-            for u, vs in votes.items()
-        }
+            if v in lab:
+                votes[u][lab[v]] = _sql_sum(votes[u].get(lab[v]), w)
+        lab = {}
+        for u, vs in votes.items():
+            sums = {l: ws for l, ws in vs.items() if ws is not None}
+            if sums:
+                best = max(sums.values())
+                lab[u] = min(l for l, ws in sums.items() if ws == best)
     return lab
 
 
-@settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
-@given(edges=graph_st, iters=st.integers(1, 3))
-def test_label_propagation_matches_python_model(spark, edges, iters):
+INT_NODES = [3, -1, 10, 2]
+WEIGHTS = [None, -2, 1, 1, 2]
+
+
+@st.composite
+def lpa_graph_st(draw):
+    """``(weighted, id type, edges)``: unweighted ``(src, dst)`` pairs, or
+    ``(src, dst, w)`` triples with tied, negative and NULL weights; over
+    string or integer node ids."""
+    weighted, ids = draw(st.booleans()), draw(st.sampled_from([NODES, INT_NODES]))
+    node = st.sampled_from(ids)
+    edge = st.tuples(node, node, st.sampled_from(WEIGHTS)) if weighted else st.tuples(node, node)
+    kind = "bigint" if ids is INT_NODES else "string"
+    return weighted, kind, draw(st.lists(edge, min_size=1, max_size=10))
+
+
+@settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
+@given(graph=lpa_graph_st(), iters=st.integers(1, 3))
+def test_label_propagation_matches_python_model(spark, graph, iters):
+    """The label is the largest non-NULL weight sum, then the smallest
+    label."""
     from apache_cassandra_spark.analytics.graph import label_propagation
 
-    df = spark.createDataFrame(edges, "src string, dst string")
+    weighted, kind, edges = graph
+    df = spark.createDataFrame(edges, f"src {kind}, dst {kind}" + (", w bigint" if weighted else ""))
     got = {
         r["node"]: r["community"]
-        for r in label_propagation(df, iters=iters).collect()
+        for r in label_propagation(df, weight_col="w" if weighted else None, iters=iters).collect()
     }
     assert got == lpa_model(edges, iters)
 

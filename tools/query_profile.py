@@ -2,13 +2,16 @@
 of each query. Each rep runs under its own job group, read back with
 perfbench's ``SparkCounters``; the group begins before the builder is
 called, so jobs a builder runs count toward the query. A rep times the
-build and the ``.count()`` action bench.py times.
+build and the ``.count()`` action bench.py times, and counts the classes
+Spark's codegen compiled meanwhile (``codegen_compiles``: Janino compiles,
+cache hits excluded).
 
 Prints one JSON line per (query, sf, mode): the medians over the reps of
-``build_s``, ``wall_s``, ``SparkCounters.end``'s counters, the executed
-plan's ``exchanges`` and the output ``rows``; the per-rep wall times; and
-``stable``, whether jobs, exchanges, shuffle records and rows were the same
-in every rep.
+``build_s``, ``wall_s``, ``codegen_compiles``, ``SparkCounters.end``'s
+counters, the executed plan's ``exchanges`` and the output ``rows``; the
+per-rep wall times and compile counts (a rep after the warm-up that still
+compiles generates new code on every run); and ``stable``, whether jobs,
+exchanges, shuffle records and rows were the same in every rep.
 
 - Two ``--sf`` directories: the second one's lines add ``ratio``, each
   counter over its value on the first. A shuffle-record ratio far above the
@@ -53,17 +56,24 @@ class Counters(SparkCounters):
         return group
 
 
+def codegen_compiles(spark) -> int:
+    """Janino compiles in this JVM so far: whole-stage and expression
+    classes, not the ones Spark's codegen cache returned."""
+    return spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def run_once(spark, counters: SparkCounters, fn, sf_dir: str) -> tuple[dict, str]:
     """One rep of query builder ``fn``: its record and its job group."""
     spark.catalog.clearCache()  # per-query isolation, as in bench.py and the oracle gate
+    compiles = codegen_compiles(spark)
     group = counters.begin("query_profile")
     t0 = time.perf_counter()
     df = fn(spark, sf_dir)
     t1 = time.perf_counter()
     rows = df.count()
     t2 = time.perf_counter()
-    rec = {"build_s": t1 - t0, "wall_s": t2 - t1, **counters.end(group)}
-    rec.update(exchanges=plan_counts(df)["exchanges"], rows=rows)
+    rec = {"build_s": t1 - t0, "wall_s": t2 - t1, "codegen_compiles": codegen_compiles(spark) - compiles}
+    rec.update(counters.end(group), exchanges=plan_counts(df)["exchanges"], rows=rows)
     return rec, group
 
 
@@ -127,6 +137,7 @@ def profile(spark, names, sf_dirs, reps: int = 3, confs: dict | None = None, sta
                     out = {"query": name, "sf": sf_dir, "mode": m}
                     out.update({k: statistics.median(r[k] for r in recs) for k in recs[0]})
                     out["wall_s_reps"] = [round(r["wall_s"], 4) for r in recs]
+                    out["codegen_compiles_reps"] = [r["codegen_compiles"] for r in recs]
                     out["stable"] = all(len({r[k] for r in recs}) == 1 for k in DETERMINISTIC)
                     if stages:
                         out["stages"] = stage_rows(counters, groups[m])
