@@ -8,6 +8,10 @@ Scale design notes (the point of each variant):
 * **n-gram Jaccard** — exact pairwise similarity via an inverted index
   (shingle -> posting list) so the join is |postings|² per shingle, not
   |docs|²; ``max_doc_freq`` drops stop-shingles, the classic skew guard.
+* **prefix filter** — the same pairs from a join over each document's
+  rarest shingles plus a length filter. PPJoin's position filter is not
+  applied: it pruned few candidates here and cost more than it saved
+  (SCALE.md rounds 7 and 11).
 * **MinHash+LSH** — the 100 TB path: constant-size signatures, banding
   turns near-dup search into an equality join on band buckets.
 * **SimHash** — constant-size bit signature; hamming-adjacent docs collide
@@ -86,18 +90,10 @@ def _postings_and_sizes(
     id_col: str,
     n: int,
     max_doc_freq: int | None,
-    log_dropped: bool,
-    op_name: str,
 ):
     """Shared inverted-index prep for the set-similarity pair operators:
-    returns ``(postings, sizes, sh, freq)`` with the ``max_doc_freq`` skew guard
-    applied (and its recall-loss warning emitted) exactly once, so
-    jaccard and containment cannot drift apart.
-
-    ``log_dropped`` defaults OFF (judge r5): the visibility count is an
-    extra job over the (materialized) shingle stream — at corpus scale
-    that doubles the shingle-scan cost for a log line. Opt in when
-    tuning ``max_doc_freq`` on a sample.
+    returns ``(postings, sizes, freq)`` with the ``max_doc_freq`` skew guard
+    applied exactly once, so jaccard and containment cannot drift apart.
 
     Materialization contract (r14, replacing the round-7 ``.cache()``):
     the shingle stream is ``localCheckpoint(eager=True)`` — the
@@ -121,21 +117,8 @@ def _postings_and_sizes(
     if max_doc_freq is not None:
         freq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
         rare = freq.where(F.col("df") <= max_doc_freq)
-        if log_dropped:
-            # make truncation visible: silent recall loss near the
-            # threshold is worse than one extra job over the cached frame
-            n_hot = freq.where(F.col("df") > max_doc_freq).count()
-            if n_hot:
-                _LOG.warning(
-                    "%s: skew guard dropped %d shingle(s) with doc-freq > %d; "
-                    "pairs sharing only dropped shingles are not candidates "
-                    "(recall loss near the threshold)",
-                    op_name,
-                    n_hot,
-                    max_doc_freq,
-                )
         postings = sh.join(rare.select("shingle"), "shingle", "left_semi")
-    return postings, sizes, sh, freq
+    return postings, sizes, freq
 
 
 def ngram_jaccard_pairs(
@@ -145,7 +128,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_doc_freq: int | None = 10_000,
-    log_dropped: bool = False,
 ) -> DataFrame:
     """Exact Jaccard over word-n-gram sets, inverted-index join.
 
@@ -158,9 +140,7 @@ def ngram_jaccard_pairs(
     (n_common shrinks while set sizes stay full), so the guard trades
     recall near the threshold, never precision above it.
     """
-    postings, sizes, sh, _ = _postings_and_sizes(
-        df, text_col, id_col, n, max_doc_freq, log_dropped, "ngram_jaccard_pairs"
-    )
+    postings, sizes, _ = _postings_and_sizes(df, text_col, id_col, n, max_doc_freq)
     a = postings.select(F.col("id").alias("id_a"), "shingle")
     b = postings.select(F.col("id").alias("id_b"), "shingle")
     common = (
@@ -190,7 +170,7 @@ def ngram_jaccard_pairs(
         )
         .where(F.col("jaccard") >= threshold)
     )
-    return out  # sh is an eager checkpoint, not a cache — nothing to own
+    return out  # the shingle stream is an eager checkpoint, not a cache — nothing to own
 
 
 def ngram_containment_pairs(
@@ -200,7 +180,6 @@ def ngram_containment_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_doc_freq: int | None = 10_000,
-    log_dropped: bool = False,
 ) -> DataFrame:
     """ASYMMETRIC near-dup: directed containment
     ``|A ∩ B| / |A|`` over word-n-gram sets — high when document A is
@@ -215,9 +194,7 @@ def ngram_containment_pairs(
     containment); the only new cost is emitting each unordered pair in
     both directions before the threshold filter.
     """
-    postings, sizes, sh, _ = _postings_and_sizes(
-        df, text_col, id_col, n, max_doc_freq, log_dropped, "ngram_containment_pairs"
-    )
+    postings, sizes, _ = _postings_and_sizes(df, text_col, id_col, n, max_doc_freq)
     a = postings.select(F.col("id").alias("id_src"), "shingle")
     b = postings.select(F.col("id").alias("id_dst"), "shingle")
     common = (
@@ -237,7 +214,7 @@ def ngram_containment_pairs(
         )
         .where(F.col("containment") >= threshold)
     )
-    return out  # sh is an eager checkpoint, not a cache — nothing to own
+    return out  # the shingle stream is an eager checkpoint, not a cache — nothing to own
 
 
 def _t_cand(threshold: float) -> float:
@@ -256,9 +233,8 @@ def _t_cand(threshold: float) -> float:
 def _ranked_postings(postings, sizes, freq) -> DataFrame:
     """Every posting with its 1-based rarity rank inside its document
     (doc-freq asc, shingle asc — ONE total order shared by all
-    documents) → ``(id, shingle, set_size, pos)``. The prefix cut and
-    the PPJoin positional filter both read these positions, so they
-    cannot disagree about the order.
+    documents) → ``(id, shingle, set_size, pos)``. The prefix cut reads
+    these positions.
 
     Reuses the skew guard's doc-freq aggregate when it already exists
     (one corpus-scale shuffle instead of two). Guard-dropped shingles
@@ -301,7 +277,6 @@ def prefix_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_doc_freq: int | None = None,
-    positional: bool = False,
 ) -> DataFrame:
     """Exact Jaccard self-join via PREFIX FILTERING (PPJoin family, Xiao
     et al., WWW'08 / Chaudhuri et al., ICDE'06 SSJoin): same output
@@ -345,24 +320,12 @@ def prefix_jaccard_pairs(
     prefix rank is a window partitioned by doc id (no global sort);
     the verification fan-out joins are equi-joins on (id, shingle).
     """
-    postings, sizes, sh, freq = _postings_and_sizes(
-        df, text_col, id_col, n, max_doc_freq, False, "prefix_jaccard_pairs"
-    )
+    postings, sizes, freq = _postings_and_sizes(df, text_col, id_col, n, max_doc_freq)
     t_cand = _t_cand(threshold)
     prefix = _ranked_prefix(postings, sizes, freq, t_cand)
-    pa = prefix.select(
-        F.col("id").alias("id_a"),
-        "shingle",
-        F.col("set_size").alias("size_a"),
-        F.col("pos").alias("pos_a"),
-    )
-    pb = prefix.select(
-        F.col("id").alias("id_b"),
-        "shingle",
-        F.col("set_size").alias("size_b"),
-        F.col("pos").alias("pos_b"),
-    )
-    collisions = (
+    pa = prefix.select(F.col("id").alias("id_a"), "shingle", F.col("set_size").alias("size_a"))
+    pb = prefix.select(F.col("id").alias("id_b"), "shingle", F.col("set_size").alias("size_b"))
+    cands = (
         pa.join(pb, "shingle")
         .where(F.col("id_a") < F.col("id_b"))
         # length filter: t·|A| <= |B| <= |A|/t (symmetric on the pair),
@@ -371,51 +334,9 @@ def prefix_jaccard_pairs(
             (F.col("size_b") >= F.lit(t_cand) * F.col("size_a"))
             & (F.col("size_a") >= F.lit(t_cand) * F.col("size_b"))
         )
+        .select("id_a", "id_b", "size_a", "size_b")
+        .distinct()
     )
-    if positional:
-        # POSITIONAL filter (PPJoin's second prune): pick ONE shared
-        # prefix token t0 per pair at 1-based positions (i, j). The
-        # global order is the same on both sides, so common tokens below
-        # t0 sit before i in A AND before j in B (≤ min(i−1, j−1) of
-        # them), and common tokens above t0 sit after both
-        # (≤ min(|A|−i, |B|−j)). Hence
-        #   |A∩B| <= min(i−1, j−1) + 1 + min(|A|−i, |B|−j),
-        # and J >= t needs |A∩B| >= t·(|A|+|B|)/(1+t). Pairs whose bound
-        # falls short are pruned BEFORE the Σ|A| verification fan-out.
-        # min over the struct is lexicographic — it selects one ACTUAL
-        # collision row (earliest pos_a, ties by pos_b), which is all
-        # the bound needs, and stays inside whole-stage codegen where
-        # min_by's typed aggregate does not.
-        #
-        # OFF by default — measured (SCALE.md round-7 probes): on
-        # high-candidate-precision corpora (near-dup replicas, t=0.8
-        # footer corpus) it pruned only ~7.5% of candidates while the
-        # pos plumbing cost ~20% end-to-end (45.6s → 55.7s at 8×).
-        # Enable where prefix collisions are mostly SPURIOUS — short
-        # documents, lower thresholds, hot prefix tokens — the regime
-        # the PPJoin paper evaluates, where candidates ≫ true pairs and
-        # the Σ|A| verification dominates.
-        overlap_bound = (
-            F.least(F.col("fp.pos_a") - 1, F.col("fp.pos_b") - 1)
-            + 1
-            + F.least(
-                F.col("size_a") - F.col("fp.pos_a"),
-                F.col("size_b") - F.col("fp.pos_b"),
-            )
-        )
-        required = (
-            F.lit(t_cand) * (F.col("size_a") + F.col("size_b")) / F.lit(1.0 + t_cand)
-        )
-        cands = (
-            collisions.groupBy("id_a", "id_b", "size_a", "size_b")
-            .agg(F.min(F.struct("pos_a", "pos_b")).alias("fp"))
-            .where(overlap_bound >= required)
-            .select("id_a", "id_b", "size_a", "size_b")
-        )
-    else:
-        cands = (
-            collisions.select("id_a", "id_b", "size_a", "size_b").distinct()
-        )
     # verification: true intersection count over the candidates only —
     # fan each candidate out by A's full set, match against B's postings
     post_a = postings.select(F.col("id").alias("id_a"), "shingle")
@@ -436,7 +357,7 @@ def prefix_jaccard_pairs(
         )
         .where(F.col("jaccard") >= threshold)
     )
-    return out  # sh is an eager checkpoint, not a cache — nothing to own
+    return out  # the shingle stream is an eager checkpoint, not a cache — nothing to own
 
 
 def prefix_containment_pairs(
@@ -446,22 +367,11 @@ def prefix_containment_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_doc_freq: int | None = None,
-    positional: bool = False,
 ) -> DataFrame:
     """Prefix-filtered DIRECTED containment — the asymmetric twin of
     :func:`prefix_jaccard_pairs`, same output contract as
     :func:`ngram_containment_pairs` (one row per directed pair with
     ``|A∩B| / |A| >= threshold``, both directions evaluated).
-
-    ``positional=True`` adds PPJoin's position filter (Xiao et al.,
-    WWW'08), containment form: a common token at 1-based ranks
-    ``(i, j)`` of A and B under the SHARED global order bounds the
-    intersection by ``min(i−1, j−1) + 1 + min(|A|−i, |B|−j)``; pairs
-    whose bound can't reach ``t·|A|`` are pruned BEFORE the Σ|A|
-    verification fan-out. Lossless (fuzz-locked vs the naive pair).
-    Costs one extra per-document window over the FULL postings (the
-    B side needs ranks too) — see the measured regime note in
-    SCALE.md before flipping the default.
 
     Prefix theorem, containment form: ``c(A→B) >= t`` forces
     ``|A∩B| >= ceil(t·|A|)``; if the intersection avoided A's
@@ -478,65 +388,21 @@ def prefix_containment_pairs(
     a SHORT document's prefix still joins every document containing it
     — high thresholds and the ``max_doc_freq`` guard are the controls.
     """
-    postings, sizes, sh, freq = _postings_and_sizes(
-        df, text_col, id_col, n, max_doc_freq, False, "prefix_containment_pairs"
-    )
+    postings, sizes, freq = _postings_and_sizes(df, text_col, id_col, n, max_doc_freq)
     t_cand = _t_cand(threshold)
-    if positional:
-        # the B side needs in-document ranks for the position bound, so
-        # both sides read the SAME ranked frame (one window, one order)
-        ranked = _ranked_postings(postings, sizes, freq)
-        prefix = ranked.where(
-            F.col("pos")
-            <= F.col("set_size") - F.ceil(F.lit(t_cand) * F.col("set_size")) + 1
-        ).select(
-            F.col("id").alias("id_src"),
-            "shingle",
-            F.col("set_size").alias("size_src"),
-            F.col("pos").alias("pos_src"),
-        )
-        full_b = ranked.select(
-            F.col("id").alias("id_dst"),
-            "shingle",
-            F.col("set_size").alias("size_dst"),
-            F.col("pos").alias("pos_dst"),
-        )
-        collisions = (
-            prefix.join(full_b, "shingle")
-            .where(F.col("id_src") != F.col("id_dst"))
-            .where(F.col("size_dst") >= F.lit(t_cand) * F.col("size_src"))
-        )
-        # one ACTUAL collision row per pair (earliest pos_src, ties by
-        # pos_dst — lexicographic min over the struct, codegen-friendly),
-        # then the overlap upper bound from that token's two ranks
-        overlap_bound = (
-            F.least(F.col("fp.pos_src") - 1, F.col("fp.pos_dst") - 1)
-            + 1
-            + F.least(
-                F.col("size_src") - F.col("fp.pos_src"),
-                F.col("size_dst") - F.col("fp.pos_dst"),
-            )
-        )
-        cands = (
-            collisions.groupBy("id_src", "id_dst", "size_src", "size_dst")
-            .agg(F.min(F.struct("pos_src", "pos_dst")).alias("fp"))
-            .where(overlap_bound >= F.lit(t_cand) * F.col("size_src"))
-            .select("id_src", "id_dst", "size_src")
-        )
-    else:
-        prefix = _ranked_prefix(postings, sizes, freq, t_cand).select(
-            F.col("id").alias("id_src"), "shingle", F.col("set_size").alias("size_src")
-        )
-        full_b = postings.join(sizes, "id").select(
-            F.col("id").alias("id_dst"), "shingle", F.col("set_size").alias("size_dst")
-        )
-        cands = (
-            prefix.join(full_b, "shingle")
-            .where(F.col("id_src") != F.col("id_dst"))
-            .where(F.col("size_dst") >= F.lit(t_cand) * F.col("size_src"))
-            .select("id_src", "id_dst", "size_src")
-            .distinct()
-        )
+    prefix = _ranked_prefix(postings, sizes, freq, t_cand).select(
+        F.col("id").alias("id_src"), "shingle", F.col("set_size").alias("size_src")
+    )
+    full_b = postings.join(sizes, "id").select(
+        F.col("id").alias("id_dst"), "shingle", F.col("set_size").alias("size_dst")
+    )
+    cands = (
+        prefix.join(full_b, "shingle")
+        .where(F.col("id_src") != F.col("id_dst"))
+        .where(F.col("size_dst") >= F.lit(t_cand) * F.col("size_src"))
+        .select("id_src", "id_dst", "size_src")
+        .distinct()
+    )
     post_src = postings.select(F.col("id").alias("id_src"), "shingle")
     post_dst = postings.select(F.col("id").alias("id_dst"), "shingle")
     common = (
@@ -553,7 +419,7 @@ def prefix_containment_pairs(
         )
         .where(F.col("containment") >= threshold)
     )
-    return out  # sh is an eager checkpoint, not a cache — nothing to own
+    return out  # the shingle stream is an eager checkpoint, not a cache — nothing to own
 
 
 def ngram_novelty(
@@ -690,7 +556,6 @@ def _bucketed_pairs(
     buckets: DataFrame,
     bucket_cols: list[str],
     max_bucket_size: int | None,
-    log_truncated: bool,
     op_name: str,
 ) -> DataFrame:
     """Distinct candidate pairs from a bucket-membership frame
@@ -706,17 +571,14 @@ def _bucketed_pairs(
         # small (one row per distinct bucket); cached because both the
         # small and hot membership joins read it
         sizes_cached = buckets.groupBy(*bucket_cols).agg(F.count("*").alias("_bsz")).cache()
-        sizes = sizes_cached
-        if log_truncated:
-            # truncation visibility WITHOUT a driver action (r14): the old
-            # eager .count() here executed the whole upstream signature
-            # pipeline at CONSTRUCTION time — a full extra job per call
-            # before the caller's action even ran. An Observation rides the
-            # plan for free and a daemon thread logs once the caller's
-            # first action materializes the metrics. Ownership below binds
-            # the CACHED frame, not this wrapper — unpersist on the
-            # CollectMetrics wrapper would miss the CacheManager entry.
-            sizes = _observe_truncation(sizes, max_bucket_size, op_name)
+        # truncation visibility WITHOUT a driver action: a count here
+        # would run the whole upstream signature pipeline at CONSTRUCTION
+        # time. An Observation rides the plan and a daemon thread logs
+        # once the caller's first action materializes the metrics.
+        # Ownership below binds the CACHED frame, not this wrapper —
+        # unpersist on the CollectMetrics wrapper would miss the
+        # CacheManager entry.
+        sizes = _observe_truncation(sizes_cached, max_bucket_size, op_name)
         with_sz = buckets.join(sizes, bucket_cols)
         small = with_sz.where(F.col("_bsz") <= max_bucket_size).drop("_bsz")
         hot = with_sz.where(F.col("_bsz") > max_bucket_size).drop("_bsz")
@@ -781,7 +643,6 @@ def minhash_lsh_candidates(
     num_perm: int = 16,
     bands: int = 4,
     max_bucket_size: int | None = 10_000,
-    log_truncated: bool = True,
 ) -> DataFrame:
     """Candidate near-dup pairs: docs whose signatures agree on at least one
     full band (rows_per_band = num_perm / bands). Equality join on the band
@@ -805,7 +666,7 @@ def minhash_lsh_candidates(
     # shingle+minhash subtree per consumer (same fix as
     # _postings_and_sizes, r14 — see its docstring for the measurements)
     banded = _minhash_band_rows(df, text_col, id_col, n, num_perm, bands).localCheckpoint(eager=True)
-    return _bucketed_pairs(banded, ["band", "bucket"], max_bucket_size, log_truncated, "minhash_lsh_candidates")
+    return _bucketed_pairs(banded, ["band", "bucket"], max_bucket_size, "minhash_lsh_candidates")
 
 
 # ---------------------------------------------------------------------------
@@ -846,7 +707,6 @@ def simhash_candidates(
     bits: int = 60,
     chunks: int = 4,
     max_bucket_size: int | None = 10_000,
-    log_truncated: bool = True,
 ) -> DataFrame:
     """Near-dup candidates: docs agreeing on any of ``chunks`` signature
     chunks (pigeonhole: hamming distance < chunks ⇒ some chunk equal).
@@ -867,7 +727,7 @@ def simhash_candidates(
         # (see _postings_and_sizes for the cold-cache race this replaces)
         .localCheckpoint(eager=True)
     )
-    return _bucketed_pairs(parts, ["chunk", "part"], max_bucket_size, log_truncated, "simhash_candidates")
+    return _bucketed_pairs(parts, ["chunk", "part"], max_bucket_size, "simhash_candidates")
 
 
 # ---------------------------------------------------------------------------

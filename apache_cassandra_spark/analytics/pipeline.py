@@ -718,7 +718,6 @@ def interleave_corpus(
     df: DataFrame,
     source_col: str = "source",
     id_col: str = "doc_id",
-    fold_literals: bool = True,
 ) -> DataFrame:
     """Deterministic source-INTERLEAVED global training order — the
     "epoch shuffle" a trainer consumes — WITHOUT a global sort.
@@ -735,39 +734,31 @@ def interleave_corpus(
     same formula is one ANSI-SQL expression, so the order is
     engine-replayable and stable for a fixed corpus.
 
-    Scale: ONE shuffle (the per-source rank window — parallelism =
-    source count; for a skewed mega-source, pre-split it into virtual
-    sources upstream); the counts are |sources| rows collected once and
-    folded into the projection as literals — there is NO global-order
-    exchange, no single-partition window, and materializing the order is
-    optional: downstream can simply range-partition on ``global_pos``.
-
-    The literal fold (``fold_literals=True``, default) targets
-    catalog-sized source counts (≤ a few thousand: the projection is an
-    O(|sources|) expression per row, and the counts are one bounded
-    collect). ``fold_literals=False`` is the large-catalog path —
-    NO driver collect, no per-row source fold: the same closed form
-    regrouped by rank,
+    The plan computes the same closed form regrouped by rank,
 
         pos(s, r) = |{rows : rank < r}|  +  |{rows : rank = r, s' < s}|,
 
-    computed as (a) a per-rank ``row_number`` over the rank-ordered
-    sources (each source holds ≤ 1 row per rank, so a rank partition has
-    ≤ |sources| rows and parallelism = max source size) and (b) a
-    running sum of per-rank counts joined back ON the rank key — the
-    join is equi and co-partitioned with (a)'s window shuffle. The one
+    as (a) a per-rank ``row_number`` over the rank-ordered sources (each
+    source holds ≤ 1 row per rank, so a rank partition has ≤ |sources|
+    rows and parallelism = max source size) and (b) a running sum of
+    per-rank counts joined back ON the rank key — the join is equi and
+    co-partitioned with (a)'s window shuffle. Building it runs no Spark
+    job: nothing is collected to the driver, and no expression grows
+    with the source count.
+
+    Scale: there is NO global-order exchange and no corpus-sized
+    single-partition window; materializing the order is optional:
+    downstream can simply range-partition on ``global_pos``. The one
     serial piece is the cumulative sum over DISTINCT ranks (= max source
-    size rows, NOT corpus rows); a source so large that its distinct
-    ranks overwhelm one partition is exactly the skewed mega-source the
-    virtual-split note above already covers. Both paths produce
-    bit-identical positions (equivalence-locked in tests).
+    size rows, NOT corpus rows); a skewed mega-source whose distinct
+    ranks overwhelm one partition should be pre-split into virtual
+    sources upstream.
+
+    A NULL source raises at run time (otherwise it would silently sort
+    first in each round).
     """
     from pyspark.sql import Window
 
-    # NULL sources fail LOUDLY and identically on BOTH paths (the literal
-    # fold would crash sorting a None key driver-side; the join path would
-    # silently order NULLs first — same-answer-or-same-error is the
-    # equivalence contract)
     df = df.withColumn(
         source_col,
         F.when(
@@ -783,48 +774,24 @@ def interleave_corpus(
     ranked = df.select(
         F.col(id_col), F.col(source_col), F.row_number().over(w).alias("rank_in_source")
     )
-    rr = F.col("rank_in_source")
-
-    if not fold_literals:
-        # (b) per-rank round offset: rows of earlier rounds come first
-        per_rank = ranked.groupBy("rank_in_source").agg(F.count(F.lit(1)).alias("_c"))
-        # distinct ranks = max source size rows — bounded, see docstring
-        cum = Window.orderBy("rank_in_source").rowsBetween(Window.unboundedPreceding, -1)
-        offsets = per_rank.select(
-            "rank_in_source", F.coalesce(F.sum("_c").over(cum), F.lit(0)).alias("_before")
+    # (b) per-rank round offset: rows of earlier rounds come first
+    per_rank = ranked.groupBy("rank_in_source").agg(F.count(F.lit(1)).alias("_c"))
+    # distinct ranks = max source size rows — bounded, see docstring
+    cum = Window.orderBy("rank_in_source").rowsBetween(Window.unboundedPreceding, -1)
+    offsets = per_rank.select(
+        "rank_in_source", F.coalesce(F.sum("_c").over(cum), F.lit(0)).alias("_before")
+    )
+    # (a) position within the round: lexicographic source order
+    in_round = Window.partitionBy("rank_in_source").orderBy(source_col)
+    return (
+        ranked.withColumn("_i", F.row_number().over(in_round) - 1)
+        .join(offsets, "rank_in_source")
+        .select(
+            id_col,
+            source_col,
+            "rank_in_source",
+            (F.col("_before") + F.col("_i")).cast("long").alias("global_pos"),
         )
-        # (a) position within the round: lexicographic source order
-        in_round = Window.partitionBy("rank_in_source").orderBy(source_col)
-        return (
-            ranked.withColumn("_i", F.row_number().over(in_round) - 1)
-            .join(offsets, "rank_in_source")
-            .select(
-                id_col,
-                source_col,
-                "rank_in_source",
-                (F.col("_before") + F.col("_i")).cast("long").alias("global_pos"),
-            )
-        )
-
-    counts = {
-        r["s"]: r["n"]
-        for r in df.groupBy(F.col(source_col).alias("s")).agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    if not counts:
-        # empty corpus: the fold below would have no terms (ADVICE r6)
-        return ranked.select(
-            id_col, source_col, "rank_in_source", F.lit(None).cast("long").alias("global_pos")
-        )
-    srcs = sorted(counts)
-    before = None
-    for s in srcs:
-        n = F.lit(counts[s])
-        term = F.least(rr - 1, n) + F.when(
-            (F.lit(s) < F.col(source_col)) & (n >= rr), 1
-        ).otherwise(0)
-        before = term if before is None else before + term
-    return ranked.select(
-        id_col, source_col, "rank_in_source", before.cast("long").alias("global_pos")
     )
 
 

@@ -140,15 +140,22 @@ def live_view(
     )
 
 
+def cell_priority(ts: int, tombstone: bool, value: bytes | None) -> tuple:
+    """``priority()`` as a driver-side sort key: ts, then a tombstone over
+    a live cell, then the larger value, with a null value below every byte
+    string (``b""`` included), as Spark orders the struct."""
+    return (ts, tombstone, value is not None, value or b"")
+
+
 def winners(rows) -> list[tuple]:
     """``reconcile`` on the driver, like ``QueryFilter.collectCollatedColumns``:
-    the row of highest ``priority`` per ``(key, sc, column)``, a null value
-    below every byte string, unordered. Rows start with ``CELL_COLS[:6]``;
-    the whole row is kept, so ``ldt`` and any trailing field survive."""
+    the row of highest ``cell_priority`` per ``(key, sc, column)``,
+    unordered. Rows start with ``CELL_COLS[:6]``; the whole row is kept,
+    so ``ldt`` and any trailing field survive."""
     best: dict[tuple, tuple] = {}
     for row in rows:
         key, sc, column, value, ts, tombstone = row[:6]
-        pri = (ts, tombstone, value is not None, value or b"")
+        pri = cell_priority(ts, tombstone, value)
         cur = best.get((key, sc, column))
         if cur is None or pri > cur[0]:
             best[(key, sc, column)] = (pri, row)

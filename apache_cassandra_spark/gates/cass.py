@@ -169,7 +169,7 @@ def q_super_subcolumn_slice(spark, sf_dir):
     return _strings(R.get_slice(cf, "1", pred, super_column=b"7"), with_sc=True)
 
 
-def _event_cells(spark, sf_dir, where=None, ts_nanos_leq=None):
+def _event_cells(spark, sf_dir, ts_nanos_leq=None):
     """``ts_nanos_leq`` is the snapshot cutoff, applied to the RAW frame
     with a literal of the raw column's own type so it reaches the parquet
     scan as a pushed ``ts <= _`` filter (a post-normalization predicate on
@@ -183,9 +183,12 @@ def _event_cells(spark, sf_dir, where=None, ts_nanos_leq=None):
         else:
             cutoff = F.lit(ts_nanos_leq)
         raw = raw.where(F.col("ts") <= cutoff)
-    ev = _events_norm(raw)
-    if where is not None:
-        ev = ev.where(where)
+    return _cells_of_events(_events_norm(raw))
+
+
+def _cells_of_events(ev):
+    """Normalized events as Standard-CF cells: row = user, column = event
+    type, cell ts = the event's epoch-us."""
     return ev.select(
         F.col("user_id").cast("string").alias("key"),
         F.lit(None).cast("binary").alias("sc"),
@@ -225,8 +228,8 @@ def q_read_at_ts(spark, sf_dir):
 def q_lww_row_tombstones(spark, sf_dir):
     """Container-tombstone shadowing: each user's 'error' events mark the
     row deleted at that ts; only strictly-newer cells survive."""
-    cells = _event_cells(spark, sf_dir, where=F.col("event_type") != "error")
     ev = load_events(spark, sf_dir)
+    cells = _cells_of_events(ev.where(F.col("event_type") != "error"))
     tombs = (
         ev.where(F.col("event_type") == "error")
         .groupBy(F.col("user_id").cast("string").alias("key"))

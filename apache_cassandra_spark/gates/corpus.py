@@ -316,16 +316,13 @@ def q_corpus_sample_importance(spark, sf_dir):
 
 
 def q_corpus_interleave_joins(spark, sf_dir):
-    """The large-catalog interleave path (``fold_literals=False``): no
-    driver collect, no O(|sources|) per-row expression — per-rank
-    ``row_number`` + a running per-rank offset joined back on the rank
-    key. Same closed-form positions as ``corpus_interleave`` (same
-    oracle), different physical plan — hash-green here proves the two
-    paths agree on driver data, not just in unit tests."""
+    """The source-interleaved epoch order: per-rank ``row_number`` + a
+    running per-rank offset joined back on the rank key, no driver
+    collect. The oracle replays the closed-form positions in SQL."""
     from apache_cassandra_spark.analytics.pipeline import interleave_corpus
 
     docs = load_table(spark, sf_dir, "documents")
-    return interleave_corpus(docs, fold_literals=False)
+    return interleave_corpus(docs)
 
 
 def q_corpus_dsir_weights(spark, sf_dir):

@@ -77,7 +77,6 @@ def _apply_count(
     cf: CF,
     super_column: bytes | None,
     sr: SliceRange,
-    per_key: bool,
 ) -> DataFrame:
     """Keep the first ``count`` *live* entries per row in comparator order
     (reversed -> descending), mirroring ``collectReducedColumns``.
@@ -93,7 +92,7 @@ def _apply_count(
         w = Window.partitionBy("key").orderBy(*order)
         ranked = live.withColumn("_rk", F.dense_rank().over(w))
     else:
-        part = ["key", "sc"] if (cf.is_super and per_key) else ["key"]
+        part = ["key", "sc"] if cf.is_super else ["key"]
         w = Window.partitionBy(*part).orderBy(*order)
         ranked = live.withColumn("_rk", F.row_number().over(w))
     return ranked.where(F.col("_rk") <= sr.count).drop("_rk")
@@ -229,7 +228,6 @@ def _sliced(
     key_pred: Column | None,
     predicate: SlicePredicate,
     super_column: bytes | None,
-    per_key_count: bool = True,
     keys: list[str] | None = None,
 ) -> DataFrame:
     target, comparator = _level(cf.cfdef, super_column)
@@ -238,7 +236,7 @@ def _sliced(
         preds.append(F.col("sc") == F.lit(bytearray(super_column)))
     live = _filtered_live(cf, key_pred, preds, keys=keys)
     if predicate.slice_range is not None:
-        live = _apply_count(live, cf, super_column, predicate.slice_range, per_key_count)
+        live = _apply_count(live, cf, super_column, predicate.slice_range)
     return live.select(*RESULT_COLS)
 
 
@@ -416,7 +414,7 @@ def get_range_slices(
     live = _filtered_live(cf, key_pred, cell_preds)
     live = live.join(F.broadcast(keys), "key", "inner")
     if predicate.slice_range is not None:
-        live = _apply_count(live, cf, super_column, predicate.slice_range, per_key=True)
+        live = _apply_count(live, cf, super_column, predicate.slice_range)
     out = live.select(*RESULT_COLS)
     if include_empty_rows:
         empties = keys.join(out.select("key").distinct(), "key", "left_anti")

@@ -226,6 +226,26 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 }
 
 
+#: Builders that run Spark jobs while they build (checkpoints, collects,
+#: streaming replays, store writes), in registry order. Every other
+#: builder only declares its plan; ``tests/test_gate_replica.py`` counts
+#: each build's jobs and fails when this set and the registry disagree.
+EAGER_BUILDERS: frozenset[str] = frozenset({
+    "corpus_wet_roundtrip", "corpus_bm25_topk", "corpus_domain_boilerplate",
+    "dedup_prefix_containment", "text_collocations", "cass_write_path", "cf_join",
+    "cluster_assign", "corpus_shard_roundtrip", "dedup_groups_star",
+    "prepare_corpus_full", "streaming_dedup_replay", "web_plan_frontier",
+    "corpus_warc_roundtrip", "basket_pairs", "cluster_inertia", "dedup_ngram_jaccard",
+    "dedup_prefix_jaccard", "describe_splits", "embedding_pq_encode",
+    "events_heavy_hitters_cm", "streaming_interval_join_replay",
+    "streaming_watermark_replay", "streaming_windowed_replay", "text_bpe_train",
+    "corpus_prepare_crawl", "cluster_kmeans_exact", "dedup_minhash_lsh",
+    "docs_coreness", "docs_kcore", "events_hits", "sim_pq_topk",
+    "streaming_heavy_hitters_replay", "streaming_lww_replay",
+    "streaming_sessions_replay", "text_tfidf", "cluster_kmeans",
+})
+
+
 ORACLES: dict[str, str] = {
     **cass.ORACLES,
     **tpch.ORACLES,

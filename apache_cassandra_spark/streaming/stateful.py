@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from apache_cassandra_spark.functions.reconcile import cell_priority
+
 #: emitted update rows
 UPDATE_SCHEMA = (
     "key string, sc binary, column binary, value binary, ts long, tombstone boolean"
@@ -29,18 +31,13 @@ UPDATE_SCHEMA = (
 STATE_SCHEMA = "value binary, ts long, tombstone int"
 
 
-def _priority(ts: int, tomb: bool, value: bytes | None) -> tuple:
-    # Column.comparePriority: ts, tombstone-wins-ties, larger-value-wins
-    return (ts, 1 if tomb else 0, value if value is not None else b"")
-
-
 def _update_group(
     group_key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
     key, sc, column = group_key
     if state.exists:
         cur_value, cur_ts, cur_tomb = state.get
-        best = _priority(cur_ts, bool(cur_tomb), cur_value)
+        best = cell_priority(cur_ts, bool(cur_tomb), cur_value)
     else:
         cur_value, cur_ts, cur_tomb = None, None, None
         best = None
@@ -49,7 +46,7 @@ def _update_group(
     for pdf in pdfs:
         for row in pdf.itertuples(index=False):
             value = None if row.value is None else bytes(row.value)
-            pri = _priority(int(row.ts), bool(row.tombstone), value)
+            pri = cell_priority(int(row.ts), bool(row.tombstone), value)
             if best is None or pri > best:
                 best = pri
                 winner = (value, int(row.ts), bool(row.tombstone))

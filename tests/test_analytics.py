@@ -1793,31 +1793,39 @@ def test_interleave_corpus_deterministic(spark):
     assert a == b  # partitioning-independent
 
 
-def test_interleave_corpus_join_path_matches_literal_fold(spark):
-    """judge r6 ask #5: fold_literals=False (the large-catalog two-window
-    + rank-join path, no driver collect) must be bit-identical to the
-    literal-fold closed form on the same corpus — including sources that
-    exhaust at different rounds."""
+def test_interleave_corpus_matches_closed_form_model(spark):
+    """Every position equals the closed form
+    ``pos(s, r) = Σ_{s'} min(r−1, n_{s'}) + |{s' < s : n_{s'} ≥ r}|``,
+    computed here in Python from the per-source counts, on a corpus whose
+    sources exhaust at different rounds; each source's ranks are 1..n_s."""
+    from collections import Counter
+
     from apache_cassandra_spark.analytics.pipeline import interleave_corpus
 
     rows = [(i, f"s{i % 7}") for i in range(53)] + [(100 + i, "big") for i in range(19)]
     df = spark.createDataFrame(rows, "doc_id long, source string")
-    lit_path = sorted(map(tuple, interleave_corpus(df).collect()))
-    join_path = sorted(map(tuple, interleave_corpus(df, fold_literals=False).collect()))
-    assert lit_path == join_path
-    assert sorted(t[3] for t in join_path) == list(range(72))
+    got = interleave_corpus(df).collect()
+    n = Counter(src for _, src in rows)
+
+    def pos(s, r):
+        return sum(min(r - 1, c) for c in n.values()) + sum(1 for t, c in n.items() if t < s and c >= r)
+
+    assert sorted((r["doc_id"], r["source"]) for r in got) == sorted(rows)
+    for src, c in n.items():
+        assert sorted(r["rank_in_source"] for r in got if r["source"] == src) == list(range(1, c + 1))
+    assert all(r["global_pos"] == pos(r["source"], r["rank_in_source"]) for r in got)
+    assert sorted(r["global_pos"] for r in got) == list(range(72))
 
 
 def test_interleave_corpus_empty_input(spark):
-    """ADVICE r6: empty corpus must not crash (the fold has no terms) —
-    both paths return an empty frame with the full output schema."""
+    """ADVICE r6: an empty corpus returns an empty frame with the full
+    output schema."""
     from apache_cassandra_spark.analytics.pipeline import interleave_corpus
 
     df = spark.createDataFrame([], "doc_id long, source string")
-    for fold in (True, False):
-        out = interleave_corpus(df, fold_literals=fold)
-        assert out.columns == ["doc_id", "source", "rank_in_source", "global_pos"]
-        assert out.count() == 0
+    out = interleave_corpus(df)
+    assert out.columns == ["doc_id", "source", "rank_in_source", "global_pos"]
+    assert out.count() == 0
 
 
 # --- round 7 operators ---
@@ -1904,18 +1912,16 @@ def test_range_search_exact_set(spark):
     assert got == [(2, 1.0), (4, 0.707107)]
 
 
-def test_interleave_corpus_null_source_fails_loudly_both_paths(spark):
-    """code-review r7: a NULL source must raise identically on both
-    paths (the literal fold would otherwise crash driver-side sorting a
-    None key; the join path would silently order NULLs first)."""
+def test_interleave_corpus_null_source_fails_loudly(spark):
+    """code-review r7: a NULL source must raise (the rank join would
+    otherwise silently order NULLs first in every round)."""
     import pytest as _pytest
 
     from apache_cassandra_spark.analytics.pipeline import interleave_corpus
 
     df = spark.createDataFrame([(1, "a"), (2, None)], "doc_id long, source string")
-    for fold in (True, False):
-        with _pytest.raises(Exception, match="contains NULL"):
-            interleave_corpus(df, fold_literals=fold).collect()
+    with _pytest.raises(Exception, match="contains NULL"):
+        interleave_corpus(df).collect()
 
 
 def test_dedup_against_reference_semantics(spark):

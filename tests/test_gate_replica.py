@@ -6,6 +6,7 @@ non-scalar output column on either side — and every DECLARED gate query
 must emit only scalar columns."""
 
 import sys
+import uuid
 
 import pyarrow as pa
 import pytest
@@ -51,22 +52,43 @@ def test_declared_gate_queries_have_scalar_schemas(spark, tmp_path):
     """Every declared queries() entry must produce a scalar-only schema.
     The check reads each result's schema and runs no action on it, but it
     calls every builder, and a builder that checkpoints, collects or runs a
-    streaming query runs those jobs while it builds: 38 builders run 299
+    streaming query runs those jobs while it builds: 37 builders ran 284
     jobs at sf0.001, most of this test's time (the full value gate is
-    tools/check_oracle.py)."""
+    tools/check_oracle.py).
+
+    Each build runs under its own job group, so the same pass keeps lazy
+    builders lazy: a builder outside ``queries.EAGER_BUILDERS`` must run
+    no job, and a listed one must run at least one, so the list cannot go
+    stale. Membership is pinned, not counts: some builders' job counts
+    vary between runs."""
     from __spark_entry__ import queries
 
+    from apache_cassandra_spark.queries import EAGER_BUILDERS
+
+    sc = spark.sparkContext
     sf_dir = "/root/testdata/sf0.001"
     bad = {}
+    eager, built = set(), set()
     for name, fn in queries().items():
+        group = f"build-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, name)
         try:
             df = fn(spark, sf_dir)
         except Exception:
             continue  # execution problems are the oracle gate's job
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        built.add(name)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        if sc.statusTracker().getJobIdsForGroup(group):
+            eager.add(name)
         cols = nonscalar_spark_cols(df.schema)
         if cols:
             bad[name] = cols
     assert not bad, f"gate queries with non-scalar output columns: {bad}"
+    assert not eager - EAGER_BUILDERS, f"builders that now run jobs: {sorted(eager - EAGER_BUILDERS)}"
+    idle = (EAGER_BUILDERS & built) - eager
+    assert not idle, f"EAGER_BUILDERS entries that ran no job: {sorted(idle)}"
 
 
 def _gate_modules():
@@ -104,6 +126,7 @@ def test_every_query_builder_and_oracle_is_registered():
         f"registered outside the gate modules: {sorted(f.__name__ for f in registered - builders)}"
     )
     assert set(Q.ORACLES) <= set(Q.QUERIES), f"stray oracles: {sorted(set(Q.ORACLES) - set(Q.QUERIES))}"
+    assert Q.EAGER_BUILDERS <= set(Q.QUERIES), f"stray EAGER_BUILDERS: {sorted(Q.EAGER_BUILDERS - set(Q.QUERIES))}"
     away = sorted(
         name for name in Q.ORACLES
         if name not in sys.modules[Q.QUERIES[name].__module__].ORACLES

@@ -762,9 +762,11 @@ def test_tpch_q10ish_pushes_flag_filter_and_takeordered(spark):
 
 
 def test_interleave_has_no_global_sort_or_single_partition(spark):
-    """The epoch order must come from per-source windows + a literal
-    formula: no rangepartitioning (global sort) and no SinglePartition
-    exchange anywhere."""
+    """The epoch order comes from per-source windows + a rank join: no
+    global sort of DATA rows; the only single-partition piece is the
+    cumsum over DISTINCT ranks (= max source size rows,
+    post-aggregation), which sits above a hash aggregate — the corpus
+    itself is never range- or single-partitioned."""
     from apache_cassandra_spark.analytics.pipeline import interleave_corpus
 
     df = spark.createDataFrame(
@@ -772,17 +774,8 @@ def test_interleave_has_no_global_sort_or_single_partition(spark):
     )
     plan = plan_of(interleave_corpus(df))
     assert "rangepartitioning" not in plan
-    assert "SinglePartition" not in plan
-    assert plan.count("Exchange") == 1  # the per-source rank window only
-
-    # large-catalog path: still no global sort of DATA rows; the only
-    # single-partition piece is the cumsum over DISTINCT ranks (= max
-    # source size rows, post-aggregation), which sits above a hash
-    # aggregate — the corpus itself is never range- or single-partitioned
-    plan2 = plan_of(interleave_corpus(df, fold_literals=False))
-    assert "rangepartitioning" not in plan2
-    idx = plan2.find("SinglePartition")
-    assert idx != -1 and "HashAggregate" in plan2[idx:], (
+    idx = plan.find("SinglePartition")
+    assert idx != -1 and "HashAggregate" in plan[idx:], (
         "the SinglePartition exchange must feed off the per-rank aggregate"
     )
 

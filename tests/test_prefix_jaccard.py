@@ -63,14 +63,11 @@ def test_skew_guard_parity(spark):
         max_size=8,
     ),
     threshold=st.sampled_from([0.3, 0.5, 0.7, 0.9]),
-    positional=st.booleans(),
 )
-def test_fuzz_lossless_vs_naive(spark, texts, threshold, positional):
+def test_fuzz_lossless_vs_naive(spark, texts, threshold):
     docs = _docs(spark, texts)
     naive = _pairs(ngram_jaccard_pairs(docs, threshold=threshold, max_doc_freq=None))
-    pref = _pairs(
-        prefix_jaccard_pairs(docs, threshold=threshold, positional=positional)
-    )
+    pref = _pairs(prefix_jaccard_pairs(docs, threshold=threshold))
     assert naive == pref
 
 
@@ -127,16 +124,13 @@ def test_containment_asymmetry_and_boundary(spark):
         max_size=8,
     ),
     threshold=st.sampled_from([0.4, 0.7, 0.9]),
-    positional=st.booleans(),
 )
-def test_fuzz_containment_lossless_vs_naive(spark, texts, threshold, positional):
+def test_fuzz_containment_lossless_vs_naive(spark, texts, threshold):
     docs = _docs(spark, texts)
     naive = _dpairs(
         ngram_containment_pairs(docs, threshold=threshold, max_doc_freq=None)
     )
-    pref = _dpairs(
-        prefix_containment_pairs(docs, threshold=threshold, positional=positional)
-    )
+    pref = _dpairs(prefix_containment_pairs(docs, threshold=threshold))
     assert naive == pref
 
 
@@ -156,23 +150,6 @@ def test_containment_no_forced_hint_no_cartesian(spark):
     )
     assert "CartesianProduct" not in final
     assert "BroadcastNestedLoopJoin" not in final
-
-
-def test_positional_with_skew_guard_parity(spark):
-    """positional=True under max_doc_freq: pos ranks the FILTERED
-    postings while sizes stay full-set — the bound must still only
-    over-count (full sizes over-bound the filtered tails). Locks the
-    subtlest interaction in the positional filter."""
-    texts = ["alpha beta gamma " + w for w in ("delta", "epsi", "zeta", "eta")] + [
-        "alpha beta gamma delta epsi"
-    ]
-    docs = _docs(spark, texts)
-    for th in (0.3, 0.6):
-        naive = _pairs(ngram_jaccard_pairs(docs, threshold=th, max_doc_freq=3))
-        pref = _pairs(
-            prefix_jaccard_pairs(docs, threshold=th, max_doc_freq=3, positional=True)
-        )
-        assert naive == pref
 
 
 def test_corpus_equivalence_lock_sf0001(spark):

@@ -64,3 +64,16 @@ def test_label_propagation_is_one_lazy_plan(spark):
     group = counters.begin("collect")
     df.collect()
     assert counters.end(group)["jobs"] <= 4
+
+
+def test_interleave_corpus_builds_without_a_job(spark):
+    """``interleave_corpus`` collects nothing while it builds: its
+    positions come from a rank join inside the plan."""
+    from apache_cassandra_spark.analytics.pipeline import interleave_corpus
+
+    df = spark.createDataFrame([(i, f"s{i % 3}") for i in range(12)], "doc_id long, source string")
+    counters = Counters(spark)
+    group = counters.begin("build")
+    out = interleave_corpus(df)
+    assert counters.end(group)["jobs"] == 0
+    assert out.count() == 12

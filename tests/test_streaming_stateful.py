@@ -125,3 +125,37 @@ def test_streaming_state_equals_batch_reconcile(spark, tmp_path):
         for r in reconcile(spark.createDataFrame(flat, CELL_SCHEMA)).collect()
     }
     assert stream_state == batch_state
+
+
+def test_lww_updates_ranks_null_value_below_empty_value(spark, tmp_path):
+    """A live NULL value and a live ``b""`` at one ts: the read path keeps
+    ``b""`` (a null value ranks below every byte string), and the
+    streaming operator, fed the same two cells in one micro-batch, must
+    keep the same winner."""
+    from tests.util import cell, make_cf
+
+    src = tmp_path / "muts"
+    write_batch(
+        src,
+        "b1.json",
+        [
+            {"key": "k", "sc": None, "column": "63", "value": v, "ts": 5, "tombstone": False, "ldt": None}
+            for v in (None, "")
+        ],
+    )
+    emitted = []
+    q = (
+        lww_updates(mutation_stream(spark, str(src)).drop("ldt"))
+        .writeStream.outputMode("append")
+        .foreachBatch(lambda df, bid: emitted.extend(tuple(r) for r in df.collect()))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(180)
+    got = [(key, None if value is None else bytes(value), ts) for key, _, _, value, ts, _ in emitted]
+
+    cf = make_cf(spark, [cell("k", b"c", None, 5), cell("k", b"c", b"", 5)])
+    live = [(r["key"], bytes(r["value"]), r["ts"]) for r in cf.live().collect()]
+    assert live == [("k", b"", 5)]
+    assert got == live
